@@ -3,7 +3,8 @@
 # mirrored from build.sbt). Usage: run_main.sh graft.Bench [args...]
 set -u
 CLS="$1"; shift
-CP="/root/repo/target/scala-2.13/classes"
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/classes"
 for j in /opt/spark/jars/*.jar; do CP="$CP:$j"; done
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \

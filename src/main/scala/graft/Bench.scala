@@ -230,10 +230,11 @@ object Bench {
     // the FULL contract line (with "queries") goes to stdout FIRST, the
     // compact line stays the absolute last line. A tail-window parser
     // sees exactly what it saw in r8-r13 (the compact line, intact); a
-    // full-stdout parser additionally gets the per-query map.
-    println(json)
+    // full-stdout parser additionally gets the per-query map. Both lines
+    // print after spark.stop(), so no live-session logging can interleave
+    // with either mid-object.
     // file sink first (this worked in round 2), then the metric as the
-    // absolute LAST stdout line: spark.stop() runs BEFORE the println so no
+    // absolute LAST stdout line: spark.stop() runs BEFORE the printlns so no
     // shutdown logging can push the metric line out of a tail capture or
     // interleave with it mid-object
     // default sink is run-stamped (pid + wall clock) so concurrent or later
@@ -244,6 +245,7 @@ object Bench {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(sinkPath), json.getBytes("UTF-8"))
     spark.stop()
+    println(json)
     // stdout gets a COMPACT line only (~200 bytes): the driver records a
     // bounded TAIL of stdout, and the full per-query map (187 queries,
     // ~5 KB) overflowed that window in rounds 6-7 — the recorded artifact

@@ -5532,24 +5532,29 @@ object SparkEntry {
     * reads (certificate reads over pinned snapshots / localCheckpoints
     * qualify; table mutations never do). Failure precedence matches the
     * sequential code: `a` is awaited first, so when both fail, `a`'s
-    * exception surfaces. */
-  private def inParallel[A, B](a: => A, b: => B): (A, B) = {
+    * exception surfaces — but only after every other action has finished,
+    * so no orphaned job keeps reading inputs a caller's `finally` is
+    * about to delete. */
+  private[graft] def inParallel[A, B](a: => A, b: => B): (A, B) = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val fb = Future(b)
-    val ra = a // run `a` on the calling thread — no pool round-trip for it
-    (ra, Await.result(fb, Duration.Inf))
+    val ra = scala.util.Try(a) // `a` on the calling thread — no pool round-trip
+    Await.ready(fb, Duration.Inf)
+    (ra.get, fb.value.get.get)
   }
 
-  private def inParallel3[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
+  private[graft] def inParallel3[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val fb = Future(b)
     val fc = Future(c)
-    val ra = a
-    (ra, Await.result(fb, Duration.Inf), Await.result(fc, Duration.Inf))
+    val ra = scala.util.Try(a)
+    Await.ready(fb, Duration.Inf)
+    Await.ready(fc, Duration.Inf)
+    (ra.get, fb.value.get.get, fc.value.get.get)
   }
 
   private def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {

@@ -268,7 +268,7 @@ object AnnIndex {
         val hidden = rel.split('/').exists(s =>
           s.startsWith(".") || (s.startsWith("_") && !s.contains("=")))
         if (!hidden && f.getPath.getName.endsWith(".parquet"))
-          sum += graft.sources.IcebergInterop.parquetRowCount(
+          sum += graft.sources.StagedWrite.parquetRowCount(
             spark, java.nio.file.Paths.get(f.getPath.toUri))
       }
       sum

@@ -41,8 +41,8 @@ object Dedup {
     * dedup family (the measured dominant cost, r13 OPTIMIZATION notes).
     * [[graft.functions.WordShingles]] is the same computation as one
     * fused loop with bit-identical output (concat_ws kernel, array_distinct
-    * encounter order); DedupSpec pins the equivalence against the lambda
-    * form property-style.
+    * encounter order); ShingleExpressionsSpec pins the equivalence against
+    * the lambda form on adversarial token shapes.
     */
   def wordShinglesFromWords(words: Column, n: Int): Column =
     org.apache.spark.sql.graft.Bridge.column(

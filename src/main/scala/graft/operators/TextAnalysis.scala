@@ -178,8 +178,8 @@ object TextAnalysis {
     // Native single-node selection (round-14, guide §4): the previous
     // nested-lambda tree (let-bound grams + per-window array_min /
     // rightmost-tie filter + array_distinct, preserved bit-for-bit in
-    // [[winnowHof]] and pinned equivalent by DedupSpec) ran entirely in
-    // the CodegenFallback lambda interpreter. [[graft.functions
+    // [[winnowHof]] and pinned equivalent by ShingleExpressionsSpec) ran
+    // entirely in the CodegenFallback lambda interpreter. [[graft.functions
     // .WinnowSelect]] is the same selection as one fused loop: same
     // binary-string ordering, same rightmost-minimal tie rule, same
     // (pos, gram) dedup order.
@@ -203,8 +203,8 @@ object TextAnalysis {
   }
 
   /** The lambda-tree formulation [[winnow]] replaced (kept as the
-    * differential spec for the native expression — DedupSpec compares the
-    * two row-for-row on the corpus fixture shapes). */
+    * differential spec for the native expression — ShingleExpressionsSpec
+    * compares the two row-for-row on adversarial (k, w) shapes). */
   private[graft] def winnowHof(docs: DataFrame, idCol: String, textCol: String,
       k: Int, w: Int): DataFrame = {
     require(k >= 1 && w >= 1, s"k/w must be positive: $k/$w")

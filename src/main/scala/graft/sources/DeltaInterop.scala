@@ -174,7 +174,7 @@ object DeltaInterop {
     val statFiles = snap.files.filter(f => snap.stats.get(f).exists(_.nonEmpty))
     val rowCounts =
       if (statFiles.isEmpty) Map.empty[String, Long]
-      else IcebergInterop.parquetRowCountBulk(t.spark,
+      else StagedWrite.parquetRowCountBulk(t.spark,
         statFiles.map(r => dataDir.resolve(r)))
     adds.foreach { case (rel, size) =>
       val a = obj()
@@ -336,7 +336,7 @@ object DeltaInterop {
       .filter(f => snap.stats.get(f).exists(_.nonEmpty))
     val incrRowCounts =
       if (incrStatFiles.isEmpty) Map.empty[String, Long]
-      else IcebergInterop.parquetRowCountBulk(t.spark,
+      else StagedWrite.parquetRowCountBulk(t.spark,
         incrStatFiles.map(r => dataDir.resolve(r)))
     adds.foreach { case (rel, size) =>
       val a = obj()
@@ -586,8 +586,8 @@ object DeltaInterop {
     * names, with the parquet field id stamped whenever the schema
     * assigns one (id-mode readers resolve by id; the protocol requires
     * id-mode writers to stamp every file). Pass-through for unmapped
-    * tables. Writers using this must also enable
-    * `spark.sql.parquet.fieldId.write.enabled` so the stamps land. */
+    * tables. Writers using this must also stage with `fieldIds` on so
+    * the stamps land. */
   private def physWriteCol(f: StructField, meta: TableMeta, path: String)
       : org.apache.spark.sql.Column =
     if (meta.mappingMode == "none") col(f.name)
@@ -599,22 +599,17 @@ object DeltaInterop {
       else col(f.name).as(phys)
     }
 
-  /** Run `body` (an EAGER parquet write) with field-id stamping enabled
-    * when `enable`, restoring the session's prior setting after — unlike
-    * the lazy-read flag (which must outlive the call for the returned
-    * frames), a write completes inside the call, so leaving the session
-    * flag flipped would silently stamp field ids for every later writer
-    * that never opted in. */
-  private def withFieldIdWrite[A](spark: SparkSession, enable: Boolean)(body: => A): A =
-    if (!enable) body
-    else {
-      val key = "spark.sql.parquet.fieldId.write.enabled"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "true")
-      try body
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
+  /** Stage `frame` inside the table (Hive-partitioned by `partitionBy`,
+    * field ids stamped when `fieldIds`) and move its non-empty files to
+    * the table-relative names `relOf(file, index)`; returns (rel path,
+    * size, the file's staged partition directories decoded). */
+  private def writeFiles(root: Path, frame: DataFrame, partitionBy: Seq[String],
+      fieldIds: Boolean)(relOf: (StagedWrite.StagedFile, Int) => String)
+      : Seq[(String, Long, Map[String, Option[String]])] =
+    StagedWrite.write(root, frame, partitionBy, fieldIds = fieldIds) {
+      _.nonEmptyFiles.zipWithIndex.map { case (f, i) =>
+        val rel = relOf(f, i)
+        (rel, f.moveTo(root.resolve(rel)), f.parts.toMap)
       }
     }
 
@@ -1838,80 +1833,38 @@ object DeltaInterop {
         val live2 = dvPositionsDf(spark, root, touchedAdds)
           .map(d => base2.join(d, Seq("__gdv_file", "__gdv_pos"), "left_anti"))
           .getOrElse(base2)
-        val cdcDir = root.resolve("_change_data")
-        Files.createDirectories(cdcDir)
-        val stage = Files.createTempDirectory("graft_delta_cdc")
         // change files follow the table's column mapping exactly like
         // data files (PROTOCOL.md, Change Data Files): a mapped table's
         // cdc parquets must carry PHYSICAL column names (+ field ids in
         // id mode), or a foreign CDF reader resolving physically reads
-        // nulls
-        def physCol(f: StructField): org.apache.spark.sql.Column =
-          physWriteCol(f, meta, path)
-        val stampIds = meta.mapped || meta.idMapped
-        try {
-          val hits2 = live2.where(predicate)
-          if (meta.partCols.isEmpty) {
-            withFieldIdWrite(spark, stampIds) {
-              hits2.select((schema.fields.map(physCol) :+
-                  lit("delete").as("_change_type")).toIndexedSeq: _*)
-                .write.mode("overwrite").parquet(stage.toString)
-            }
-            val walk = Files.walk(stage)
-            val staged = try walk.iterator().asScala
-              .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
-              .filter(p => IcebergInterop.parquetRowCount(spark, p) > 0L).toSeq
-              finally walk.close()
-            staged.zipWithIndex.map { case (p, i) =>
-              val rel = s"_change_data/cdc-${java.util.UUID.nameUUIDFromBytes(
-                (path + "|cdc|" + cur + "|" + i).getBytes("UTF-8"))}.parquet"
-              Files.move(p, root.resolve(rel), StandardCopyOption.ATOMIC_MOVE)
-              (rel, Files.size(root.resolve(rel)), Map.empty[String, Option[String]])
-            }
-          } else {
-            // cdc files mirror the data layout (protocol: partition
-            // columns live on the cdc ACTION's partitionValues, not in
-            // the file) — one change parquet per touched partition, its
-            // group id riding a broadcast (file → group) join
-            val groups: Seq[(Map[String, Option[String]], Seq[AddFile])] =
-              touchedAdds.groupBy(_.partitionValues).toSeq
-                .sortBy(_._1.toSeq.sortBy(_._1).toString)
+        // nulls. They mirror the data layout (protocol: partition columns
+        // live on the cdc ACTION's partitionValues, not in the file) —
+        // one change parquet per touched partition, its group id riding a
+        // broadcast (file → group) join
+        val groups: Seq[(Map[String, Option[String]], Seq[AddFile])] =
+          touchedAdds.groupBy(_.partitionValues).toSeq
+            .sortBy(_._1.toSeq.sortBy(_._1).toString)
+        val partSet = meta.partCols.toSet
+        val changeCols = schema.fields.filterNot(f => partSet.contains(f.name))
+          .map(f => physWriteCol(f, meta, path)) :+ lit("delete").as("_change_type")
+        val hits2 = live2.where(predicate)
+        val (changes, grpCol) =
+          if (meta.partCols.isEmpty) (hits2.select(changeCols.toIndexedSeq: _*), Nil)
+          else {
             val grpDf = spark.createDataFrame(
               groups.zipWithIndex.flatMap { case ((_, as), gi) =>
                 as.map(a => (root.resolve(a.path).getFileName.toString, gi)) })
               .toDF("__gdv_file", "__gcdc_grp")
-            val partSet = meta.partCols.toSet
-            val dataCols = schema.fields.filterNot(f => partSet.contains(f.name))
-            withFieldIdWrite(spark, stampIds) {
-              hits2.join(broadcast(grpDf), Seq("__gdv_file"))
-                .select((dataCols.map(physCol) :+
-                  lit("delete").as("_change_type") :+
-                  col("__gcdc_grp")).toIndexedSeq: _*)
-                .write.mode("overwrite").partitionBy("__gcdc_grp")
-                .parquet(stage.toString)
-            }
-            val walk = Files.walk(stage)
-            val staged = try walk.iterator().asScala
-              .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
-              .map { p =>
-                val grp = stage.relativize(p).iterator().asScala
-                  .map(_.toString).find(_.startsWith("__gcdc_grp="))
-                  .map(_.stripPrefix("__gcdc_grp=").toInt)
-                  .getOrElse(throw new IllegalStateException(
-                    s"staged cdc file $p carries no __gcdc_grp segment"))
-                (p, grp)
-              }
-              .filter(pg => IcebergInterop.parquetRowCount(spark, pg._1) > 0L)
-              .toSeq.sortBy(pg => (pg._2, pg._1.toString))
-              finally walk.close()
-            staged.zipWithIndex.map { case ((p, grp), i) =>
-              val rel = s"_change_data/cdc-${java.util.UUID.nameUUIDFromBytes(
-                (path + "|cdc|" + cur + "|" + i).getBytes("UTF-8"))}.parquet"
-              Files.move(p, root.resolve(rel), StandardCopyOption.ATOMIC_MOVE)
-              (rel, Files.size(root.resolve(rel)), groups(grp)._1)
-            }
+            (hits2.join(broadcast(grpDf), Seq("__gdv_file"))
+              .select((changeCols :+ col("__gcdc_grp")).toIndexedSeq: _*),
+              Seq("__gcdc_grp"))
           }
-        } finally deleteRecursively(stage)
+        writeFiles(root, changes, grpCol, meta.mapped || meta.idMapped) { (_, i) =>
+          StagedWrite.seededName("_change_data/cdc", s"$path|cdc|$cur|$i")
+        }.map { case (rel, size, pv) =>
+          (rel, size, pv.get("__gcdc_grp").fold(Map.empty[String, Option[String]])(
+            g => groups(g.get.toInt)._1))
+        }
       }
 
     val m = mapper
@@ -2094,34 +2047,12 @@ object DeltaInterop {
 
     // the incoming rows land as fresh data files — per partition, their
     // partitionValues derived from the staged Hive layout
-    val stage = Files.createTempDirectory("graft_delta_merge")
-    val newFiles: Seq[(String, Long, Map[String, Option[String]])] = try {
-      val staged0 = incoming.select(
-        schema.fields.map(f => physWriteCol(f, meta, path)).toIndexedSeq: _*)
-      withFieldIdWrite(spark, anyMapped) {
-        if (meta.partCols.isEmpty)
-          staged0.write.mode("overwrite").parquet(stage.toString)
-        else staged0.write.mode("overwrite")
-          .partitionBy(physPartCols: _*).parquet(stage.toString)
+    val newFiles: Seq[(String, Long, Map[String, Option[String]])] =
+      writeFiles(root, incoming.select(
+          schema.fields.map(f => physWriteCol(f, meta, path)).toIndexedSeq: _*),
+        physPartCols, anyMapped) { (f, i) =>
+        f.under(StagedWrite.seededName("merge", s"$path|merge|$cur|$i"))
       }
-      val walk = Files.walk(stage)
-      val staged = try walk.iterator().asScala
-          .filter(pp => Files.isRegularFile(pp) && pp.toString.endsWith(".parquet"))
-          .filter(pp => IcebergInterop.parquetRowCount(spark, pp) > 0L)
-          .toSeq.sortBy(_.toString)
-        finally walk.close()
-      staged.zipWithIndex.map { case (pp, i) =>
-        val relDir = Option(stage.relativize(pp).getParent)
-          .map(_.toString).getOrElse("")
-        val name = s"merge-${java.util.UUID.nameUUIDFromBytes(
-          (path + "|merge|" + cur + "|" + i).getBytes("UTF-8"))}.parquet"
-        val rel = if (relDir.isEmpty) name else s"$relDir/$name"
-        val dst = root.resolve(rel)
-        Files.createDirectories(dst.getParent)
-        Files.move(pp, dst, StandardCopyOption.ATOMIC_MOVE)
-        (rel, Files.size(dst), partitionValuesOf(rel, physPartCols).toMap)
-      }
-    } finally deleteRecursively(stage)
     val appended = incoming.count()
 
     // CHANGE DATA FEED: the full MERGE classification, per partition
@@ -2138,65 +2069,20 @@ object DeltaInterop {
           .withColumn("_change_type", lit("update_postimage"))
         val ins = incoming.join(matchedKeys, matchCond(incoming), "left_anti")
           .withColumn("_change_type", lit("insert"))
-        val partSet = meta.partCols.toSet
-        val dataCols = schema.fields.filterNot(f => partSet.contains(f.name))
-        // cdc files render the physical layout, like the data files
-        val changeCols = (dataCols.map(f => physWriteCol(f, meta, path)) :+
-          col("_change_type")).toIndexedSeq
         val changes = pre.select((schema.fields.map(f => col(f.name)) :+
             col("_change_type")).toIndexedSeq: _*)
           .unionByName(post.select((schema.fields.map(f => col(f.name)) :+
             col("_change_type")).toIndexedSeq: _*))
           .unionByName(ins.select((schema.fields.map(f => col(f.name)) :+
             col("_change_type")).toIndexedSeq: _*))
-        val cdcDir = root.resolve("_change_data")
-        Files.createDirectories(cdcDir)
-        val cstage = Files.createTempDirectory("graft_delta_merge_cdc")
-        try {
-          if (meta.partCols.isEmpty) {
-            withFieldIdWrite(spark, anyMapped) {
-              changes.select(changeCols: _*)
-                .write.mode("overwrite").parquet(cstage.toString)
-            }
-            val walk = Files.walk(cstage)
-            val staged = try walk.iterator().asScala
-              .filter(pp => Files.isRegularFile(pp) && pp.toString.endsWith(".parquet"))
-              .filter(pp => IcebergInterop.parquetRowCount(spark, pp) > 0L).toSeq
-              .sortBy(_.toString)
-              finally walk.close()
-            staged.zipWithIndex.map { case (pp, i) =>
-              val rel = s"_change_data/cdc-${java.util.UUID.nameUUIDFromBytes(
-                (path + "|mergecdc|" + cur + "|" + i).getBytes("UTF-8"))}.parquet"
-              Files.move(pp, root.resolve(rel), StandardCopyOption.ATOMIC_MOVE)
-              (rel, Files.size(root.resolve(rel)), Map.empty[String, Option[String]])
-            }
-          } else {
-            // cdc files mirror the data layout: partition columns on the
-            // cdc ACTION, not in the file — the Hive staging derives them
-            // (physical names throughout, like the data staging)
-            withFieldIdWrite(spark, anyMapped) {
-              changes.select((schema.fields.map(f => physWriteCol(f, meta, path)) :+
-                  col("_change_type")).toIndexedSeq: _*)
-                .write.mode("overwrite")
-                .partitionBy(physPartCols: _*).parquet(cstage.toString)
-            }
-            val walk = Files.walk(cstage)
-            val staged = try walk.iterator().asScala
-              .filter(pp => Files.isRegularFile(pp) && pp.toString.endsWith(".parquet"))
-              .filter(pp => IcebergInterop.parquetRowCount(spark, pp) > 0L)
-              .map(pp => (pp, Option(cstage.relativize(pp).getParent)
-                .map(_.toString).getOrElse("")))
-              .toSeq.sortBy(_._1.toString)
-              finally walk.close()
-            staged.zipWithIndex.map { case ((pp, relDir), i) =>
-              val rel = s"_change_data/cdc-${java.util.UUID.nameUUIDFromBytes(
-                (path + "|mergecdc|" + cur + "|" + i).getBytes("UTF-8"))}.parquet"
-              Files.move(pp, root.resolve(rel), StandardCopyOption.ATOMIC_MOVE)
-              (rel, Files.size(root.resolve(rel)),
-                partitionValuesOf(relDir + "/x.parquet", physPartCols).toMap)
-            }
-          }
-        } finally deleteRecursively(cstage)
+        // cdc files render the physical layout, like the data files, and
+        // mirror the data layout: partition columns on the cdc ACTION, not
+        // in the file — the Hive staging derives them
+        writeFiles(root, changes.select((schema.fields.map(f =>
+            physWriteCol(f, meta, path)) :+ col("_change_type")).toIndexedSeq: _*),
+          physPartCols, anyMapped) { (_, i) =>
+          StagedWrite.seededName("_change_data/cdc", s"$path|mergecdc|$cur|$i")
+        }
       }
 
     // ---- the commit: protocol (DV + cdf features), cdc actions, the
@@ -2314,9 +2200,6 @@ object DeltaInterop {
     if (withDv.isEmpty) return (0, 0L)
     val deadRows = withDv.map(_.dv.get.cardinality).sum
 
-    val compDir = root.resolve("compacted")
-    Files.createDirectories(compDir)
-    val stage = Files.createTempDirectory("graft_delta_purge")
     // a mapped table's survivor files must carry PHYSICAL column names
     // like every other data file — the purge reads and writes the
     // physical schema without ever resolving logical names; partition
@@ -2326,73 +2209,39 @@ object DeltaInterop {
     val scanSchema =
       if (meta.mapped) toPhysical(dataSchema, path).asInstanceOf[StructType]
       else dataSchema
-    // (rel path, size, partitionValues of the survivor file)
-    val newFiles: Seq[(String, Long, Map[String, Option[String]])] = try {
-      if (meta.partCols.isEmpty) {
-        applyDvs(
-          spark.read.schema(scanSchema)
-            .parquet(withDv.map(a => root.resolve(a.path).toString): _*),
-          dvPositionsDf(spark, root, withDv))
-          .write.mode("overwrite").parquet(stage.toString)
-        val walk = Files.walk(stage)
-        val staged = try walk.iterator().asScala
-            .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
-            // a fully-deleted input file leaves an empty part: footer-count,
-            // not a Spark job per file
-            .filter(p => IcebergInterop.parquetRowCount(spark, p) > 0L).toSeq
-          finally walk.close()
-        staged.zipWithIndex.map { case (p, i) =>
-          val rel = s"compacted/purge-${java.util.UUID.nameUUIDFromBytes(
-            (path + "|v" + cur + "|" + i).getBytes("UTF-8"))}.parquet"
-          Files.move(p, root.resolve(rel),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          (rel, Files.size(root.resolve(rel)), Map.empty[String, Option[String]])
-        }
-      } else {
-        // survivors write PER PARTITION (mixing partitions in one file
-        // would make its add's partitionValues a lie): group the touched
-        // files by their tuple, split the staged write by group
-        val groups: Seq[(Map[String, Option[String]], Seq[AddFile])] =
-          withDv.groupBy(_.partitionValues).toSeq
-            .sortBy(_._1.toSeq.sortBy(_._1).toString)
+    val scan = spark.read.schema(scanSchema)
+      .parquet(withDv.map(a => root.resolve(a.path).toString): _*)
+    // survivors write PER PARTITION (mixing partitions in one file would
+    // make its add's partitionValues a lie): group the touched files by
+    // their tuple, split the staged write by group
+    val groups: Seq[(Map[String, Option[String]], Seq[AddFile])] =
+      withDv.groupBy(_.partitionValues).toSeq
+        .sortBy(_._1.toSeq.sortBy(_._1).toString)
+    val prov = scan
+      .withColumn("__gdv_file", col("_metadata.file_name"))
+      .withColumn("__gdv_pos", col("_metadata.row_index"))
+    val kept = dvPositionsDf(spark, root, withDv)
+      .map(d => prov.join(d, Seq("__gdv_file", "__gdv_pos"), "left_anti"))
+      .getOrElse(prov)
+    val (survivors, grpCol) =
+      if (meta.partCols.isEmpty) (kept, Nil)
+      else {
         val grpDf = spark.createDataFrame(
           groups.zipWithIndex.flatMap { case ((_, as), gi) =>
             as.map(a => (root.resolve(a.path).getFileName.toString, gi)) })
           .toDF("__gdv_file", "__gp_grp")
-        val scan = spark.read.schema(scanSchema)
-          .parquet(withDv.map(a => root.resolve(a.path).toString): _*)
-          .withColumn("__gdv_file", col("_metadata.file_name"))
-          .withColumn("__gdv_pos", col("_metadata.row_index"))
-        val survivors = dvPositionsDf(spark, root, withDv)
-          .map(d => scan.join(d, Seq("__gdv_file", "__gdv_pos"), "left_anti"))
-          .getOrElse(scan)
-        survivors.join(broadcast(grpDf), Seq("__gdv_file"))
-          .drop("__gdv_file", "__gdv_pos")
-          .write.mode("overwrite").partitionBy("__gp_grp")
-          .parquet(stage.toString)
-        val walk = Files.walk(stage)
-        val staged = try walk.iterator().asScala
-            .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
-            .map { p =>
-              val grp = stage.relativize(p).iterator().asScala
-                .map(_.toString).find(_.startsWith("__gp_grp="))
-                .map(_.stripPrefix("__gp_grp=").toInt)
-                .getOrElse(throw new IllegalStateException(
-                  s"staged purge file $p carries no __gp_grp segment"))
-              (p, grp)
-            }
-            .filter(pg => IcebergInterop.parquetRowCount(spark, pg._1) > 0L)
-            .toSeq.sortBy(pg => (pg._2, pg._1.toString))
-          finally walk.close()
-        staged.zipWithIndex.map { case ((p, grp), i) =>
-          val rel = s"compacted/purge-${java.util.UUID.nameUUIDFromBytes(
-            (path + "|v" + cur + "|" + i).getBytes("UTF-8"))}.parquet"
-          Files.move(p, root.resolve(rel),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          (rel, Files.size(root.resolve(rel)), groups(grp)._1)
-        }
+        (kept.join(broadcast(grpDf), Seq("__gdv_file")), Seq("__gp_grp"))
       }
-    } finally deleteRecursively(stage)
+    // (rel path, size, partitionValues of the survivor file); a fully-
+    // deleted input file leaves an empty part, dropped by its footer count
+    val newFiles: Seq[(String, Long, Map[String, Option[String]])] =
+      writeFiles(root, survivors.drop("__gdv_file", "__gdv_pos"), grpCol,
+          fieldIds = false) { (_, i) =>
+        StagedWrite.seededName("compacted/purge", s"$path|v$cur|$i")
+      }.map { case (rel, size, pv) =>
+        (rel, size, pv.get("__gp_grp").fold(Map.empty[String, Option[String]])(
+          g => groups(g.get.toInt)._1))
+      }
 
     val m = mapper
     def obj() = m.createObjectNode()
@@ -2816,23 +2665,10 @@ object DeltaInterop {
   /** `<col>=<v>` directory segments of a relative file path, in partCols
     * order; Spark/Hive's `__HIVE_DEFAULT_PARTITION__` marker maps to null. */
   private def partitionValuesOf(rel: String, partCols: Seq[String]): Seq[(String, Option[String])] = {
-    val fromPath = rel.split('/').dropRight(1).flatMap { seg =>
-      val i = seg.indexOf('=')
-      if (i <= 0) None
-      else {
-        val v = percentDecode(seg.substring(i + 1))
-        Some(seg.substring(0, i) -> (if (v == "__HIVE_DEFAULT_PARTITION__") None else Some(v)))
-      }
-    }.toMap
+    val fromPath = StagedWrite.hivePartitions(rel).toMap
     partCols.map(c => c -> fromPath.getOrElse(c, None))
   }
 
-  /** The one local recursive delete (shared by both interop exporters and
-    * the harness queries — three identical copies was a review finding). */
-  private[graft] def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val w = Files.walk(p)
-      try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      finally w.close()
-    }
+  /** The one local recursive delete, for the harness queries. */
+  private[graft] def deleteRecursively(p: Path): Unit = StagedWrite.deleteRecursively(p)
 }

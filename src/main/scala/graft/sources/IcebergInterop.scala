@@ -13,6 +13,8 @@ import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWri
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.sources.StagedWrite.{deleteRecursively, parquetRowCount, parquetRowCountBulk}
+
 /** Open-format interop #2: Apache Iceberg (the other half of the
   * "Delta/Iceberg" north star; [[DeltaInterop]] is the first). Export a
   * [[TxTable]] snapshot as a standard HADOOP-LAYOUT Iceberg v1 table any
@@ -214,27 +216,21 @@ object IcebergInterop {
         floor(unix_micros(c(tsCol)) / lit(86400000000L)).cast("int"))
       case _ => c(tsCol)
     }
-    val stage = Files.createTempDirectory("graft_ice_composite")
-    try {
-      t.read().withColumn(dayName, dayValue)
-        .repartition(c(dayName), c(idCol))
-        .write.mode("overwrite").partitionBy(dayName, idCol).parquet(stage.toString)
-      val walk = Files.walk(stage)
+    // staged beside the target, where the assembly stages its own tree
+    StagedWrite.write(Paths.get(target).toAbsolutePath.getParent,
+        t.read().withColumn(dayName, dayValue), Seq(dayName, idCol),
+        filesPerValue = 1) { st =>
       // UNIQUE basenames: one task writing several partition directories
       // reuses its part-file name in each, and the reader's Column
       // Projection fill joins on basenames — rename while still staged
-      val rels = try walk.iterator().asScala
-          .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
-          .map { p =>
-            val unique = p.getParent.resolve(
-              s"${java.util.UUID.randomUUID()}.parquet")
-            Files.move(p, unique)
-            stage.relativize(unique).toString
-          }.toSeq
-        finally walk.close()
-      assembleIcebergV1(t.spark, stage, rels, target, tsMillis,
+      val rels = st.files.map { f =>
+        val rel = f.under(s"${java.util.UUID.randomUUID()}.parquet")
+        f.moveTo(st.dir.resolve(rel))
+        rel
+      }
+      assembleIcebergV1(t.spark, st.dir, rels, target, tsMillis,
         schema, partFields, rel => hivePartitionTuple(rel, partFields))
-    } finally deleteRecursively(stage)
+    }
   }
 
   /** Export a FLAT TxTable as an Iceberg v1 table partitioned by
@@ -268,8 +264,7 @@ object IcebergInterop {
     // spec), handled by the expression's null-intolerance
     val bucket = graft.functions.IcebergTransforms.bucket(nBuckets, c(col))
     exportIcebergRewritten(t, target, col, s"${col}_bucket",
-      s"bucket[$nBuckets]", IntegerType, bucket,
-      raw => java.lang.Integer.valueOf(raw), tsMillis)
+      s"bucket[$nBuckets]", IntegerType, bucket, tsMillis)
   }
 
   /** Export a FLAT TxTable as an Iceberg v1 table partitioned by
@@ -289,13 +284,8 @@ object IcebergInterop {
     require(idx >= 0, s"truncate source column '$col' is not in the table schema")
     val (partType, value) = truncateTypeAndExpr(col,
       schema.fields(idx).dataType, width, "exportIcebergTruncated")
-    val decode: String => Any = partType match {
-      case IntegerType => raw => java.lang.Integer.valueOf(raw)
-      case LongType    => raw => java.lang.Long.valueOf(raw)
-      case _           => raw => raw
-    }
     exportIcebergRewritten(t, target, col, s"${col}_trunc",
-      s"truncate[$width]", partType, value, decode, tsMillis)
+      s"truncate[$width]", partType, value, tsMillis)
   }
 
   /** The shared rewrite core for transforms that cannot hard-link
@@ -307,7 +297,7 @@ object IcebergInterop {
   private def exportIcebergRewritten(t: TxTable, target: String,
       sourceCol: String, fieldName: String, transform: String,
       partType: DataType, partValue: org.apache.spark.sql.Column,
-      decode: String => Any, tsMillis: Long): Unit = {
+      tsMillis: Long): Unit = {
     val snap = t.snapshotInfo()
     require(snap.partCols.isEmpty,
       s"exportIceberg $transform expects a FLAT TxTable (the rewrite groups " +
@@ -320,45 +310,27 @@ object IcebergInterop {
     val idx = schema.fieldNames.indexOf(sourceCol)
     val partFields = Seq(PartField(fieldName, partType,
       sourceId = idx + 1, fieldId = 1000, transform))
-    val stage = Files.createTempDirectory("graft_ice_rewrite")
-    try {
-      // cluster rows by the transform value before the partitioned write:
-      // without it every task writes a sliver into EVERY value directory
-      // (tasks × values tiny files — the classic small-files trap, which
-      // also multiplies the reader's O(files) footer probes); with it each
-      // value lands in one task → one well-sized file per value
-      t.read().withColumn(fieldName, partValue)
-        .repartition(org.apache.spark.sql.functions.col(fieldName))
-        .write.mode("overwrite").partitionBy(fieldName).parquet(stage.toString)
-      val walk = Files.walk(stage)
-      val rawRels = try walk.iterator().asScala
-          .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
-          .map(p => stage.relativize(p).toString).toSeq.sorted
-        finally walk.close()
+    // cluster rows by the transform value before the partitioned write:
+    // without it every task writes a sliver into EVERY value directory
+    // (tasks × values tiny files — the classic small-files trap, which
+    // also multiplies the reader's O(files) footer probes); with it each
+    // value lands in one task → one well-sized file per value. Staged
+    // beside the target, where the assembly stages its own tree.
+    StagedWrite.write(Paths.get(target).toAbsolutePath.getParent,
+        t.read().withColumn(fieldName, partValue), Seq(fieldName),
+        filesPerValue = 1) { st =>
       // rename to globally-unique basenames: a Spark partitioned write
       // reuses one task's part number across every value directory it
       // writes, and the delete paths' (file basename -> metadata)
       // translations require basename uniqueness table-wide
-      val rels = rawRels.zipWithIndex.map { case (rel, i) =>
-        val dir = rel.split('/').dropRight(1)
-        val name = s"rw-${java.util.UUID.nameUUIDFromBytes(
-          (target + "|rewrite|" + i).getBytes("UTF-8"))}.parquet"
-        val nrel = (dir :+ name).mkString("/")
-        Files.move(stage.resolve(rel), stage.resolve(nrel),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        nrel
+      val rels = st.files.zipWithIndex.map { case (f, i) =>
+        val rel = f.under(StagedWrite.seededName("rw", s"$target|rewrite|$i"))
+        f.moveTo(st.dir.resolve(rel))
+        rel
       }
-      val tupleOf: String => Seq[Any] = rel => {
-        val seg = rel.split('/').find(_.startsWith(fieldName + "="))
-          .getOrElse(throw new IllegalStateException(
-            s"rewritten data file '$rel' lacks the '$fieldName=' path segment"))
-        val raw = seg.substring(fieldName.length + 1)
-        if (raw == "__HIVE_DEFAULT_PARTITION__") Seq(null)
-        else Seq(decode(TxTable.unescapePathName(raw)))
-      }
-      assembleIcebergV1(t.spark, stage, rels, target, tsMillis,
-        schema, partFields, tupleOf)
-    } finally deleteRecursively(stage)
+      assembleIcebergV1(t.spark, st.dir, rels, target, tsMillis,
+        schema, partFields, rel => hivePartitionTuple(rel, partFields))
+    }
   }
 
   /** INCREMENTAL mirror onto the bucket[n] layout (round-11 verdict
@@ -508,32 +480,17 @@ object IcebergInterop {
     // tasks × values slivers)
     val spark = t.spark
     val srcData = Paths.get(snap.dataDir)
-    val stage = Files.createTempDirectory("graft_ice_rewr_incr")
-    val newEntries: Seq[(String, Long, Long)] = try {
-      spark.read.schema(schema)
-        .parquet(newFiles.map(rel => srcData.resolve(rel).toString): _*)
-        .withColumn(fieldName, partValue)
-        .repartition(org.apache.spark.sql.functions.col(fieldName))
-        .write.mode("overwrite").partitionBy(fieldName).parquet(stage.toString)
-      val walk = Files.walk(stage)
-      val staged = try walk.iterator().asScala
-          .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
-          .map(p => (p, parquetRowCount(spark, p))).filter(_._2 > 0L)
-          .toSeq.sortBy(_._1.toString)
-        finally walk.close()
-      staged.zipWithIndex.map { case ((p, rc), i) =>
-        val relDir = Option(stage.relativize(p).getParent)
-          .map(_.toString).getOrElse("")
-        val name = s"incr-${java.util.UUID.nameUUIDFromBytes(
-          (target + "|" + transform + "|v" + prevVersion + "|" + tsMillis +
-            "|" + i).getBytes("UTF-8"))}.parquet"
-        val rel = if (relDir.isEmpty) name else s"$relDir/$name"
-        val dst = dataDir.resolve(rel)
-        Files.createDirectories(dst.getParent)
-        Files.move(p, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        (rel, Files.size(dst), rc)
+    val newEntries: Seq[(String, Long, Long)] = StagedWrite.write(finalDir,
+        spark.read.schema(schema)
+          .parquet(newFiles.map(rel => srcData.resolve(rel).toString): _*)
+          .withColumn(fieldName, partValue),
+        Seq(fieldName), filesPerValue = 1) {
+      _.nonEmptyFiles.zipWithIndex.map { case (f, i) =>
+        val rel = f.under(StagedWrite.seededName("incr",
+          s"$target|$transform|v$prevVersion|$tsMillis|$i"))
+        (rel, f.moveTo(dataDir.resolve(rel)), f.rows)
       }
-    } finally deleteRecursively(stage)
+    }
 
     // one restated v1 manifest (carried + new), tuples re-derived from the
     // Hive dir names — every file of a rewritten layout lives under
@@ -1170,53 +1127,23 @@ object IcebergInterop {
     // required ordering is already satisfied and the (file_path, pos)
     // order survives into each written file
     val delDir = root.resolve("data").resolve("deletes")
-    val stage = Files.createTempDirectory("graft_ice_delw")
+    val toWrite =
+      if (partFieldNames.isEmpty) hits.drop("__gdel_grp").sort("file_path", "pos")
+      else hits.repartition(col("__gdel_grp"))
+        .sortWithinPartitions("__gdel_grp", "file_path", "pos")
     // (final path, rows, size, partition tuple)
-    val written: Seq[(Path, Long, Long, Option[GenericRecord])] = try {
-      val key = "spark.sql.parquet.fieldId.write.enabled"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "true")
-      try {
-        if (partFieldNames.isEmpty)
-          hits.drop("__gdel_grp").sort("file_path", "pos")
-            .write.mode("overwrite").parquet(stage.toString)
-        else hits.repartition(col("__gdel_grp"))
-          .sortWithinPartitions("__gdel_grp", "file_path", "pos")
-          .write.mode("overwrite").partitionBy("__gdel_grp")
-          .parquet(stage.toString)
-      } finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
+    val written: Seq[(Path, Long, Long, Option[GenericRecord])] = StagedWrite.write(
+        root, toWrite, if (partFieldNames.isEmpty) Nil else Seq("__gdel_grp"),
+        fieldIds = true) {
+      _.nonEmptyFiles.zipWithIndex.map { case (f, i) =>
+        // the COMMIT VERSION keys the name: two deletes sharing a fixed
+        // tsMillis (deterministic fixtures) must not collide
+        val dst = delDir.resolve(StagedWrite.seededName("delete",
+          s"$path|v$prevVersion|$tsMillis|$i"))
+        val grp = f.parts.headOption.fold(0)(_._2.get.toInt)
+        (dst, f.rows, f.moveTo(dst), groups(grp)._1)
       }
-      val walk = Files.walk(stage)
-      val staged = try walk.iterator().asScala
-          .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
-          .map { p =>
-            val grp =
-              if (partFieldNames.isEmpty) 0
-              else stage.relativize(p).iterator().asScala
-                .map(_.toString).find(_.startsWith("__gdel_grp="))
-                .map(_.stripPrefix("__gdel_grp=").toInt)
-                .getOrElse(throw new IllegalStateException(
-                  s"staged delete file $p carries no __gdel_grp segment"))
-            (p, parquetRowCount(spark, p), grp)
-          }.filter(_._2 > 0L).toSeq.sortBy(f => (f._3, f._1.toString))
-        finally walk.close()
-      if (staged.isEmpty) Seq.empty
-      else {
-        Files.createDirectories(delDir)
-        staged.zipWithIndex.map { case ((p, rows, grp), i) =>
-          // the COMMIT VERSION keys the name: two deletes sharing a fixed
-          // tsMillis (deterministic fixtures) must not collide
-          val dst = delDir.resolve(
-            s"delete-${java.util.UUID.nameUUIDFromBytes(
-              (path + "|v" + prevVersion + "|" + tsMillis + "|" + i)
-                .getBytes("UTF-8"))}.parquet")
-          Files.move(p, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          (dst, rows, Files.size(dst), groups(grp)._1)
-        }
-      }
-    } finally deleteRecursively(stage)
+    }
     if (written.isEmpty) return 0L
     val deleted = written.map(_._2).sum
 
@@ -1422,10 +1349,11 @@ object IcebergInterop {
     * type match, renamed-column physical presence, identity-projected
     * partition sources refused), the spec selection (a partitioned
     * table's GLOBAL delete takes an unpartitioned spec — reused or
-    * minted), and the spec-shaped delete parquet(s) staged in a TEMP
-    * directory with their `data/deletes/` destinations planned — moved
-    * into the table only by [[StagedEqDelete.promote]], which the caller
-    * invokes immediately before writing the commit metadata. */
+    * minted), and the spec-shaped delete parquet(s) staged in the
+    * table's staging directory with their `data/deletes/` destinations
+    * planned — moved into the layout only by [[StagedEqDelete.promote]],
+    * which the caller invokes immediately before writing the commit
+    * metadata. */
   private def stageEqDelete(spark: SparkSession, root: Path, path: String,
       meta: JsonNode, snapNode: JsonNode, schema: StructType,
       keys: DataFrame, prevVersion: Long, tsMillis: Long, caller: String,
@@ -1514,32 +1442,12 @@ object IcebergInterop {
         .putLong("parquet.field.id", id.toLong).build())
     }.toIndexedSeq: _*)
     val delDir = root.resolve("data").resolve("deletes")
-    val stage = Files.createTempDirectory("graft_ice_eqdel")
-    val planned: Seq[(Path, Path, Long)] = try {
-      val key = "spark.sql.parquet.fieldId.write.enabled"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "true")
-      try stamped.sort(keyCols.map(col).toIndexedSeq: _*)
-        .write.mode("overwrite").parquet(stage.toString)
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-      val walk = Files.walk(stage)
-      val staged = try walk.iterator().asScala
-          .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
-          .map(p => (p, parquetRowCount(spark, p))).filter(_._2 > 0L).toSeq
-        finally walk.close()
-      staged.zipWithIndex.map { case ((p, rows), i) =>
-        val dst = delDir.resolve(
-          s"eqdelete-${java.util.UUID.nameUUIDFromBytes(
-            (path + "|v" + prevVersion + "|" + tsMillis + "|" + i)
-              .getBytes("UTF-8"))}.parquet")
-        (p, dst, rows)
-      }
-    } catch {
-      case e: Throwable => deleteRecursively(stage); throw e
-    }
+    val stage = StagedWrite.stage(root,
+      stamped.sort(keyCols.map(col).toIndexedSeq: _*), fieldIds = true)
+    val planned = try stage.nonEmptyFiles.zipWithIndex.map { case (f, i) =>
+        (f, delDir.resolve(StagedWrite.seededName("eqdelete",
+          s"$path|v$prevVersion|$tsMillis|$i")))
+      } catch { case e: Throwable => stage.close(); throw e }
     StagedEqDelete(stage, planned, ids, eqSpecId, mintEmptySpec)
   }
 
@@ -1672,10 +1580,11 @@ object IcebergInterop {
     * input files may span many partition values and every task would
     * otherwise write a sliver into every value directory (the
     * small-files trap [[exportIcebergRewritten]] documents); upsert-size
-    * batches skip it. */
-  private def writeSpecStage(spark: SparkSession, rows: DataFrame,
-      schema: StructType, specFields: Seq[UpsertSpecField],
-      stage: Path, cluster: Boolean = false): Seq[(Path, Long)] = {
+    * batches skip it. `publish` sees the staged files inside `root`, which
+    * are swept after it returns. */
+  private def writeSpecStage[A](rows: DataFrame, schema: StructType,
+      specFields: Seq[UpsertSpecField], root: Path, cluster: Boolean = false)(
+      publish: Seq[StagedWrite.StagedFile] => A): A = {
     import org.apache.spark.sql.functions.{col, date_add, floor, lit,
       unix_micros}
     val stagedFrame = specFields.filterNot(_.transform == "identity")
@@ -1696,63 +1605,38 @@ object IcebergInterop {
         }
         df.withColumn(sf.pf.name, v)
       }
-    val stageCols = specFields.map(_.pf.name)
-    val toWrite =
-      if (cluster && stageCols.nonEmpty)
-        stagedFrame.repartition(stageCols.map(col): _*)
-      else stagedFrame
-    if (stageCols.isEmpty)
-      toWrite.write.mode("overwrite").parquet(stage.toString)
-    else toWrite.write.mode("overwrite")
-      .partitionBy(stageCols: _*).parquet(stage.toString)
-    val walk = Files.walk(stage)
-    try walk.iterator().asScala
-        .filter(pp => Files.isRegularFile(pp) && pp.toString.endsWith(".parquet"))
-        .map(pp => (pp, parquetRowCount(spark, pp))).filter(_._2 > 0L)
-        .toSeq.sortBy(_._1.toString)
-      finally walk.close()
+    StagedWrite.write(root, stagedFrame, specFields.map(_.pf.name),
+      filesPerValue = if (cluster) 1 else 0)(st => publish(st.nonEmptyFiles))
   }
 
   /** Move staged parquets into `dataDir` under deterministic
     * `<prefix>-<uuid>` names (uuid keyed by `seed|index`), preserving
     * their Hive partition dirs; returns (rel, rows, size, tuple). */
-  private def moveStagedInto(staged: Seq[(Path, Long)], stage: Path,
+  private def moveStagedInto(staged: Seq[StagedWrite.StagedFile],
       dataDir: Path, partFields: Seq[PartField], prefix: String,
       seed: String): Seq[(String, Long, Long, Seq[Any])] =
-    staged.zipWithIndex.map { case ((pp, rc), i) =>
-      val relDir = Option(stage.relativize(pp).getParent)
-        .map(_.toString).getOrElse("")
-      val name = s"$prefix-${java.util.UUID.nameUUIDFromBytes(
-        (seed + "|" + i).getBytes("UTF-8"))}.parquet"
-      val rel = if (relDir.isEmpty) name else s"$relDir/$name"
-      val dst = dataDir.resolve(rel)
-      Files.createDirectories(dst.getParent)
-      Files.move(pp, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      (rel, rc, Files.size(dst), hivePartitionTuple(rel, partFields))
+    staged.zipWithIndex.map { case (f, i) =>
+      val rel = f.under(StagedWrite.seededName(prefix, s"$seed|$i"))
+      (rel, f.rows, f.moveTo(dataDir.resolve(rel)), hivePartitionTuple(rel, partFields))
     }
 
-  /** An equality delete staged OUTSIDE the table (a temp directory):
-    * [[stageEqDelete]] plans the final `data/deletes/` destinations but
-    * does not move anything — the caller calls [[promote]] only
-    * immediately before writing the commit metadata, so any failure in
-    * the rest of the staging (e.g. the data half of an upsert) aborts
-    * with NO bytes left inside the table directory (and a retried commit
-    * never collides with orphaned deterministic names). */
-  private final case class StagedEqDelete(stageDir: Path,
-      files: Seq[(Path, Path, Long)], ids: Seq[Int], eqSpecId: Int,
+  /** An equality delete staged inside the table's dot-prefixed staging
+    * directory: [[stageEqDelete]] plans the final `data/deletes/`
+    * destinations but does not move anything — the caller calls
+    * [[promote]] only immediately before writing the commit metadata, so
+    * any failure in the rest of the staging (e.g. the data half of an
+    * upsert) aborts with NO bytes left in the table's layout (and a
+    * retried commit never collides with orphaned deterministic names). */
+  private final case class StagedEqDelete(stage: StagedWrite.Stage,
+      files: Seq[(StagedWrite.StagedFile, Path)], ids: Seq[Int], eqSpecId: Int,
       mintEmptySpec: Option[Int]) {
-    def rows: Long = files.map(_._3).sum
+    def rows: Long = files.map(_._1.rows).sum
     /** Move the staged parquets to their planned in-table destinations;
-      * returns `(dst, rows, size)` per file and removes the temp dir. */
+      * returns `(dst, rows, size)` per file and sweeps the staging dir. */
     def promote(): Seq[(Path, Long, Long)] =
-      try {
-        files.headOption.foreach(f => Files.createDirectories(f._2.getParent))
-        files.map { case (src, dst, nRows) =>
-          Files.move(src, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          (dst, nRows, Files.size(dst))
-        }
-      } finally cleanup()
-    def cleanup(): Unit = deleteRecursively(stageDir)
+      try files.map { case (f, dst) => (dst, f.rows, f.moveTo(dst)) }
+      finally cleanup()
+    def cleanup(): Unit = stage.close()
   }
 
   /** CDC UPSERT (the standard MERGE): commit `rows` into the Iceberg
@@ -1838,24 +1722,22 @@ object IcebergInterop {
     // Column-Projected layout) while a day field's DERIVED date column
     // groups the directories and leaves the bytes, its source timestamp
     // staying physical (non-identity transforms are pruning metadata).
-    // Both halves stage in TEMP directories and move into the table
-    // together, immediately before the commit metadata — a failure
-    // anywhere in the staging aborts with no bytes left behind inside
-    // the table.
+    // Both halves stage in the table's staging directories and move
+    // into its layout together, immediately before the commit metadata
+    // — a failure anywhere in the staging aborts with no bytes left
+    // behind inside the table.
     val partFields = specFields.map(_.pf)
     val dataDir = root.resolve("data")
-    val stage = Files.createTempDirectory("graft_ice_upsert")
     val (delWritten, dataWritten) = try {
-      val staged = writeSpecStage(spark, incoming, schema, specFields, stage)
-      require(staged.map(_._2).sum > 0,
-        "upsertIceberg: the incoming frame has no rows")
-      val dw = stagedDel.promote()
-      val moved = moveStagedInto(staged, stage, dataDir, partFields,
-        "upsert", s"$path|v$prevVersion|$tsMillis")
-      (dw, moved)
+      writeSpecStage(incoming, schema, specFields, root) { staged =>
+        require(staged.nonEmpty, "upsertIceberg: the incoming frame has no rows")
+        val dw = stagedDel.promote()
+        (dw, moveStagedInto(staged, dataDir, partFields,
+          "upsert", s"$path|v$prevVersion|$tsMillis"))
+      }
     } catch {
       case e: Throwable => stagedDel.cleanup(); throw e
-    } finally deleteRecursively(stage)
+    }
     val appended = dataWritten.map(_._2).sum
 
     val newSeq = Option(meta.get("last-sequence-number")).map(_.asLong)
@@ -1945,14 +1827,12 @@ object IcebergInterop {
 
     val partFields = specFields.map(_.pf)
     val dataDir = root.resolve("data")
-    val stage = Files.createTempDirectory("graft_ice_append")
-    val dataWritten: Seq[(String, Long, Long, Seq[Any])] = try {
-      val staged = writeSpecStage(spark, ordered, schema, specFields, stage)
-      require(staged.map(_._2).sum > 0,
-        "appendIceberg: the incoming frame has no rows")
-      moveStagedInto(staged, stage, dataDir, partFields,
-        "append", s"$path|append|v$prevVersion|$tsMillis")
-    } finally deleteRecursively(stage)
+    val dataWritten: Seq[(String, Long, Long, Seq[Any])] =
+      writeSpecStage(ordered, schema, specFields, root) { staged =>
+        require(staged.nonEmpty, "appendIceberg: the incoming frame has no rows")
+        moveStagedInto(staged, dataDir, partFields,
+          "append", s"$path|append|v$prevVersion|$tsMillis")
+      }
     val appended = dataWritten.map(_._2).sum
 
     val newSeq = Option(meta.get("last-sequence-number")).map(_.asLong)
@@ -2403,44 +2283,33 @@ object IcebergInterop {
 
     // survivors of the touched files only, written fresh
     val compDir = root.resolve("data").resolve("compacted")
-    Files.createDirectories(compDir)
-    val stage = Files.createTempDirectory("graft_ice_compact")
-    val newFiles: Seq[ManifestFile] = try {
-      // renamed columns: aliased scan + coalesce, and the survivors are
-      // WRITTEN under the current names — compaction doubles as the
-      // physical migration path that retires historic column names;
-      // identity-partitioned tables resolve projected columns through
-      // the fill and stage the survivors back per partition (the
-      // projected columns leave the bytes again). Equality deletes fold
-      // in via the read path's own strictly-newer-sequence anti-join —
-      // the new snapshot carries NO delete files of either kind.
-      val aliases = renameAliases(meta, path,
-        Option(meta.get("current-schema-id")).map(_.asInt))
-      val eqSpecs = equalityDeleteSpecs(spark, path, meta, eqDeletes,
-        scopeData = if (eqDeletes.isEmpty) None else Some(dataFiles))
-      val survivors = readWithIdentityFill(spark, path, meta, schema,
-        rewrite.map(e => (e.resolved, e.partition)),
-        deletes = delFrame, eqSpecs = eqSpecs,
-        dataSeqs = rewrite.map(e => (e.resolved.getFileName.toString, e.seq)),
-        aliases = aliases)
-      // a full rewrite may regroup rows across partition values (a flat
-      // old era landing under a day spec) — cluster first; compaction
-      // inputs are already partition-pure, no shuffle needed
-      val staged = writeSpecStage(spark, survivors, schema, specFields,
-        stage, cluster = rewriteAll)
-      staged.zipWithIndex.map { case ((p, rows), i) =>
-        val relDir = Option(stage.relativize(p).getParent)
-          .map(_.toString).getOrElse("")
-        val name = s"compact-${java.util.UUID.nameUUIDFromBytes(
-          (path + "|compact|" + tsMillis + "|" + i).getBytes("UTF-8"))}.parquet"
-        val rel = if (relDir.isEmpty) name else s"$relDir/$name"
-        val dst = compDir.resolve(rel)
-        Files.createDirectories(dst.getParent)
-        Files.move(p, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        ManifestFile(dst.toUri.toString, Files.size(dst), rows,
-          hivePartitionTuple(rel, partFields))
+    // renamed columns: aliased scan + coalesce, and the survivors are
+    // WRITTEN under the current names — compaction doubles as the
+    // physical migration path that retires historic column names;
+    // identity-partitioned tables resolve projected columns through
+    // the fill and stage the survivors back per partition (the
+    // projected columns leave the bytes again). Equality deletes fold
+    // in via the read path's own strictly-newer-sequence anti-join —
+    // the new snapshot carries NO delete files of either kind.
+    val aliases = renameAliases(meta, path,
+      Option(meta.get("current-schema-id")).map(_.asInt))
+    val eqSpecs = equalityDeleteSpecs(spark, path, meta, eqDeletes,
+      scopeData = if (eqDeletes.isEmpty) None else Some(dataFiles))
+    val survivors = readWithIdentityFill(spark, path, meta, schema,
+      rewrite.map(e => (e.resolved, e.partition)),
+      deletes = delFrame, eqSpecs = eqSpecs,
+      dataSeqs = rewrite.map(e => (e.resolved.getFileName.toString, e.seq)),
+      aliases = aliases)
+    // a full rewrite may regroup rows across partition values (a flat
+    // old era landing under a day spec) — cluster first; compaction
+    // inputs are already partition-pure, no shuffle needed
+    val newFiles: Seq[ManifestFile] =
+      writeSpecStage(survivors, schema, specFields, root, cluster = rewriteAll) {
+        moveStagedInto(_, compDir, partFields, "compact", s"$path|compact|$tsMillis")
+          .map { case (rel, rows, size, tuple) =>
+            ManifestFile(compDir.resolve(rel).toUri.toString, size, rows, tuple)
+          }
       }
-    } finally deleteRecursively(stage)
     // rows reclaimed = inputs of the rewritten files minus their
     // survivors — exact under overlapping delete files (a (file, pos)
     // recorded twice dies once) and under equality deletes alike
@@ -3199,18 +3068,14 @@ object IcebergInterop {
   private def hivePartitionTuple(rel: String,
       partFields: Seq[PartField]): Seq[Any] = {
     if (partFields.isEmpty) return Seq.empty
-    val segs = rel.split('/').iterator
-      .filter(_.contains("="))
-      .map { s => val i = s.indexOf('='); (s.substring(0, i), s.substring(i + 1)) }
-      .toMap
+    val segs = StagedWrite.hivePartitions(rel).toMap
     partFields.map { pf =>
-      val raw = segs.getOrElse(pf.name, throw new IllegalArgumentException(
+      val decoded = segs.getOrElse(pf.name, throw new IllegalArgumentException(
         s"data file '$rel' carries no '${pf.name}=' path segment — " +
           "the partitioned layout is inconsistent; cannot export"))
-      if (raw == "__HIVE_DEFAULT_PARTITION__") null
-      else {
-        val v = TxTable.unescapePathName(raw)
-        pf.dataType match {
+      decoded match {
+        case None => null
+        case Some(v) => pf.dataType match {
           case StringType  => v
           case IntegerType => java.lang.Integer.valueOf(v)
           case LongType    => java.lang.Long.valueOf(v)
@@ -3316,22 +3181,6 @@ object IcebergInterop {
       s"column '$where' has type $other — not exportable to Iceberg by this writer")
   }
 
-  /** Per-file row count from the parquet footer — metadata-scale driver
-    * reads (Iceberg's own planning reads the same footers). O(files)
-    * sequential footer reads bound the export: fine through the ~800k
-    * files of a 128 MB/file 100 TB table on local storage; an
-    * object-store deployment at that count would parallelize this via a
-    * small Spark job over the file list (the record counts could also be
-    * carried in the TxTable commit stats to make this free). */
-  private[graft] def parquetRowCount(spark: SparkSession, p: Path): Long = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = spark.sessionState.newHadoopConf()
-    val in = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toUri), conf))
-    try in.getRecordCount
-    finally in.close()
-  }
 
   // Avro schemas for the v1 manifest list / manifest, field-ids included
   // as the spec requires (a real reader resolves these columns by id).
@@ -4808,30 +4657,6 @@ object IcebergInterop {
         .collect().map { case (u, cols) => u -> cols.toSet }.toMap
     }
 
-  /** Footer row counts for MANY files — the same distributed-above-a-
-    * threshold shape as [[parquetTopLevelColsBulk]]. */
-  private[sources] def parquetRowCountBulk(spark: SparkSession,
-      paths: Seq[Path]): Map[String, Long] =
-    if (paths.size <= 16)
-      paths.map(p => p.toString -> parquetRowCount(spark, p)).toMap
-    else {
-      val sp = spark
-      import sp.implicits._
-      spark.createDataset(paths.map(_.toString))
-        .repartition(math.min(paths.size, 64))
-        .mapPartitions { it =>
-          val conf = new org.apache.hadoop.conf.Configuration()
-          it.map { u =>
-            val in = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                new org.apache.hadoop.fs.Path(
-                  java.nio.file.Paths.get(u).toUri), conf))
-            try (u, in.getRecordCount)
-            finally in.close()
-          }
-        }
-        .collect().toMap
-    }
 
   /** Top-level column names of one parquet file's footer schema. */
   private def parquetTopLevelCols(spark: SparkSession, p: Path): Set[String] = {
@@ -4982,6 +4807,4 @@ object IcebergInterop {
     try reader.iterator().asScala.toSeq
     finally reader.close()
   }
-
-  private def deleteRecursively(p: Path): Unit = DeltaInterop.deleteRecursively(p)
 }

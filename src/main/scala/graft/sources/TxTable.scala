@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util.UUID
 
 import scala.jdk.CollectionConverters._
@@ -396,52 +396,19 @@ class TxTable(val spark: SparkSession, val root: String) {
     * With `partitionCols`, files land under Hive-style partition
     * directories (`data/<col>=<v>/...`) and the returned relative names
     * carry the subpath — the log tracks files, the directory layout is the
-    * pruning index. */
+    * pruning index. Rows cluster by partition value first, so each value
+    * lands in `filesPerPartition` tasks/files (compact's per-partition
+    * target) rather than every task writing a sliver into every value
+    * directory. */
   private def stageDataFiles(df: DataFrame, partitionCols: Seq[String] = Seq.empty,
-      filesPerPartition: Int = 1): Seq[String] = {
-    Files.createDirectories(dataDir)
-    val staging = Files.createTempDirectory(Paths.get(root), ".staging")
-    try {
-      // cluster rows by partition value before a partitioned write: without
-      // this every shuffle task writes a sliver into EVERY partition dir
-      // (tasks × partitions tiny files — the classic small-files trap);
-      // with it each partition value lands in exactly one task → one
-      // well-sized file per partition per commit. `filesPerPartition > 1`
-      // adds a hash salt to the clustering so a hot partition can split
-      // across that many tasks/files (compact's per-partition target).
-      // The salt hashes the ROW CONTENT, never monotonically_increasing_id:
-      // a positional id is not stable under partial stage recomputation, so
-      // a task retry could re-route rows to different reducers and silently
-      // duplicate or drop them in the committed files (the SPARK-23207
-      // failure class).
-      val clustered =
-        if (partitionCols.isEmpty) df
-        else if (filesPerPartition <= 1) df.repartition(partitionCols.map(col): _*)
-        else df.repartition(partitionCols.map(col) :+
-          pmod(xxhash64(df.columns.map(col).toIndexedSeq: _*), lit(filesPerPartition.toLong)): _*)
-      val writer = clustered.write.mode("overwrite")
-      (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
-        .parquet(staging.toString)
-      val w0 = Files.walk(staging)
-      val staged = try w0.iterator().asScala.toSeq.filter(_.getFileName.toString.endsWith(".parquet"))
-                   finally w0.close()
-      staged.map { p =>
-        val sub = staging.relativize(p.getParent).toString // "" or col=v[/col2=v2]
-        val name = s"${UUID.randomUUID()}.parquet"
-        val rel = if (sub.isEmpty) name else s"$sub/$name"
-        Files.createDirectories(dataDir.resolve(rel).getParent)
-        Files.move(p, dataDir.resolve(rel), StandardCopyOption.ATOMIC_MOVE)
+      filesPerPartition: Int = 1): Seq[String] =
+    StagedWrite.write(Paths.get(root), df, partitionCols, filesPerPartition) {
+      _.files.map { f =>
+        val rel = f.under(s"${UUID.randomUUID()}.parquet")
+        f.moveTo(dataDir.resolve(rel))
         rel
       }
-    } finally {
-      // always sweep the staging tree — a failed write must not strand a
-      // directory of parquet under root forever (vacuum also sweeps stale
-      // crash leftovers, but a live-JVM failure cleans up right here)
-      val w = Files.walk(staging)
-      try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      finally w.close()
     }
-  }
 
   /** Atomic put-if-absent publish of version `v`; true iff this writer won. */
   private def tryCommit(v: Long, op: String, schemaDdl: Option[String],
@@ -774,6 +741,13 @@ class TxTable(val spark: SparkSession, val root: String) {
     readState(snap.copy(files = kept))
   }
 
+  /** The `colName=` partition value of a relative file path, if the file
+    * sits under such a directory — unescaped to the logical value; the
+    * null-partition sentinel yields None (no pruning evidence, so the file
+    * is conservatively scanned). */
+  private def partValueOf(relFile: String, colName: String): Option[String] =
+    StagedWrite.hivePartitions(relFile).collectFirst { case (c, v) if c == colName => v }.flatten
+
   /** Data-skipping snapshot read: scan only live files whose recorded
     * [min, max] range for `colName` intersects [lo, hi]; files without
     * stats (or with stats on another column) are conservatively included.
@@ -781,20 +755,6 @@ class TxTable(val spark: SparkSession, val root: String) {
     * semantics, exactly like partition pruning one level finer. Resolves
     * through the checkpointed log like read().
     */
-  private def unescapePathName(s: String): String = TxTable.unescapePathName(s)
-
-  /** The `colName=` partition value of a relative file path, if the file
-    * sits under such a directory — unescaped to the logical value; the
-    * null-partition sentinel yields None (no pruning evidence, so the file
-    * is conservatively scanned). */
-  private def partValueOf(relFile: String, colName: String): Option[String] =
-    relFile.split('/').iterator
-      .filter(_.contains("="))
-      .map { seg => val i = seg.indexOf('='); (seg.substring(0, i), seg.substring(i + 1)) }
-      .collectFirst { case (c, v) if c == colName => v }
-      .filter(_ != "__HIVE_DEFAULT_PARTITION__")
-      .map(unescapePathName)
-
   def readWhere(colName: String, lo: Double, hi: Double): DataFrame =
     readWhereAll(Seq((colName, lo, hi)))
 
@@ -1302,25 +1262,13 @@ class TxTable(val spark: SparkSession, val root: String) {
     val df = readState(state)
     require(!df.columns.contains(helper),
       s"the table already has a column named '$helper' — rename it first")
-    Files.createDirectories(dataDir)
-    val staging = Files.createTempDirectory(Paths.get(root), ".staging")
-    val staged = try {
-      df.withColumn(helper, key)
-        .repartition(col(helper))
-        .write.mode("overwrite").partitionBy(helper).parquet(staging.toString)
-      val w0 = Files.walk(staging)
-      val parts = try w0.iterator().asScala.toSeq
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-        finally w0.close()
-      parts.map { p =>
+    val staged = StagedWrite.write(Paths.get(root), df.withColumn(helper, key),
+        Seq(helper), filesPerValue = 1) {
+      _.files.map { f =>
         val name = s"${UUID.randomUUID()}.parquet"
-        Files.move(p, dataDir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+        f.moveTo(dataDir.resolve(name))
         name
       }
-    } finally {
-      val w = Files.walk(staging)
-      try w.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      finally w.close()
     }
     commitLoop("cluster", staged, files, tsMillis,
       stats = computeStats(staged, activeStatsCols(state)),
@@ -1528,11 +1476,7 @@ class TxTable(val spark: SparkSession, val root: String) {
     listDir(Paths.get(root))
       .filter(p => p.getFileName.toString.startsWith(".staging") && Files.isDirectory(p))
       .filter(p => Files.getLastModifiedTime(p).toMillis <= cutoff)
-      .foreach { dir =>
-        val ws = Files.walk(dir)
-        try ws.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-        finally ws.close()
-      }
+      .foreach(StagedWrite.deleteRecursively)
     listDir(logDir)
       .filter(p => p.getFileName.toString.startsWith(".tmp") && Files.isRegularFile(p))
       .filter(p => Files.getLastModifiedTime(p).toMillis <= cutoff)
@@ -1562,31 +1506,6 @@ object TxTable {
   case class SnapshotInfo(files: Seq[String], schemaDdl: String,
       partCols: Seq[String], dataDir: String,
       stats: Map[String, Seq[FileStats]] = Map.empty)
-
-  /** Inverse of Spark's Hive-style partition-path escaping (special chars
-    * written as `%XX` hex). Directory names hold the ESCAPED value; pruning
-    * must compare the LOGICAL value or `value = "a:b"` silently prunes the
-    * `k=a%3Ab` directory it should scan — wrong results, because partition
-    * pruning here is trusted as exact. On the companion so the lakehouse
-    * exporters ([[graft.sources.IcebergInterop]]) decode the same layout
-    * with provably the same rules. */
-  private[sources] def unescapePathName(s: String): String =
-    if (!s.contains('%')) s
-    else {
-      val sb = new java.lang.StringBuilder(s.length)
-      var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (c == '%' && i + 2 < s.length &&
-            Character.digit(s.charAt(i + 1), 16) >= 0 &&
-            Character.digit(s.charAt(i + 2), 16) >= 0) {
-          sb.append(((Character.digit(s.charAt(i + 1), 16) << 4) +
-            Character.digit(s.charAt(i + 2), 16)).toChar)
-          i += 3
-        } else { sb.append(c); i += 1 }
-      }
-      sb.toString
-    }
 
   /** Kirsch–Mitzenmacher double hashing: k bit positions in [0, m) derived
     * from one 64-bit hash (h2 from a splitmix64 finalizer, forced odd so
