@@ -7,12 +7,12 @@ import graft.operators.AsOfJoin
 
 /** Dev harness: the flagship as-of join under HOT-KEY SKEW — one entity
   * holding ~10% of all facts (the "celebrity user" a 100 TB event log
-  * always has). Measures the three formulations on identical data and
-  * asserts they agree bit-for-bit:
+  * always has). Measures the as-of join and its skew variants on
+  * identical data and asserts they agree bit-for-bit:
   *
-  *   - locf        — one window task owns the hot key's entire history
-  *   - locfSalted  — spine scatters over salt buckets, facts replicate
   *   - native      — AsOfJoinExec merge-scan (one merge task for the key)
+  *   - locfSalted  — spine scatters over salt buckets, facts replicate
+  *   - locfRouted  — only the hot key salted, the tail plain native
   *
   * Usage: runMain graft.AsOfSkewProbe [nFacts] [nSpine] [nKeys] [hotPct] [saltBuckets]
   * Results are recorded in the [[graft.operators.AsOfJoin.locfSalted]]
@@ -61,7 +61,7 @@ object AsOfSkewProbe {
 
     // the documented salting pattern, now first-class as AsOfJoin.locfRouted:
     // only the hot key takes the salted path (its facts replicate
-    // saltBuckets times), the long tail runs plain locf — salting the
+    // saltBuckets times), the long tail runs plain native — salting the
     // whole join replicates EVERY fact and loses by construction
     def routed = AsOfJoin.locfRouted(
       spine, facts, Seq("k"), "sts", "fts", Seq("v"), "tie",
@@ -69,9 +69,6 @@ object AsOfSkewProbe {
 
     println(s"[skew] facts=$nFacts spine=$nSpine keys=$nKeys hot=$hotPct% salt=$salt cpus=$cpus")
     for (rep <- 1 to 2) {
-      time(s"locf#$rep", "locf") {
-        checksum(AsOfJoin.locf(spine, facts, Seq("k"), "sts", "fts", Seq("v"), "tie"))
-      }
       time(s"salted#$rep", "salted") {
         checksum(AsOfJoin.locfSalted(spine, facts, Seq("k"), "sts", "fts", Seq("v"), "tie", salt))
       }
@@ -80,9 +77,9 @@ object AsOfSkewProbe {
         checksum(AsOfJoin.native(spine, facts, Seq("k"), "sts", "fts", Seq("v"), "tie"))
       }
     }
-    require(Seq("salted", "routed", "native").forall(v => sums(v) == sums("locf")),
+    require(Seq("salted", "routed").forall(v => sums(v) == sums("native")),
       s"formulations disagree under skew: $sums")
-    println("[skew] all three formulations bit-identical")
+    println("[skew] salted and routed bit-identical to native")
     spark.stop()
   }
 }

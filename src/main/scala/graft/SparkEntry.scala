@@ -68,43 +68,38 @@ object SparkEntry {
       .orderBy("user_id", "event_type")
   }
 
-  /** A3 — the flagship point-in-time (as-of) join: each purchase enriched
-    * with the user's latest click strictly at-or-before the purchase time.
-    */
-  private def a3PitJoin(s: SparkSession, dir: String): DataFrame = {
+  /** A3 inputs: purchases as the spine, clicks as the facts. */
+  private def a3Sides(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val ev = Tables.events(s, dir)
-    val spine = ev
-      .where(col("event_type") === "purchase")
+    (ev.where(col("event_type") === "purchase")
       .select(
         col("user_id"),
         col("event_id").as("purchase_id"),
         col("ts").as("purchase_ts"),
-        col("value").as("purchase_value"))
-    val facts = ev
-      .where(col("event_type") === "click")
-      .select(col("user_id"), col("ts"), col("event_id"), col("value").as("click_value"))
+        col("value").as("purchase_value")),
+      ev.where(col("event_type") === "click")
+        .select(col("user_id"), col("ts"), col("event_id"), col("value").as("click_value")))
+  }
+
+  /** A3 — the flagship point-in-time (as-of) join: each purchase enriched
+    * with the user's latest click strictly at-or-before the purchase time,
+    * through the custom merge-scan physical operator (AsOfJoinExec).
+    * Declared as both `a3_pit_join` and `a3_pit_join_native`.
+    */
+  private def a3PitJoin(s: SparkSession, dir: String): DataFrame = {
+    val (spine, facts) = a3Sides(s, dir)
     AsOfJoin
-      .locf(spine, facts, Seq("user_id"), "purchase_ts", "ts", Seq("click_value"), "event_id")
+      .native(spine, facts, Seq("user_id"), "purchase_ts", "ts", Seq("click_value"), "event_id")
       .withColumnRenamed("ts__timestamp", "click_ts")
       .orderBy("purchase_id")
   }
 
   /** A3 — tolerance-bounded PIT join: a click older than one hour before
     * the purchase is no match (payload nulls). Max-staleness semantics at
-    * join time; same one-shuffle LOCF plan.
+    * join time; same plan as a3_pit_join plus a mask.
     */
   private def a3PitJoinTol(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val spine = ev
-      .where(col("event_type") === "purchase")
-      .select(
-        col("user_id"),
-        col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"),
-        col("value").as("purchase_value"))
-    val facts = ev
-      .where(col("event_type") === "click")
-      .select(col("user_id"), col("ts"), col("event_id"), col("value").as("click_value"))
+    val (spine, facts) = a3Sides(s, dir)
     AsOfJoin
       .locfBounded(spine, facts, Seq("user_id"), "purchase_ts", "ts", Seq("click_value"),
         "event_id", toleranceSec = 3600L)
@@ -112,44 +107,13 @@ object SparkEntry {
       .orderBy("purchase_id")
   }
 
-  /** A3 via the custom merge-scan physical operator (AsOfJoinExec) — same
-    * semantics and oracle as a3_pit_join, different physical plan.
-    */
-  private def a3PitJoinNative(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val spine = ev
-      .where(col("event_type") === "purchase")
-      .select(
-        col("user_id"),
-        col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"),
-        col("value").as("purchase_value"))
-    val facts = ev
-      .where(col("event_type") === "click")
-      .select(col("user_id"), col("ts"), col("event_id"), col("value").as("click_value"))
-    AsOfJoin
-      .native(spine, facts, Seq("user_id"), "purchase_ts", "ts", Seq("click_value"), "event_id")
-      .withColumnRenamed("ts__timestamp", "click_ts")
-      .orderBy("purchase_id")
-  }
-
-  /** A3 via the skew-salted LOCF formulation — same semantics and oracle as
+  /** A3 via the skew-salted formulation — same semantics and oracle as
     * a3_pit_join, different physical shape: spine rows scatter over 4 salt
     * buckets, facts replicate per bucket, so one hot user can't serialize
-    * the window into a single task. Oracle-matching proves salting changes
+    * the merge into a single task. Oracle-matching proves salting changes
     * the plan, not the answer. */
   private def a3PitJoinSalted(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val spine = ev
-      .where(col("event_type") === "purchase")
-      .select(
-        col("user_id"),
-        col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"),
-        col("value").as("purchase_value"))
-    val facts = ev
-      .where(col("event_type") === "click")
-      .select(col("user_id"), col("ts"), col("event_id"), col("value").as("click_value"))
+    val (spine, facts) = a3Sides(s, dir)
     AsOfJoin
       .locfSalted(spine, facts, Seq("user_id"), "purchase_ts", "ts", Seq("click_value"), "event_id",
         saltBuckets = 4)
@@ -163,8 +127,8 @@ object SparkEntry {
     * the user's latest event value as of that day's end — the step that
     * turns an irregular event log into the daily feature matrix a model
     * trains on. Grid = users × explode(sequence(dates)) (map-only), fill =
-    * the same one-shuffle LOCF as a3; days before a user's first event
-    * stay null.
+    * the same as-of join as a3; days before a user's first event stay
+    * null.
     */
   private def a8Resample(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
@@ -174,7 +138,7 @@ object SparkEntry {
       .withColumn("as_of", (col("day") + expr("interval 1 day")).cast("timestamp"))
     val facts = ev.select(col("user_id"), col("ts"), col("event_id"), col("value"))
     AsOfJoin
-      .locf(grid, facts, Seq("user_id"), "as_of", "ts", Seq("value"), "event_id")
+      .native(grid, facts, Seq("user_id"), "as_of", "ts", Seq("value"), "event_id")
       .select(col("user_id"),
         // day as yyyy-MM-dd STRING: DuckDB DATE arrives in pandas as
         // datetime64 while Spark's parquet DATE stays datetime.date — the
@@ -955,18 +919,10 @@ object SparkEntry {
       import graft.sources.Lakehouse
       resetBucketTable(s, "graft_bkt_purchases")
       resetBucketTable(s, "graft_bkt_clicks")
-      val ev = Tables.events(s, dir)
-      Lakehouse.writeBucketed(
-        ev.where(col("event_type") === "purchase")
-          .select(col("user_id"), col("event_id").as("purchase_id"),
-            col("ts").as("purchase_ts"), col("value").as("purchase_value")),
-        "graft_bkt_purchases", "user_id", nBuckets = 8,
+      val (purchases, clicks) = a3Sides(s, dir)
+      Lakehouse.writeBucketed(purchases, "graft_bkt_purchases", "user_id", nBuckets = 8,
         sortCols = Seq("user_id", "purchase_ts"))
-      Lakehouse.writeBucketed(
-        ev.where(col("event_type") === "click")
-          .select(col("user_id"), col("ts"), col("event_id"),
-            col("value").as("click_value")),
-        "graft_bkt_clicks", "user_id", nBuckets = 8,
+      Lakehouse.writeBucketed(clicks, "graft_bkt_clicks", "user_id", nBuckets = 8,
         sortCols = Seq("user_id", "ts"))
     }
 
@@ -2361,22 +2317,18 @@ object SparkEntry {
       val cents = AnnIndex.loadCentroids(s, idx)
       def topk() = Similarity.ivfPqTopKWith(AnnIndex.loadEncoded(s, idx), qs,
         "vec_id", "query_id", "qvec", k = 3, cb, cents).localCheckpoint()
-      // the two refusal guards throw BEFORE touching the marker or the
-      // tombstone files (read-only probes), and the masked query reads the
-      // same committed state — all three overlap (guide §2.6); the
-      // requires keep the sequential order so a multi-failure run surfaces
-      // the same error it always did
-      val ((refuseRepeat, refuseUnknown), masked) = inParallel(
-        inParallel(
-          scala.util.Try(
-            AnnIndex.removeFromIndex(delIds.limit(1), "vec_id", idx)).isFailure,
-          scala.util.Try(AnnIndex.removeFromIndex(
-            s.range(1).select((lit(-1L)).as("vec_id")), "vec_id", idx)).isFailure),
-        topk())
-      // deleting again, or deleting an id that was never indexed: loud
-      require(refuseRepeat, "g2_ann_delete: a repeated delete must be refused")
-      require(refuseUnknown,
+      // deleting again, or deleting an id that was never indexed: loud.
+      // The guards should throw before touching the marker or the
+      // tombstone files; they run one at a time BEFORE the masked query,
+      // so a guard that wrongly proceeds fails here instead of mutating
+      // the index under a running query
+      require(scala.util.Try(
+          AnnIndex.removeFromIndex(delIds.limit(1), "vec_id", idx)).isFailure,
+        "g2_ann_delete: a repeated delete must be refused")
+      require(scala.util.Try(AnnIndex.removeFromIndex(
+          s.range(1).select((lit(-1L)).as("vec_id")), "vec_id", idx)).isFailure,
         "g2_ann_delete: deleting a never-indexed id must be refused")
+      val masked = topk()
       // the deleted-id probe reads only the masked CHECKPOINT + the delete
       // set — independent of the compaction rewriting the index files
       val (cells, deletedInTopK) = inParallel(
@@ -6203,7 +6155,7 @@ object SparkEntry {
 
   /** G4 streaming #5 — on-arrival point-in-time enrichment: purchase spine
     * rows arrive as a stream (two micro-batches); each batch runs the same
-    * one-shuffle LOCF as `a3_pit_join` against the STATIC click history and
+    * as-of join as `a3_pit_join` against the STATIC click history and
     * appends to a TxTable. Batching cannot change the answer — every spine
     * row enriches independently against static facts — so the batch as-of
     * join is an exact oracle, certifying stream-side PIT enrichment (EP2's
@@ -6231,7 +6183,7 @@ object SparkEntry {
             .select(col("user_id"), col("event_id").as("purchase_id"),
               col("ts").as("purchase_ts"), col("value").as("purchase_value"))
           val enriched = AsOfJoin
-            .locf(spine, facts, Seq("user_id"), "purchase_ts", "ts",
+            .native(spine, facts, Seq("user_id"), "purchase_ts", "ts",
               Seq("click_value"), "event_id")
             .withColumnRenamed("ts__timestamp", "click_ts")
           t.append(enriched.select(outCols.map(col): _*), tsMillis = 1000L + id)
@@ -7425,7 +7377,7 @@ object SparkEntry {
     "a1_asof_lookup"     -> (a1AsOfLookup _),
     "a2_latest_per_key"  -> (a2LatestPerKey _),
     "a3_pit_join"        -> (a3PitJoin _),
-    "a3_pit_join_native" -> (a3PitJoinNative _),
+    "a3_pit_join_native" -> (a3PitJoin _),
     "a3_pit_join_salted" -> (a3PitJoinSalted _),
     "a3_pit_join_tol"    -> (a3PitJoinTol _),
     "a3_pit_join_bucketed" -> (a3PitJoinBucketed _),

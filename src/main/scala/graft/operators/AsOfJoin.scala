@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.util.Try
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampType
 
 /** Point-in-time (as-of) join: enrich each spine row with the most recent
   * fact whose timestamp is `<=` the spine row's timestamp, per key.
@@ -11,20 +14,21 @@ import org.apache.spark.sql.functions._
   * (/root/reference/src/serving/feature_server.py:355-408 spine iteration;
   * :531-583 entity filter + time filter + per-feature argmax; output columns
   * `{name}` and `{name}__timestamp` at :397-398). The reference is
-  * O(|spine| x |facts|) nested scans; both formulations here are fully
-  * distributed.
+  * O(|spine| x |facts|) nested scans; the join here is fully distributed.
   *
-  * Two physical formulations:
+  * One physical formulation, [[native]]: a partitioned merge-scan
+  * ([[org.apache.spark.sql.graft.asof.AsOfJoinExec]]) over both sides
+  * hash-clustered on the key and sorted by time — O(S + F) per partition
+  * with NO intermediate row explosion (a theta-join `f.ts <= s.ts`
+  * materializes O(S*F) pairs per key before the argmax prunes them, which
+  * dies at 100 TB on hot keys). It replaced a union + window
+  * carry-forward formulation that measured 2.8x slower cold and 1.4x
+  * slower warm at 20M facts / 2M spine. [[locfBounded]], [[locfSalted]]
+  * and [[locfRouted]] are a tolerance mask, salting and hot-key routing
+  * over it.
   *
-  *  - [[locf]] (default, scale path): union spine + facts, one hash shuffle
-  *    on the key, one sort per partition, carry the last fact forward
-  *    ("last observation carried forward"). Cost is O((S+F) log(S+F)) per
-  *    key with NO intermediate row explosion — a theta-join `f.ts <= s.ts`
-  *    materializes O(S*F) pairs per key before the argmax prunes them, which
-  *    dies at 100 TB on hot keys; LOCF never does.
-  *
-  *  - [[thetaWindow]] (small/verification path): the naive inequality join +
-  *    row_number, kept for differential testing against [[locf]].
+  * [[thetaWindow]] (small/verification path): the naive inequality join +
+  * row_number, kept only as the differential-test oracle.
   *
   * Tie rules (pinned by AsOfJoinSpec): a fact at exactly the spine timestamp
   * IS visible (inclusive `<=`); among facts with equal timestamps the one
@@ -33,83 +37,23 @@ import org.apache.spark.sql.functions._
   */
 object AsOfJoin {
 
-  /** LOCF formulation.
-    *
-    * @param spine       left side; ALL its columns pass through to the output
-    * @param facts       right side (the fact/value log)
-    * @param keyCols     equi-join key column names (present in both sides)
-    * @param spineTs     timestamp column name in `spine`
-    * @param factTs      timestamp column name in `facts`
-    * @param payloadCols fact columns to carry onto matching spine rows
-    * @param tieCol      fact column breaking equal-timestamp ties (max wins)
-    * @param outSuffix   appended to emitted payload/timestamp column names
-    */
-  def locf(
-      spine: DataFrame,
-      facts: DataFrame,
-      keyCols: Seq[String],
-      spineTs: String,
-      factTs: String,
-      payloadCols: Seq[String],
-      tieCol: String,
-      outSuffix: String = ""
-  ): DataFrame = {
-    val spineCols = spine.columns.toSeq
-
-    val f = facts.select(
-      keyCols.map(col) ++ Seq(
-        col(factTs).cast("timestamp").as("__ts"),
-        Latest.tieLong(facts, tieCol).as("__tie"),
-        struct((payloadCols.map(col) :+ col(factTs).cast("timestamp").as("__fact_ts")): _*).as("__pay"),
-        lit(0).as("__is_spine")
-      ): _*
-    )
-    val s = spine.select(
-      keyCols.map(col) ++ Seq(
-        col(spineTs).cast("timestamp").as("__ts"),
-        lit(Long.MaxValue).as("__tie"),
-        struct(spineCols.map(col): _*).as("__spine"),
-        lit(1).as("__is_spine")
-      ): _*
-    )
-
-    // One shuffle on keyCols; within each key, facts sort before the spine
-    // row at equal __ts (__is_spine asc) so `<=` is inclusive, and greater
-    // __tie sorts later so last() picks the max-tie fact.
-    val w = Window
-      .partitionBy(keyCols.map(col): _*)
-      .orderBy(col("__ts").asc, col("__is_spine").asc, col("__tie").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    val filled = f
-      .unionByName(s, allowMissingColumns = true)
-      .withColumn("__last", last(col("__pay"), ignoreNulls = true).over(w))
-      .where(col("__is_spine") === 1)
-
-    filled.select(
-      spineCols.map(c => col("__spine").getField(c).as(c)) ++
-        payloadCols.map(c => col("__last").getField(c).as(c + outSuffix)) :+
-        col("__last").getField("__fact_ts").as(factTs + outSuffix + "__timestamp"): _*
-    )
-  }
-
   /** Tolerance-bounded point-in-time join (pandas `merge_asof(tolerance=)`,
-    * kdb+ `wj`'s window lower bound): like [[locf]], but a matched fact
+    * kdb+ `wj`'s window lower bound): like [[native]], but a matched fact
     * OLDER than `toleranceSec` before the spine timestamp counts as no
     * match — the payload (and match timestamp) come back null. This is the
     * feature store's max-staleness read: serving a week-old vital sign is
     * worse than serving none (the reference's freshness tiers, A4, applied
     * at join time instead of after).
     *
-    * Masking after the one-shuffle LOCF is exactly equivalent to bounding
-    * the join window: the as-of match is the LATEST fact ≤ ts, so if it
-    * falls outside the tolerance every earlier fact does too. Zero extra
-    * shuffles over [[locf]].
+    * Masking after the as-of join is exactly equivalent to bounding the
+    * join window: the as-of match is the LATEST fact ≤ ts, so if it falls
+    * outside the tolerance every earlier fact does too. Zero extra
+    * shuffles over [[native]].
     *
     * Null timestamps: a null-ts fact is "infinitely old" (it sorts before
-    * everything in [[locf]]'s carry order), so it falls outside ANY finite
-    * tolerance and is masked here even though plain [[locf]] would carry
-    * it — the "huge tolerance ≡ locf" equivalence therefore holds for
+    * everything in [[native]]'s merge order), so it falls outside ANY finite
+    * tolerance and is masked here even though plain [[native]] would carry
+    * it — the "huge tolerance ≡ native" equivalence therefore holds for
     * non-null fact timestamps (the normal case; a null event time has no
     * age to bound).
     */
@@ -125,7 +69,7 @@ object AsOfJoin {
       outSuffix: String = ""
   ): DataFrame = {
     require(toleranceSec >= 0, s"tolerance must be non-negative, got $toleranceSec")
-    val joined = locf(spine, facts, keyCols, spineTs, factTs, payloadCols, tieCol, outSuffix)
+    val joined = native(spine, facts, keyCols, spineTs, factTs, payloadCols, tieCol, outSuffix)
     val matchTs = factTs + outSuffix + "__timestamp"
     val inWindow = col(matchTs).isNotNull &&
       col(matchTs) >= col(spineTs).cast("timestamp") - expr(s"INTERVAL $toleranceSec SECOND")
@@ -135,32 +79,31 @@ object AsOfJoin {
     masked
   }
 
-  /** Skew-mitigated LOCF: a hot entity puts its whole history into ONE
-    * window task in [[locf]] (and one merge task in [[native]]). Salting
-    * restores parallelism: spine rows scatter across `saltBuckets`
-    * sub-partitions of their key (deterministic hash of the spine
-    * timestamp), while facts replicate to every bucket — each bucket then
-    * runs a full, correct LOCF over all of the key's facts. Cost: facts
-    * shuffled saltBuckets times; use only for keys known to be hot (route
-    * hot keys here, the long tail through [[locf]] — AQE can't split a
-    * window partition for you).
+  /** Skew-mitigated as-of join: a hot entity puts its whole history into
+    * ONE merge task in [[native]]. Salting restores parallelism: spine rows
+    * scatter across `saltBuckets` sub-partitions of their key
+    * (deterministic hash of the spine timestamp), while facts replicate to
+    * every bucket — each bucket then runs a full, correct [[native]] join
+    * over all of the key's facts. Cost: facts shuffled saltBuckets times;
+    * use only for keys known to be hot (route hot keys here, the long tail
+    * through [[native]] — AQE can't split a merge partition for you).
     *
     * Measured crossover ([[graft.AsOfSkewProbe]], 20M facts / 2M spine /
     * 100k keys, one key holding the hot share, local[32], salt=16, warm
-    * rep; all four outputs bit-identical):
+    * rep; all outputs bit-identical). Salting then ran over the union +
+    * window formulation since removed, which took 11.9 s / 34.7 s unsalted:
     *
     * {{{
-    *   hot share   locf   salted(all)  routed([[locfRouted]])  native
-    *   10%        11.9 s    61.7 s          15.5 s              5.0 s
-    *   40%        34.7 s    72.8 s          83.8 s             27.2 s
+    *   hot share   salted(all)  routed([[locfRouted]])  native
+    *   10%           61.7 s          15.5 s              5.0 s
+    *   40%           72.8 s          83.8 s             27.2 s
     * }}}
     *
     * Read the table honestly: on a THROUGHPUT-BOUND box (all cores busy —
     * local[32] here), salting never wins, even routed to only the hot key,
     * because replicating the hot key's facts saltBuckets× adds more total
     * work than the skew costs, and [[native]]'s merge-scan is the best
-    * skew answer (no window carry-state, two smaller sorts; 1.3-1.5×
-    * faster than locf at 40% hot). Salting pays on a LATENCY-BOUND
+    * skew answer. Salting pays on a LATENCY-BOUND
     * cluster: 1000 executors idling behind one straggler task that owns
     * the hot key's whole history — there, saltBuckets× more work on one
     * key to cut the straggler saltBuckets× is the right trade. Default to
@@ -186,16 +129,16 @@ object AsOfJoin {
       "__salt", pmod(xxhash64(col(spineTs)), lit(saltBuckets.toLong)).cast("int"))
     val saltedFacts = facts.withColumn(
       "__salt", explode(sequence(lit(0), lit(saltBuckets - 1))))
-    locf(saltedSpine, saltedFacts, keyCols :+ "__salt", spineTs, factTs, payloadCols, tieCol, outSuffix)
+    native(saltedSpine, saltedFacts, keyCols :+ "__salt", spineTs, factTs, payloadCols, tieCol, outSuffix)
       .drop("__salt")
   }
 
-  /** Hot-key ROUTED LOCF — the way [[locfSalted]] is meant to be used:
-    * only the declared hot keys take the salted path (their facts
-    * replicate saltBuckets×), the long tail runs plain [[locf]], and the
+  /** Hot-key ROUTED as-of join — the way [[locfSalted]] is meant to be
+    * used: only the declared hot keys take the salted path (their facts
+    * replicate saltBuckets×), the long tail runs plain [[native]], and the
     * two halves union. Keys are routed by equality on the FIRST key
     * column (the entity id in every declared query's shape). Identical
-    * results to [[locf]] ([[graft.AsOfSkewProbe]] asserts bit-equality at
+    * results to [[native]] ([[graft.AsOfSkewProbe]] asserts bit-equality at
     * 20M facts); see the [[locfSalted]] crossover table before reaching
     * for this — on a throughput-bound cluster [[native]] is usually the
     * better skew answer, and routing only pays when one straggler task's
@@ -213,25 +156,34 @@ object AsOfJoin {
       saltBuckets: Int,
       outSuffix: String = ""
   ): DataFrame = {
-    require(hotKeys.nonEmpty, "locfRouted needs at least one hot key — use locf otherwise")
+    require(hotKeys.nonEmpty, "locfRouted needs at least one hot key — use native otherwise")
     // null-safe routing: `isin` is NULL for a null key, and NOT(NULL) is
     // also NULL, so without the coalesce a null-key spine row matches
-    // NEITHER branch and silently vanishes from the output — while locf
+    // NEITHER branch and silently vanishes from the output — while native
     // (null is a key value) emits it. Null keys route cold.
     val isHot = coalesce(col(keyCols.head).isin(hotKeys: _*), lit(false))
     locfSalted(spine.where(isHot), facts.where(isHot),
       keyCols, spineTs, factTs, payloadCols, tieCol, saltBuckets, outSuffix)
-      .unionByName(locf(spine.where(!isHot), facts.where(!isHot),
+      .unionByName(native(spine.where(!isHot), facts.where(!isHot),
         keyCols, spineTs, factTs, payloadCols, tieCol, outSuffix))
   }
 
-  /** Native merge-scan formulation: plans the custom
+  /** The as-of join: plans the custom
     * [[org.apache.spark.sql.graft.asof.AsOfJoinExec]] physical operator —
     * both sides hash-clustered + sorted (EnsureRequirements inserts the
     * exchanges, same as SortMergeJoin), then one O(S+F) forward merge per
-    * partition. Same semantics as [[locf]] (differentially tested); cheaper
-    * at scale because the spine and facts are sorted separately (two smaller
-    * sorts) and no window carry-state materializes.
+    * partition. Differentially tested against [[thetaWindow]]. The output
+    * keeps the spine's partitioning and order, so enriching one spine with
+    * several fact sets in a row shuffles the spine once.
+    *
+    * @param spine       left side; ALL its columns pass through to the output
+    * @param facts       right side (the fact/value log)
+    * @param keyCols     equi-join key column names (present in both sides)
+    * @param spineTs     timestamp column name in `spine`
+    * @param factTs      timestamp column name in `facts`
+    * @param payloadCols fact columns to carry onto matching spine rows
+    * @param tieCol      fact column breaking equal-timestamp ties (max wins)
+    * @param outSuffix   appended to emitted payload/timestamp column names
     */
   def native(
       spine: DataFrame,
@@ -246,16 +198,18 @@ object AsOfJoin {
     import org.apache.spark.sql.graft.Bridge
     import org.apache.spark.sql.graft.asof.{AsOfJoinNode, AsOfJoinPredicatePushdown, NativeAsOfStrategy}
 
-    // the merge-scan hash-partitions and compares keys AS TYPED: a spine
-    // int key vs a facts long key would hash equal values to DIFFERENT
-    // partitions (Murmur3 of int 5 != long 5) and the merge would silently
-    // null-extend every row — locf coerces through its union, this path
-    // cannot, so mismatched key types are an error, not a wrong answer
-    keyCols.foreach { c =>
+    // the merge-scan hash-partitions and compares keys AS TYPED (Murmur3 of
+    // int 5 != long 5), so a key pair of different types joins on both
+    // sides cast to the type unionByName picks for the pair — read off the
+    // analyzed schema of a one-column union, no job runs — while the spine
+    // column itself passes through unchanged
+    val keyTypes = keyCols.map { c =>
       val (lt, rt) = (spine.schema(c).dataType, facts.schema(c).dataType)
-      require(lt == rt,
-        s"native as-of join requires identical key types; '$c' is ${lt.simpleString} on the " +
-          s"spine and ${rt.simpleString} on the facts — cast one side first")
+      if (lt == rt) lt
+      else Try(spine.select(col(c)).unionByName(facts.select(col(c))).schema.head.dataType)
+        .getOrElse(throw new IllegalArgumentException(
+          s"as-of join key '$c' is ${lt.simpleString} on the spine and ${rt.simpleString} " +
+            "on the facts, and the two have no common type — cast one side first"))
     }
     val spark = spine.sparkSession
     if (!spark.experimental.extraStrategies.contains(NativeAsOfStrategy)) {
@@ -269,10 +223,18 @@ object AsOfJoin {
     val spineCols = spine.columns.toSeq
     // every expression the node references must be a plain attribute of a
     // projected child (the analyzer does not resolve lazy Column nodes
-    // inside a foreign LogicalPlan), so casts happen in these selects
-    val sp = spine.withColumn("__sts", col(spineTs).cast("timestamp"))
+    // inside a foreign LogicalPlan), so casts happen in these selects; a
+    // spine column already of the join type is used as is, which keeps a
+    // previous as-of join's (key, ts) order valid for this one
+    val spineKeys = keyCols.zip(keyTypes).map { case (c, t) =>
+      if (spine.schema(c).dataType == t) c -> None else s"__sk_$c" -> Some(col(c).cast(t))
+    }
+    val sts = if (spine.schema(spineTs).dataType == TimestampType) spineTs -> None
+      else "__sts" -> Some(col(spineTs).cast("timestamp"))
+    val added = (spineKeys :+ sts).collect { case (n, Some(e)) => n -> e }
+    val sp = if (added.isEmpty) spine else spine.withColumns(added.toMap)
     val f = facts.select(
-      keyCols.map(c => col(c).as(s"__k_$c")) ++ Seq(
+      keyCols.zip(keyTypes).map { case (c, t) => col(c).cast(t).as(s"__k_$c") } ++ Seq(
         col(factTs).cast("timestamp").as("__fts"),
         Latest.tieLong(facts, tieCol).as("__ftie")) ++
         payloadCols.map(c => col(c).as(s"__p_$c")): _*)
@@ -280,9 +242,9 @@ object AsOfJoin {
     val node = AsOfJoinNode(
       Bridge.analyzed(sp),
       Bridge.analyzed(f),
-      leftKeys = keyCols.map(c => Bridge.expression(sp(c))),
+      leftKeys = spineKeys.map { case (n, _) => Bridge.expression(sp(n)) },
       rightKeys = keyCols.map(c => Bridge.expression(f(s"__k_$c"))),
-      leftTs = Bridge.expression(sp("__sts")),
+      leftTs = Bridge.expression(sp(sts._1)),
       rightTs = Bridge.expression(f("__fts")),
       rightTie = Bridge.expression(f("__ftie")))
 
@@ -293,7 +255,9 @@ object AsOfJoin {
   }
 
   /** Naive theta-join + per-spine-row argmax. O(S*F) per key before pruning —
-    * verification/small-data only; use [[locf]] at scale.
+    * verification/small-data only; use [[native]] at scale. One semantic
+    * difference: a null-timestamp fact matches nothing here (`NULL <= ts`
+    * is not true), while [[native]] carries it as infinitely old.
     */
   def thetaWindow(
       spine: DataFrame,
@@ -312,10 +276,10 @@ object AsOfJoin {
         payloadCols.map(c => col(c).as(s"__p_$c")) ++
         Seq(col(factTs).cast("timestamp").as("__fts"), Latest.tieLong(facts, tieCol).as("__ftie")): _*
     )
-    // null-SAFE key equality: locf and native both treat null as a key
-    // value (window partitioning / RowOrdering group nulls together), and
-    // this formulation exists to differentially test them — plain ===
-    // would no-match null keys and report false disagreements
+    // null-SAFE key equality: native treats null as a key value
+    // (RowOrdering groups nulls together), and this formulation exists to
+    // differentially test it — plain === would no-match null keys and
+    // report false disagreements
     val joinCond = keyCols
       .map(c => s(c) <=> f(s"__k_$c"))
       .reduce(_ && _) && f("__fts") <= s(spineTs).cast("timestamp")

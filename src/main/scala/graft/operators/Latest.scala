@@ -37,11 +37,11 @@ object Latest {
       case _ => col(c)
     }
 
-  /** [[tieKey]] restricted to LONG output — the as-of join's union+window
-    * formulation mixes the fact tie with a `Long.MaxValue` spine sentinel
-    * in ONE column, so the tie must be long-convertible; a type that
-    * cannot be is rejected loudly (the old cast produced NULL and quietly
-    * broke the ordering). */
+  /** [[tieKey]] restricted to LONG output — the as-of join's tie column
+    * (`__ftie`, which the native exec sorts equal-timestamp facts by and
+    * [[AsOfJoin.thetaWindow]] orders by) is long-typed, so the tie must be
+    * long-convertible; a type that cannot be is rejected loudly (the old
+    * cast produced NULL and quietly broke the ordering). */
   private[operators] def tieLong(df: DataFrame, c: String): Column =
     df.schema(c).dataType match {
       case org.apache.spark.sql.types.TimestampType => unix_micros(col(c))

@@ -529,8 +529,10 @@ class FeatureStore(val spark: SparkSession) {
 
   /** get_point_in_time_features — feature_server.py:355-408 (EP2, the
     * flagship A3): left-enrich a spine with `{name}` and `{name}__timestamp`
-    * per requested feature, leakage-free. One LOCF as-of join per feature —
-    * no per-row loops anywhere.
+    * per requested feature, leakage-free. One as-of join
+    * ([[AsOfJoin.native]]) per feature — no per-row loops anywhere. Each
+    * join keeps the spine's partitioning and order, so the spine is
+    * shuffled once however many features are requested.
     */
   def getPointInTimeFeatures(spine: DataFrame, featureNames: Seq[String]): DataFrame = {
     // DETERMINISTIC name resolution: several versions of one name coexist
@@ -548,15 +550,19 @@ class FeatureStore(val spark: SparkSession) {
       .map(f => f.name -> f.feature_id).toMap
     featureNames.foldLeft(spine) { (acc, fname) =>
       val fid = nameForId.getOrElse(fname, "")
+      // a fact with no event time is as of no time: ingestValues rejects
+      // such rows and getFeatureVector's `<= asOf` drops them, so a loaded
+      // table holding one must not feed it to the merge-scan, which would
+      // carry it as infinitely old
       val facts = values
-        .where(col("feature_id") === fid)
+        .where(col("feature_id") === fid && col("event_timestamp").isNotNull)
         .select(
           col("entity_id"),
           col("event_timestamp"),
           col("created_timestamp"),
           col("value_double").as(fname))
       AsOfJoin
-        .locf(acc, facts, Seq("entity_id"), "event_timestamp", "event_timestamp",
+        .native(acc, facts, Seq("entity_id"), "event_timestamp", "event_timestamp",
           Seq(fname), "created_timestamp")
         .withColumnRenamed("event_timestamp__timestamp", s"${fname}__timestamp")
     }

@@ -20,17 +20,16 @@ import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport, SparkPlan
   * (key < spineKey) or (key == spineKey && ts <= spineTs), remembering the
   * last fact per key. O(S + F) per partition, zero intermediate rows, no
   * window buffer: strictly less work than both the theta-join (O(S*F) pairs)
-  * and the union+window LOCF (sorts S+F rows together and carries struct
-  * state through a window frame).
+  * and a union+window carry-forward (sorts S+F rows together and carries
+  * struct state through a window frame).
   *
-  * Semantics identical to graft.operators.AsOfJoin.locf (differentially
-  * tested): inclusive `ts <=`, equal-ts ties resolved to the greatest
+  * Semantics (differentially tested against graft.operators.AsOfJoin
+  * .thetaWindow): inclusive `ts <=`, equal-ts ties resolved to the greatest
   * tie column (right side is additionally sorted by the tie expression),
-  * unmatched spine rows null-extended. Null keys behave like the LOCF
-  * window form (null is a key value), and null fact timestamps map to
-  * Long.MinValue, so they sort first and DO match every spine timestamp —
-  * a null-ts fact is carried until a real observation overrides it, exactly
-  * as the LOCF window form carries its non-null payload struct.
+  * unmatched spine rows null-extended. Null is a key value, and null fact
+  * timestamps map to Long.MinValue, so they sort first and DO match every
+  * spine timestamp — a null-ts fact is carried until a real observation
+  * overrides it.
   */
 case class AsOfJoinNode(
     left: LogicalPlan,

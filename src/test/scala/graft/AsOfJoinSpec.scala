@@ -6,6 +6,11 @@ import graft.operators.AsOfJoin
 /** Pins the reference's as-of semantics (SURVEY.md §5.3 edge cases):
   * empty match -> null (feature_registry.py:486-487), exclusion of facts
   * after as_of (:483), inclusive <=, and the (ts, tie) desc tie-break.
+  *
+  * "locf" in a test name is that semantics (last observation carried
+  * forward): the join under test is [[AsOfJoin.native]] or a variant over
+  * it, and the reference is the literal answer on the edge cases or
+  * [[AsOfJoin.thetaWindow]], the naive oracle.
   */
 class AsOfJoinSpec extends SparkSpec {
   import spark.implicits._
@@ -33,59 +38,87 @@ class AsOfJoinSpec extends SparkSpec {
       .map(r => r.getString(0) -> (if (r.isNullAt(1)) null else r.getDouble(1)))
       .toMap
 
+  // the as-of answer on the edge cases above
+  private val edgeAnswer = Map[String, Any](
+    "s1" -> 30.0, // equal-ts fact visible; tie 3 beats tie 2
+    "s2" -> 10.0,
+    "s3" -> null, // no fact <= as_of
+    "s4" -> null) // unknown key
+
+  // rows ordered by tag, every column rendered
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.orderBy("tag").collect().map(_.toString).toSeq
+
+  // generated data: equal-(key, ts) facts recur every 168 rows with rising
+  // ties, and spine keys u7/u8 have no facts
+  private def genFacts = (1 to 500).map { i =>
+    (s"u${i % 7}", ts(f"2024-01-${i % 28 + 1}%02d ${i % 24}%02d:00:00"), i.toLong, i.toDouble)
+  }.toDF("k", "fts", "tie", "v")
+  private def genSpine = (1 to 200).map { i =>
+    (s"u${i % 9}", ts(f"2024-01-${(i * 3) % 28 + 1}%02d ${(i * 7) % 24}%02d:30:00"), s"s$i")
+  }.toDF("k", "sts", "tag")
+
   test("locf: inclusive <=, tie-break max tie, null when empty") {
-    val m = run(AsOfJoin.locf)
-    assert(m("s1") == 30.0) // equal-ts fact visible; tie 3 beats tie 2
-    assert(m("s2") == 10.0)
-    assert(m("s3") == null) // no fact <= as_of
-    assert(m("s4") == null) // unknown key
+    assert(run(AsOfJoin.native) == edgeAnswer)
   }
 
   test("thetaWindow agrees with locf on the edge cases") {
-    assert(run(AsOfJoin.thetaWindow) == run(AsOfJoin.locf))
+    assert(run(AsOfJoin.thetaWindow) == edgeAnswer)
   }
 
   test("native merge-scan exec agrees with locf on the edge cases") {
-    assert(run(AsOfJoin.native) == run(AsOfJoin.locf))
+    // every output column, the carried fact timestamp included
+    assert(rows(AsOfJoin.native(spine, facts, Seq("k"), "sts", "fts", Seq("v"), "tie")) ==
+      rows(AsOfJoin.thetaWindow(spine, facts, Seq("k"), "sts", "fts", Seq("v"), "tie")))
   }
 
   test("native merge-scan exec agrees with locf on generated data") {
-    val f = (1 to 500).map { i =>
-      (s"u${i % 7}", ts(f"2024-01-${i % 28 + 1}%02d ${i % 24}%02d:00:00"), i.toLong, i.toDouble)
-    }.toDF("k", "fts", "tie", "v")
-    val s = (1 to 200).map { i =>
-      (s"u${i % 9}", ts(f"2024-01-${(i * 3) % 28 + 1}%02d ${(i * 7) % 24}%02d:30:00"), s"s$i")
-    }.toDF("k", "sts", "tag")
-    val a = AsOfJoin.native(s, f, Seq("k"), "sts", "fts", Seq("v"), "tie")
-      .orderBy("tag").collect().map(_.toString).toSeq
-    val b = AsOfJoin.locf(s, f, Seq("k"), "sts", "fts", Seq("v"), "tie")
-      .orderBy("tag").collect().map(_.toString).toSeq
-    assert(a == b)
+    assert(rows(AsOfJoin.native(genSpine, genFacts, Seq("k"), "sts", "fts", Seq("v"), "tie")) ==
+      rows(AsOfJoin.thetaWindow(genSpine, genFacts, Seq("k"), "sts", "fts", Seq("v"), "tie")))
   }
 
   test("locf and thetaWindow agree on generated data") {
-    val f = (1 to 500).map { i =>
-      (s"u${i % 7}", ts(f"2024-01-${i % 28 + 1}%02d ${i % 24}%02d:00:00"), i.toLong, i.toDouble)
-    }.toDF("k", "fts", "tie", "v")
-    val s = (1 to 200).map { i =>
-      (s"u${i % 9}", ts(f"2024-01-${(i * 3) % 28 + 1}%02d ${(i * 7) % 24}%02d:30:00"), s"s$i")
-    }.toDF("k", "sts", "tag")
-    val a = AsOfJoin.locf(s, f, Seq("k"), "sts", "fts", Seq("v"), "tie")
-      .orderBy("tag").collect().map(_.toString).toSeq
-    val b = AsOfJoin.thetaWindow(s, f, Seq("k"), "sts", "fts", Seq("v"), "tie")
-      .orderBy("tag").collect().map(_.toString).toSeq
-    assert(a == b)
+    // the as-of answer computed on the driver: for each spine row, the
+    // value of the max-(ts, tie) fact of its key with ts <= the spine ts
+    val fs = genFacts.collect().map(r => (r.getString(0), r.getTimestamp(1), r.getLong(2), r.getDouble(3)))
+    val expected = genSpine.collect().map { r =>
+      val (k, sts, tag) = (r.getString(0), r.getTimestamp(1), r.getString(2))
+      val hits = fs.filter(f => f._1 == k && !f._2.after(sts))
+      tag -> (if (hits.isEmpty) null else hits.maxBy(f => (f._2.getTime, f._3))._4)
+    }.toMap[String, Any]
+    assert(expected.values.exists(_ == null) && expected.values.exists(_ != null))
+    val got = AsOfJoin.thetaWindow(genSpine, genFacts, Seq("k"), "sts", "fts", Seq("v"), "tie")
+      .select("tag", "v").collect()
+      .map(r => r.getString(0) -> (if (r.isNullAt(1)) null else r.getDouble(1)))
+      .toMap[String, Any]
+    assert(got == expected)
+  }
+
+  test("native coerces mismatched key types as unionByName does; the spine key keeps its type") {
+    import org.apache.spark.sql.types.{IntegerType, StringType}
+    // int keys 0..6 on the facts, 0..8 on the spine (7 and 8 have no facts)
+    val intFacts = genFacts.withColumn("k", regexp_extract(col("k"), "\\d+", 0).cast("int"))
+    val intSpine = genSpine.withColumn("k", regexp_extract(col("k"), "\\d+", 0).cast("int"))
+    def check(sp: org.apache.spark.sql.DataFrame, f: org.apache.spark.sql.DataFrame) = {
+      val out = AsOfJoin.native(sp, f, Seq("k"), "sts", "fts", Seq("v"), "tie")
+      assert(out.schema("k").dataType == sp.schema("k").dataType)
+      assert(rows(out) == rows(AsOfJoin.thetaWindow(sp, f, Seq("k"), "sts", "fts", Seq("v"), "tie")))
+      assert(out.where(col("v").isNotNull).count() > 0L)
+    }
+    // an int spine key against long fact keys
+    check(intSpine, intFacts.withColumn("k", col("k").cast("long")))
+    // a string spine key against int fact keys
+    val strSpine = intSpine.withColumn("k", col("k").cast("string"))
+    assert(strSpine.schema("k").dataType == StringType && intFacts.schema("k").dataType == IntegerType)
+    check(strSpine, intFacts)
+    // a pair with no common type is still refused
+    intercept[IllegalArgumentException](AsOfJoin.native(
+      intSpine, intFacts.withColumn("k", to_date(col("fts"))), Seq("k"), "sts", "fts", Seq("v"), "tie"))
   }
 
   test("native exec participates in whole-stage codegen; codegen == interpreted output") {
-    val f = (1 to 500).map { i =>
-      (s"u${i % 7}", ts(f"2024-01-${i % 28 + 1}%02d ${i % 24}%02d:00:00"), i.toLong, i.toDouble)
-    }.toDF("k", "fts", "tie", "v")
-    val s = (1 to 200).map { i =>
-      (s"u${i % 9}", ts(f"2024-01-${(i * 3) % 28 + 1}%02d ${(i * 7) % 24}%02d:30:00"), s"s$i")
-    }.toDF("k", "sts", "tag")
-    def result() = AsOfJoin.native(s, f, Seq("k"), "sts", "fts", Seq("v"), "tie")
-      .orderBy("tag").collect().map(_.toString).toSeq
+    val (f, s) = (genFacts, genSpine)
+    def result() = rows(AsOfJoin.native(s, f, Seq("k"), "sts", "fts", Seq("v"), "tie"))
 
     val withCodegen = result()
     // the exec must actually be INSIDE a WholeStageCodegen span (marked *(n));
@@ -122,7 +155,7 @@ class AsOfJoinSpec extends SparkSpec {
       AsOfJoin.locfSalted(sp, f, Seq("k"), "sts", "fts", Seq("v"), "tie", saltBuckets = 4)
     val edge = runSalted(spine, facts).select("tag", "v").collect()
       .map(r => r.getString(0) -> (if (r.isNullAt(1)) null else r.getDouble(1))).toMap
-    assert(edge == run(AsOfJoin.locf))
+    assert(edge == edgeAnswer)
 
     val f = (1 to 400).map { i =>
       (s"u${i % 5}", ts(f"2024-01-${i % 28 + 1}%02d ${i % 24}%02d:00:00"), i.toLong, i.toDouble)
@@ -130,10 +163,8 @@ class AsOfJoinSpec extends SparkSpec {
     val s = (1 to 150).map { i =>
       (s"u${i % 6}", ts(f"2024-01-${(i * 5) % 28 + 1}%02d ${(i * 11) % 24}%02d:30:00"), s"s$i")
     }.toDF("k", "sts", "tag")
-    val a = runSalted(s, f).orderBy("tag").collect().map(_.toString).toSeq
-    val b = AsOfJoin.locf(s, f, Seq("k"), "sts", "fts", Seq("v"), "tie")
-      .orderBy("tag").collect().map(_.toString).toSeq
-    assert(a == b)
+    assert(rows(runSalted(s, f)) ==
+      rows(AsOfJoin.thetaWindow(s, f, Seq("k"), "sts", "fts", Seq("v"), "tie")))
   }
 
   test("locfRouted agrees with locf (hot keys salted, tail plain, union complete)") {
@@ -145,12 +176,9 @@ class AsOfJoinSpec extends SparkSpec {
     val s = (1 to 150).map { i =>
       (s"u${i % 6}", ts(f"2024-01-${(i * 5) % 28 + 1}%02d ${(i * 11) % 24}%02d:30:00"), s"s$i")
     }.toDF("k", "sts", "tag")
-    val a = AsOfJoin.locfRouted(s, f, Seq("k"), "sts", "fts", Seq("v"), "tie",
-        hotKeys = Seq("u0"), saltBuckets = 4)
-      .orderBy("tag").collect().map(_.toString).toSeq
-    val b = AsOfJoin.locf(s, f, Seq("k"), "sts", "fts", Seq("v"), "tie")
-      .orderBy("tag").collect().map(_.toString).toSeq
-    assert(a == b)
+    assert(rows(AsOfJoin.locfRouted(s, f, Seq("k"), "sts", "fts", Seq("v"), "tie",
+        hotKeys = Seq("u0"), saltBuckets = 4)) ==
+      rows(AsOfJoin.thetaWindow(s, f, Seq("k"), "sts", "fts", Seq("v"), "tie")))
     intercept[IllegalArgumentException](
       AsOfJoin.locfRouted(s, f, Seq("k"), "sts", "fts", Seq("v"), "tie",
         hotKeys = Seq.empty, saltBuckets = 4))
@@ -168,11 +196,11 @@ class AsOfJoinSpec extends SparkSpec {
       .toDF("k", "sts", "tag")
     def out(df: org.apache.spark.sql.DataFrame) = df.select("tag", "v").collect()
       .map(r => r.getString(0) -> (if (r.isNullAt(1)) null else r.getDouble(1))).toMap
-    val viaLocf = out(AsOfJoin.locf(s, f, Seq("k"), "sts", "fts", Seq("v"), "tie"))
-    assert(viaLocf == Map("s1" -> 10.0, "s_null" -> 99.0)) // null is a key value
+    val viaNative = out(AsOfJoin.native(s, f, Seq("k"), "sts", "fts", Seq("v"), "tie"))
+    assert(viaNative == Map("s1" -> 10.0, "s_null" -> 99.0)) // null is a key value
     assert(out(AsOfJoin.locfRouted(s, f, Seq("k"), "sts", "fts", Seq("v"), "tie",
-      hotKeys = Seq("u1"), saltBuckets = 2)) == viaLocf)
-    assert(out(AsOfJoin.thetaWindow(s, f, Seq("k"), "sts", "fts", Seq("v"), "tie")) == viaLocf)
+      hotKeys = Seq("u1"), saltBuckets = 2)) == viaNative)
+    assert(out(AsOfJoin.thetaWindow(s, f, Seq("k"), "sts", "fts", Seq("v"), "tie")) == viaNative)
   }
 
   test("locfBounded: stale matches null out, in-window matches identical to locf") {
@@ -191,16 +219,16 @@ class AsOfJoinSpec extends SparkSpec {
     assert(tight("s1").contains(30.0), "an exactly-at-ts match is age 0, inside any tolerance")
     assert(tight("s2").isEmpty, "a 1-day-old match must null out under tolerance 0")
 
-    // equivalence: bounded with a huge tolerance == plain locf
+    // equivalence: bounded with a huge tolerance == the plain join
     val loose = AsOfJoin.locfBounded(spine, facts, Seq("k"), "sts", "fts", Seq("v"), "tie",
       toleranceSec = 365L * 86400)
       .select("tag", "v").collect()
       .map(r => r.getString(0) -> (if (r.isNullAt(1)) null else r.getDouble(1))).toMap
-    assert(loose == run(AsOfJoin.locf))
+    assert(loose == run(AsOfJoin.native))
   }
 
   test("spine passthrough columns and timestamp column survive") {
-    val out = AsOfJoin.locf(spine, facts, Seq("k"), "sts", "fts", Seq("v"), "tie")
+    val out = AsOfJoin.native(spine, facts, Seq("k"), "sts", "fts", Seq("v"), "tie")
     assert(out.columns.toSeq == Seq("k", "sts", "tag", "v", "fts__timestamp"))
   }
 

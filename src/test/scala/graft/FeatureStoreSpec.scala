@@ -132,6 +132,106 @@ class FeatureStoreSpec extends SparkSpec {
     assert(rows(2).isNullAt(2)) // p2 @ Jan1: no prior observation
   }
 
+  /** Three active float features, two ingest batches (the second, created
+    * later, ties one event timestamp of the first), saved as TxTables with a
+    * null-event-time fact appended behind the store's back, then reloaded. */
+  private def pitStore(): (FeatureStore, Map[String, String]) = {
+    val fs = new FeatureStore(spark)
+    val ids = Seq("heart_rate", "resp_rate", "spo2").map { n =>
+      val Right(f) = fs.registerFeature(n, "1.0.0",
+        FeatureSchemaMeta(n, "float64", entity_type = "patient"), FeatureSourceMeta("batch"), "ops", now)
+      fs.activateFeature(f.feature_id, now)
+      n -> f.feature_id
+    }.toMap
+    def ingest(created: String, rows: (String, String, Double, String)*): Unit = {
+      val df = rows.map { case (e, n, v, t) => (e, n, Some(v), ts(t)) }
+        .toDF("entity_id", "feature_name", "value_double", "event_timestamp")
+        .withColumn("value_string", lit(null).cast("string"))
+      assert(fs.ingestValues(df, ids, ts(created)) == rows.size.toLong)
+    }
+    ingest("2024-02-01 00:00:00",
+      ("p1", "heart_rate", 70.0, "2024-01-01 00:00:00"),
+      ("p1", "heart_rate", 80.0, "2024-01-10 00:00:00"),
+      ("p1", "resp_rate", 12.0, "2024-01-05 00:00:00"),
+      ("p1", "spo2", 97.0, "2024-01-03 00:00:00"),
+      ("p2", "heart_rate", 60.0, "2024-01-03 00:00:00"),
+      ("p2", "spo2", 95.0, "2024-01-08 00:00:00"))
+    ingest("2024-02-02 00:00:00",
+      ("p1", "heart_rate", 85.0, "2024-01-10 00:00:00"), // same event time, created later: wins
+      ("p2", "resp_rate", 14.0, "2024-01-06 00:00:00"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_store_pit").toString
+    fs.saveTx(dir, tsMillis = 1000L)
+    // ingestValues refuses a null event time; a foreign writer need not
+    graft.sources.TxTable(spark, s"$dir/feature_values").append(
+      fs.valuesDF.where(col("feature_id") === ids("heart_rate")).limit(1)
+        .withColumn("entity_id", lit("p3"))
+        .withColumn("value_double", lit(99.0))
+        .withColumn("event_timestamp", lit(null).cast("timestamp")),
+      tsMillis = 2000L)
+    (FeatureStore.loadTx(spark, dir), ids)
+  }
+
+  test("getPointInTimeFeatures equals a per-feature thetaWindow fold over the store's facts") {
+    val (fs, ids) = pitStore()
+    assert(fs.valuesDF.where(col("event_timestamp").isNull).count() == 1L)
+    val names = Seq("heart_rate", "resp_rate", "spo2", "no_such_feature")
+    val spine = Seq(
+      (1, "p1", "2024-01-01 00:00:00"), // exactly at a fact's timestamp
+      (2, "p1", "2024-01-02 00:00:00"), // before any resp_rate / spo2 fact
+      (3, "p1", "2024-01-10 00:00:00"), // exactly at the tied timestamp
+      (4, "p1", "2024-01-15 00:00:00"),
+      (5, "p2", "2024-01-01 00:00:00"), // before any fact of p2
+      (6, "p2", "2024-01-07 00:00:00"),
+      (7, "p3", "2024-01-20 00:00:00"), // only a null-timestamp fact
+      (8, "p4", "2024-01-05 00:00:00")  // unknown entity
+    ).map { case (i, e, t) => (i, e, ts(t)) }.toDF("row_id", "entity_id", "event_timestamp")
+
+    val expected = names.foldLeft(spine) { (acc, n) =>
+      val facts = fs.valuesDF.where(col("feature_id") === ids.getOrElse(n, ""))
+        .select(col("entity_id"), col("event_timestamp"), col("created_timestamp"), col("value_double").as(n))
+      graft.operators.AsOfJoin.thetaWindow(acc, facts, Seq("entity_id"), "event_timestamp",
+          "event_timestamp", Seq(n), "created_timestamp")
+        .withColumnRenamed("event_timestamp__timestamp", s"${n}__timestamp")
+    }
+    val out = fs.getPointInTimeFeatures(spine, names)
+    assert(out.columns.toSeq == expected.columns.toSeq)
+    val got = out.orderBy("row_id").collect().toSeq
+    assert(got == expected.orderBy("row_id").collect().toSeq)
+
+    def at(row: Int, c: String) = Option(got(row - 1).getAs[Any](c))
+    assert(at(1, "heart_rate").contains(70.0))
+    assert(at(2, "resp_rate").isEmpty && at(2, "spo2").isEmpty)
+    assert(at(3, "heart_rate").contains(85.0), "equal event times: the later created_timestamp wins")
+    assert(at(4, "resp_rate").contains(12.0) && at(4, "spo2").contains(97.0))
+    assert(names.take(3).forall(n => at(5, n).isEmpty))
+    assert(at(6, "resp_rate").contains(14.0) && at(6, "heart_rate").contains(60.0))
+    assert(at(7, "heart_rate").isEmpty, "a null-timestamp fact is as of no time")
+    assert(got.forall(r => r.isNullAt(r.fieldIndex("no_such_feature"))))
+  }
+
+  test("getPointInTimeFeatures shuffles the spine once for any number of features") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Walk extends AdaptiveSparkPlanHelper
+    val (fs, _) = pitStore()
+    val names = Seq("heart_rate", "resp_rate", "spo2")
+    // read from parquet: a local relation would be folded into the
+    // projection above it, and `spine_tag` would vanish from the plan
+    val spineDir = java.nio.file.Files.createTempDirectory("graft_pit_spine").toString
+    Seq(("p1", ts("2024-01-15 00:00:00"), "a"), ("p2", ts("2024-01-07 00:00:00"), "b"))
+      .toDF("entity_id", "event_timestamp", "spine_tag")
+      .write.mode("overwrite").parquet(spineDir)
+    val out = fs.getPointInTimeFeatures(spark.read.parquet(spineDir), names)
+    out.collect()
+    val plan = out.queryExecution.executedPlan
+    // an exchange "carries the spine" when the spine's rows flow through it
+    val spineShuffles = Walk.collect(plan) {
+      case e: ShuffleExchangeExec
+        if Walk.find(e.child)(_.output.exists(_.name == "spine_tag")).isDefined => e
+    }
+    assert(spineShuffles.size == 1, s"the spine must be shuffled once, not per feature:\n$plan")
+  }
+
   test("name resolution picks the numerically-highest active version (1.10.0 > 1.9.0)") {
     val fs = new FeatureStore(spark)
     def reg(v: String, value: Double, activate: Boolean = true): String = {

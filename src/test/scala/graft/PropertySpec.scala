@@ -39,7 +39,7 @@ class PropertySpec extends SparkSpec {
       val facts = sample(factGen, seed).toDF("k", "fts", "tie", "v")
       val spine = sample(spineGen, seed + 100).zipWithIndex
         .map { case ((k, t), i) => (k, t, i) }.toDF("k", "sts", "tag")
-      val out = AsOfJoin.locf(spine, facts, Seq("k"), "sts", "fts", Seq("v"), "tie")
+      val out = AsOfJoin.native(spine, facts, Seq("k"), "sts", "fts", Seq("v"), "tie")
       val leaked = out.where(col("fts__timestamp") > col("sts")).count()
       assert(leaked == 0, s"seed $seed leaked future facts")
       // and it agrees with the naive formulation
@@ -47,7 +47,7 @@ class PropertySpec extends SparkSpec {
       assert(
         out.orderBy("tag").collect().map(_.toString).toSeq ==
           theta.orderBy("tag").collect().map(_.toString).toSeq,
-        s"seed $seed locf != theta")
+        s"seed $seed native != theta")
     }
   }
 
