@@ -16,16 +16,19 @@ import org.apache.spark.sql.types.TimestampType
   * `{name}` and `{name}__timestamp` at :397-398). The reference is
   * O(|spine| x |facts|) nested scans; the join here is fully distributed.
   *
-  * One physical formulation, [[native]]: a partitioned merge-scan
+  * One physical formulation: a partitioned merge-scan
   * ([[org.apache.spark.sql.graft.asof.AsOfJoinExec]]) over both sides
   * hash-clustered on the key and sorted by time — O(S + F) per partition
   * with NO intermediate row explosion (a theta-join `f.ts <= s.ts`
   * materializes O(S*F) pairs per key before the argmax prunes them, which
-  * dies at 100 TB on hot keys). It replaced a union + window
-  * carry-forward formulation that measured 2.8x slower cold and 1.4x
-  * slower warm at 20M facts / 2M spine. [[locfBounded]], [[locfSalted]]
-  * and [[locfRouted]] are a tolerance mask, salting and hot-key routing
-  * over it.
+  * dies at 100 TB on hot keys). The merge carries one fact per slot:
+  * [[nativeSlots]] answers k as-of joins (one per slot of the fact rows)
+  * in one pass over the facts, and [[native]] is its one-slot case. It
+  * replaced a union + window carry-forward formulation that measured 2.8x
+  * slower cold and 1.4x slower warm at 20M facts / 2M spine (timed before
+  * the merge gained slots).
+  * [[locfBounded]], [[locfSalted]] and [[locfRouted]] are a tolerance
+  * mask, salting and hot-key routing over [[native]].
   *
   * [[thetaWindow]] (small/verification path): the naive inequality join +
   * row_number, kept only as the differential-test oracle.
@@ -174,7 +177,8 @@ object AsOfJoin {
     * exchanges, same as SortMergeJoin), then one O(S+F) forward merge per
     * partition. Differentially tested against [[thetaWindow]]. The output
     * keeps the spine's partitioning and order, so enriching one spine with
-    * several fact sets in a row shuffles the spine once.
+    * several fact sets in a row shuffles the spine once. This is the
+    * one-slot case of [[nativeSlots]]: same node, exec and strategy.
     *
     * @param spine       left side; ALL its columns pass through to the output
     * @param facts       right side (the fact/value log)
@@ -194,7 +198,52 @@ object AsOfJoin {
       payloadCols: Seq[String],
       tieCol: String,
       outSuffix: String = ""
+  ): DataFrame =
+    merge(spine, facts, keyCols, spineTs, factTs, payloadCols, tieCol, None,
+      Seq(0 -> (payloadCols.map(_ + outSuffix) :+ (factTs + outSuffix + "__timestamp"))))
+
+  /** k as-of joins in ONE merge: each fact row belongs to the slot named by
+    * its int `slotCol`, and each spine row gets, per (slot value, name) in
+    * `slots`, the `valueCol` of that slot's latest fact with ts <= the spine
+    * ts as column `name`, and that fact's timestamp as `name__timestamp`
+    * (both null when the slot has no eligible fact). Equal to folding
+    * [[native]] over the k single-slot fact sets, but the facts are
+    * scanned, shuffled and sorted once instead of k times — the fold
+    * shuffles the spine once too, but re-plans and re-sorts the facts per
+    * step. Facts whose slot is null or not listed are ignored. Key
+    * coercion, timestamp cast and the spine-filter pushdown are those of
+    * [[native]].
+    */
+  def nativeSlots(
+      spine: DataFrame,
+      facts: DataFrame,
+      keyCols: Seq[String],
+      spineTs: String,
+      factTs: String,
+      valueCol: String,
+      tieCol: String,
+      slotCol: String,
+      slots: Seq[(Int, String)]
+  ): DataFrame =
+    merge(spine, facts, keyCols, spineTs, factTs, Seq(valueCol), tieCol, Some(slotCol),
+      slots.map { case (v, n) => v -> Seq(n, n + "__timestamp") })
+
+  /** The one plan constructor behind [[native]] and [[nativeSlots]]: `slots` maps
+    * each slot value to the output names of its payload columns followed
+    * by the name of its matched-fact timestamp; with no `slotCol` every
+    * fact is in slot 0. */
+  private def merge(
+      spine: DataFrame,
+      facts: DataFrame,
+      keyCols: Seq[String],
+      spineTs: String,
+      factTs: String,
+      payloadCols: Seq[String],
+      tieCol: String,
+      slotCol: Option[String],
+      slots: Seq[(Int, Seq[String])]
   ): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression, Literal}
     import org.apache.spark.sql.graft.Bridge
     import org.apache.spark.sql.graft.asof.{AsOfJoinNode, AsOfJoinPredicatePushdown, NativeAsOfStrategy}
 
@@ -237,8 +286,18 @@ object AsOfJoin {
       keyCols.zip(keyTypes).map { case (c, t) => col(c).cast(t).as(s"__k_$c") } ++ Seq(
         col(factTs).cast("timestamp").as("__fts"),
         Latest.tieLong(facts, tieCol).as("__ftie")) ++
+        slotCol.map(c => col(c).cast("int").as("__slot")) ++
         payloadCols.map(c => col(c).as(s"__p_$c")): _*)
 
+    // each slot carries the payload columns and the fact timestamp; the
+    // node produces one fresh attribute per (slot, carried column), aliased
+    // to its output name only in the select below, so an output name may
+    // repeat a spine column's exactly as the per-feature fold allowed
+    val payload = (payloadCols.map(c => s"__p_$c") :+ "__fts").map(c => Bridge.expression(f(c)) match {
+      case a: Attribute => a
+    })
+    val slotOutput = slots.indices.flatMap(i =>
+      payload.map(a => AttributeReference(s"__s${i}_${a.name}", a.dataType, nullable = true)()))
     val node = AsOfJoinNode(
       Bridge.analyzed(sp),
       Bridge.analyzed(f),
@@ -246,12 +305,15 @@ object AsOfJoin {
       rightKeys = keyCols.map(c => Bridge.expression(f(s"__k_$c"))),
       leftTs = Bridge.expression(sp(sts._1)),
       rightTs = Bridge.expression(f("__fts")),
-      rightTie = Bridge.expression(f("__ftie")))
+      rightTie = Bridge.expression(f("__ftie")),
+      rightSlot = slotCol.fold[Expression](Literal(0))(_ => Bridge.expression(f("__slot"))),
+      payload = payload,
+      slotValues = slots.map(_._1),
+      slotOutput = slotOutput)
 
+    val names = slots.flatMap(_._2)
     Bridge.ofRows(spark, node).select(
-      spineCols.map(col) ++
-        payloadCols.map(c => col(s"__p_$c").as(c + outSuffix)) :+
-        col("__fts").as(factTs + outSuffix + "__timestamp"): _*)
+      spineCols.map(col) ++ slotOutput.zip(names).map { case (a, n) => Bridge.column(a).as(n) }: _*)
   }
 
   /** Naive theta-join + per-spine-row argmax. O(S*F) per key before pruning —

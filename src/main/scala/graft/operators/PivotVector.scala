@@ -18,8 +18,11 @@ object PivotVector {
 
   /** One row per entity; one column per requested feature name holding the
     * value at max (tsCol, tieCol) — i.e. pivot composed with the latest-
-    * per-key argmax in a single aggregate (partial-agg friendly: map-side
-    * combine happens per (entity, name) before the shuffle).
+    * per-key argmax in ONE aggregate with one shuffle: per entity, column
+    * `n` is `max_by(value, when(name = n, (ts, tie)))`, and max_by skips
+    * the rows whose ordering is null, i.e. the other names' rows.
+    * (`groupBy.pivot.agg` plans two aggregates — per (entity, name), then
+    * PivotFirst per entity — with a shuffle each.)
     */
   def toVector(
       values: DataFrame,
@@ -31,11 +34,12 @@ object PivotVector {
       names: Seq[String]
   ): DataFrame = {
     val ord = struct(col(tsCol), Latest.tieKey(values, tieCol))
-    values
-      .where(col(nameCol).isin(names: _*))
-      .groupBy(col(entityCol))
-      .pivot(nameCol, names)
-      .agg(max_by(col(valueCol), ord))
+    val rows = values.where(col(nameCol).isin(names: _*))
+    names.map(n => max_by(col(valueCol), when(col(nameCol) === n, ord)).as(n)) match {
+      // no names: the entity column alone, as groupBy.pivot returns it
+      case Seq() => rows.select(col(entityCol)).distinct()
+      case first +: rest => rows.groupBy(col(entityCol)).agg(first, rest: _*)
+    }
   }
 
   /** Inverse: wide row -> EAV long rows (unpivot), for round-trip property

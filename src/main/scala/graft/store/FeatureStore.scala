@@ -56,12 +56,30 @@ class FeatureStore(val spark: SparkSession) {
       ds.toLocalIterator().forEachRemaining(f => b += f.feature_id -> f)
       features0 = features0 ++ b
       pendingRegistry = None
+      clearStagedLookups()
     }
   }
   private[store] def stageRegistry(ds: Dataset[Feature]): Unit = synchronized {
     hydrateRegistry() // a second staged load must not shadow earlier state
     pendingRegistry = Some(ds)
+    clearStagedLookups()
   }
+
+  // What the batch lookups have read from the staged registry, by id and
+  // by name. The staged Dataset is a fixed TxTable/parquet snapshot, so an
+  // answer stays valid until stageRegistry/hydrateRegistry replace it;
+  // without the memo every batch read starts with a Spark job. Hits are
+  // bounded by the registry; misses come from callers (the serving tier
+  // included), so one is kept only while a map holds fewer than
+  // StagedMissCap entries, and an unkept miss is read again next time.
+  private val stagedById = scala.collection.mutable.Map.empty[String, Option[Feature]]
+  private val stagedByName = scala.collection.mutable.Map.empty[String, Seq[Feature]]
+  private def clearStagedLookups(): Unit = { stagedById.clear(); stagedByName.clear() }
+  private def remember[V](memo: scala.collection.mutable.Map[String, V], key: String, v: V, hit: Boolean): Unit =
+    if (hit || memo.size < FeatureStore.StagedMissCap) memo(key) = v
+  /** Test hook: entries in the staged-lookup memo, (by id, by name). */
+  private[graft] def stagedLookupSizesForTest: (Int, Int) = synchronized { (stagedById.size, stagedByName.size) }
+
   /** Test hook: whether the staged registry is still unmaterialized. */
   private[graft] def registryPendingForTest: Boolean = synchronized { pendingRegistry.nonEmpty }
   /** Test hook: whether the staged groups table is still unmaterialized. */
@@ -88,31 +106,38 @@ class FeatureStore(val spark: SparkSession) {
   /** Bounded catalog lookup for the batch read paths: resolves ONLY the
     * requested ids — against the driver map when hydrated, else by a
     * filtered collect of the staged Dataset (|ids| rows cross the driver,
-    * never the registry). Staged rows win id collisions, matching
-    * [[hydrateRegistry]]'s `features0 ++ staged` merge order. */
-  private def lookupFeatures(ids: Seq[String]): Map[String, Feature] = synchronized {
-    if (ids.isEmpty) Map.empty
-    else pendingRegistry match {
-      case None => ids.flatMap(id => features0.get(id).map(id -> _)).toMap
+    * never the registry), memoized so a repeated id costs no job. Staged
+    * rows win id collisions, matching [[hydrateRegistry]]'s
+    * `features0 ++ staged` merge order. */
+  private[graft] def lookupFeatures(ids: Seq[String]): Map[String, Feature] = synchronized {
+    val local = ids.flatMap(id => features0.get(id).map(id -> _)).toMap
+    pendingRegistry match {
+      case None => local
       case Some(ds) =>
-        val local = ids.flatMap(id => features0.get(id).map(id -> _)).toMap
-        local ++ ds.filter(col("feature_id").isin(ids: _*)).collect()
-          .map(f => f.feature_id -> f)
+        val missing = ids.distinct.filterNot(stagedById.contains)
+        if (missing.nonEmpty) {
+          val found = ds.filter(col("feature_id").isin(missing: _*)).collect()
+            .map(f => f.feature_id -> f).toMap
+          missing.foreach(id => remember(stagedById, id, found.get(id), found.contains(id)))
+        }
+        local ++ ids.flatMap(id => stagedById.get(id).flatten.map(id -> _))
     }
   }
 
   /** Bounded by-name lookup (all versions of the requested names) — same
-    * no-hydration rule as [[lookupFeatures]]. */
-  private def lookupByNames(names: Seq[String]): Seq[Feature] = synchronized {
-    if (names.isEmpty) Seq.empty
-    else {
-      val local = features0.values.filter(f => names.contains(f.name))
-        .map(f => f.feature_id -> f).toMap
-      val staged = pendingRegistry
-        .map(_.filter(col("name").isin(names: _*)).collect().toSeq)
-        .getOrElse(Seq.empty)
-      (local ++ staged.map(f => f.feature_id -> f)).values.toSeq
+    * no-hydration rule and memo as [[lookupFeatures]]. */
+  private[graft] def lookupByNames(names: Seq[String]): Seq[Feature] = synchronized {
+    val local = features0.values.filter(f => names.contains(f.name))
+      .map(f => f.feature_id -> f).toMap
+    val staged = pendingRegistry.fold(Seq.empty[Feature]) { ds =>
+      val missing = names.distinct.filterNot(stagedByName.contains)
+      if (missing.nonEmpty) {
+        val found = ds.filter(col("name").isin(missing: _*)).collect().toSeq.groupBy(_.name)
+        missing.foreach(n => remember(stagedByName, n, found.getOrElse(n, Seq.empty), found.contains(n)))
+      }
+      names.distinct.flatMap(n => stagedByName.getOrElse(n, Seq.empty))
     }
+    (local ++ staged.map(f => f.feature_id -> f)).values.toSeq
   }
 
   // groups stage/hydrate exactly like the registry (same no-round-trip load
@@ -471,6 +496,8 @@ class FeatureStore(val spark: SparkSession) {
     * explicit nulls). At scale the spine is millions of ids; an `isin`
     * IN-list or a collected LocalRelation would bottleneck the driver and
     * bloat the plan, so neither appears here (asserted by PlanAuditSpec).
+    * A repeated feature id is refused with an IllegalArgumentException (it
+    * would name two output columns alike).
     *
     * @param entities one-column DataFrame of entity ids (first column is
     *   taken as the id regardless of name)
@@ -482,6 +509,7 @@ class FeatureStore(val spark: SparkSession) {
       userId: String,
       userRoles: Seq[String],
       now: Timestamp): DataFrame = {
+    FeatureStore.requireDistinct("getFeatureVector", "feature id", featureIds, spark)
     // bounded lookup of ONLY the requested ids — the batch read path never
     // hydrates the whole catalog onto the driver (round-7 verdict #9)
     val meta = lookupFeatures(featureIds)
@@ -529,12 +557,20 @@ class FeatureStore(val spark: SparkSession) {
 
   /** get_point_in_time_features — feature_server.py:355-408 (EP2, the
     * flagship A3): left-enrich a spine with `{name}` and `{name}__timestamp`
-    * per requested feature, leakage-free. One as-of join
-    * ([[AsOfJoin.native]]) per feature — no per-row loops anywhere. Each
-    * join keeps the spine's partitioning and order, so the spine is
-    * shuffled once however many features are requested.
+    * per requested feature, leakage-free. ONE as-of merge
+    * ([[AsOfJoin.nativeSlots]]) for all requested features — each fact
+    * carries its feature's position in the request as its slot — so the
+    * fact log is scanned, shuffled and sorted once and the spine shuffled
+    * once, however many features are requested. No per-row loops anywhere.
+    * An unknown name yields all-null columns; a repeated name, or an output
+    * column that clashes with a spine column or another output column, is
+    * refused with an IllegalArgumentException before any job runs.
     */
   def getPointInTimeFeatures(spine: DataFrame, featureNames: Seq[String]): DataFrame = {
+    // a repeated name repeats its output columns, so one check covers both
+    FeatureStore.requireDistinct("getPointInTimeFeatures", "output column (spine or feature)",
+      spine.columns.toSeq ++ featureNames.flatMap(n => Seq(n, s"${n}__timestamp")), spark)
+    if (featureNames.isEmpty) return spine
     // DETERMINISTIC name resolution: several versions of one name coexist
     // by design (feature_id hashes name:version:entityType), and a plain
     // toMap kept whichever id hash iteration yielded last — training
@@ -548,24 +584,22 @@ class FeatureStore(val spark: SparkSession) {
     val nameForId = lookupByNames(featureNames)
       .sortBy(f => (f.status == "active", FeatureStore.versionSortKey(f.version), f.feature_id))
       .map(f => f.name -> f.feature_id).toMap
-    featureNames.foldLeft(spine) { (acc, fname) =>
-      val fid = nameForId.getOrElse(fname, "")
-      // a fact with no event time is as of no time: ingestValues rejects
-      // such rows and getFeatureVector's `<= asOf` drops them, so a loaded
-      // table holding one must not feed it to the merge-scan, which would
-      // carry it as infinitely old
-      val facts = values
-        .where(col("feature_id") === fid && col("event_timestamp").isNotNull)
-        .select(
-          col("entity_id"),
-          col("event_timestamp"),
-          col("created_timestamp"),
-          col("value_double").as(fname))
-      AsOfJoin
-        .native(acc, facts, Seq("entity_id"), "event_timestamp", "event_timestamp",
-          Seq(fname), "created_timestamp")
-        .withColumnRenamed("event_timestamp__timestamp", s"${fname}__timestamp")
-    }
+    val slotOfId = featureNames.zipWithIndex.flatMap { case (n, i) => nameForId.get(n).map(_ -> i) }
+    // a fact with no event time is as of no time: ingestValues rejects
+    // such rows and getFeatureVector's `<= asOf` drops them, so a loaded
+    // table holding one must not feed it to the merge-scan, which would
+    // carry it as infinitely old
+    val facts = values
+      .where(col("feature_id").isin(slotOfId.map(_._1): _*) && col("event_timestamp").isNotNull)
+      .select(
+        col("entity_id"),
+        col("event_timestamp"),
+        col("created_timestamp"),
+        col("value_double"),
+        coalesce(slotOfId.map { case (id, i) => when(col("feature_id") === id, i) } :+
+          lit(null).cast("int"): _*).as("__slot"))
+    AsOfJoin.nativeSlots(spine, facts, Seq("entity_id"), "event_timestamp", "event_timestamp",
+      "value_double", "created_timestamp", "__slot", featureNames.zipWithIndex.map(_.swap))
   }
 
   /** Online snapshot — the A2/B2 latest-per-(entity,feature) table that a
@@ -823,6 +857,23 @@ class FeatureStore(val spark: SparkSession) {
 }
 
 object FeatureStore {
+
+  /** How many entries a staged-lookup memo may hold before it stops
+    * keeping misses (hits are always kept; the registry bounds them). */
+  private[graft] val StagedMissCap = 1024
+
+  /** Refuses a repeated entry of `what` in `items` (compared the way the
+    * session resolves column names) with an IllegalArgumentException
+    * naming it — a repeat would otherwise surface late, as duplicate or
+    * ambiguous output columns. */
+  private def requireDistinct(op: String, what: String, items: Seq[String], spark: SparkSession): Unit = {
+    val caseSensitive = spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
+    val repeated = items.groupBy(i => if (caseSensitive) i else i.toLowerCase(java.util.Locale.ROOT))
+      .collect { case (_, xs) if xs.size > 1 => xs.distinct.mkString("/") }
+    if (repeated.nonEmpty)
+      throw new IllegalArgumentException(
+        s"$op: repeated $what ${repeated.toSeq.sorted.mkString(", ")}")
+  }
 
   /** Order-preserving key for semver-style version strings: each
     * dot-separated component that parses as a number is zero-padded to a

@@ -232,6 +232,60 @@ class AsOfJoinSpec extends SparkSpec {
     assert(out.columns.toSeq == Seq("k", "sts", "tag", "v", "fts__timestamp"))
   }
 
+  // k-slot facts: the edge-case facts in slot 0; generated facts spread
+  // over slots 1 and 2, slot 2 only for keys u0..u2; null-key facts in
+  // slots 0 and 1; slot 9 is never requested and slot 3 holds no facts
+  private def slotFacts = facts.withColumn("slot", lit(0))
+    .unionByName(genFacts.withColumn("slot", when(col("tie") % 2 === 0 && col("k") <= "u2", 2).otherwise(1)))
+    .unionByName(Seq(
+      (null.asInstanceOf[String], ts("2024-01-02 00:00:00"), 900L, 99.0, 0),
+      (null.asInstanceOf[String], ts("2024-01-20 00:00:00"), 901L, 98.0, 1),
+      ("u1", ts("2024-01-01 00:00:00"), 902L, -1.0, 9)).toDF("k", "fts", "tie", "v", "slot"))
+  private def slotSpine = spine.unionByName(genSpine.withColumn("tag", concat(lit("g"), col("tag"))))
+    .unionByName(Seq(
+    (null.asInstanceOf[String], ts("2024-01-25 00:00:00"), "s_null")).toDF("k", "sts", "tag"))
+  private val slotNames = Seq(0 -> "a", 1 -> "b", 2 -> "c", 3 -> "d")
+
+  // the k-slot answer as a per-slot fold of the naive oracle
+  private def slotFold(sp: org.apache.spark.sql.DataFrame, f: org.apache.spark.sql.DataFrame) =
+    slotNames.foldLeft(sp) { case (acc, (v, n)) =>
+      AsOfJoin.thetaWindow(acc, f.where(col("slot") === v), Seq("k"), "sts", "fts", Seq("v"), "tie")
+        .withColumnRenamed("v", n).withColumnRenamed("fts__timestamp", s"${n}__timestamp")
+    }
+
+  test("nativeSlots equals a per-slot thetaWindow fold, with codegen on and off") {
+    val (sp, f) = (slotSpine, slotFacts)
+    val expected = slotFold(sp, f)
+    def slotted = AsOfJoin.nativeSlots(sp, f, Seq("k"), "sts", "fts", "v", "tie", "slot", slotNames)
+    assert(slotted.columns.toSeq == expected.columns.toSeq)
+    val want = rows(expected)
+    // the cases the fixture must exercise
+    val byTag = expected.collect().map(r => r.getAs[String]("tag") -> r).toMap
+    assert(byTag("s1").getAs[Double]("a") == 30.0 && byTag("s_null").getAs[Double]("b") == 98.0)
+    assert(expected.where(col("d").isNotNull).isEmpty, "slot 3 has no facts")
+    assert(!expected.where(col("c").isNull && col("b").isNotNull).isEmpty, "keys only in some slots")
+
+    val df = slotted
+    assert(rows(df) == want)
+    df.collect() // under AQE the final plan only exists post-execution
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.linesIterator.exists(l => l.contains("AsOfJoin") && l.contains("*")), s"not codegen'd:\n$plan")
+    val prev = spark.conf.get("spark.sql.codegen.wholeStage")
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    try assert(rows(slotted) == want)
+    finally spark.conf.set("spark.sql.codegen.wholeStage", prev)
+  }
+
+  test("nativeSlots with one slot equals native; an empty slot list passes the spine through") {
+    val one = AsOfJoin.nativeSlots(genSpine, genFacts.withColumn("slot", lit(7)),
+      Seq("k"), "sts", "fts", "v", "tie", "slot", Seq(7 -> "v"))
+      .withColumnRenamed("v__timestamp", "fts__timestamp")
+    assert(rows(one) == rows(AsOfJoin.native(genSpine, genFacts, Seq("k"), "sts", "fts", Seq("v"), "tie")))
+    val none = AsOfJoin.nativeSlots(spine, facts.withColumn("slot", lit(0)),
+      Seq("k"), "sts", "fts", "v", "tie", "slot", Seq.empty)
+    assert(none.columns.toSeq == spine.columns.toSeq && rows(none) == rows(spine))
+  }
+
   test("a8_resample: dense daily grid, LOCF fill, nulls before first event") {
     val dir = "/root/testdata/sf0.001"
     val out = SparkEntry.queries("a8_resample")(spark, dir).cache()

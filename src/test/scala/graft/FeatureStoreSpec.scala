@@ -232,6 +232,156 @@ class FeatureStoreSpec extends SparkSpec {
     assert(spineShuffles.size == 1, s"the spine must be shuffled once, not per feature:\n$plan")
   }
 
+  private def jobsDuring[T](body: => T): (T, Int) =
+    org.apache.spark.graft.JobCounter.jobsDuring(spark.sparkContext)(body)
+
+  // the spine of the thetaWindow-fold test: edge cases per entity
+  private def pitSpine = Seq(
+    (1, "p1", "2024-01-01 00:00:00"), (2, "p1", "2024-01-02 00:00:00"),
+    (3, "p1", "2024-01-10 00:00:00"), (4, "p1", "2024-01-15 00:00:00"),
+    (5, "p2", "2024-01-01 00:00:00"), (6, "p2", "2024-01-07 00:00:00"),
+    (7, "p3", "2024-01-20 00:00:00"), (8, "p4", "2024-01-05 00:00:00")
+  ).map { case (i, e, t) => (i, e, ts(t)) }.toDF("row_id", "entity_id", "event_timestamp")
+
+  test("getPointInTimeFeatures merges once: one feature_values scan, two shuffles (spine and facts)") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Walk extends AdaptiveSparkPlanHelper
+    val (fs, _) = pitStore()
+    val spineDir = java.nio.file.Files.createTempDirectory("graft_pit_scan").toString
+    pitSpine.write.mode("overwrite").parquet(spineDir)
+    val out = fs.getPointInTimeFeatures(spark.read.parquet(spineDir), Seq("heart_rate", "resp_rate", "spo2"))
+    out.collect()
+    val plan = out.queryExecution.executedPlan
+    val factScans = Walk.collect(plan) {
+      case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.toString.contains("feature_values")) => s
+    }
+    assert(factScans.size == 1, s"the fact log must be scanned once for all features:\n$plan")
+    assert(Walk.collect(plan) { case e: ShuffleExchangeExec => e }.size == 2,
+      s"one shuffle of the spine and one of the facts:\n$plan")
+  }
+
+  test("AsOfJoinExec metrics count spine rows, merged facts and filled slots, codegen on and off") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.graft.asof.AsOfJoinExec
+    object Walk extends AdaptiveSparkPlanHelper
+    val (fs, ids) = pitStore()
+    val names = Seq("heart_rate", "resp_rate", "spo2", "no_such_feature")
+    // the counts the naive fold knows: spine rows, non-null match
+    // timestamps, and the facts some spine row of their entity can see
+    val expected = names.foldLeft(pitSpine) { (acc, n) =>
+      val facts = fs.valuesDF.where(col("feature_id") === ids.getOrElse(n, ""))
+        .select(col("entity_id"), col("event_timestamp"), col("created_timestamp"), col("value_double").as(n))
+      graft.operators.AsOfJoin.thetaWindow(acc, facts, Seq("entity_id"), "event_timestamp",
+          "event_timestamp", Seq(n), "created_timestamp")
+        .withColumnRenamed("event_timestamp__timestamp", s"${n}__timestamp")
+    }.collect()
+    val filled = expected.map(r => names.count(n => !r.isNullAt(r.fieldIndex(s"${n}__timestamp")))).sum.toLong
+    val f = fs.valuesDF.where(col("feature_id").isin(ids.values.toSeq: _*) && col("event_timestamp").isNotNull)
+    val visible = f.join(pitSpine.select(col("entity_id").as("se"), col("event_timestamp").as("sts")),
+      f("entity_id") <=> col("se") && f("event_timestamp") <= col("sts"), "left_semi").count()
+    assert(filled > 0L && visible > 0L && visible < f.count(), "the fixture must skip some facts")
+
+    def metricsOf(): Map[String, Long] = {
+      val out = fs.getPointInTimeFeatures(pitSpine, names)
+      out.collect()
+      val (m, jobs) = jobsDuring {
+        val execs = Walk.collect(out.queryExecution.executedPlan) { case e: AsOfJoinExec => e }
+        assert(execs.size == 1)
+        execs.head.metrics.map { case (k, v) => k -> v.value }
+      }
+      assert(jobs == 0, "reading the metrics must not start a job")
+      m
+    }
+    val want = Map("numSpineRows" -> 8L, "numFactRows" -> visible, "numFilledSlots" -> filled)
+    assert(metricsOf() == want)
+    val prev = spark.conf.get("spark.sql.codegen.wholeStage")
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    try assert(metricsOf() == want)
+    finally spark.conf.set("spark.sql.codegen.wholeStage", prev)
+  }
+
+  test("getPointInTimeFeatures refuses repeated names and clashing columns before any job") {
+    val (fs, _) = pitStore()
+    def refused(spine: org.apache.spark.sql.DataFrame, names: Seq[String], clash: String): Unit = {
+      val (e, jobs) = jobsDuring(intercept[IllegalArgumentException](fs.getPointInTimeFeatures(spine, names)))
+      assert(e.getMessage.contains(clash), e.getMessage)
+      assert(jobs == 0, s"refused after $jobs job(s)")
+    }
+    refused(pitSpine, Seq("heart_rate", "spo2", "heart_rate"), "heart_rate")
+    refused(pitSpine.withColumn("spo2", lit(1.0)), Seq("heart_rate", "spo2"), "spo2")
+    refused(pitSpine.withColumn("spo2__timestamp", lit(1.0)), Seq("spo2"), "spo2__timestamp")
+    refused(pitSpine, Seq("hr", "hr__timestamp"), "hr__timestamp")
+    refused(pitSpine, Seq("heart_rate", "HEART_RATE"), "HEART_RATE")
+    assert(fs.registryPendingForTest)
+  }
+
+  test("getFeatureVector refuses a repeated feature id up front, in both overloads") {
+    val (fs, hrId, dxId) = newStore()
+    ingestSample(fs, hrId, dxId)
+    val e1 = intercept[IllegalArgumentException](fs.getFeatureVector(Seq("p1"), Seq(hrId, dxId, hrId),
+      now, "u", Seq("doctor"), now))
+    assert(e1.getMessage.contains(hrId), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException](fs.getFeatureVector(Seq("p1").toDF("entity_id"),
+      Seq(dxId, dxId), now, "u", Seq("doctor"), now))
+    assert(e2.getMessage.contains(dxId), e2.getMessage)
+    intercept[IllegalArgumentException](new FeatureServer(fs).getOnlineFeatures("p1", "patient", Seq(hrId, hrId),
+      "u", Seq("doctor"), now))
+  }
+
+  test("a loaded store answers repeated lookups without a registry job, and sees features after hydration") {
+    val (fs, ids) = pitStore()
+    val names = Seq("heart_rate", "spo2", "no_such_feature")
+    val vecIds = Seq(ids("heart_rate"), ids("resp_rate"), "feat_unknown")
+    val asOf = ts("2024-01-31 00:00:00")
+    val (_, firstPit) = jobsDuring(fs.getPointInTimeFeatures(pitSpine, names))
+    val (_, firstVec) = jobsDuring(fs.getFeatureVector(Seq("p1"), vecIds, asOf, "u", Seq(), now))
+    assert(firstPit >= 1 && firstVec >= 1, "the first lookups read the staged registry")
+    // building either frame again starts no job at all: names, ids and the
+    // misses among them are answered from the memo
+    val (pit, againPit) = jobsDuring(fs.getPointInTimeFeatures(pitSpine, names))
+    val (vec, againVec) = jobsDuring(fs.getFeatureVector(Seq("p1"), vecIds, asOf, "u", Seq(), now))
+    assert(againPit == 0 && againVec == 0, s"registry jobs on repeat: pit $againPit, vector $againVec")
+    assert(fs.registryPendingForTest, "the memo must not hydrate the catalog")
+    assert(pit.where(col("row_id") === 4).select("heart_rate").head().getDouble(0) == 85.0)
+    assert(vec.select(ids("heart_rate")).head().getDouble(0) == 85.0)
+
+    // "temp" was looked up (and memoized as missing) while staged;
+    // registering it hydrates the catalog, and the lookups see it
+    assert(fs.getPointInTimeFeatures(pitSpine, Seq("temp")).where(col("temp").isNotNull).isEmpty)
+    val Right(temp) = fs.registerFeature("temp", "1.0.0",
+      FeatureSchemaMeta("temp", "float64", entity_type = "patient"), FeatureSourceMeta("batch"), "ops", now)
+    fs.activateFeature(temp.feature_id, now)
+    assert(!fs.registryPendingForTest)
+    fs.ingestValues(Seq(("p1", "temp", Some(37.5), ts("2024-01-04 00:00:00")))
+      .toDF("entity_id", "feature_name", "value_double", "event_timestamp")
+      .withColumn("value_string", lit(null).cast("string")), Map("temp" -> temp.feature_id), now)
+    assert(fs.getPointInTimeFeatures(pitSpine, Seq("temp")).where(col("row_id") === 4)
+      .select("temp").head().getDouble(0) == 37.5)
+    assert(fs.getFeatureVector(Seq("p1"), Seq(temp.feature_id), asOf, "u", Seq(), now)
+      .select(temp.feature_id).head().getDouble(0) == 37.5)
+  }
+
+  test("the staged-lookup memo stops keeping misses at its cap and still keeps hits") {
+    val (fs, ids) = pitStore()
+    val cap = FeatureStore.StagedMissCap
+    val unknown = (0 until cap + 500).map(i => s"unknown_$i")
+    assert(fs.lookupFeatures(unknown).isEmpty && fs.lookupByNames(unknown).isEmpty)
+    assert(fs.stagedLookupSizesForTest == ((cap, cap)), "distinct unknown keys must not grow the memo past its cap")
+    // a miss past the cap is read again, and is still a miss
+    val (missAgain, missJobs) = jobsDuring(fs.lookupFeatures(unknown.takeRight(1)))
+    assert(missAgain.isEmpty && missJobs >= 1)
+    // a hit past the cap is kept, so its repeat runs no job
+    assert(fs.lookupFeatures(Seq(ids("spo2"))).keySet == Set(ids("spo2")))
+    assert(fs.lookupByNames(Seq("spo2")).map(_.feature_id) == Seq(ids("spo2")))
+    val ((byId, byName), jobs) = jobsDuring((fs.lookupFeatures(Seq(ids("spo2"))), fs.lookupByNames(Seq("spo2"))))
+    assert(byId.keySet == Set(ids("spo2")) && byName.map(_.feature_id) == Seq(ids("spo2")))
+    assert(jobs == 0, s"$jobs registry job(s) for a remembered hit")
+    assert(fs.stagedLookupSizesForTest == ((cap + 1, cap + 1)))
+    assert(fs.registryPendingForTest)
+  }
+
   test("name resolution picks the numerically-highest active version (1.10.0 > 1.9.0)") {
     val fs = new FeatureStore(spark)
     def reg(v: String, value: Double, activate: Boolean = true): String = {

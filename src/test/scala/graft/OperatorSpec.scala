@@ -23,6 +23,33 @@ class OperatorSpec extends SparkSpec {
     assert(long.where($"value".isNotNull).count() == 2)
   }
 
+  test("PivotVector: one aggregate over one hash shuffle, equal to groupBy.pivot") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Walk extends AdaptiveSparkPlanHelper
+    // equal (t, id) ties across names, a null value, a null timestamp and
+    // an entity whose only rows are of an unrequested name
+    val eav = (1 to 300).map { i =>
+      (s"u${i % 11}", s"f${i % 4}", if (i % 37 == 0) None else Some(i.toDouble),
+        if (i % 53 == 0) None else Some(ts(f"2024-01-${i % 9 + 1}%02d 00:00:00")), (i % 5).toLong)
+    }.toDF("e", "name", "v", "t", "id")
+    def pivoted(names: Seq[String]) = eav.where($"name".isin(names: _*)).groupBy($"e").pivot("name", names)
+      .agg(max_by($"v", struct($"t", $"id")))
+    def canon(df: org.apache.spark.sql.DataFrame) = df.orderBy("e").collect().toSeq
+    for (names <- Seq(Seq("f0", "f1", "f2", "f9"), Seq("f3"), Seq.empty[String])) {
+      val wide = PivotVector.toVector(eav, "e", "name", "v", "t", "id", names)
+      assert(wide.schema == pivoted(names).schema, names)
+      assert(canon(wide) == canon(pivoted(names)), names)
+    }
+    val wide = PivotVector.toVector(eav, "e", "name", "v", "t", "id", Seq("f0", "f1", "f2"))
+    wide.collect()
+    val shuffles = Walk.collect(wide.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }
+    assert(shuffles.size == 1, s"one hash shuffle:\n${wide.queryExecution.executedPlan}")
+  }
+
   test("Freshness thresholds incl. boundaries and null -> expired") {
     val now = lit("2024-01-02 00:00:00").cast("timestamp")
     val df = Seq(
