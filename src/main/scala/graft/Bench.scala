@@ -1,36 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // throwaway I/O on tmpfs when available: TxTable fixtures, streaming
-    // checkpoints, and shuffle spill all go through java.io.tmpdir — on a
-    // RAM disk the bench measures the engine, not the container's virtual
-    // disk (production tables live on real storage; bench fixtures don't)
-    // Ordering contract (TmpCleanup.createOwnDir): the property switch must
-    // happen before ANY java.nio temp-file API call in this JVM, or
-    // TempFileHelper pins the original /tmp and every fixture
-    // createTempDirectory downstream silently leaves the RAM disk.
-    TmpCleanup.useShmTmpdir("graft-bench-")
-    val spark = SparkSession.builder()
-      // the engine's Catalyst surface (SQL functions, native as-of
-      // strategy, conf-gated masking rule) — the intended deployment
-      // shape; a no-op unless a query opts in
-      .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-      .config("spark.local.dir", System.getProperty("java.io.tmpdir"))
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // let AQE re-coalesce shuffle partitions even under .cache() —
-      // iterative ops (connected components, Lloyd) cache tiny frames whose
-      // fixed 32-way partitioning otherwise costs ~100 empty tasks/iteration
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // pinned like Verify: day-bucketing queries derive UTC days, and an
-      // unpinned session zone would shift midnight-adjacent rows on
-      // non-UTC hosts (review finding — Bench was the one unpinned main)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.build("graft-bench-")
     spark.sparkContext.setLogLevel("WARN")
     // untimed JVM/codegen warm-up: JIT + whole-stage-codegen compiler setup
     // otherwise lands on whichever query happens to run first (~5 s skew)

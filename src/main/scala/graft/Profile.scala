@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness: per-query cold/warm timing + optional plan dump.
   * Usage: runMain graft.Profile <sfDir> [explain] [query ...]
   */
@@ -11,21 +9,7 @@ object Profile {
     val rest = args.drop(1)
     val explain = rest.contains("explain")
     val names = rest.filterNot(_ == "explain")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      // the engine's Catalyst surface (SQL functions, native as-of
-      // strategy, conf-gated masking rule) — the intended deployment
-      // shape; a no-op unless a query opts in
-      .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // let AQE re-coalesce shuffle partitions even under .cache() —
-      // iterative ops (connected components, Lloyd) cache tiny frames whose
-      // fixed 32-way partitioning otherwise costs ~100 empty tasks/iteration
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.build("graft-profile-")
     spark.sparkContext.setLogLevel("ERROR")
     // dev A/B knob: arbitrary session confs, e.g.
     // SPARK_GRAFT_CONF="spark.sql.streaming.noDataMicroBatches.enabled=false,k=v"

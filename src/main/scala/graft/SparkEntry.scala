@@ -15,6 +15,16 @@ import graft.functions.Fns
   */
 object SparkEntry {
 
+  /** Root of the fixed export tables the b5, g4 tail and bpe queries
+    * write. The default is the literal path the oracle SQL's parquet_scan
+    * strings read, whatever checkout or working directory runs Verify or
+    * Bench. The `graft.exportRoot` property is for the forked test JVM only
+    * (build.sbt `Test / javaOptions`), so `sbt test` and a concurrent Verify
+    * run never overwrite each other's tables; set on a Verify run, it would
+    * leave the b5 oracles reading tables this run did not write. */
+  private val ExportRoot: String =
+    sys.props.getOrElse("graft.exportRoot", "/root/repo/target/graft_export")
+
   private def ts(s: String): Column = lit(s).cast("timestamp")
   private val AsOf15 = "2024-01-15 00:00:00"
   private val Now31  = "2024-01-31 00:00:00"
@@ -643,7 +653,7 @@ object SparkEntry {
   /** Fixed export target for [[b5DeltaExport]] — the oracle SQL references
     * this path literally (DuckDB reads the exported files directly), so it
     * must be deterministic across runs, not a per-run temp dir. */
-  private val B5DeltaExportPath = "/root/repo/target/graft_export/b5_delta"
+  private val B5DeltaExportPath = s"$ExportRoot/b5_delta"
 
   /** B5 — OPEN-FORMAT export (round-5 verdict #1): the b2 LWW snapshot
     * TxTable exported as a standard Delta Lake table
@@ -676,7 +686,7 @@ object SparkEntry {
   }
 
   /** Fixed export target for [[b5DeltaExportIncr]] — oracle SQL globs it. */
-  private val B5DeltaIncrPath = "/root/repo/target/graft_export/b5_delta_incr"
+  private val B5DeltaIncrPath = s"$ExportRoot/b5_delta_incr"
 
   /** B5 — INCREMENTAL open-format export (round-6 verdict #4): the daily
     * 100 TB pipeline shape. The b2 LWW snapshot exports once in full
@@ -729,7 +739,7 @@ object SparkEntry {
   }
 
   /** Fixed export target for [[b5DeltaReadIncr]]. */
-  private val B5DeltaReadIncrPath = "/root/repo/target/graft_export/b5_delta_read_incr"
+  private val B5DeltaReadIncrPath = s"$ExportRoot/b5_delta_read_incr"
 
   /** B5 — INCREMENTAL Delta CONSUMPTION (the read-side complement of
     * [[b5DeltaExportIncr]]): a downstream pipeline holding watermark v0
@@ -1646,10 +1656,6 @@ object SparkEntry {
   /** Test hook: the fixture-keyed persisted dedup index location. */
   private[graft] def dedupIndexDirForTest(s: SparkSession, dir: String): String =
     dedupIndexDir(s, dir)
-
-  /** Test hook: the materialized co-purchase edge fixture. */
-  private[graft] def coPurchaseEdgesForTest(s: SparkSession, dir: String,
-      minSupport: Long): DataFrame = coPurchaseEdges(s, dir, minSupport)
 
   /** G1 — incremental exact-Jaccard dedup: the incoming batch
     * (doc_id % 3 == 0) against the already-ingested corpus, bipartite
@@ -2707,7 +2713,7 @@ object SparkEntry {
       .orderBy("doc_id")
 
   /** Fixed export target for [[b5IcebergExport]] — oracle SQL globs it. */
-  private val B5IcebergPath = "/root/repo/target/graft_export/b5_iceberg"
+  private val B5IcebergPath = s"$ExportRoot/b5_iceberg"
 
   /** B5 — ICEBERG export (round-6 verdict #5: the last "Delta/Iceberg"
     * north-star word). The b2 LWW snapshot exported as a standard
@@ -2737,7 +2743,7 @@ object SparkEntry {
   }
 
   /** Fixed export target for [[b5IcebergExportIncr]] — oracle SQL globs it. */
-  private val B5IcebergIncrPath = "/root/repo/target/graft_export/b5_iceberg_incr"
+  private val B5IcebergIncrPath = s"$ExportRoot/b5_iceberg_incr"
 
   /** B5 — INCREMENTAL Iceberg export: the snapshot-append form of
     * [[b5IcebergExport]] (Hadoop-catalog commit protocol: new
@@ -2780,7 +2786,7 @@ object SparkEntry {
   }
 
   /** Fixed export target for [[b5IcebergExportPart]] — oracle SQL globs it. */
-  private val B5IcebergPartPath = "/root/repo/target/graft_export/b5_iceberg_part"
+  private val B5IcebergPartPath = s"$ExportRoot/b5_iceberg_part"
 
   /** B5 — PARTITIONED Iceberg export (round-7 verdict #1: the last
     * day-one refusal). The date-partitioned events TxTable — the normal
@@ -2810,7 +2816,7 @@ object SparkEntry {
   }
 
   /** Fixed export target for [[b5IcebergExportDays]] — oracle SQL globs it. */
-  private val B5IcebergDaysPath = "/root/repo/target/graft_export/b5_iceberg_days"
+  private val B5IcebergDaysPath = s"$ExportRoot/b5_iceberg_days"
 
   /** B5 — day-TRANSFORM Iceberg export (round-8 verdict #3): the flat
     * daily-appended events TxTable exports as an Iceberg v1 table
@@ -2842,7 +2848,7 @@ object SparkEntry {
   }
 
   /** Fixed export target for [[b5IcebergDaysIncr]] — oracle SQL globs it. */
-  private val B5IcebergDaysIncrPath = "/root/repo/target/graft_export/b5_iceberg_days_incr"
+  private val B5IcebergDaysIncrPath = s"$ExportRoot/b5_iceberg_days_incr"
 
   /** B5 — INCREMENTAL day-spec Iceberg mirror: the production daily
     * export. The daily-appended events table mirrors in full (metadata
@@ -2891,7 +2897,7 @@ object SparkEntry {
   }
 
   /** Fixed export target for [[b5DeltaPrunedRead]] — oracle SQL globs it. */
-  private val B5DeltaPrunedPath = "/root/repo/target/graft_export/b5_delta_pruned"
+  private val B5DeltaPrunedPath = s"$ExportRoot/b5_delta_pruned"
 
   /** B5 — Delta PARTITION-VALUE PRUNED READ, the first format's twin of
     * [[b5IcebergPrunedRead]]: the date-partitioned events TxTable exports
@@ -2923,7 +2929,7 @@ object SparkEntry {
   }
 
   /** Fixed export target for [[b5IcebergPrunedRead]] — oracle SQL globs it. */
-  private val B5IcebergPrunedPath = "/root/repo/target/graft_export/b5_iceberg_pruned"
+  private val B5IcebergPrunedPath = s"$ExportRoot/b5_iceberg_pruned"
 
   /** B5 — MANIFEST-TUPLE PRUNED READ: the planning path that makes a
     * partition spec worth its metadata. The daily events table exports
@@ -2960,7 +2966,7 @@ object SparkEntry {
   }
 
   /** Fixed export target for [[b5IcebergExportBucket]] — oracle SQL globs it. */
-  private val B5IcebergBucketPath = "/root/repo/target/graft_export/b5_iceberg_bucket"
+  private val B5IcebergBucketPath = s"$ExportRoot/b5_iceberg_bucket"
 
   /** B5 — bucket[8] Iceberg export: the flat events TxTable rewritten once
     * grouped by the SPEC's bucket function of event_id (murmur3_x86_32
@@ -3003,7 +3009,7 @@ object SparkEntry {
   }
 
   /** Fixed export target for [[b5IcebergExportTrunc]] — oracle SQL globs it. */
-  private val B5IcebergTruncPath = "/root/repo/target/graft_export/b5_iceberg_trunc"
+  private val B5IcebergTruncPath = s"$ExportRoot/b5_iceberg_trunc"
 
   /** B5 — truncate[2] Iceberg export over event_type: the prefix-range
     * layout (the spec's truncate transform for strings). Certificates:
@@ -3037,7 +3043,7 @@ object SparkEntry {
   }
 
   /** Fixed export target for [[b5IcebergReadIncr]]. */
-  private val B5IcebergReadIncrPath = "/root/repo/target/graft_export/b5_iceberg_read_incr"
+  private val B5IcebergReadIncrPath = s"$ExportRoot/b5_iceberg_read_incr"
 
   /** B5 — INCREMENTAL Iceberg CONSUMPTION (the second open format's
     * read-side twin of [[b5DeltaReadIncr]]): a consumer holding the v0
@@ -3090,7 +3096,7 @@ object SparkEntry {
   /** Fixed export target for [[b5IcebergReadDeletes]] — oracle SQL globs
     * the data directory FLAT (one star), so the `data/deletes/`
     * position-delete parquets stay out of the oracle's scan. */
-  private val B5IcebergDeletesPath = "/root/repo/target/graft_export/b5_iceberg_deletes"
+  private val B5IcebergDeletesPath = s"$ExportRoot/b5_iceberg_deletes"
 
   /** B5 — ICEBERG v2 ROW-LEVEL DELETES, both directions (round-9 verdict
     * #1 — the engine previously refused any table a modern writer had
@@ -3167,7 +3173,7 @@ object SparkEntry {
     * the Hive day dirs (`data/day=*`), which keeps `data/deletes/` out of
     * the scan. */
   private val B5IcebergPartDelPath =
-    "/root/repo/target/graft_export/b5_iceberg_pdel"
+    s"$ExportRoot/b5_iceberg_pdel"
 
   /** B5 — ROW-LEVEL DELETES ON A PARTITIONED ICEBERG TABLE (round-10
     * verdict #1: every 100 TB fact table is partitioned, and the GDPR
@@ -3277,7 +3283,7 @@ object SparkEntry {
 
   /** Fixed export target for [[b5IcebergUpsert]] — oracle SQL globs it. */
   private val B5IcebergUpsertPath =
-    "/root/repo/target/graft_export/b5_iceberg_upsert"
+    s"$ExportRoot/b5_iceberg_upsert"
 
   /** B5 — CDC UPSERT INTO ICEBERG (round-10 verdict #3): the standard
     * MERGE as ONE v2 commit pairing a GLOBAL equality delete on the key
@@ -3335,7 +3341,7 @@ object SparkEntry {
   /** Fixed export target for [[b5IcebergUpsertDays]] — oracle SQL globs
     * the flat base files and the `ts_day=` upsert files separately. */
   private val B5IcebergUpsertDaysPath =
-    "/root/repo/target/graft_export/b5_iceberg_upsert_days"
+    s"$ExportRoot/b5_iceberg_upsert_days"
 
   /** B5 — CDC UPSERT INTO THE day(ts)-PARTITIONED ICEBERG TABLE
     * (round-11 verdict #2: day(ts) is the engine's own flagship layout
@@ -3414,7 +3420,7 @@ object SparkEntry {
     * oracle unions both globs with NO row filter: physical disk state ≡
     * logical table. */
   private val B5IcebergCompactDaysPath =
-    "/root/repo/target/graft_export/b5_iceberg_compact_days"
+    s"$ExportRoot/b5_iceberg_compact_days"
 
   /** B5 — COMPACTING THE day(ts) MERGE TABLE (round-12 verdict #1: the
     * engine's own flagship production write — [[b5IcebergUpsertDays]]'
@@ -3524,7 +3530,7 @@ object SparkEntry {
   /** Fixed export target for [[b5IcebergEqScoped]] — oracle SQL globs the
     * day dirs (delete parquets live under data/deletes/, outside it). */
   private val B5IcebergEqScopedPath =
-    "/root/repo/target/graft_export/b5_iceberg_eq_scoped"
+    s"$ExportRoot/b5_iceberg_eq_scoped"
 
   /** B5 — PARTITION-SCOPED EQUALITY DELETE (round-11 "missing" #5, the
     * foreign CDC writers' shape — e.g. Flink: a delete file stored under
@@ -3586,7 +3592,7 @@ object SparkEntry {
   /** Fixed root for [[b5IcebergBucketIncr]]: `src/` holds the mutable
     * source TxTable, `tbl/` the mirrored bucket table the oracle globs. */
   private val B5IcebergBucketIncrPath =
-    "/root/repo/target/graft_export/b5_iceberg_bucket_incr"
+    s"$ExportRoot/b5_iceberg_bucket_incr"
 
   /** B5 — INCREMENTAL MIRROR ONTO THE bucket[8] LAYOUT (round-11 verdict
     * "missing" #3: the bucket export existed but could not be maintained
@@ -3648,7 +3654,7 @@ object SparkEntry {
   /** Fixed export target for [[b5IcebergEvolve]] — oracle SQL unions the
     * flat spec-0 bytes with the day-dir spec-1 bytes. */
   private val B5IcebergEvolvePath =
-    "/root/repo/target/graft_export/b5_iceberg_evolve"
+    s"$ExportRoot/b5_iceberg_evolve"
 
   /** B5 — PARTITION SPEC EVOLUTION (round-11 verdict "missing" #2: real
     * Iceberg tables change specs over time and carry files under
@@ -3744,7 +3750,7 @@ object SparkEntry {
     * `day=` partition dirs with hive_partitioning; merge files tell
     * themselves apart by name. */
   private val B5DeltaMergePartPath =
-    "/root/repo/target/graft_export/b5_delta_merge_part"
+    s"$ExportRoot/b5_delta_merge_part"
 
   /** B5 — MERGE INTO THE DAY-PARTITIONED DELTA TABLE (the
     * [[b5IcebergUpsertDays]] twin):
@@ -3809,7 +3815,7 @@ object SparkEntry {
   }
 
   /** Fixed export target for [[b5DeltaMerge]] — oracle SQL globs it. */
-  private val B5DeltaMergePath = "/root/repo/target/graft_export/b5_delta_merge"
+  private val B5DeltaMergePath = s"$ExportRoot/b5_delta_merge"
 
   /** B5 — CDC UPSERT (MERGE) INTO DELTA (round-10 verdict #3, the Delta
     * half): ONE commit deletion-vectors the superseded pre-images and
@@ -3888,9 +3894,9 @@ object SparkEntry {
   /** Fixed export targets for [[b5BoundsSkipping]] — oracle SQL globs the
     * Iceberg side. */
   private val B5IcebergBoundsPath =
-    "/root/repo/target/graft_export/b5_iceberg_bounds"
+    s"$ExportRoot/b5_iceberg_bounds"
   private val B5DeltaBoundsPath =
-    "/root/repo/target/graft_export/b5_delta_bounds"
+    s"$ExportRoot/b5_delta_bounds"
 
   /** B5 — PER-FILE COLUMN BOUNDS IN BOTH EXPORTS (round-10 verdict #2):
     * TxTable's own per-file min/max data-skipping stats ride into the
@@ -3952,7 +3958,7 @@ object SparkEntry {
   /** Fixed export target for [[b5DeltaPartDelete]] — oracle SQL globs the
     * Hive day dirs (`day=*`), keeping `compacted/` and `_change_data/`
     * out of the scan. */
-  private val B5DeltaPartDelPath = "/root/repo/target/graft_export/b5_delta_pdel"
+  private val B5DeltaPartDelPath = s"$ExportRoot/b5_delta_pdel"
 
   /** B5 — DELETION VECTORS ON A PARTITIONED DELTA TABLE (round-10
     * verdict #1, the Delta half): the date-partitioned events export
@@ -4022,7 +4028,7 @@ object SparkEntry {
 
   /** Fixed export target for [[b5IcebergBucketStr]] — oracle SQL globs it. */
   private val B5IcebergBucketStrPath =
-    "/root/repo/target/graft_export/b5_iceberg_bucket_str"
+    s"$ExportRoot/b5_iceberg_bucket_str"
 
   /** B5 — bucket[8] Iceberg export over a STRING key (round-9 verdict #2:
     * the reference's own entity_id is a string, and bucket-by-entity is
@@ -4066,7 +4072,7 @@ object SparkEntry {
   }
 
   /** Fixed export target for [[b5TxClusterDays]] — oracle SQL globs it. */
-  private val B5ClusterDaysPath = "/root/repo/target/graft_export/b5_cluster_days"
+  private val B5ClusterDaysPath = s"$ExportRoot/b5_cluster_days"
 
   /** B5 — CLUSTER-THEN-EXPORT: the in-engine path from an arbitrarily-
     * appended fact table to the day(ts) Iceberg layout (round-9 verdict
@@ -4118,7 +4124,7 @@ object SparkEntry {
   /** Fixed export target for [[b5IcebergComposite]] — oracle SQL globs it
     * with two-level hive_partitioning. */
   private val B5IcebergCompositePath =
-    "/root/repo/target/graft_export/b5_iceberg_composite"
+    s"$ExportRoot/b5_iceberg_composite"
 
   /** B5 — COMPOSITE `[day(ts), identity(event_type)]` Iceberg export
     * (round-9 verdict #7 — the multi-tenant fact-table layout): one
@@ -4171,7 +4177,7 @@ object SparkEntry {
 
   /** Fixed export target for [[b5IcebergEqDelete]] — oracle SQL globs the
     * data directory flat (delete parquets live under data/deletes/). */
-  private val B5IcebergEqPath = "/root/repo/target/graft_export/b5_iceberg_eq"
+  private val B5IcebergEqPath = s"$ExportRoot/b5_iceberg_eq"
 
   /** B5 — ICEBERG EQUALITY DELETES (the spec's declarative delete-by-key,
     * what a CDC/GDPR writer emits — content=2 with equality_ids):
@@ -4240,7 +4246,7 @@ object SparkEntry {
   /** Fixed export target for [[b5DeltaReadDv]] — oracle SQL globs the
     * table root's parquet files (the `deletion_vector_*.bin` files don't
     * match the glob; deletes are logical). */
-  private val B5DeltaDvPath = "/root/repo/target/graft_export/b5_delta_dv"
+  private val B5DeltaDvPath = s"$ExportRoot/b5_delta_dv"
 
   /** B5 — DELTA DELETION VECTORS, both directions (round-9 verdict #1's
     * first-format half): [[graft.sources.DeltaInterop.deleteFromDelta]]
@@ -4316,7 +4322,7 @@ object SparkEntry {
     * table root's parquet files and aliases the PHYSICAL column name to
     * the renamed logical one (a rename moves zero data bytes, so the
     * bytes still carry the original name). */
-  private val B5DeltaRenamePath = "/root/repo/target/graft_export/b5_delta_rename"
+  private val B5DeltaRenamePath = s"$ExportRoot/b5_delta_rename"
 
   /** B5 — DELTA COLUMN MAPPING, both directions (round-10 extension past
     * the verdict list: after deletion vectors, the next foreign-table
@@ -4391,7 +4397,7 @@ object SparkEntry {
   /** Fixed export target for [[b5DeltaCdf]] — oracle SQL recomputes both
     * change kinds over the table-root data bytes (the `_change_data/`
     * parquets sit outside the flat glob). */
-  private val B5DeltaCdfPath = "/root/repo/target/graft_export/b5_delta_cdf"
+  private val B5DeltaCdfPath = s"$ExportRoot/b5_delta_cdf"
 
   /** B5 — DELTA CHANGE DATA FEED, both directions (round-10 extension:
     * [[graft.sources.DeltaInterop.readDeltaChanges]]'s append-only
@@ -4471,7 +4477,7 @@ object SparkEntry {
     * recomputes the delete edges from the root data bytes under the
     * RENAMED logical name (the physical bytes keep the old one). */
   private val B5DeltaCdfRenamedPath =
-    "/root/repo/target/graft_export/b5_delta_cdf_renamed"
+    s"$ExportRoot/b5_delta_cdf_renamed"
 
   /** B5 — CDF ON A COLUMN-MAPPED TABLE (round-13 verdict #3: the
     * engine's own [[graft.sources.DeltaInterop.renameDeltaColumn]]
@@ -4526,7 +4532,7 @@ object SparkEntry {
     * stamped, hand-written log), the shape a table converted from
     * Iceberg carries. */
   private val B5DeltaIdmodePath =
-    "/root/repo/target/graft_export/b5_delta_idmode"
+    s"$ExportRoot/b5_delta_idmode"
 
   /** B5 — WRITES ON AN ID-MAPPED DELTA TABLE (round-13 verdict #5: the
     * round-12 field-id READ resolution left foreign id-mode tables
@@ -4626,7 +4632,7 @@ object SparkEntry {
     * leaves the originals in place; `data/compacted/` and
     * `data/deletes/` sit outside the flat glob). */
   private val B5IcebergChangelogPath =
-    "/root/repo/target/graft_export/b5_iceberg_changelog"
+    s"$ExportRoot/b5_iceberg_changelog"
 
   /** B5 — ICEBERG CHANGELOG, the [[b5DeltaCdf]] twin (round-10
     * extension: [[graft.sources.IcebergInterop.readIcebergChanges]]'s
@@ -4744,7 +4750,7 @@ object SparkEntry {
   /** Fixed export target for [[b5IcebergRename]] — same oracle shape as
     * the Delta twin: the bytes still carry the original column name
     * (renames are metadata-only), so the oracle aliases it. */
-  private val B5IcebergRenamePath = "/root/repo/target/graft_export/b5_iceberg_rename"
+  private val B5IcebergRenamePath = s"$ExportRoot/b5_iceberg_rename"
 
   /** B5 — ICEBERG COLUMN RENAME, both directions (round-10 extension,
     * the Iceberg twin of [[b5DeltaRename]] — schema evolution is what
@@ -4826,7 +4832,7 @@ object SparkEntry {
     * ONLY data bytes on disk are the compacted survivors, so the oracle
     * globs `data/compacted/` with NO post-filter: physical disk state ≡
     * logical table is the certificate. */
-  private val B5IcebergExpirePath = "/root/repo/target/graft_export/b5_iceberg_expire"
+  private val B5IcebergExpirePath = s"$ExportRoot/b5_iceberg_expire"
 
   /** B5 — ICEBERG SNAPSHOT EXPIRATION (round-10 extension: the retention
     * half that completes the delete lifecycle — delete → compact leaves
@@ -4915,7 +4921,7 @@ object SparkEntry {
     * glob IS the live table after the ref-rooted expiry (the append
     * chain shares data files; expiry reclaims only the unreferenced
     * snapshot's manifests). */
-  private val B5IcebergRefsPath = "/root/repo/target/graft_export/b5_iceberg_refs"
+  private val B5IcebergRefsPath = s"$ExportRoot/b5_iceberg_refs"
 
   /** B5 — ICEBERG SNAPSHOT REFS (round-13 verdict #6: no `refs` support
     * existed — time travel was snapshot-id/timestamp only, foreign
@@ -4998,7 +5004,7 @@ object SparkEntry {
   /** Fixed export target for [[b5DeltaVacuum]] — same disk ≡ live oracle
     * shape as the Iceberg twin: after purge + vacuum the only data bytes
     * left are the survivors under `compacted/`. */
-  private val B5DeltaVacuumPath = "/root/repo/target/graft_export/b5_delta_vacuum"
+  private val B5DeltaVacuumPath = s"$ExportRoot/b5_delta_vacuum"
 
   /** B5 — DELTA VACUUM + LOG CLEANUP (round-10 extension, the Delta twin
     * of [[b5IcebergExpire]]): after a DV delete and a purge, the
@@ -5075,7 +5081,7 @@ object SparkEntry {
   /** Fixed parquet target for [[h12TokenBudgetBpe]]'s per-doc counts — the
     * oracle SQL reads it (cross-engine: DuckDB recomputes the budget
     * arithmetic from the published counts). */
-  private val BpeCountsPath = "/root/repo/target/graft_export/bpe_counts"
+  private val BpeCountsPath = s"$ExportRoot/bpe_counts"
 
   /** H — corpus budget denominated in REAL BPE tokens (round-6 verdict #2):
     * `h12_token_budget` buys documents in whitespace-token units, but a
@@ -5853,7 +5859,7 @@ object SparkEntry {
     // producer base (two thirds of events, the b5_cdf shape) + its v0
     // export stage once and restore per rep; the polls, the producer's
     // incremental commits, and the tail's appends stay timed
-    val tailRoot = "/root/repo/target/graft_export/g4_delta_tail_base"
+    val tailRoot = s"$ExportRoot/g4_delta_tail_base"
     val deltaPath = s"$tailRoot/tbl"
     HarnessFixtures.stagedExport(s, dir, tailRoot) {
       val p = TxTable(s, s"$tailRoot/producer")
@@ -5929,7 +5935,7 @@ object SparkEntry {
     val cols = Seq("event_id", "user_id", "event_type", "value", "ts")
     // producer base + snap1 stage once and restore per rep (the Delta
     // twin's pattern); polls and incremental commits stay timed
-    val tailRoot = "/root/repo/target/graft_export/g4_iceberg_tail_base"
+    val tailRoot = s"$ExportRoot/g4_iceberg_tail_base"
     val icePath = s"$tailRoot/tbl"
     HarnessFixtures.stagedExport(s, dir, tailRoot) {
       val p = TxTable(s, s"$tailRoot/producer")
@@ -6019,7 +6025,7 @@ object SparkEntry {
     import graft.sources.{DeltaInterop, TxTable}
     implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
     val cols = Seq("event_id", "user_id", "event_type", "value", "ts")
-    val tailRoot = "/root/repo/target/graft_export/g4_delta_cdc_tail_base"
+    val tailRoot = s"$ExportRoot/g4_delta_cdc_tail_base"
     val deltaPath = s"$tailRoot/tbl"
     // the pre-feed history (base export, CDF property, the MERGE — each
     // commit kind certified in its own b5 query) stages once and
@@ -6093,7 +6099,7 @@ object SparkEntry {
     import graft.sources.{IcebergInterop, TxTable}
     implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
     val cols = Seq("event_id", "user_id", "event_type", "value", "ts")
-    val tailRoot = "/root/repo/target/graft_export/g4_iceberg_cdc_tail_base"
+    val tailRoot = s"$ExportRoot/g4_iceberg_cdc_tail_base"
     val icePath = s"$tailRoot/tbl"
     // staging discipline mirrors the Delta twin: base export + the
     // MERGE (upsertIceberg's commit kind certified by b5_iceberg_upsert*)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -27,25 +26,7 @@ object Verify {
       case Array(s, o, subset) => (s, o, Some(subset.split(',').toSet))
       case _ => sys.error("usage: graft.Verify <sfDir> <outDir> [name1,name2,...]")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // fixture/spill I/O on tmpfs when available (same rationale as Bench;
-    // must run before any NIO temp-file API call — see TmpCleanup)
-    TmpCleanup.useShmTmpdir("graft-verify-")
-    val spark = SparkSession.builder()
-      // the engine's Catalyst surface (SQL functions, native as-of
-      // strategy, conf-gated masking rule) — the intended deployment
-      // shape; a no-op unless a query opts in
-      .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-      .config("spark.local.dir", System.getProperty("java.io.tmpdir"))
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // let AQE re-coalesce shuffle partitions even under .cache() —
-      // iterative ops (connected components, Lloyd) cache tiny frames whose
-      // fixed 32-way partitioning otherwise costs ~100 empty tasks/iteration
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.build("graft-verify-")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

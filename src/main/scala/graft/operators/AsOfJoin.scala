@@ -27,8 +27,8 @@ import org.apache.spark.sql.types.TimestampType
   * replaced a union + window carry-forward formulation that measured 2.8x
   * slower cold and 1.4x slower warm at 20M facts / 2M spine (timed before
   * the merge gained slots).
-  * [[locfBounded]], [[locfSalted]] and [[locfRouted]] are a tolerance
-  * mask, salting and hot-key routing over [[native]].
+  * [[locfBounded]] and [[locfSalted]] are a tolerance mask and hot-key
+  * salting over [[native]].
   *
   * [[thetaWindow]] (small/verification path): the naive inequality join +
   * row_number, kept only as the differential-test oracle.
@@ -91,27 +91,27 @@ object AsOfJoin {
     * use only for keys known to be hot (route hot keys here, the long tail
     * through [[native]] — AQE can't split a merge partition for you).
     *
-    * Measured crossover ([[graft.AsOfSkewProbe]], 20M facts / 2M spine /
-    * 100k keys, one key holding the hot share, local[32], salt=16, warm
-    * rep; all outputs bit-identical). Salting then ran over the union +
-    * window formulation since removed, which took 11.9 s / 34.7 s unsalted:
+    * Historical crossover, measured at commit 75df5c9 by a skew probe
+    * since deleted (20M facts / 2M spine / 100k keys, one key holding the
+    * hot share, local[32], salt=16, warm rep; all outputs bit-identical).
+    * The salted column ran over the union + window join since deleted
+    * (11.9 s / 34.7 s unsalted), so it is not re-runnable as printed:
     *
     * {{{
-    *   hot share   salted(all)  routed([[locfRouted]])  native
-    *   10%           61.7 s          15.5 s              5.0 s
-    *   40%           72.8 s          83.8 s             27.2 s
+    *   hot share   salted(all)  native
+    *   10%           61.7 s      5.0 s
+    *   40%           72.8 s     27.2 s
     * }}}
     *
     * Read the table honestly: on a THROUGHPUT-BOUND box (all cores busy —
-    * local[32] here), salting never wins, even routed to only the hot key,
-    * because replicating the hot key's facts saltBuckets× adds more total
-    * work than the skew costs, and [[native]]'s merge-scan is the best
-    * skew answer. Salting pays on a LATENCY-BOUND
-    * cluster: 1000 executors idling behind one straggler task that owns
-    * the hot key's whole history — there, saltBuckets× more work on one
-    * key to cut the straggler saltBuckets× is the right trade. Default to
-    * [[native]] under skew; reach for salting only when the hot task's
-    * wall-clock, not cluster throughput, is the constraint.
+    * local[32] here), salting never wins, because replicating the hot
+    * key's facts saltBuckets× adds more total work than the skew costs,
+    * and [[native]]'s merge-scan is the best skew answer. Salting pays on
+    * a LATENCY-BOUND cluster: 1000 executors idling behind one straggler
+    * task that owns the hot key's whole history — there, saltBuckets×
+    * more work on one key to cut the straggler saltBuckets× is the right
+    * trade. Default to [[native]] under skew; reach for salting only when
+    * the hot task's wall-clock, not cluster throughput, is the constraint.
     */
   def locfSalted(
       spine: DataFrame,
@@ -134,41 +134,6 @@ object AsOfJoin {
       "__salt", explode(sequence(lit(0), lit(saltBuckets - 1))))
     native(saltedSpine, saltedFacts, keyCols :+ "__salt", spineTs, factTs, payloadCols, tieCol, outSuffix)
       .drop("__salt")
-  }
-
-  /** Hot-key ROUTED as-of join — the way [[locfSalted]] is meant to be
-    * used: only the declared hot keys take the salted path (their facts
-    * replicate saltBuckets×), the long tail runs plain [[native]], and the
-    * two halves union. Keys are routed by equality on the FIRST key
-    * column (the entity id in every declared query's shape). Identical
-    * results to [[native]] ([[graft.AsOfSkewProbe]] asserts bit-equality at
-    * 20M facts); see the [[locfSalted]] crossover table before reaching
-    * for this — on a throughput-bound cluster [[native]] is usually the
-    * better skew answer, and routing only pays when one straggler task's
-    * wall-clock is the constraint.
-    */
-  def locfRouted(
-      spine: DataFrame,
-      facts: DataFrame,
-      keyCols: Seq[String],
-      spineTs: String,
-      factTs: String,
-      payloadCols: Seq[String],
-      tieCol: String,
-      hotKeys: Seq[Any],
-      saltBuckets: Int,
-      outSuffix: String = ""
-  ): DataFrame = {
-    require(hotKeys.nonEmpty, "locfRouted needs at least one hot key — use native otherwise")
-    // null-safe routing: `isin` is NULL for a null key, and NOT(NULL) is
-    // also NULL, so without the coalesce a null-key spine row matches
-    // NEITHER branch and silently vanishes from the output — while native
-    // (null is a key value) emits it. Null keys route cold.
-    val isHot = coalesce(col(keyCols.head).isin(hotKeys: _*), lit(false))
-    locfSalted(spine.where(isHot), facts.where(isHot),
-      keyCols, spineTs, factTs, payloadCols, tieCol, saltBuckets, outSuffix)
-      .unionByName(native(spine.where(!isHot), facts.where(!isHot),
-        keyCols, spineTs, factTs, payloadCols, tieCol, outSuffix))
   }
 
   /** The as-of join: plans the custom

@@ -28,43 +28,10 @@ import graft.sources.TxTable
   */
 object CorpusPrep {
 
-  /** Stage-boundary persistence strategy: how an intermediate frame is
-    * pinned before it anchors multiple downstream references.
-    *
-    *  - [[localCheckpoint]] (the bench default): executor-local blocks —
-    *    fastest, but lost on executor death and pinned to
-    *    `spark.local.dir`;
-    *  - [[parquetStages]]: each boundary lands in durable storage and is
-    *    re-read from there — the shape a production run at cluster scale
-    *    needs (a lost executor replays from the persisted boundary
-    *    instead of recomputing the lineage, and the boundary itself is
-    *    inspectable/resumable). Point it at the lakehouse path.
-    *
-    * PipelineScaleProbe runs the pipeline under both and asserts
-    * row-for-row equivalence.
-    */
-  type StagePersist = DataFrame => DataFrame
-
-  /** The bench default: fast, executor-local, non-durable. */
-  val localCheckpoint: StagePersist = _.localCheckpoint()
-
-  /** Durable boundaries: stage k writes `dir/stage-k` as parquet and
-    * reads it back (one instance per pipeline run — the counter names
-    * stages in execution order). */
-  def parquetStages(spark: org.apache.spark.sql.SparkSession, dir: String): StagePersist = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    df => {
-      val path = s"$dir/stage-${n.getAndIncrement()}"
-      df.write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
-    }
-  }
-
   /** @param batch           incoming docs: (idCol, textCol, carryCols...)
     * @param bench           held-out benchmark docs (textCol)
     * @param processedHashes prior manifest hashes, kept AND tombstoned —
     *                        None for the first/only batch
-    * @param persist         stage-boundary strategy (see [[StagePersist]])
     * @return one row per newly-processed hash: carryCols + n_tokens,
     *         quality, text_hash, kept
     */
@@ -76,8 +43,7 @@ object CorpusPrep {
       carryCols: Seq[String],
       processedHashes: Option[DataFrame],
       gramN: Int = 8,
-      minQuality: Double = 0.5,
-      persist: StagePersist = localCheckpoint): DataFrame = {
+      minQuality: Double = 0.5): DataFrame = {
     // the pipeline OWNS these output columns — a batch (or carryCol) with
     // one of these names would be silently overwritten by the withColumns
     // below and the final select would emit a duplicate-named column that
@@ -104,13 +70,12 @@ object CorpusPrep {
     // materialize the surviving manifest once: it anchors BOTH the
     // contamination gram scan and the verdict join below, and without a
     // pinned boundary each reference re-runs the gate+dedup stages from
-    // the scan (measured 7.3 s -> ~2 s at sf0.1). The strategy is the
-    // caller's: localCheckpoint for the bench, parquetStages (lakehouse)
-    // for a production run that must survive executor loss.
-    val fresh = persist(processedHashes match {
+    // the scan (measured 7.3 s -> ~2 s at sf0.1). localCheckpoint keeps the
+    // blocks executor-local: fastest, but lost on executor death.
+    val fresh = (processedHashes match {
       case Some(seen) => gated.join(seen.select("text_hash"), Seq("text_hash"), "left_anti")
       case None       => gated
-    })
+    }).localCheckpoint()
     // null-SAFE verdict join: a contaminated row with a NULL id must still
     // be flagged — plain equality never matches NULL to NULL, so the row
     // would read kept=true and leak benchmark text into the manifest
@@ -138,11 +103,7 @@ object CorpusPrep {
     * certifies. Caller supplies output mode/trigger/checkpoint and starts
     * the returned writer.
     */
-  /** @param persist stage-boundary strategy for EACH micro-batch — plumbed
-    *   through to [[prepareBatch]] so a production stream can select
-    *   [[parquetStages]] durability (review finding: the one production
-    *   attachment was pinned to the non-durable bench default).
-    * @param commitTsForBatch commit-log wall-clock stamp per batchId.
+  /** @param commitTsForBatch commit-log wall-clock stamp per batchId.
     *   Defaults to the REAL clock — the TxTable log's `ts` feeds
     *   `readAsOfTimestamp`, so synthetic stamps would corrupt table-level
     *   time travel for every other consumer (review finding). Deterministic
@@ -157,7 +118,6 @@ object CorpusPrep {
       gramN: Int = 8,
       minQuality: Double = 0.5,
       txnAppId: String,
-      persist: StagePersist = localCheckpoint,
       commitTsForBatch: Long => Long = _ => System.currentTimeMillis()): DataStreamWriter[Row] =
     docStream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
       // exactly-once under micro-batch RETRY, not just row redelivery:
@@ -173,8 +133,7 @@ object CorpusPrep {
       val processed =
         if (table.version() >= 0) Some(table.read().select("text_hash")) else None
       val manifest = prepareBatch(batch, bench, idCol, textCol, carryCols,
-        processedHashes = processed, gramN = gramN, minQuality = minQuality,
-        persist = persist)
+        processedHashes = processed, gramN = gramN, minQuality = minQuality)
       table.append(manifest, tsMillis = commitTsForBatch(id), txn = Some((txnAppId, id)))
       ()
     }

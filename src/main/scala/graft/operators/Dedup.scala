@@ -355,8 +355,9 @@ object Dedup {
     *   per-round cost; the jump compresses label paths geometrically
     *   (~O(log diameter) rounds), which is what saves a pathological
     *   long-chain graph. Starting plain and escalating only if still
-    *   unconverged gets both (CcScaleProbe, 1M nodes, local[4]: chains of
-    *   5 in 15s; chains of 33 in 23s — the latter OOM'd the driver on plan
+    *   unconverged gets both (historical measurement at commit 75df5c9,
+    *   1M nodes, local[4], by a scale probe since deleted: chains of 5 in
+    *   15s; chains of 33 in 23s — the latter OOM'd the driver on plan
     *   trees before rounds were localCheckpoint'ed, and would need 32
     *   propagation-only rounds).
     */

@@ -443,7 +443,7 @@ object Graph {
     * all remaining rounds — the convergence form of this operator).
     *
     * [[GraphPropertySpec]] pins frontier ≡ synchronous equality on random
-    * graphs; [[graft.GraphScaleProbe]] A/Bs the per-round cost at scale.
+    * graphs.
     *
     * HYBRID DISPATCH (round-8 verdict #2): the frontier machinery (touched
     * expansion + neighborhood semi-join + extra checkpoints) only pays for

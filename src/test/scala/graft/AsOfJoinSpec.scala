@@ -167,27 +167,9 @@ class AsOfJoinSpec extends SparkSpec {
       rows(AsOfJoin.thetaWindow(s, f, Seq("k"), "sts", "fts", Seq("v"), "tie")))
   }
 
-  test("locfRouted agrees with locf (hot keys salted, tail plain, union complete)") {
-    val f = (1 to 400).map { i =>
-      // u0 is the "hot" key: over half the facts
-      (if (i % 2 == 0) "u0" else s"u${i % 5}",
-        ts(f"2024-01-${i % 28 + 1}%02d ${i % 24}%02d:00:00"), i.toLong, i.toDouble)
-    }.toDF("k", "fts", "tie", "v")
-    val s = (1 to 150).map { i =>
-      (s"u${i % 6}", ts(f"2024-01-${(i * 5) % 28 + 1}%02d ${(i * 11) % 24}%02d:30:00"), s"s$i")
-    }.toDF("k", "sts", "tag")
-    assert(rows(AsOfJoin.locfRouted(s, f, Seq("k"), "sts", "fts", Seq("v"), "tie",
-        hotKeys = Seq("u0"), saltBuckets = 4)) ==
-      rows(AsOfJoin.thetaWindow(s, f, Seq("k"), "sts", "fts", Seq("v"), "tie")))
-    intercept[IllegalArgumentException](
-      AsOfJoin.locfRouted(s, f, Seq("k"), "sts", "fts", Seq("v"), "tie",
-        hotKeys = Seq.empty, saltBuckets = 4))
-  }
-
-  test("locfRouted and thetaWindow keep null-key rows, matching locf") {
-    // `isin` is NULL for a null key, and NOT(NULL) is NULL too — without
-    // null-safe routing a null-key spine row matched neither branch and
-    // silently vanished; thetaWindow's === likewise no-matched null keys
+  test("native and thetaWindow keep null-key rows, matching a null-key fact") {
+    // null is a key value: a null-key spine row matches the null-key fact
+    // in the native exec and in the thetaWindow oracle alike
     val f = Seq(("u1", ts("2024-01-01 00:00:00"), 1L, 10.0),
       (null.asInstanceOf[String], ts("2024-01-02 00:00:00"), 2L, 99.0))
       .toDF("k", "fts", "tie", "v")
@@ -198,8 +180,6 @@ class AsOfJoinSpec extends SparkSpec {
       .map(r => r.getString(0) -> (if (r.isNullAt(1)) null else r.getDouble(1))).toMap
     val viaNative = out(AsOfJoin.native(s, f, Seq("k"), "sts", "fts", Seq("v"), "tie"))
     assert(viaNative == Map("s1" -> 10.0, "s_null" -> 99.0)) // null is a key value
-    assert(out(AsOfJoin.locfRouted(s, f, Seq("k"), "sts", "fts", Seq("v"), "tie",
-      hotKeys = Seq("u1"), saltBuckets = 2)) == viaNative)
     assert(out(AsOfJoin.thetaWindow(s, f, Seq("k"), "sts", "fts", Seq("v"), "tie")) == viaNative)
   }
 

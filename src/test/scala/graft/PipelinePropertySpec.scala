@@ -13,8 +13,7 @@ import graft.operators.CorpusPrep
   * folding [[CorpusPrep.prepareBatch]] over the batches with the
   * tombstoned-hash contract must equal running it once over the whole
   * corpus — the p1≡p3 claim, sampled over inputs the fixtures never
-  * contain (PipelineScaleProbe covers planted structure at 1M docs; this
-  * covers adversarial randomness at small scale).
+  * contain (adversarial randomness at small scale).
   */
 class PipelinePropertySpec extends SparkSpec {
   import spark.implicits._
