@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{JsonNodeFactory, ObjectNode}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -138,64 +139,6 @@ object DeltaInterop {
       (rel, Files.size(dst))
     }
 
-    val m = mapper
-    def obj() = m.createObjectNode()
-    val lines = Seq.newBuilder[String]
-
-    val commitInfo = obj()
-    commitInfo.putObject("commitInfo")
-      .put("timestamp", tsMillis)
-      .put("operation", "WRITE")
-      .put("engineInfo", "graft-txtable-export")
-    lines += m.writeValueAsString(commitInfo)
-
-    val protocol = obj()
-    protocol.putObject("protocol")
-      .put("minReaderVersion", 1)
-      .put("minWriterVersion", 2)
-    lines += m.writeValueAsString(protocol)
-
-    val metaData = obj()
-    val md = metaData.putObject("metaData")
-    md.put("id", tableId(target))
-    val fmt = md.putObject("format")
-    fmt.put("provider", "parquet")
-    fmt.putObject("options")
-    md.put("schemaString", schema.json)
-    val pcArr = md.putArray("partitionColumns")
-    snap.partCols.foreach(pcArr.add)
-    md.putObject("configuration")
-    md.put("createdTime", tsMillis)
-    lines += m.writeValueAsString(metaData)
-
-    // per-file column bounds ride into add.stats (foreign engines skip
-    // files by value range); numRecords from one distributed footer pass
-    // over just the stat-carrying files
-    val statFiles = snap.files.filter(f => snap.stats.get(f).exists(_.nonEmpty))
-    val rowCounts =
-      if (statFiles.isEmpty) Map.empty[String, Long]
-      else StagedWrite.parquetRowCountBulk(t.spark,
-        statFiles.map(r => dataDir.resolve(r)))
-    adds.foreach { case (rel, size) =>
-      val a = obj()
-      val add = a.putObject("add")
-      add.put("path", encodePath(rel))
-      val pv = add.putObject("partitionValues")
-      partitionValuesOf(rel, snap.partCols).foreach {
-        case (k, Some(v)) => pv.put(k, v)
-        case (k, None)    => pv.putNull(k)
-      }
-      for {
-        sts <- snap.stats.get(rel) if sts.nonEmpty
-        n <- rowCounts.get(dataDir.resolve(rel).toString)
-        js <- statsJson(m, schema, sts, n)
-      } add.put("stats", js)
-      add.put("size", size)
-      add.put("modificationTime", tsMillis)
-      add.put("dataChange", true)
-      lines += m.writeValueAsString(a)
-    }
-
     // log LAST within the staging dir, then swap the whole table into place.
     // The previous export is RENAMED ASIDE, not deleted, until the new one
     // is in place: delete-then-move (the round-6 shape) destroyed the only
@@ -204,7 +147,10 @@ object DeltaInterop {
     // prior export intact, restored from the rename.
     val logDir = targetDir.resolve(LogDirName)
     Files.createDirectories(logDir)
-    Files.write(logDir.resolve(f"${0L}%020d.json"), lines.result().asJava)
+    commitDelta(logDir, -1L, "WRITE", "graft-txtable-export", tsMillis,
+      Seq(legacyProtocol(1, 2),
+        metaDataAction(tableId(target), schema, snap.partCols, Map.empty, tsMillis)) ++
+        addActions(t.spark, snap, schema, adds, tsMillis))
     val backup = finalDir.resolveSibling(
       finalDir.getFileName.toString + s".old-${System.nanoTime()}")
     val hadPrev = Files.exists(finalDir)
@@ -243,9 +189,9 @@ object DeltaInterop {
     * O(interval) JSON commits, not the whole history — exactly Delta's own
     * checkpointing cadence (PROTOCOL.md; default every 10 commits).
     *
-    * The commit file is published atomically (staged then renamed with
-    * put-if-absent): a concurrent exporter racing to the same version
-    * fails loudly instead of clobbering the log.
+    * The commit is published put-if-absent ([[StagedWrite.publish]]): a
+    * concurrent exporter racing to the same version gets
+    * ConcurrentModificationException instead of clobbering the log.
     *
     * @return the committed version (0 for a fresh full export; the current
     *   version unchanged when the mirror is already identical).
@@ -302,99 +248,21 @@ object DeltaInterop {
       (rel, Files.size(dst))
     }
 
-    val m = mapper
-    def obj() = m.createObjectNode()
-    val lines = Seq.newBuilder[String]
-    val commitInfo = obj()
-    commitInfo.putObject("commitInfo")
-      .put("timestamp", tsMillis)
-      .put("operation", "WRITE")
-      .put("engineInfo", "graft-txtable-export")
-    lines += m.writeValueAsString(commitInfo)
-    if (schemaChanged) {
-      val metaData = obj()
-      val md = metaData.putObject("metaData")
-      // REUSE the log's declared id — a pre-existing mirror (or foreign
-      // table) keeps its permanent identity; only an id-less log falls
-      // back to the path-derived one (round-7 review #4)
-      md.put("id", meta.id.getOrElse(tableId(target)))
-      val fmt = md.putObject("format")
-      fmt.put("provider", "parquet")
-      fmt.putObject("options")
-      md.put("schemaString", schema.json)
-      val pcArr = md.putArray("partitionColumns")
-      snap.partCols.foreach(pcArr.add)
-      // a metaData action REPLACES table metadata wholly — restate the
-      // target's configuration (an empty object here would silently wipe
-      // table properties like delta.enableChangeDataFeed)
-      val cfgNode = md.putObject("configuration")
-      meta.config.toSeq.sortBy(_._1).foreach { case (k, v) => cfgNode.put(k, v) }
-      md.put("createdTime", tsMillis)
-      lines += m.writeValueAsString(metaData)
-    }
-    val incrStatFiles = adds.map(_._1)
-      .filter(f => snap.stats.get(f).exists(_.nonEmpty))
-    val incrRowCounts =
-      if (incrStatFiles.isEmpty) Map.empty[String, Long]
-      else StagedWrite.parquetRowCountBulk(t.spark,
-        incrStatFiles.map(r => dataDir.resolve(r)))
-    adds.foreach { case (rel, size) =>
-      val a = obj()
-      val add = a.putObject("add")
-      add.put("path", encodePath(rel))
-      val pv = add.putObject("partitionValues")
-      partitionValuesOf(rel, snap.partCols).foreach {
-        case (k, Some(vv)) => pv.put(k, vv)
-        case (k, None)     => pv.putNull(k)
-      }
-      for {
-        sts <- snap.stats.get(rel) if sts.nonEmpty
-        n <- incrRowCounts.get(dataDir.resolve(rel).toString)
-        js <- statsJson(m, schema, sts, n)
-      } add.put("stats", js)
-      add.put("size", size)
-      add.put("modificationTime", tsMillis)
-      add.put("dataChange", true)
-      lines += m.writeValueAsString(a)
-    }
-    removedFiles.foreach { rel =>
-      val r = obj()
-      val rmNode = r.putObject("remove")
-      rmNode.put("path", encodePath(rel))
-      rmNode.put("deletionTimestamp", tsMillis)
-      rmNode.put("dataChange", true)
-      // partitionValues on removes: protocol hygiene for foreign readers
-      // (the mirror retires the removed bytes in this same call, so the
-      // change feed refuses this range on missing bytes regardless)
-      putPv(rmNode, partitionValuesOf(rel, snap.partCols).toMap)
-      lines += m.writeValueAsString(r)
-    }
-
-    // stage + put-if-absent PUBLISH. NOT a rename: POSIX rename(2) silently
-    // REPLACES an existing destination, so ATOMIC_MOVE would let a racing
-    // exporter clobber an already-published commit (log diverges from the
-    // linked bytes, silently). A hard link is the true put-if-absent
-    // primitive — it fails with FileAlreadyExistsException when the commit
-    // number is taken, exactly the loud conflict the log needs (the same
-    // primitive TxTable's own commit loop uses).
-    val v = lastV + 1
-    val staged = Files.createTempFile(logDir, s".commit-$v", ".json.tmp")
-    Files.write(staged, lines.result().asJava)
-    val commitPath = logDir.resolve(f"$v%020d.json")
-    def concurrent(e: Throwable) = new java.util.ConcurrentModificationException(
-      s"concurrent export committed version $v at $target").initCause(e)
-    try Files.createLink(commitPath, staged)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException => throw concurrent(e)
-      case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-        // linkless filesystem (some NFS/CIFS/exFAT mounts): O_EXCL
-        // exclusive create keeps put-if-absent; content atomicity degrades
-        // to a single write call — the link path is preferred exactly
-        // because it publishes complete bytes atomically
-        try Files.write(commitPath, lines.result().asJava,
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        catch { case e2: java.nio.file.FileAlreadyExistsException => throw concurrent(e2) }
-    } finally Files.deleteIfExists(staged)
+    // REUSE the log's declared id — a pre-existing mirror (or foreign
+    // table) keeps its permanent identity; only an id-less log falls back
+    // to the path-derived one (round-7 review #4); the target's
+    // configuration is restated ([[metaDataAction]])
+    val metaData =
+      if (!schemaChanged) Seq.empty
+      else Seq(metaDataAction(meta.id.getOrElse(tableId(target)), schema,
+        snap.partCols, meta.config, tsMillis))
+    // partitionValues on removes: protocol hygiene for foreign readers
+    // (the mirror retires the removed bytes in this same call, so the
+    // change feed refuses this range on missing bytes regardless)
+    val removes = removedFiles.map(rel => removeAction(rel,
+      partitionValuesOf(rel, snap.partCols).toMap, tsMillis, dataChange = true))
+    val v = commitDelta(logDir, lastV, "WRITE", "graft-txtable-export", tsMillis,
+      metaData ++ addActions(t.spark, snap, schema, adds, tsMillis) ++ removes)
 
     // the mirror owns its data files: physically retire what the source no
     // longer references (AFTER the commit lands — a crash in between leaves
@@ -1481,16 +1349,173 @@ object DeltaInterop {
     config.get("delta.enableChangeDataFeed")
       .exists(_.trim.equalsIgnoreCase("true"))
 
+  // ------------------------------------------------------ COMMIT WRITER
+
+  /** Publish version `cur + 1` of the log at `logDir`: the `commitInfo`
+    * line, then `actions` in order, put-if-absent through
+    * [[StagedWrite.publish]] — the whole record or nothing, at most once.
+    * Every writer of a live log commits here, and [[exportDelta]] writes
+    * its staged version 0 here too. A writer that lost the race for the
+    * version gets ConcurrentModificationException (re-read, then retry).
+    * Returns the committed version. */
+  private def commitDelta(logDir: Path, cur: Long, operation: String,
+      engineInfo: String, tsMillis: Long, actions: Seq[ObjectNode]): Long = {
+    val info = JsonNodeFactory.instance.objectNode()
+    info.putObject("commitInfo")
+      .put("timestamp", tsMillis).put("operation", operation).put("engineInfo", engineInfo)
+    val m = mapper
+    val v = cur + 1
+    if (!StagedWrite.publishLines(logDir.resolve(f"$v%020d.json"),
+        (info +: actions).map(m.writeValueAsString)))
+      throw new java.util.ConcurrentModificationException(
+        s"a concurrent writer committed version $v of the Delta table at ${logDir.getParent}")
+    v
+  }
+
+  /** One action line `{"<kind>": {...}}` and its body, for filling. */
+  private def action(kind: String): (ObjectNode, ObjectNode) = {
+    val line = JsonNodeFactory.instance.objectNode()
+    (line, line.putObject(kind))
+  }
+
+  /** A `protocol` action on the legacy version pair alone. */
+  private def legacyProtocol(mrv: Int, mwv: Int): ObjectNode = {
+    val (line, pr) = action("protocol")
+    pr.put("minReaderVersion", mrv).put("minWriterVersion", mwv)
+    line
+  }
+
+  /** A table-features `protocol` action, (3, 7) at least, declaring
+    * `reader`/`writer` on top of every feature the table already has. The
+    * latest protocol action REPLACES the table protocol wholly, so the
+    * replay's features ride along (a fixed set would silently DOWNGRADE a
+    * table that also declares e.g. timestampNtz or columnMapping,
+    * unblocking foreign readers that must stay blocked), and so do the
+    * features its legacy versions imply — the spec requires those listed
+    * when a legacy table upgrades. */
+  private def featuresProtocol(proto: ProtocolInfo, reader: Set[String],
+      writer: Set[String]): ObjectNode = {
+    val (line, pr) = action("protocol")
+    pr.put("minReaderVersion", math.max(3, proto.mrv))
+    pr.put("minWriterVersion", math.max(7, proto.mwv))
+    val (legacyR, legacyW) = legacyImpliedFeatures(proto.mrv, proto.mwv)
+    val rf = pr.putArray("readerFeatures")
+    (proto.readerFeatures ++ legacyR ++ reader).toSeq.sorted.foreach(rf.add)
+    val wf = pr.putArray("writerFeatures")
+    (proto.writerFeatures ++ legacyW ++ writer).toSeq.sorted.foreach(wf.add)
+    line
+  }
+
+  /** A `metaData` action. It REPLACES table metadata wholly, so callers
+    * restate the table's configuration — an empty object would silently
+    * wipe table properties like delta.enableChangeDataFeed. */
+  private def metaDataAction(id: String, schema: StructType, partCols: Seq[String],
+      config: Map[String, String], tsMillis: Long): ObjectNode = {
+    val (line, md) = action("metaData")
+    md.put("id", id)
+    md.putObject("format").put("provider", "parquet").putObject("options")
+    md.put("schemaString", schema.json)
+    val pcArr = md.putArray("partitionColumns")
+    partCols.foreach(pcArr.add)
+    val cfgNode = md.putObject("configuration")
+    config.toSeq.sortBy(_._1).foreach { case (k, v) => cfgNode.put(k, v) }
+    md.put("createdTime", tsMillis)
+    line
+  }
+
+  private def addAction(rel: String, pv: Map[String, Option[String]], size: Long,
+      tsMillis: Long, dataChange: Boolean, stats: Option[String] = None,
+      dv: Option[DvDesc] = None): ObjectNode = {
+    val (line, add) = action("add")
+    add.put("path", encodePath(rel))
+    putPv(add, pv)
+    stats.foreach(add.put("stats", _))
+    add.put("size", size)
+    add.put("modificationTime", tsMillis)
+    add.put("dataChange", dataChange)
+    dv.foreach(putDv(add, _))
+    line
+  }
+
+  /** A `remove`; a superseded deletion vector rides along (vacuum
+    * bookkeeping). */
+  private def removeAction(rel: String, pv: Map[String, Option[String]],
+      tsMillis: Long, dataChange: Boolean, dv: Option[DvDesc] = None): ObjectNode = {
+    val (line, rm) = action("remove")
+    rm.put("path", encodePath(rel))
+    rm.put("deletionTimestamp", tsMillis)
+    rm.put("dataChange", dataChange)
+    putPv(rm, pv)
+    dv.foreach(putDv(rm, _))
+    line
+  }
+
+  private def cdcAction(rel: String, size: Long, pv: Map[String, Option[String]]): ObjectNode = {
+    val (line, cd) = action("cdc")
+    cd.put("path", encodePath(rel))
+    putPv(cd, pv)
+    cd.put("size", size)
+    cd.put("dataChange", false)
+    line
+  }
+
+  private def putDv(node: ObjectNode, d: DvDesc): Unit = {
+    val o = node.putObject("deletionVector")
+    o.put("storageType", d.storageType)
+    o.put("pathOrInlineDv", d.pathOrInlineDv)
+    d.offset.foreach(o.put("offset", _))
+    o.put("sizeInBytes", d.sizeInBytes)
+    o.put("cardinality", d.cardinality)
+  }
+
   /** The protocol's `partitionValues` emission (null values as JSON
     * null) — ONE serialization for every commit writer. */
-  private def putPv(node: com.fasterxml.jackson.databind.node.ObjectNode,
-      pv: Map[String, Option[String]]): Unit = {
+  private def putPv(node: ObjectNode, pv: Map[String, Option[String]]): Unit = {
     val o = node.putObject("partitionValues")
     pv.toSeq.sortBy(_._1).foreach {
       case (k, Some(v)) => o.put(k, v)
       case (k, None)    => o.putNull(k)
     }
   }
+
+  /** One `add` per exported `(rel, size)` file of a TxTable snapshot. Its
+    * `stats` carry TxTable's per-file bounds (foreign engines skip files
+    * by value range); numRecords comes from one footer pass over just the
+    * stat-carrying files. */
+  private def addActions(spark: SparkSession, snap: TxTable.SnapshotInfo,
+      schema: StructType, adds: Seq[(String, Long)], tsMillis: Long): Seq[ObjectNode] = {
+    val dataDir = Paths.get(snap.dataDir)
+    val statFiles = adds.map(_._1).filter(f => snap.stats.get(f).exists(_.nonEmpty))
+    val rowCounts =
+      if (statFiles.isEmpty) Map.empty[String, Long]
+      else StagedWrite.parquetRowCountBulk(spark, statFiles.map(r => dataDir.resolve(r)))
+    val m = mapper
+    adds.map { case (rel, size) =>
+      val stats = for {
+        sts <- snap.stats.get(rel) if sts.nonEmpty
+        n <- rowCounts.get(dataDir.resolve(rel).toString)
+        js <- statsJson(m, schema, sts, n)
+      } yield js
+      addAction(rel, partitionValuesOf(rel, snap.partCols).toMap, size, tsMillis,
+        dataChange = true, stats)
+    }
+  }
+
+  /** The remove + re-add pair per `(file name, merged DV blob)` that moves
+    * each touched file onto its new deletion vector (blobs at `offsets` in
+    * the DV file `encUuid`). The re-add RESTATES the file's partition
+    * tuple — an empty map would silently move the file out of its
+    * partition. */
+  private def dvRewrite(root: Path, nameToAdd: Map[String, AddFile],
+      merged: Seq[(String, Array[Byte])], encUuid: String, offsets: Seq[Int],
+      tsMillis: Long): Seq[ObjectNode] =
+    merged.zip(offsets).flatMap { case ((f, blob), off) =>
+      val a = nameToAdd(f)
+      Seq(removeAction(a.path, a.partitionValues, tsMillis, dataChange = true, a.dv),
+        addAction(a.path, a.partitionValues, Files.size(root.resolve(a.path)), tsMillis,
+          dataChange = true, dv = Some(DvDesc("u", encUuid, Some(off), blob.length,
+            DeletionVectors.cardinality(blob)))))
+    }
 
   /** A protocol feature a metadata commit must start gating: the feature
     * name, whether it is a reader-writer feature (listed in BOTH sets at
@@ -1510,63 +1535,27 @@ object DeltaInterop {
     * legacy versions are cumulative); a table already on table features
     * adds the feature to the appropriate feature set(s) (reader-writer
     * features must be listed in both at mrv 3) — + the restated
-    * metaData. CREATE_NEW = put-if-absent: a racing writer collides
-    * loudly. */
+    * metaData. */
   private def commitSchemaChange(logDir: Path, cur: Long, meta: TableMeta,
       proto: ProtocolInfo, path: String, operation: String,
       newSchema: StructType, newPartCols: Seq[String],
       config: Map[String, String], upgrade: Option[ProtocolUpgrade],
       tsMillis: Long): Unit = {
-    val m = mapper
-    def obj() = m.createObjectNode()
-    val lines = Seq.newBuilder[String]
-    val commitInfo = obj()
-    commitInfo.putObject("commitInfo")
-      .put("timestamp", tsMillis)
-      .put("operation", operation)
-      .put("engineInfo", "graft-delta-schema")
-    lines += m.writeValueAsString(commitInfo)
-    upgrade.foreach { up =>
-      val protocol = obj()
-      val pr = protocol.putObject("protocol")
+    val protocol = upgrade.map { up =>
       if (proto.mrv >= 3 || proto.mwv >= 7 ||
-          proto.readerFeatures.nonEmpty || proto.writerFeatures.nonEmpty) {
-        pr.put("minReaderVersion", 3)
-        pr.put("minWriterVersion", 7)
-        val (legacyR, legacyW) = legacyImpliedFeatures(proto.mrv, proto.mwv)
-        val rf = pr.putArray("readerFeatures")
-        (proto.readerFeatures ++ legacyR ++
-          (if (up.readerFeature) Set(up.feature) else Set.empty[String]))
-          .toSeq.sorted.foreach(rf.add)
-        val wf = pr.putArray("writerFeatures")
-        (proto.writerFeatures ++ legacyW + up.feature)
-          .toSeq.sorted.foreach(wf.add)
-      } else {
-        // legacy versions are cumulative, so taking the max PRESERVES
-        // whatever the table already gates (a legacy mwv 6 table keeps
-        // identityColumns enforcement — (2, 6) implies columnMapping
-        // too); writing the feature's fixed legacy pair would silently
-        // DOWNGRADE it
-        pr.put("minReaderVersion", math.max(up.legacyMrv, proto.mrv))
-        pr.put("minWriterVersion", math.max(up.legacyMwv, proto.mwv))
-      }
-      lines += m.writeValueAsString(protocol)
+          proto.readerFeatures.nonEmpty || proto.writerFeatures.nonEmpty)
+        featuresProtocol(proto,
+          if (up.readerFeature) Set(up.feature) else Set.empty, Set(up.feature))
+      // legacy versions are cumulative, so taking the max PRESERVES
+      // whatever the table already gates (a legacy mwv 6 table keeps
+      // identityColumns enforcement — (2, 6) implies columnMapping too);
+      // writing the feature's fixed legacy pair would silently DOWNGRADE it
+      else legacyProtocol(math.max(up.legacyMrv, proto.mrv),
+        math.max(up.legacyMwv, proto.mwv))
     }
-    val metaData = obj()
-    val md = metaData.putObject("metaData")
-    md.put("id", meta.id.getOrElse(tableId(path)))
-    val fmt = md.putObject("format")
-    fmt.put("provider", "parquet")
-    fmt.putObject("options")
-    md.put("schemaString", newSchema.json)
-    val pcArr = md.putArray("partitionColumns")
-    newPartCols.foreach(pcArr.add)
-    val cfgNode = md.putObject("configuration")
-    config.toSeq.sortBy(_._1).foreach { case (k, v) => cfgNode.put(k, v) }
-    md.put("createdTime", tsMillis)
-    lines += m.writeValueAsString(metaData)
-    Files.write(logDir.resolve(f"${cur + 1}%020d.json"), lines.result().asJava,
-      java.nio.file.StandardOpenOption.CREATE_NEW)
+    commitDelta(logDir, cur, operation, "graft-delta-schema", tsMillis,
+      protocol.toSeq :+ metaDataAction(meta.id.getOrElse(tableId(path)), newSchema,
+        newPartCols, config, tsMillis))
   }
 
   /** Rename a top-level column of a Delta table as a METADATA-ONLY commit
@@ -1760,8 +1749,9 @@ object DeltaInterop {
     * O(touched files) compressed blobs. Partitioned tables work — the
     * predicate may name partition columns, reconstructed from the log's
     * `partitionValues` (via a broadcast basename→tuple join) before
-    * evaluation. One writer at a time — the commit publishes with
-    * CREATE_NEW, so a racing writer fails loudly rather than clobbering.
+    * evaluation. The commit publishes put-if-absent: a writer that lost
+    * the race gets ConcurrentModificationException rather than
+    * clobbering.
     *
     * @return the number of newly deleted row positions (0 = no commit). */
   def deleteFromDelta(spark: SparkSession, path: String,
@@ -1771,6 +1761,10 @@ object DeltaInterop {
     val logDir = root.resolve(LogDirName)
     require(Files.isDirectory(logDir), s"no Delta table at $path (missing $LogDirName)")
     val (cur, live, metaOpt, proto) = replayState(spark, root, None)
+    // names this call's new files: two writers racing from the same
+    // version never share one, and a crashed writer's leftovers never
+    // block the next writer at that version
+    val nonce = java.util.UUID.randomUUID()
     val meta = metaOpt.getOrElse(throw new IllegalStateException(
       s"Delta log at $path carries no metaData action"))
     // round-13: CDF emission on a column-mapped table is supported —
@@ -1860,89 +1854,21 @@ object DeltaInterop {
               Seq("__gcdc_grp"))
           }
         writeFiles(root, changes, grpCol, meta.mapped || meta.idMapped) { (_, i) =>
-          StagedWrite.seededName("_change_data/cdc", s"$path|cdc|$cur|$i")
+          StagedWrite.seededName("_change_data/cdc", s"$path|cdc|$cur|$nonce|$i")
         }.map { case (rel, size, pv) =>
           (rel, size, pv.get("__gcdc_grp").fold(Map.empty[String, Option[String]])(
             g => groups(g.get.toInt)._1))
         }
       }
 
-    val m = mapper
-    def obj() = m.createObjectNode()
-    val lines = Seq.newBuilder[String]
-    val commitInfo = obj()
-    commitInfo.putObject("commitInfo")
-      .put("timestamp", tsMillis)
-      .put("operation", "DELETE")
-      .put("engineInfo", "graft-delta-dv-delete")
-    lines += m.writeValueAsString(commitInfo)
     // a DV-writing commit must declare the table feature (protocol
     // upgrade is idempotent — re-declaring it is harmless); a CDF commit
-    // additionally declares the writer-only changeDataFeed feature. The
-    // latest protocol action REPLACES the table protocol wholly, so the
-    // replay's accumulated features ride along — writing a fixed
-    // singleton set would silently DOWNGRADE a table that also declares
-    // e.g. timestampNtz or columnMapping, unblocking foreign readers
-    // that must stay blocked
-    val protocol = obj()
-    val pr = protocol.putObject("protocol")
-    pr.put("minReaderVersion", math.max(3, proto.mrv))
-    pr.put("minWriterVersion", math.max(7, proto.mwv))
-    val (legacyR, legacyW) = legacyImpliedFeatures(proto.mrv, proto.mwv)
-    val rf = pr.putArray("readerFeatures")
-    (proto.readerFeatures ++ legacyR + "deletionVectors")
-      .toSeq.sorted.foreach(rf.add)
-    val wf = pr.putArray("writerFeatures")
-    (proto.writerFeatures ++ legacyW + "deletionVectors" ++
-      (if (cdcEntries.nonEmpty) Seq("changeDataFeed") else Seq.empty))
-      .toSeq.sorted.foreach(wf.add)
-    lines += m.writeValueAsString(protocol)
-    cdcEntries.foreach { case (rel, size, pv) =>
-      val c = obj()
-      val cd = c.putObject("cdc")
-      cd.put("path", encodePath(rel))
-      putPv(cd, pv)
-      cd.put("size", size)
-      cd.put("dataChange", false)
-      lines += m.writeValueAsString(c)
-    }
-    merged.zip(offsets).foreach { case ((f, blob), off) =>
-      val a = nameToAdd(f)
-      val rm = obj()
-      val rmNode = rm.putObject("remove")
-      rmNode.put("path", encodePath(a.path))
-      rmNode.put("deletionTimestamp", tsMillis)
-      rmNode.put("dataChange", true)
-      putPv(rmNode, a.partitionValues)
-      a.dv.foreach { d => // the superseded descriptor rides the remove (vacuum bookkeeping)
-        val o = rmNode.putObject("deletionVector")
-        o.put("storageType", d.storageType)
-        o.put("pathOrInlineDv", d.pathOrInlineDv)
-        d.offset.foreach(o.put("offset", _))
-        o.put("sizeInBytes", d.sizeInBytes)
-        o.put("cardinality", d.cardinality)
-      }
-      lines += m.writeValueAsString(rm)
-      val ad = obj()
-      val addNode = ad.putObject("add")
-      addNode.put("path", encodePath(a.path))
-      // the DV re-add RESTATES the file's partition tuple — an empty map
-      // would silently move the file out of its partition
-      putPv(addNode, a.partitionValues)
-      addNode.put("size", Files.size(root.resolve(a.path)))
-      addNode.put("modificationTime", tsMillis)
-      addNode.put("dataChange", true)
-      val o = addNode.putObject("deletionVector")
-      o.put("storageType", "u")
-      o.put("pathOrInlineDv", encUuid)
-      o.put("offset", off)
-      o.put("sizeInBytes", blob.length)
-      o.put("cardinality", DeletionVectors.cardinality(blob))
-      lines += m.writeValueAsString(ad)
-    }
-    // CREATE_NEW = put-if-absent: a racing writer collides loudly
-    Files.write(logDir.resolve(f"${cur + 1}%020d.json"), lines.result().asJava,
-      java.nio.file.StandardOpenOption.CREATE_NEW)
+    // additionally declares the writer-only changeDataFeed feature
+    commitDelta(logDir, cur, "DELETE", "graft-delta-dv-delete", tsMillis,
+      featuresProtocol(proto, Set("deletionVectors"), Set("deletionVectors") ++
+        (if (cdcEntries.nonEmpty) Set("changeDataFeed") else Set.empty)) +:
+        (cdcEntries.map((cdcAction _).tupled) ++
+          dvRewrite(root, nameToAdd, merged, encUuid, offsets, tsMillis)))
     newDeleted
   }
 
@@ -1975,6 +1901,7 @@ object DeltaInterop {
     val logDir = root.resolve(LogDirName)
     require(Files.isDirectory(logDir), s"no Delta table at $path (missing $LogDirName)")
     val (cur, live, metaOpt, proto) = replayState(spark, root, None)
+    val nonce = java.util.UUID.randomUUID() // per-call file names, as in deleteFromDelta
     val meta = metaOpt.getOrElse(throw new IllegalStateException(
       s"Delta log at $path carries no metaData action"))
     // round-13: column-mapped tables merge too — the incoming rows keep
@@ -2051,7 +1978,7 @@ object DeltaInterop {
       writeFiles(root, incoming.select(
           schema.fields.map(f => physWriteCol(f, meta, path)).toIndexedSeq: _*),
         physPartCols, anyMapped) { (f, i) =>
-        f.under(StagedWrite.seededName("merge", s"$path|merge|$cur|$i"))
+        f.under(StagedWrite.seededName("merge", s"$path|merge|$cur|$nonce|$i"))
       }
     val appended = incoming.count()
 
@@ -2081,93 +2008,23 @@ object DeltaInterop {
         writeFiles(root, changes.select((schema.fields.map(f =>
             physWriteCol(f, meta, path)) :+ col("_change_type")).toIndexedSeq: _*),
           physPartCols, anyMapped) { (_, i) =>
-          StagedWrite.seededName("_change_data/cdc", s"$path|mergecdc|$cur|$i")
+          StagedWrite.seededName("_change_data/cdc", s"$path|mergecdc|$cur|$nonce|$i")
         }
       }
 
     // ---- the commit: protocol (DV + cdf features), cdc actions, the
     // superseded files' remove + DV re-add pairs, the new adds
-    val m = mapper
-    def obj() = m.createObjectNode()
-    val lines = Seq.newBuilder[String]
-    val commitInfo = obj()
-    commitInfo.putObject("commitInfo")
-      .put("timestamp", tsMillis)
-      .put("operation", "MERGE")
-      .put("engineInfo", "graft-delta-merge")
-    lines += m.writeValueAsString(commitInfo)
-    if (dvOut.nonEmpty || cdcEntries.nonEmpty) {
-      val protocol = obj()
-      val pr = protocol.putObject("protocol")
-      pr.put("minReaderVersion", math.max(3, proto.mrv))
-      pr.put("minWriterVersion", math.max(7, proto.mwv))
-      val (legacyR, legacyW) = legacyImpliedFeatures(proto.mrv, proto.mwv)
-      val rf = pr.putArray("readerFeatures")
-      (proto.readerFeatures ++ legacyR ++
-        (if (dvOut.nonEmpty) Set("deletionVectors") else Set.empty[String]))
-        .toSeq.sorted.foreach(rf.add)
-      val wf = pr.putArray("writerFeatures")
-      (proto.writerFeatures ++ legacyW ++
-        (if (dvOut.nonEmpty) Set("deletionVectors") else Set.empty[String]) ++
-        (if (cdcEntries.nonEmpty) Set("changeDataFeed") else Set.empty[String]))
-        .toSeq.sorted.foreach(wf.add)
-      lines += m.writeValueAsString(protocol)
-    }
-    cdcEntries.foreach { case (rel, size, pv) =>
-      val c = obj()
-      val cd = c.putObject("cdc")
-      cd.put("path", encodePath(rel))
-      putPv(cd, pv)
-      cd.put("size", size)
-      cd.put("dataChange", false)
-      lines += m.writeValueAsString(c)
-    }
-    dvOut.foreach { case (encUuid, offsets) =>
-      merged.zip(offsets).foreach { case ((f, blob), off) =>
-        val a = nameToAdd(f)
-        val rm = obj()
-        val rmNode = rm.putObject("remove")
-        rmNode.put("path", encodePath(a.path))
-        rmNode.put("deletionTimestamp", tsMillis)
-        rmNode.put("dataChange", true)
-        putPv(rmNode, a.partitionValues)
-        a.dv.foreach { d =>
-          val o = rmNode.putObject("deletionVector")
-          o.put("storageType", d.storageType)
-          o.put("pathOrInlineDv", d.pathOrInlineDv)
-          d.offset.foreach(o.put("offset", _))
-          o.put("sizeInBytes", d.sizeInBytes)
-          o.put("cardinality", d.cardinality)
-        }
-        lines += m.writeValueAsString(rm)
-        val ad = obj()
-        val addNode = ad.putObject("add")
-        addNode.put("path", encodePath(a.path))
-        putPv(addNode, a.partitionValues)
-        addNode.put("size", Files.size(root.resolve(a.path)))
-        addNode.put("modificationTime", tsMillis)
-        addNode.put("dataChange", true)
-        val o = addNode.putObject("deletionVector")
-        o.put("storageType", "u")
-        o.put("pathOrInlineDv", encUuid)
-        o.put("offset", off)
-        o.put("sizeInBytes", blob.length)
-        o.put("cardinality", DeletionVectors.cardinality(blob))
-        lines += m.writeValueAsString(ad)
-      }
-    }
-    newFiles.foreach { case (rel, size, pv) =>
-      val ad = obj()
-      val addNode = ad.putObject("add")
-      addNode.put("path", encodePath(rel))
-      putPv(addNode, pv)
-      addNode.put("size", size)
-      addNode.put("modificationTime", tsMillis)
-      addNode.put("dataChange", true)
-      lines += m.writeValueAsString(ad)
-    }
-    Files.write(logDir.resolve(f"${cur + 1}%020d.json"), lines.result().asJava,
-      java.nio.file.StandardOpenOption.CREATE_NEW)
+    val dvFeature = if (dvOut.nonEmpty) Set("deletionVectors") else Set.empty[String]
+    val protocol =
+      if (dvOut.isEmpty && cdcEntries.isEmpty) Seq.empty
+      else Seq(featuresProtocol(proto, dvFeature, dvFeature ++
+        (if (cdcEntries.nonEmpty) Set("changeDataFeed") else Set.empty)))
+    commitDelta(logDir, cur, "MERGE", "graft-delta-merge", tsMillis,
+      protocol ++ cdcEntries.map((cdcAction _).tupled) ++
+        dvOut.toSeq.flatMap { case (encUuid, offsets) =>
+          dvRewrite(root, nameToAdd, merged, encUuid, offsets, tsMillis) } ++
+        newFiles.map { case (rel, size, pv) =>
+          addAction(rel, pv, size, tsMillis, dataChange = true) })
     (superseded, appended)
   }
 
@@ -2190,6 +2047,7 @@ object DeltaInterop {
     val logDir = root.resolve(LogDirName)
     require(Files.isDirectory(logDir), s"no Delta table at $path (missing $LogDirName)")
     val (cur, live, metaOpt, _) = replayState(spark, root, None)
+    val nonce = java.util.UUID.randomUUID() // per-call file names, as in deleteFromDelta
     val meta = metaOpt.getOrElse(throw new IllegalStateException(
       s"Delta log at $path carries no metaData action"))
     require(!meta.idMapped,
@@ -2237,49 +2095,18 @@ object DeltaInterop {
     val newFiles: Seq[(String, Long, Map[String, Option[String]])] =
       writeFiles(root, survivors.drop("__gdv_file", "__gdv_pos"), grpCol,
           fieldIds = false) { (_, i) =>
-        StagedWrite.seededName("compacted/purge", s"$path|v$cur|$i")
+        StagedWrite.seededName("compacted/purge", s"$path|v$cur|$nonce|$i")
       }.map { case (rel, size, pv) =>
         (rel, size, pv.get("__gp_grp").fold(Map.empty[String, Option[String]])(
           g => groups(g.get.toInt)._1))
       }
 
-    val m = mapper
-    def obj() = m.createObjectNode()
-    val lines = Seq.newBuilder[String]
-    val commitInfo = obj()
-    commitInfo.putObject("commitInfo")
-      .put("timestamp", tsMillis)
-      .put("operation", "REORG")
-      .put("engineInfo", "graft-delta-dv-purge")
-    lines += m.writeValueAsString(commitInfo)
-    withDv.foreach { a =>
-      val rm = obj()
-      val rmNode = rm.putObject("remove")
-      rmNode.put("path", encodePath(a.path))
-      rmNode.put("deletionTimestamp", tsMillis)
-      rmNode.put("dataChange", false) // a purge rewrites, it does not change rows
-      putPv(rmNode, a.partitionValues)
-      val d = a.dv.get
-      val o = rmNode.putObject("deletionVector")
-      o.put("storageType", d.storageType)
-      o.put("pathOrInlineDv", d.pathOrInlineDv)
-      d.offset.foreach(o.put("offset", _))
-      o.put("sizeInBytes", d.sizeInBytes)
-      o.put("cardinality", d.cardinality)
-      lines += m.writeValueAsString(rm)
-    }
-    newFiles.foreach { case (rel, size, pv) =>
-      val ad = obj()
-      val addNode = ad.putObject("add")
-      addNode.put("path", encodePath(rel))
-      putPv(addNode, pv)
-      addNode.put("size", size)
-      addNode.put("modificationTime", tsMillis)
-      addNode.put("dataChange", false)
-      lines += m.writeValueAsString(ad)
-    }
-    Files.write(logDir.resolve(f"${cur + 1}%020d.json"), lines.result().asJava,
-      java.nio.file.StandardOpenOption.CREATE_NEW)
+    // a purge rewrites rows, it does not change them: dataChange false
+    commitDelta(logDir, cur, "REORG", "graft-delta-dv-purge", tsMillis,
+      withDv.map(a => removeAction(a.path, a.partitionValues, tsMillis,
+        dataChange = false, a.dv)) ++
+        newFiles.map { case (rel, size, pv) =>
+          addAction(rel, pv, size, tsMillis, dataChange = false) })
     (withDv.size, deadRows)
   }
 

@@ -1,24 +1,30 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.io.{BufferedWriter, OutputStream, OutputStreamWriter}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{FileAlreadyExistsException, FileSystemException, Files, Path,
+  StandardCopyOption, StandardOpenOption}
+import java.util.ConcurrentModificationException
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
 
-/** The data-file half of every commit, shared by [[TxTable]],
+/** The file half of every commit, shared by [[TxTable]],
   * [[DeltaInterop]] and [[IcebergInterop]]: write a DataFrame as parquet
-  * into a staging directory, list what landed, move it to its final
-  * names, sweep the staging directory. Each format then publishes the
-  * moved files with one commit of its own log (the write-then-commit
-  * shape of the Delta Lake paper, VLDB 2020, and the Iceberg spec) —
-  * nothing in this half depends on the format.
+  * into a staging directory, list what landed, place it at its final
+  * names, sweep the staging directory — and the one rule every commit
+  * record is published under, [[publish]]: a version becomes visible
+  * whole, and at most once (the put-if-absent log record of the Delta
+  * Lake paper, VLDB 2020, and the metadata-file swap of the Iceberg
+  * spec). Each format then writes its own log record through that rule —
+  * nothing here depends on the format.
   *
   * The staging directory is a dot-prefixed child of the table root (the
   * prefix [[TxTable.vacuum]] sweeps as crash leftovers and Delta's VACUUM
-  * convention never touches), so the final `ATOMIC_MOVE` is always a
-  * same-filesystem rename — staging under `java.io.tmpdir` fails with a
+  * convention never touches), so placing a file is always a
+  * same-filesystem link — staging under `java.io.tmpdir` fails with a
   * cross-device error whenever the temp dir and the table sit on
   * different filesystems. */
 private[graft] object StagedWrite {
@@ -35,10 +41,18 @@ private[graft] object StagedWrite {
     lazy val rows: Long = parquetRowCount(spark, path)
     /** `name` under this file's partition directories. */
     def under(name: String): String = if (dir.isEmpty) name else s"$dir/$name"
-    /** Rename into place (parent directories created); returns the size. */
+    /** Place the file at `dst` under the [[publish]] rule (parent
+      * directories created); returns the size. A taken name means another
+      * writer placed a file there first — never replaced (a rename would
+      * silently overwrite bytes a commit may already reference): the
+      * write aborts with ConcurrentModificationException before any log
+      * record names the file. */
     def moveTo(dst: Path): Long = {
       Files.createDirectories(dst.getParent)
-      Files.move(path, dst, StandardCopyOption.ATOMIC_MOVE)
+      if (!claim(path, dst))
+        throw new ConcurrentModificationException(
+          s"$dst already exists: a concurrent writer placed a file under the same name")
+      Files.delete(path)
       Files.size(dst)
     }
   }
@@ -100,11 +114,67 @@ private[graft] object StagedWrite {
     try publish(s) finally s.close()
   }
 
-  /** `<prefix>-<uuid>.parquet`, the uuid derived from `seed`: the
-    * deterministic file names every format's writes use, so a retried
-    * commit rewrites the same names. */
+  /** `<prefix>-<uuid>.parquet`, the uuid derived from `seed` — callers
+    * that mutate a live table put a per-call random part in the seed, so
+    * two writers racing from the same version never share a name. */
   private[sources] def seededName(prefix: String, seed: String): String =
     s"$prefix-${java.util.UUID.nameUUIDFromBytes(seed.getBytes("UTF-8"))}.parquet"
+
+  /** Put-if-absent publish of `dst`: `write` fills a dot-prefixed temp
+    * file beside it, the temp file is hard-linked to `dst` — link(2) fails
+    * when the name exists, where rename(2) would silently replace it —
+    * then deleted. Readers see the whole file or none. On a filesystem
+    * without hard links an O_EXCL create keeps at-most-once (the bytes are
+    * then visible while they are copied in). A `write` that throws leaves
+    * neither `dst` nor the temp file. Returns true iff this writer won
+    * the name; a loser leaves the existing bytes untouched. */
+  private[sources] def publish(dst: Path)(write: OutputStream => Unit): Boolean =
+    viaTemp(dst, write)(claim(_, dst))
+
+  /** [[publish]] of `lines`, each ended by the platform line separator
+    * (the bytes `Files.write(path, lines)` writes). */
+  private[sources] def publishLines(dst: Path, lines: Seq[String]): Boolean =
+    publish(dst)(writeLines(_, lines))
+
+  /** Replace `dst` whole with `lines`: a temp file beside it renamed over
+    * it, so a reader sees the old bytes or the new, never a torn write.
+    * For pointers readers may find stale (Iceberg's version hint), not for
+    * commit records — those go through [[publish]]. */
+  private[sources] def replaceLines(dst: Path, lines: Seq[String]): Unit =
+    viaTemp(dst, writeLines(_, lines)) { tmp =>
+      Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    }
+
+  /** `write` into a dot-prefixed temp file beside `dst` (the `.tmp`
+    * prefix [[TxTable.vacuum]] sweeps as a crash leftover), then `place`
+    * it; the temp file is gone afterwards either way. */
+  private def viaTemp[A](dst: Path, write: OutputStream => Unit)(place: Path => A): A = {
+    val tmp = Files.createTempFile(dst.getParent, ".tmp", ".publish")
+    try {
+      val out = Files.newOutputStream(tmp)
+      try write(out) finally out.close()
+      place(tmp)
+    } finally Files.deleteIfExists(tmp)
+  }
+
+  private def writeLines(out: OutputStream, lines: Seq[String]): Unit = {
+    val w = new BufferedWriter(new OutputStreamWriter(out, UTF_8))
+    lines.foreach { l => w.write(l); w.newLine() }
+    w.flush()
+  }
+
+  /** Give `src`'s bytes the name `dst` unless it is taken: a hard link,
+    * or an O_EXCL create filled from `src` where links are unsupported. */
+  private def claim(src: Path, dst: Path): Boolean =
+    try { Files.createLink(dst, src); true }
+    catch {
+      case _: FileAlreadyExistsException => false
+      case _: UnsupportedOperationException | _: FileSystemException =>
+        val out = try Files.newOutputStream(dst, StandardOpenOption.CREATE_NEW)
+          catch { case _: FileAlreadyExistsException => return false }
+        try { Files.copy(src, out); out.close(); true }
+        catch { case e: Throwable => out.close(); Files.deleteIfExists(dst); throw e }
+    }
 
   /** Run `body` (an EAGER parquet write) with field-id stamping enabled
     * when `enable`, restoring the session's prior setting after — leaving

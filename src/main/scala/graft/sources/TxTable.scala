@@ -29,13 +29,13 @@ import org.apache.spark.sql.functions._
   * clock, millis), `op=`, `schema=` (DDL, version 0 only), and any number
   * of `add=`/`remove=` file actions (paths relative to data/).
   *
-  * ATOMICITY: a commit is prepared in a temp file and published with
-  * `Files.createLink(target, tmp)` — on POSIX filesystems link creation is
-  * atomic and fails if the target exists, which is exactly the
-  * "put-if-absent" primitive a commit log needs (the same contract Delta's
-  * LogStore requires of an object store). A writer that loses the race
-  * re-reads the log and retries; readers only ever see fully-written
-  * commit files. Data files are written BEFORE the commit that references
+  * ATOMICITY: a commit is published put-if-absent by
+  * [[StagedWrite.publish]] (a temp file hard-linked to the version's name:
+  * link creation is atomic and fails if the target exists — the same
+  * contract Delta's LogStore requires of an object store, and the rule
+  * the Delta and Iceberg writers here commit under too). A writer that
+  * loses the race re-reads the log and retries; readers only ever see
+  * fully-written commit files. Data files are written BEFORE the commit that references
   * them, so a crash between the two leaves only unreferenced garbage
   * (cleaned opportunistically), never a torn table.
   *
@@ -258,11 +258,7 @@ class TxTable(val spark: SparkSession, val root: String) {
       snap.files.map(f => s"file=$f") ++
       snap.files.flatMap(f => snap.stats.getOrElse(f, Seq.empty).map(statsLine(f, _))) ++
       snap.files.flatMap(f => snap.blooms.getOrElse(f, Seq.empty).map(bloomLine(f, _)))
-    val tmp = Files.createTempFile(logDir, ".tmp", ".ckpt")
-    Files.write(tmp, lines.asJava)
-    try Files.createLink(ckptPath(v), tmp)
-    catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    finally Files.deleteIfExists(tmp)
+    StagedWrite.publishLines(ckptPath(v), lines)
   }
 
   /** (version, snapshot) of the newest checkpoint at or below `bound`, if
@@ -424,11 +420,7 @@ class TxTable(val spark: SparkSession, val root: String) {
       add.map(a => s"add=$a") ++ remove.map(r => s"remove=$r") ++
       stats.flatMap { case (f, sts) => sts.map(statsLine(f, _)) } ++
       blooms.flatMap { case (f, bs) => bs.map(bloomLine(f, _)) }
-    val tmp = Files.createTempFile(logDir, ".tmp", ".commit")
-    Files.write(tmp, lines.asJava)
-    try { Files.createLink(commitPath(v), tmp); true }
-    catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    finally Files.deleteIfExists(tmp)
+    StagedWrite.publishLines(commitPath(v), lines)
   }
 
   /** Optimistic-concurrency commit loop: stage once, then race for the next
