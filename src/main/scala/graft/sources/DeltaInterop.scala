@@ -9,7 +9,7 @@ import com.fasterxml.jackson.databind.node.{JsonNodeFactory, ObjectNode}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
 
 /** Open-format interop for the transactional table: export a [[TxTable]]
   * snapshot as a STANDARD Delta Lake table any external engine can read
@@ -36,8 +36,8 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType
   * and target share a filesystem (a 100 TB export moves ZERO data bytes —
   * only log pointers are written; falls back to copy across devices).
   * Reads attach partition values from the log's authoritative
-  * `partitionValues` via one broadcast file→values map over a single
-  * parquet scan — no per-partition plan explosion, no reliance on
+  * `partitionValues` as per-file constants of a single parquet scan
+  * ([[FileSnapshot.scan]]) — no per-partition plan explosion, no reliance on
   * hive-style directory names (Delta writers need not produce them).
   */
 object DeltaInterop {
@@ -616,14 +616,10 @@ object DeltaInterop {
         val hi = vals(maxs)
         lo.keySet.intersect(hi.keySet).map(c => c -> (lo(c), hi(c))).toMap
       }.getOrElse(Map.empty)
-    val kept = live.filter { a =>
-      val b = boundsOf(a)
-      preds.forall { case (c, lo, hi) =>
-        b.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
-      }
-    }
-    assembleRead(spark, Paths.get(path), schema, meta.partCols, kept,
-      meta.mappingMode)
+    val kept = FileSnapshot.prune(live.map(a =>
+      FileSnapshot.DataFile(Paths.get(a.path), bounds = boundsOf(a))), preds).map(_.path).toSet
+    assembleRead(spark, Paths.get(path), schema, meta.partCols,
+      live.filter(a => kept(Paths.get(a.path))), meta.mappingMode)
   }
 
   /** One POLL of a continuous Delta tail: read the rows appended in
@@ -822,13 +818,10 @@ object DeltaInterop {
     require(sinceVersion <= cur,
       s"consumer watermark $sinceVersion is ahead of the Delta log at $path (head $cur)")
     val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
-    val nameMapped = meta.mapped
-    val idMapped = meta.idMapped
     val outSchema = StructType(schema.fields :+
       StructField("_change_type", StringType, nullable = false) :+
       StructField("_commit_version", LongType, nullable = false))
-    def empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
+    def empty = FileSnapshot.empty(spark, outSchema)
     if (sinceVersion == cur) return (cur, empty)
 
     val commits = listJsonCommits(logDir)
@@ -841,27 +834,10 @@ object DeltaInterop {
         "re-sync from the full snapshot")
 
     val m = mapper
-    val partSet = meta.partCols.toSet
-    val logicalData = StructType(schema.fields.filterNot(f => partSet.contains(f.name)))
-    // the FILE schemas under column mapping, the assembleRead rules:
-    // name mode scans physical names and restores logical; id mode keeps
-    // logical names stamped with parquet field ids (the session switch
-    // below makes Spark resolve by id; _change_type carries no id and
-    // resolves by name, which is how the files physically store it)
-    val dataSchema =
-      if (nameMapped) toPhysical(logicalData, path).asInstanceOf[StructType]
-      else if (idMapped) withFieldIds(logicalData, path).asInstanceOf[StructType]
-      else logicalData
-    if (idMapped)
-      spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    val cdcSchema = StructType(dataSchema.fields :+
-      StructField("_change_type", StringType, nullable = false))
-    def dataCol(f: StructField): org.apache.spark.sql.Column =
-      if (nameMapped) col(physicalNameOf(f, path)).cast(f.dataType).as(f.name)
-      else if (idMapped) col(f.name).as(f.name, f.metadata)
-      else col(f.name)
-    def pvKey(f: StructField): String =
-      if (nameMapped || idMapped) physicalNameOf(f, path) else f.name
+    // change and data files carry the physical layout of the table's
+    // column mapping, like the table read; _change_type carries no id and
+    // resolves by name, which is how the files physically store it
+    val (physical, project) = mappedColumns(path, meta.mappingMode, Set("_change_type"))
     def pvOf(n: JsonNode): Map[String, Option[String]] =
       Option(n.get("partitionValues")).map { o =>
         o.properties().asScala.map { e =>
@@ -869,40 +845,26 @@ object DeltaInterop {
         }.toMap
       }.getOrElse(Map.empty[String, Option[String]])
     // partition columns live in the LOG's partitionValues (PHYSICAL keys
-    // under column mapping), never in the files — every frame below fills
-    // them back through a broadcast (file basename → values) join,
-    // exactly like the table read; data columns restore logical names
-    def fillPartCols(df: DataFrame, rels: Seq[(String, Map[String, Option[String]])],
+    // under column mapping), never in the files — the scan fills them
+    // back exactly like the table read
+    def scanRels(rels: Seq[(String, Map[String, Option[String]])],
         extraCols: Seq[StructField]): DataFrame = {
-      if (meta.partCols.isEmpty)
-        return df.select((logicalData.fields.map(dataCol) ++
-          extraCols.map(f => col(f.name))).toIndexedSeq: _*)
-      val partFields = meta.partCols.map(c => schema(c))
-      val names = rels.map(r => root.resolve(r._1).getFileName.toString)
-      require(names.distinct.size == names.size,
-        s"Delta table $path has duplicate file names in a cdf commit — " +
-          "the partition-value join would be ambiguous")
-      val rows: Seq[org.apache.spark.sql.Row] = rels.map { case (rel, pv) =>
+      rels.foreach { case (rel, pv) =>
         // an action MISSING a partition key (legal for removes per the
         // protocol) cannot fill the column — emitting NULL instead of
         // the real value would silently corrupt the feed; refuse
-        partFields.foreach(f => require(pv.contains(pvKey(f)),
-          s"Delta table $path: a cdf action for $rel carries no " +
-            s"partitionValues entry for '${pvKey(f)}' — the feed cannot " +
-            "reconstruct the partition column; re-sync from the full snapshot"))
-        org.apache.spark.sql.Row.fromSeq(
-          root.resolve(rel).getFileName.toString +:
-            partFields.map(f => pv.get(pvKey(f)).flatten.orNull))
+        meta.partCols.foreach { c =>
+          val key = if (meta.mappingMode == "none") c else physicalNameOf(schema(c), path)
+          require(pv.contains(key),
+            s"Delta table $path: a cdf action for $rel carries no " +
+              s"partitionValues entry for '$key' — the feed cannot " +
+              "reconstruct the partition column; re-sync from the full snapshot")
+        }
       }
-      val tupleDf = spark.createDataFrame(rows.asJava,
-        StructType(StructField("__gcdf_file", StringType, nullable = false) +:
-          partFields.map(f => StructField(f.name, StringType))))
-      df.withColumn("__gcdf_file", col("_metadata.file_name"))
-        .join(broadcast(tupleDf), Seq("__gcdf_file"))
-        .select((schema.fields.map { f =>
-          if (partSet.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-          else dataCol(f)
-        } ++ extraCols.map(f => col(f.name))).toIndexedSeq: _*)
+      FileSnapshot.scan(spark, dataFiles(root, schema, meta.partCols, rels, meta.mappingMode),
+        StructType(schema.fields ++ extraCols), s"Delta table $path",
+        fill = meta.partCols, physical = physical, project = project,
+        fieldIds = meta.idMapped)
     }
     val frames: Seq[DataFrame] = commits.flatMap { case (cv, p) =>
       val cdcFiles = Seq.newBuilder[(String, Map[String, Option[String]])]
@@ -934,10 +896,7 @@ object DeltaInterop {
       if (cdc.nonEmpty) {
         // cdc actions are AUTHORITATIVE for their commit — the
         // accompanying add/remove pairs restate the same change
-        val paths = cdc.map(r => root.resolve(r._1).toString)
-        Seq(fillPartCols(
-          spark.read.schema(cdcSchema).parquet(paths: _*),
-          cdc, Seq(StructField("_change_type", StringType)))
+        Seq(scanRels(cdc, Seq(StructField("_change_type", StringType)))
           .withColumn("_commit_version", lit(cv)))
       } else {
         require(!dvChange,
@@ -953,10 +912,7 @@ object DeltaInterop {
               s"Delta table $path: commit $cv ${kind}s ${r._1} whose bytes are " +
                 "no longer on disk (vacuumed/retired) — the change feed for " +
                 "this range is unreconstructable; re-sync from the full snapshot"))
-            Some(fillPartCols(
-              spark.read.schema(dataSchema)
-                .parquet(rels.map(r => root.resolve(r._1).toString): _*),
-              rels, Seq.empty)
+            Some(scanRels(rels, Seq.empty)
               .withColumn("_change_type", lit(if (kind == "add") "insert" else "delete"))
               .withColumn("_commit_version", lit(cv)))
           }
@@ -1111,116 +1067,72 @@ object DeltaInterop {
       ProtocolInfo(maxMrv, maxMwv, readerFeats, writerFeats))
   }
 
-  /** One parquet scan over the live files with the log's partition values
-    * attached via a BROADCAST file-name → values join — correct for ANY
-    * file layout (Delta's partitionValues is authoritative; directory
-    * names are a writer convention) and O(1) plan size in the partition
-    * count. The join keys on `_metadata.file_name` (the basename), the
-    * same mechanism as [[IcebergInterop]]'s Column-Projection fill — a
-    * codegen'd hash join instead of the closure-captured-map UDF this
-    * method originally shipped (which serialized the whole file map into
-    * the task closure and broke whole-stage codegen at the scan). Delta
-    * writers emit uuid part names, so basenames are unique; a foreign
-    * table violating that fails loudly rather than joining wrong values.
-    */
+  /** The live files read through [[FileSnapshot.scan]]: partition
+    * columns fill from the log's `partitionValues` (authoritative for any
+    * file layout; directory names are a writer convention), each add's
+    * deletion vector masks its rows out, and `provenance` adds the
+    * (file, pos) columns a DV-writing commit needs. */
   private def assembleRead(spark: SparkSession, root: Path, schema: StructType,
       partCols: Seq[String], adds: Seq[AddFile],
-      mappingMode: String = "none"): DataFrame = {
-    val nameMapped = mappingMode == "name"
-    val idMapped = mappingMode == "id"
-    val partSet = partCols.toSet
-    val logicalData = StructType(schema.fields.filterNot(f => partSet.contains(f.name)))
-    // under NAME mapping the parquet files carry PHYSICAL column names —
-    // the scan schema renames through the field metadata and the final
-    // select restores logical names (a positional struct cast restores
-    // NESTED logical names in the same move). Under ID mapping the scan
-    // schema keeps LOGICAL names but carries each field's parquet field
-    // id, and Spark's reader resolves by id.
-    val dataSchema =
-      if (nameMapped) toPhysical(logicalData, root.toString).asInstanceOf[StructType]
-      else if (idMapped) withFieldIds(logicalData, root.toString).asInstanceOf[StructType]
-      else logicalData
-    def dataCol(f: StructField): org.apache.spark.sql.Column =
-      if (nameMapped) col(physicalNameOf(f, root.toString)).cast(f.dataType).as(f.name)
-      else if (idMapped)
-        // re-alias with the LOGICAL field's metadata so the output schema
-        // does not leak the scan's parquet.field.id stamps — a user
-        // copying this frame's schema into another parquet read would
-        // otherwise trip field-id resolution against id-less files
-        col(f.name).as(f.name, f.metadata)
-      else col(f.name)
-    if (adds.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val files = adds.map(a => root.resolve(a.path).toString)
-    // the SESSION-level switch (not a scoped set: the returned frame is
-    // lazy, and a scope that closed before evaluation would silently
-    // fall back to name matching). A no-op for every read whose schema
-    // carries no field-id metadata, which is all non-id-mapped reads.
-    if (idMapped)
-      spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+      mappingMode: String = "none", provenance: Boolean = false): DataFrame = {
     // descriptors decode BEFORE the scan is constructed: a malformed DV
     // must surface as ITS error, not hide behind whatever the file scan
     // happens to throw first
     val dvPos = dvPositionsDf(spark, root, adds)
-    val scan0 = spark.read.schema(dataSchema).parquet(files: _*)
-    if (partCols.isEmpty)
-      applyDvs(scan0, dvPos).select(schema.fields.map(dataCol).toIndexedSeq: _*)
-    else {
-      // the partition-join key is derived BEFORE the DV anti-join:
-      // `_metadata` is no longer resolvable after applyDvs's joins
-      val base = applyDvs(
-        scan0.withColumn("__graft_pfile", col("_metadata.file_name")), dvPos)
-      import scala.jdk.CollectionConverters._
-      val partFields = partCols.map(c => schema(c))
-      val names = adds.map(a => root.resolve(a.path).getFileName.toString)
-      require(names.distinct.size == names.size,
-        s"Delta table at $root has duplicate data-file names across " +
-          "partitions — the partition-value join would be ambiguous")
-      // `partitionValues` keys are PHYSICAL names under column mapping
-      // (PROTOCOL.md) while metaData.partitionColumns stays logical — the
-      // tuple frame looks values up physically and names columns logically
-      val rows: Seq[org.apache.spark.sql.Row] = adds.map { a =>
-        org.apache.spark.sql.Row.fromSeq(
-          root.resolve(a.path).getFileName.toString +:
-            partFields.map { f =>
-              val key = if (nameMapped || idMapped) physicalNameOf(f, root.toString)
-                else f.name
-              a.partitionValues.get(key).flatten.orNull
-            })
-      }
-      val tupleDf = spark.createDataFrame(rows.asJava,
-        StructType(StructField("__graft_pfile", StringType, nullable = false) +:
-          partFields.map(f => StructField(f.name, StringType))))
-      base
-        .join(broadcast(tupleDf), Seq("__graft_pfile"))
-        .select(schema.fields.map { f =>
-          if (partSet.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-          else dataCol(f)
-        }.toIndexedSeq: _*)
+    val (physical, project) = mappedColumns(root.toString, mappingMode)
+    FileSnapshot.scan(spark,
+      dataFiles(root, schema, partCols, adds.map(a => a.path -> a.partitionValues), mappingMode),
+      schema, s"Delta table at $root", fill = partCols, physical = physical,
+      project = project, fieldIds = mappingMode == "id", positions = dvPos,
+      provenance = provenance)
+  }
+
+  /** Delta files as the shared snapshot model. `partitionValues` keys are
+    * PHYSICAL names under column mapping (PROTOCOL.md) while
+    * metaData.partitionColumns stays logical: values are looked up
+    * physically and keyed logically. */
+  private def dataFiles(root: Path, schema: StructType, partCols: Seq[String],
+      files: Seq[(String, Map[String, Option[String]])],
+      mappingMode: String): Seq[FileSnapshot.DataFile] =
+    files.map { case (rel, pv) =>
+      FileSnapshot.DataFile(root.resolve(rel), partCols.map { c =>
+        val key = if (mappingMode == "none") c else physicalNameOf(schema(c), root.toString)
+        c -> pv.get(key).flatten.orNull
+      }.toMap)
+    }
+
+  /** A table's column mapping as [[FileSnapshot.scan]] arguments: the scan
+    * fields standing for one logical field, and its output column. Under
+    * NAME mapping the files carry PHYSICAL names — the scan renames
+    * through the field metadata and the output restores logical names (a
+    * positional struct cast restores NESTED logical names in the same
+    * move). Under ID mapping the scan keeps LOGICAL names stamped with
+    * each field's parquet field id, and the output re-aliases with the
+    * logical metadata so the schema does not leak the stamps (a user
+    * copying it into another parquet read would trip field-id
+    * resolution against id-less files). `passthrough` fields are no
+    * table columns (`_change_type`) and scan as they are. */
+  private def mappedColumns(path: String, mode: String, passthrough: Set[String] = Set.empty)
+      : (StructField => Seq[StructField], StructField => org.apache.spark.sql.Column) = {
+    def one(f: StructField, to: DataType => DataType): Seq[StructField] =
+      if (passthrough(f.name)) Seq(f)
+      else to(StructType(Seq(f))).asInstanceOf[StructType].fields.toSeq
+    mode match {
+      case "name" => (one(_, toPhysical(_, path)), f =>
+        if (passthrough(f.name)) col(f.name)
+        else col(physicalNameOf(f, path)).cast(f.dataType).as(f.name))
+      case "id" => (one(_, withFieldIds(_, path)), f =>
+        if (passthrough(f.name)) col(f.name) else col(f.name).as(f.name, f.metadata))
+      case _ => (Seq(_), f => col(f.name))
     }
   }
 
-  /** Mask each add's DELETION VECTOR out of the scan: the driver loads
-    * only the serialized BLOBS (compressed-bitmap metadata scale —
-    * file-based, plain-path, or inline Base85), executors expand them to
-    * (file basename, position) rows via one typed flatMap, and a
-    * left-anti join on `_metadata.(file_name, row_index)` drops the
-    * deleted rows — positions never pass through the driver, and
-    * DV-free tables return the scan untouched. Each blob's decoded
-    * cardinality is re-verified against its descriptor in the same pass
-    * (a mismatch means a corrupt DV — failing the job beats silently
-    * returning the wrong row set). */
-  private def applyDvs(scan: DataFrame,
-      dvPos: Option[DataFrame]): DataFrame =
-    dvPos match {
-      case None => scan
-      case Some(posDf) => scan
-        .withColumn("__gdv_file", col("_metadata.file_name"))
-        .withColumn("__gdv_pos", col("_metadata.row_index"))
-        .join(posDf, Seq("__gdv_file", "__gdv_pos"), "left_anti")
-        .drop("__gdv_file", "__gdv_pos")
-    }
+  /** Data-file basename → its add: basenames key the DV provenance. */
+  private def namesOf(root: Path, adds: Seq[AddFile]): Map[String, AddFile] = {
+    val names = adds.map(a => root.resolve(a.path).getFileName.toString)
+    FileSnapshot.requireUniqueNames(names, s"Delta table at $root")
+    names.zip(adds).toMap
+  }
 
   /** Load one descriptor's serialized DV blob (file-based or inline). */
   private def dvBlob(root: Path, filePath: String, d: DvDesc): Array[Byte] =
@@ -1244,15 +1156,16 @@ object DeltaInterop {
       cardinality: Long, resolved: String)
 
   /** The distributed (data-file basename, deleted position) frame of the
-    * adds' deletion vectors — None when no add carries one. */
+    * adds' deletion vectors — None when no add carries one, so DV-free
+    * tables scan untouched. Executors expand the blobs through one typed
+    * flatMap and re-verify each decoded cardinality against its
+    * descriptor (a mismatch means a corrupt DV: failing the job beats
+    * returning the wrong rows); positions never pass through the driver,
+    * and [[FileSnapshot.scan]] anti-joins them out. */
   private def dvPositionsDf(spark: SparkSession, root: Path,
       adds: Seq[AddFile]): Option[DataFrame] = {
     val withDv = adds.filter(_.dv.isDefined)
     if (withDv.isEmpty) return None
-    val names = adds.map(a => root.resolve(a.path).getFileName.toString)
-    require(names.distinct.size == names.size,
-      s"Delta table at $root has duplicate data-file names — deletion " +
-        "vectors cannot be applied unambiguously")
     // the driver VALIDATES every descriptor eagerly (a malformed one must
     // surface as its own error at read construction, not behind whatever
     // a task throws first) and resolves file-based blob locations — but
@@ -1304,7 +1217,7 @@ object DeltaInterop {
               "corrupt DV")
         ps.iterator.map(p => (w.file, p))
       }(Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
-      .toDF("__gdv_file", "__gdv_pos"))
+      .toDF(FileSnapshot.FileCol, FileSnapshot.PosCol))
   }
 
   /** Upgrade a logical schema to column-mapping NAME mode: every field
@@ -1677,57 +1590,6 @@ object DeltaInterop {
       if (upgraded) Some(ColumnMappingUpgrade) else None, tsMillis)
   }
 
-  /** Scan `adds` into the LOGICAL schema with `(__gdv_file, __gdv_pos)`
-    * provenance: a column-mapped table's files scan physically and alias
-    * logically; a PARTITIONED table's partition columns — which live in
-    * the log's `partitionValues`, never in the files — reconstruct via a
-    * broadcast (file basename → values) join, so predicates over them
-    * resolve instead of matching silent nulls. The shared scan of
-    * [[deleteFromDelta]] and its cdc emission. */
-  private def provScan(spark: SparkSession, root: Path, path: String,
-      schema: StructType, meta: TableMeta, adds: Seq[AddFile]): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val partSet = meta.partCols.toSet
-    val logicalData = StructType(schema.fields.filterNot(f => partSet.contains(f.name)))
-    val physSchema =
-      if (meta.mapped) toPhysical(logicalData, path).asInstanceOf[StructType]
-      else if (meta.idMapped) withFieldIds(logicalData, path).asInstanceOf[StructType]
-      else logicalData
-    if (meta.idMapped)
-      spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    def dataCol(f: StructField): org.apache.spark.sql.Column =
-      if (meta.mapped) col(physicalNameOf(f, path)).cast(f.dataType).as(f.name)
-      else if (meta.idMapped) col(f.name).as(f.name, f.metadata)
-      else col(f.name)
-    val scan = spark.read.schema(physSchema)
-      .parquet(adds.map(a => root.resolve(a.path).toString): _*)
-      .withColumn("__gdv_file", col("_metadata.file_name"))
-      .withColumn("__gdv_pos", col("_metadata.row_index"))
-    val prov = Seq(col("__gdv_file"), col("__gdv_pos"))
-    if (meta.partCols.isEmpty)
-      scan.select((schema.fields.map(dataCol) ++ prov).toIndexedSeq: _*)
-    else {
-      val partFields = meta.partCols.map(c => schema(c))
-      val rows: Seq[org.apache.spark.sql.Row] = adds.map { a =>
-        org.apache.spark.sql.Row.fromSeq(
-          root.resolve(a.path).getFileName.toString +:
-            partFields.map { f =>
-              val key = if (meta.mapped || meta.idMapped) physicalNameOf(f, path)
-                else f.name
-              a.partitionValues.get(key).flatten.orNull
-            })
-      }
-      val tupleDf = spark.createDataFrame(rows.asJava,
-        StructType(StructField("__gdv_file", StringType, nullable = false) +:
-          partFields.map(f => StructField(f.name, StringType))))
-      scan.join(broadcast(tupleDf), Seq("__gdv_file"))
-        .select((schema.fields.map { f =>
-          if (partSet.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-          else dataCol(f)
-        } ++ prov).toIndexedSeq: _*)
-    }
-  }
-
   /** Row-level DELETE on a Delta table at `path`: commit a DELETION-VECTOR
     * snapshot — the protocol's merge-on-read DELETE, what a modern
     * engine's `DELETE FROM t WHERE …` with DVs enabled produces. No data
@@ -1748,8 +1610,7 @@ object DeltaInterop {
     * (groupByKey over the hit positions); the driver handles only the
     * O(touched files) compressed blobs. Partitioned tables work — the
     * predicate may name partition columns, reconstructed from the log's
-    * `partitionValues` (via a broadcast basename→tuple join) before
-    * evaluation. The commit publishes put-if-absent: a writer that lost
+    * `partitionValues` (per-file scan constants) before evaluation. The commit publishes put-if-absent: a writer that lost
     * the race gets ConcurrentModificationException rather than
     * clobbering.
     *
@@ -1775,19 +1636,12 @@ object DeltaInterop {
     val cdfEnabled = cdfEnabledIn(meta.config)
     val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
     if (live.isEmpty) return 0L
-    val nameToAdd: Map[String, AddFile] =
-      live.map(a => root.resolve(a.path).getFileName.toString -> a).toMap
-    require(nameToAdd.size == live.size,
-      s"Delta table at $root has duplicate data-file names — deletion " +
-        "vectors cannot be recorded unambiguously")
-
-    val base = provScan(spark, root, path, schema, meta, live)
-    val liveDf = dvPositionsDf(spark, root, live)
-      .map(d => base.join(d, Seq("__gdv_file", "__gdv_pos"), "left_anti"))
-      .getOrElse(base)
+    val nameToAdd = namesOf(root, live)
+    val liveDf = assembleRead(spark, root, schema, meta.partCols, live,
+      meta.mappingMode, provenance = true)
     import org.apache.spark.sql.Encoders
     val newBlobs: Seq[(String, Array[Byte], Long)] = liveDf.where(predicate)
-      .select(col("__gdv_file"), col("__gdv_pos"))
+      .select(col(FileSnapshot.FileCol), col(FileSnapshot.PosCol))
       .as(Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
       .groupByKey(_._1)(Encoders.STRING)
       .mapGroups { (f, it) =>
@@ -1823,10 +1677,8 @@ object DeltaInterop {
         val touched = newBlobs.map(_._1).toSet
         val touchedAdds = live.filter(a =>
           touched.contains(root.resolve(a.path).getFileName.toString))
-        val base2 = provScan(spark, root, path, schema, meta, touchedAdds)
-        val live2 = dvPositionsDf(spark, root, touchedAdds)
-          .map(d => base2.join(d, Seq("__gdv_file", "__gdv_pos"), "left_anti"))
-          .getOrElse(base2)
+        val live2 = assembleRead(spark, root, schema, meta.partCols, touchedAdds,
+          meta.mappingMode, provenance = true)
         // change files follow the table's column mapping exactly like
         // data files (PROTOCOL.md, Change Data Files): a mapped table's
         // cdc parquets must carry PHYSICAL column names (+ field ids in
@@ -1848,8 +1700,8 @@ object DeltaInterop {
             val grpDf = spark.createDataFrame(
               groups.zipWithIndex.flatMap { case ((_, as), gi) =>
                 as.map(a => (root.resolve(a.path).getFileName.toString, gi)) })
-              .toDF("__gdv_file", "__gcdc_grp")
-            (hits2.join(broadcast(grpDf), Seq("__gdv_file"))
+              .toDF(FileSnapshot.FileCol, "__gcdc_grp")
+            (hits2.join(broadcast(grpDf), Seq(FileSnapshot.FileCol))
               .select((changeCols :+ col("__gcdc_grp")).toIndexedSeq: _*),
               Seq("__gcdc_grp"))
           }
@@ -1938,22 +1790,16 @@ object DeltaInterop {
     def keyCond(left: DataFrame): org.apache.spark.sql.Column =
       keyCols.map(c => left(c) <=> keysDf(s"__gmk_$c")).reduce(_ && _)
 
-    val nameToAdd: Map[String, AddFile] =
-      live.map(a => root.resolve(a.path).getFileName.toString -> a).toMap
-    require(nameToAdd.size == live.size,
-      s"Delta table at $root has duplicate data-file names — deletion " +
-        "vectors cannot be recorded unambiguously")
+    val nameToAdd = namesOf(root, live)
 
     // the LIVE pre-images whose key matches an incoming row, with
     // (file, pos) provenance — these rows take the deletion vectors
-    val base = provScan(spark, root, path, schema, meta, live)
-    val liveDf = dvPositionsDf(spark, root, live)
-      .map(d => base.join(d, Seq("__gdv_file", "__gdv_pos"), "left_anti"))
-      .getOrElse(base)
+    val liveDf = assembleRead(spark, root, schema, meta.partCols, live,
+      meta.mappingMode, provenance = true)
     val matched = liveDf.join(keysDf, keyCond(liveDf), "left_semi")
       .localCheckpoint()
     val newBlobs: Seq[(String, Array[Byte], Long)] = matched
-      .select(col("__gdv_file"), col("__gdv_pos"))
+      .select(col(FileSnapshot.FileCol), col(FileSnapshot.PosCol))
       .as(Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
       .groupByKey(_._1)(Encoders.STRING)
       .mapGroups { (f, it) =>
@@ -2067,34 +1913,24 @@ object DeltaInterop {
     val scanSchema =
       if (meta.mapped) toPhysical(dataSchema, path).asInstanceOf[StructType]
       else dataSchema
-    val scan = spark.read.schema(scanSchema)
-      .parquet(withDv.map(a => root.resolve(a.path).toString): _*)
     // survivors write PER PARTITION (mixing partitions in one file would
     // make its add's partitionValues a lie): group the touched files by
-    // their tuple, split the staged write by group
+    // their tuple, and each file's group id fills a column the staged
+    // write splits by
     val groups: Seq[(Map[String, Option[String]], Seq[AddFile])] =
       withDv.groupBy(_.partitionValues).toSeq
         .sortBy(_._1.toSeq.sortBy(_._1).toString)
-    val prov = scan
-      .withColumn("__gdv_file", col("_metadata.file_name"))
-      .withColumn("__gdv_pos", col("_metadata.row_index"))
-    val kept = dvPositionsDf(spark, root, withDv)
-      .map(d => prov.join(d, Seq("__gdv_file", "__gdv_pos"), "left_anti"))
-      .getOrElse(prov)
-    val (survivors, grpCol) =
-      if (meta.partCols.isEmpty) (kept, Nil)
-      else {
-        val grpDf = spark.createDataFrame(
-          groups.zipWithIndex.flatMap { case ((_, as), gi) =>
-            as.map(a => (root.resolve(a.path).getFileName.toString, gi)) })
-          .toDF("__gdv_file", "__gp_grp")
-        (kept.join(broadcast(grpDf), Seq("__gdv_file")), Seq("__gp_grp"))
-      }
+    val grpCol = if (meta.partCols.isEmpty) Nil else Seq("__gp_grp")
+    val grpOf = groups.zipWithIndex.flatMap { case ((_, as), gi) => as.map(_.path -> gi) }.toMap
+    val survivors = FileSnapshot.scan(spark,
+      withDv.map(a => FileSnapshot.DataFile(root.resolve(a.path), Map("__gp_grp" -> grpOf(a.path)))),
+      StructType(scanSchema.fields ++ grpCol.map(StructField(_, IntegerType))),
+      s"Delta table at $root", fill = grpCol,
+      positions = dvPositionsDf(spark, root, withDv))
     // (rel path, size, partitionValues of the survivor file); a fully-
     // deleted input file leaves an empty part, dropped by its footer count
     val newFiles: Seq[(String, Long, Map[String, Option[String]])] =
-      writeFiles(root, survivors.drop("__gdv_file", "__gdv_pos"), grpCol,
-          fieldIds = false) { (_, i) =>
+      writeFiles(root, survivors, grpCol, fieldIds = false) { (_, i) =>
         StagedWrite.seededName("compacted/purge", s"$path|v$cur|$nonce|$i")
       }.map { case (rel, size, pv) =>
         (rel, size, pv.get("__gp_grp").fold(Map.empty[String, Option[String]])(

@@ -41,8 +41,8 @@ import graft.sources.StagedWrite.{deleteRecursively, parquetRowCount, parquetRow
   * per-file partition tuples in the manifests — exactly how Iceberg
   * represents Hive-migrated tables. The reader applies the spec's Column
   * Projection rule: an identity-partitioned column physically absent from
-  * the parquet is reconstructed from the manifest tuple via one broadcast
-  * file->tuple join (O(files) metadata, no per-partition plan growth).
+  * the parquet is reconstructed from the manifest tuple as a per-file
+  * scan constant (O(files) metadata, no per-partition plan growth).
   *
   * Reader scope, enforced loudly (misreading an advanced table is
   * corruption, not compatibility): format-version 1-2; data content only
@@ -1035,10 +1035,6 @@ object IcebergInterop {
     // per-row (file, pos) provenance; the manifest-recorded file_path
     // string rides back in via the O(files) basename map so delete rows
     // reference files EXACTLY as the manifests do
-    val names = dataFiles.map(_.resolved.getFileName.toString)
-    require(names.distinct.size == names.size,
-      s"Iceberg table $path has duplicate data-file names — position " +
-        "deletes cannot be recorded unambiguously; unsupported layout")
     val aliases = renameAliases(meta, path,
       Option(meta.get("current-schema-id")).map(_.asInt))
     val live = readWithIdentityFill(spark, path, meta, schema,
@@ -1056,15 +1052,15 @@ object IcebergInterop {
     val fileMeta = spark.createDataFrame(
       groups.zipWithIndex.flatMap { case ((_, es), gi) =>
         es.map(e => (e.resolved.getFileName.toString, e.uri, gi)) })
-      .toDF("__gdel_file", "__gdel_uri", "__gdel_grp")
+      .toDF(FileSnapshot.FileCol, "__gdel_uri", "__gdel_grp")
     val fileIdPath = new org.apache.spark.sql.types.MetadataBuilder()
       .putLong("parquet.field.id", 2147483546L).build()
     val fileIdPos = new org.apache.spark.sql.types.MetadataBuilder()
       .putLong("parquet.field.id", 2147483545L).build()
     val hits = live.where(predicate)
-      .join(broadcast(fileMeta), Seq("__gdel_file"))
+      .join(broadcast(fileMeta), Seq(FileSnapshot.FileCol))
       .select(col("__gdel_uri").as("file_path", fileIdPath),
-        col("__gdel_pos").cast("long").as("pos", fileIdPos),
+        col(FileSnapshot.PosCol).cast("long").as("pos", fileIdPos),
         col("__gdel_grp"))
 
     // spec-sorted position-delete parquet(s), staged then moved into
@@ -2188,7 +2184,7 @@ object IcebergInterop {
       if (rewriteAll) (dataFiles, Seq.empty[DataEntry])
       else {
         val posTouched: Set[String] = delFrameOpt.map(
-          _.select("__gdel_file").distinct()
+          _.select(FileSnapshot.FileCol).distinct()
             .collect().map(_.getString(0)).toSet).getOrElse(Set.empty)
         val eqTouched: Set[String] =
           if (eqDeletes.isEmpty) Set.empty
@@ -3449,9 +3445,7 @@ object IcebergInterop {
           val cur = Option(meta.get("current-snapshot-id")).map(_.asLong)
             .filter(_ != -1L)
           cur.flatMap(c => snaps.find(_.get("snapshot-id").asLong == c))
-            .getOrElse(return spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              currentSparkSchema(meta, path)))
+            .getOrElse(return FileSnapshot.empty(spark, currentSparkSchema(meta, path)))
       }
     }
 
@@ -3501,17 +3495,17 @@ object IcebergInterop {
       if (rangePreds.isEmpty) keptByTuple
       else {
         val nameToId = schemaFieldIdToName(meta, path).map(_.swap)
-        keptByTuple.filter { e =>
-          rangePreds.forall { case (c, lo, hi) =>
-            (for {
-              id <- nameToId.get(c)
-              f  <- schema.fields.find(_.name == c)
-              b  <- e.bounds.get(id)
-              mn <- boundDouble(f.dataType, b._1)
-              mx <- boundDouble(f.dataType, b._2)
-            } yield mx >= lo && mn <= hi).getOrElse(true)
-          }
-        }
+        def boundsOf(e: DataEntry): Map[String, (Double, Double)] =
+          rangePreds.map(_._1).distinct.flatMap(c => for {
+            id <- nameToId.get(c)
+            f  <- schema.fields.find(_.name == c)
+            b  <- e.bounds.get(id)
+            mn <- boundDouble(f.dataType, b._1)
+            mx <- boundDouble(f.dataType, b._2)
+          } yield c -> (mn, mx)).toMap
+        val keep = FileSnapshot.prune(keptByTuple.map(e =>
+          FileSnapshot.DataFile(e.resolved, bounds = boundsOf(e))), rangePreds).map(_.path).toSet
+        keptByTuple.filter(e => keep(e.resolved))
       }
     // partition-scoped DELETE files prune with the data: a delete file of
     // partition P applies only to P's data files, so when every file of P
@@ -3530,8 +3524,7 @@ object IcebergInterop {
         }
     }
 
-    if (kept.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    if (kept.isEmpty) FileSnapshot.empty(spark, schema)
     else readWithIdentityFill(spark, path, meta, schema,
       kept.map(e => (e.resolved, e.partition)),
       positionDeleteFrame(spark, path, kept, keptDeletes),
@@ -3611,8 +3604,7 @@ object IcebergInterop {
       StructField("_change_type", StringType, nullable = false) :+
       StructField("_change_ordinal", LongType, nullable = false) :+
       StructField("_commit_snapshot_id", LongType, nullable = false))
-    def empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
+    def empty = FileSnapshot.empty(spark, outSchema)
     val snaps = Option(meta.get("snapshots"))
       .map(_.elements().asScala.toSeq).getOrElse(Seq.empty)
     val byId = snaps.map(s => s.get("snapshot-id").asLong -> s).toMap
@@ -3672,12 +3664,12 @@ object IcebergInterop {
             // a PARTITION-SCOPED delete kills only inside its partition —
             // the provenance file anchors the scope, same as the live read
             val cond = if (spec.scoped)
-              cond0 && surv("__gdel_file") === spec.frame("__geq_file")
+              cond0 && surv(FileSnapshot.FileCol) === spec.frame("__geq_file")
             else cond0
             surv = surv.join(spec.frame, cond, "left_anti")
           }
-          Some(pl.join(surv.select(col("__gdel_file"), col("__gdel_pos")),
-              Seq("__gdel_file", "__gdel_pos"), "left_anti")
+          Some(pl.join(surv.select(col(FileSnapshot.FileCol), col(FileSnapshot.PosCol)),
+              Seq(FileSnapshot.FileCol, FileSnapshot.PosCol), "left_anti")
             .select(schema.fields.map(f => col(f.name)).toIndexedSeq: _*))
         }
       def stamp(df: DataFrame, kind: String): DataFrame = df
@@ -3726,9 +3718,9 @@ object IcebergInterop {
             // required empty above)
             val delF = positionDeleteFrame(spark, path, cData, pPos)
               .map(parentDead => delF0.join(parentDead,
-                Seq("__gdel_file", "__gdel_pos"), "left_anti"))
+                Seq(FileSnapshot.FileCol, FileSnapshot.PosCol), "left_anti"))
               .getOrElse(delF0)
-            val touched = delF.select("__gdel_file").distinct()
+            val touched = delF.select(FileSnapshot.FileCol).distinct()
               .collect().map(_.getString(0)).toSet
             val touchedEntries = cData.filter(e =>
               touched.contains(e.resolved.getFileName.toString))
@@ -4024,10 +4016,8 @@ object IcebergInterop {
           s"missing: ${d.resolved} — the table metadata is corrupt/vacuumed; " +
           "cannot read without silently resurrecting deleted rows")
     }
-    val names = kept.map(_.resolved.getFileName.toString)
-    require(names.distinct.size == names.size,
-      s"Iceberg table $path has duplicate data-file names — position " +
-        "deletes cannot be applied unambiguously; unsupported layout")
+    FileSnapshot.requireUniqueNames(kept.map(_.resolved.getFileName.toString),
+      s"Iceberg table $path")
     // delete rows reference data files by their MANIFEST-recorded URI, so
     // the translation keys on that URI's basename (round-10 hardening
     // sweep: resolving first and keying on the decoded filesystem name
@@ -4052,15 +4042,15 @@ object IcebergInterop {
     val dataSeqDf = spark.createDataFrame(
       kept.map(e => (e.uri.split('/').last,
         e.resolved.getFileName.toString, e.seq)))
-      .toDF("__gdel_uriname", "__gdel_file", "__gdel_dseq")
+      .toDF("__gdel_uriname", FileSnapshot.FileCol, "__gdel_dseq")
     Some(raw
       .select(substring_index(col("file_path"), "/", -1).as("__gdel_uriname"),
-        col("pos").cast("long").as("__gdel_pos"),
+        col("pos").cast("long").as(FileSnapshot.PosCol),
         col("_metadata.file_name").as("__gdel_src"))
       .join(broadcast(delSeqDf), Seq("__gdel_src"))
       .join(broadcast(dataSeqDf), Seq("__gdel_uriname"))
       .where(col("__gdel_seq") >= col("__gdel_dseq"))
-      .select(col("__gdel_file"), col("__gdel_pos")))
+      .select(col(FileSnapshot.FileCol), col(FileSnapshot.PosCol)))
   }
 
   /** Avro partition value → the external value [[readIcebergPruned]]'s
@@ -4230,8 +4220,7 @@ object IcebergInterop {
       .getOrElse(throw new IllegalArgumentException(
         s"Iceberg table $path has no current snapshot — nothing to consume"))
     if (sinceSnapshotId == cur)
-      return (cur, spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
+      return (cur, FileSnapshot.empty(spark, schema))
 
     // file + delete sets of one snapshot via its manifests. Deletes that
     // PREDATE the consumed range are fine: every delete applies only to
@@ -4285,8 +4274,7 @@ object IcebergInterop {
       parentSet = cs
     }
     if (newFiles.isEmpty)
-      return (cur, spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
+      return (cur, FileSnapshot.empty(spark, schema))
     // keys are resolved filesystem paths (resolveUri output), not URIs;
     // a consumed range can span a RENAME (files appended before it carry
     // the old physical name), so the alias resolution rides along
@@ -4296,16 +4284,8 @@ object IcebergInterop {
         Option(meta.get("current-schema-id")).map(_.asInt))))
   }
 
-  /** Scan the data files with `schema`, reconstructing identity-partitioned
-    * columns that are PHYSICALLY ABSENT from the parquet (a Hive-migrated
-    * layout, and what [[exportIceberg]] writes for a partitioned TxTable)
-    * from the manifests' per-file partition tuples — the Iceberg spec's
-    * "Column Projection" rule. The fill is ONE scan plus a broadcast join
-    * of a file-name -> tuple map (O(files) driver metadata, the same scale
-    * class as the manifests themselves), never a per-partition union, so
-    * the plan does not grow with partition count. */
-  /** Chain the equality-delete anti-joins onto a scan that carries a
-    * `__gdel_file` basename column: each group's condition is null-safe
+  /** Chain the equality-delete anti-joins onto a scan that carries the
+    * [[FileSnapshot.FileCol]] basename column: each group's condition is null-safe
     * equality on every equality column AND a STRICTLY newer delete
     * sequence than the row's data file (the spec's rule — re-ingested
     * keys survive). The per-file sequence map is O(files) broadcast; the
@@ -4314,31 +4294,33 @@ object IcebergInterop {
       eqSpecs: Seq[EqDeleteSpec], dataSeqs: Seq[(String, Long)]): DataFrame = {
     if (eqSpecs.isEmpty) return df0
     import org.apache.spark.sql.functions.{broadcast, col}
-    // the (basename -> sequence) translation joins on `_metadata
-    // .file_name`, so duplicate data-file basenames would silently
-    // MULTIPLY rows (each row matching several sequence entries) — the
-    // same uniqueness positionDeleteFrame already demands, enforced
-    // loudly here for equality deletes too (a foreign layout may nest
-    // identical part names under different partition dirs)
-    require(dataSeqs.map(_._1).distinct.size == dataSeqs.size,
-      "Iceberg table has duplicate data-file names — equality deletes " +
-        "cannot be applied unambiguously; unsupported layout")
+    // the (basename -> sequence) translation joins on the scan's
+    // provenance basename, whose uniqueness FileSnapshot.scan enforces
     val seqDf = spark.createDataFrame(dataSeqs)
-      .toDF("__gdel_file", "__geq_dseq")
-    var df = df0.join(broadcast(seqDf), Seq("__gdel_file"))
+      .toDF(FileSnapshot.FileCol, "__geq_dseq")
+    var df = df0.join(broadcast(seqDf), Seq(FileSnapshot.FileCol))
     eqSpecs.foreach { spec =>
       val cond0 = spec.cols.map(c => col(c) <=> spec.frame(s"__geq_$c"))
         .reduce(_ && _) && spec.frame("__geq_seq") > col("__geq_dseq")
       // a partition-scoped delete row reaches only the data files of its
       // partition (the pairs pre-joined into the frame)
       val cond = if (spec.scoped)
-        cond0 && col("__gdel_file") === spec.frame("__geq_file")
+        cond0 && col(FileSnapshot.FileCol) === spec.frame("__geq_file")
       else cond0
       df = df.join(spec.frame, cond, "left_anti")
     }
     df.drop("__geq_dseq")
   }
 
+  /** Scan the data files with `schema`, reconstructing identity-partitioned
+    * columns that are PHYSICALLY ABSENT from the parquet (a Hive-migrated
+    * layout, and what [[exportIceberg]] writes for a partitioned TxTable)
+    * from the manifests' per-file partition tuples — the Iceberg spec's
+    * "Column Projection" rule — through [[FileSnapshot.scan]]: ONE scan
+    * whose file listing carries each file's tuple (O(files) driver
+    * metadata, the same scale class as the manifests themselves), never a
+    * per-partition union, so the plan does not grow with partition
+    * count. */
   private def readWithIdentityFill(spark: SparkSession, path: String,
       meta: JsonNode, schema: StructType,
       dataFiles: Seq[(Path, GenericRecord)],
@@ -4348,48 +4330,35 @@ object IcebergInterop {
       aliases: Map[String, Seq[String]] = Map.empty,
       provenance: Boolean = false,
       keepMatching: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
     // keepMatching flips the position-delete anti-join to a SEMI join —
     // the changelog's "which rows did this delete kill" resolution, with
     // the identity fill and rename aliases riding along; it composes
     // with position deletes only
     require(!keepMatching || eqSpecs.isEmpty,
       "keepMatching composes with position deletes only")
-    val uris = dataFiles.map(_._1.toString)
     // RENAMED columns ([[renameAliases]]): the scan requests the read
     // name AND every historic physical name side by side (Spark fills
     // the per-file absent ones with null — a file carries at most one),
-    // and the final projection coalesces — field-id resolution without
-    // per-file schema dispatch, preserving the single-scan plan
-    def withAliases(s: StructType): StructType = aliasedScanSchema(s, aliases)
-    def readCol(f: StructField): org.apache.spark.sql.Column = aliasCol(f, aliases)
-    // position deletes apply to the RAW scan by (file basename, row index)
-    // anti-join — `_metadata.row_index` is the in-file position the spec's
-    // delete rows reference, the same mechanism Spark's own Delta/Iceberg
-    // connectors use — and equality deletes chain after them on the same
-    // provenance column. Delete-free tables skip this wholesale.
-    // whether masked() computes provenance columns — after its joins
-    // `_metadata` is no longer resolvable, so the identity-fill join
-    // below must reuse `__gdel_file` instead
-    val hasProv = deletes.nonEmpty || eqSpecs.nonEmpty || provenance
-    def masked(scan: DataFrame): DataFrame = {
-      if (!hasProv) return scan
-      val withProv = scan
-        .withColumn("__gdel_file", col("_metadata.file_name"))
-        .withColumn("__gdel_pos", col("_metadata.row_index"))
-      val afterPos = deletes
-        .map(d => withProv.join(d, Seq("__gdel_file", "__gdel_pos"),
-          if (keepMatching) "left_semi" else "left_anti"))
-        .getOrElse(withProv)
-      val out = applyEqDeletes(spark, afterPos, eqSpecs, dataSeqs)
-      // __gdel_file stays for the fill join; the final selects drop it
-      if (provenance) out else out.drop("__gdel_pos")
+    // and the projection coalesces — field-id resolution without
+    // per-file schema dispatch, preserving the single-scan plan.
+    // Position deletes mask the raw scan by (file basename, row index),
+    // the in-file position the spec's delete rows reference, and
+    // equality deletes chain after them on the same provenance column.
+    def scan(fill: Seq[StructField], partition: ((Path, GenericRecord), StructField) => Any) = {
+      val out = FileSnapshot.scan(spark,
+        dataFiles.map(d => FileSnapshot.DataFile(d._1, fill.map(f => f.name -> partition(d, f)).toMap)),
+        schema, s"Iceberg table $path", fill = fill.map(_.name),
+        physical = f => aliasedScanSchema(StructType(Seq(f)), aliases).fields.toSeq,
+        project = aliasCol(_, aliases), positions = deletes, keepPositions = keepMatching,
+        provenance = provenance || eqSpecs.nonEmpty)
+      val masked = applyEqDeletes(spark, out, eqSpecs, dataSeqs)
+      if (provenance || eqSpecs.isEmpty) masked
+      else masked.drop(FileSnapshot.FileCol, FileSnapshot.PosCol)
     }
-    // equality columns must be PHYSICALLY in the data files: the explicit
-    // schema read fills absent (identity-partitioned) columns with null at
-    // scan level, so an anti-join there would silently match nothing —
-    // refuse instead of resurrecting rows (one footer probe; mixed
-    // layouts are refused further down regardless)
+    // equality columns must be PHYSICALLY in the data files, the rule
+    // the key-delete writer enforces too: refuse a foreign table that
+    // keys on an identity-filled column (one footer probe; mixed layouts
+    // are refused further down regardless)
     if (eqSpecs.nonEmpty) {
       // an equality-delete column that was RENAMED anchors its anti-join
       // at the scan under the READ name, which is null for any file still
@@ -4412,13 +4381,9 @@ object IcebergInterop {
       val probe = parquetTopLevelCols(spark, dataFiles.head._1)
       eqCols.foreach(c => require(probe.contains(c),
         s"Iceberg table $path equality-deletes on column '$c', which is not " +
-          "physically present in the data files — this reader anchors " +
-          "equality deletes at the scan, before the identity fill; unreadable"))
+          "physically present in the data files — this reader keys " +
+          "equality deletes on physical columns only; unreadable"))
     }
-    val provCols =
-      if (provenance) Seq(col("__gdel_file"), col("__gdel_pos")) else Seq.empty
-    val plain = masked(spark.read.schema(withAliases(schema)).parquet(uris: _*))
-      .select((schema.fields.map(readCol) ++ provCols).toIndexedSeq: _*)
     val specIdentity = targetSpecIdentityFields(meta, path) // (specField, sourceCol)
     val srcToSpec = specIdentity.map { case (fn, src) => src -> fn }.toMap
     // presence is probed on EVERY footer (O(files) — the same scale class as
@@ -4473,7 +4438,7 @@ object IcebergInterop {
       cols.contains(f.name) ||
         aliases.getOrElse(f.name, Seq.empty).exists(cols.contains)
     val missing = schema.fields.filter(f => !physPresent(footerCols, f))
-    if (missing.isEmpty) return plain
+    if (missing.isEmpty) return scan(Seq.empty, (_, _) => null)
     val fillable = missing.filter(f => srcToSpec.contains(f.name))
     val leftover = missing.filterNot(f => srcToSpec.contains(f.name))
     // a nullable column absent from old files is ordinary schema evolution
@@ -4482,41 +4447,20 @@ object IcebergInterop {
     require(leftover.forall(_.nullable),
       s"Iceberg table $path data files lack required non-partition column(s) " +
         s"${leftover.filterNot(_.nullable).map(_.name).mkString(",")} — unreadable")
-    if (fillable.isEmpty) return plain
-
-    val names = dataFiles.map(_._1.getFileName.toString)
-    require(names.distinct.size == names.size,
-      s"Iceberg table $path has duplicate data-file names across partitions " +
-        "— the identity-fill join would be ambiguous; unsupported layout")
-    val rows: Seq[org.apache.spark.sql.Row] = dataFiles.map { case (p, rec) =>
-      org.apache.spark.sql.Row.fromSeq(p.getFileName.toString +: fillable.toSeq.map { f =>
-        val specField = srcToSpec(f.name)
-        require(rec != null && rec.getSchema.getField(specField) != null,
-          s"Iceberg table $path manifest entry for $p carries no partition " +
-            s"value '$specField' — cannot reconstruct column '${f.name}'")
-        // a tuple whose Avro type contradicts the schema column is a
-        // corrupt/foreign-spec manifest — name the file and column instead
-        // of surfacing a bare ClassCastException (round-9 hardening sweep)
-        try sparkPartValue(rec.get(specField), f.dataType, path)
-        catch { case e: ClassCastException => throw new IllegalArgumentException(
-          s"Iceberg table $path manifest partition value '$specField' for " +
-            s"$p cannot fill column '${f.name}' (${f.dataType}) — " +
-            "type-incompatible manifest tuple; repair the manifests", e) }
-      })
-    }
-    val tupleDf = spark.createDataFrame(rows.asJava,
-      StructType(StructField("__graft_pfile", StringType, nullable = false) +:
-        fillable.map(_.copy())))
-    val dataSchema = StructType(
-      schema.fields.filterNot(f => fillable.exists(_.name == f.name)))
-    val maskedScan = masked(spark.read.schema(withAliases(dataSchema)).parquet(uris: _*))
-    maskedScan
-      .withColumn("__graft_pfile",
-        if (hasProv) col("__gdel_file") else col("_metadata.file_name"))
-      .join(broadcast(tupleDf), Seq("__graft_pfile"))
-      .select((schema.fields.map(f =>
-        if (fillable.exists(_.name == f.name)) col(f.name) else readCol(f))
-        ++ provCols).toIndexedSeq: _*)
+    scan(fillable.toSeq, { case ((p, rec), f) =>
+      val specField = srcToSpec(f.name)
+      require(rec != null && rec.getSchema.getField(specField) != null,
+        s"Iceberg table $path manifest entry for $p carries no partition " +
+          s"value '$specField' — cannot reconstruct column '${f.name}'")
+      // a tuple whose Avro type contradicts the schema column is a
+      // corrupt/foreign-spec manifest — name the file and column instead
+      // of surfacing a bare ClassCastException (round-9 hardening sweep)
+      try sparkPartValue(rec.get(specField), f.dataType, path)
+      catch { case e: ClassCastException => throw new IllegalArgumentException(
+        s"Iceberg table $path manifest partition value '$specField' for " +
+          s"$p cannot fill column '${f.name}' (${f.dataType}) — " +
+          "type-incompatible manifest tuple; repair the manifests", e) }
+    })
   }
 
   /** Avro partition value -> Spark external value for `t`. */

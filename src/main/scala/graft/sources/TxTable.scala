@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Transactional parquet table with an append-only commit log — the
   * engine-level analogue of the reference's mutable dict stores
@@ -339,23 +340,50 @@ class TxTable(val spark: SparkSession, val root: String) {
   private def readSnapshot(upTo: Seq[Commit]): DataFrame =
     readState(snapshotFiles(upTo))
 
-  private def readState(state: Snapshot): DataFrame = {
-    val schema = state.ddl.map(org.apache.spark.sql.types.StructType.fromDDL)
+  private def tableSchema(state: Snapshot): StructType =
+    state.ddl.map(StructType.fromDDL)
       .getOrElse(throw new IllegalStateException(s"no such TxTable: $root"))
-    if (state.files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else
-      // basePath lets partition-directory values (data/<col>=<v>/...)
-      // resolve into their columns; harmless for the flat layout
-      spark.read.schema(schema).option("basePath", dataDir.toString)
-        .parquet(state.files.map(f => dataDir.resolve(f).toString): _*)
+
+  private def readState(state: Snapshot): DataFrame =
+    scanFiles(tableSchema(state), state.files)
+
+  /** `files` (relative to data/) as the shared snapshot model: partition
+    * values from their Hive directories, bounds from the recorded stats. */
+  private def dataFiles(files: Seq[String],
+      stats: Map[String, Seq[FileStats]] = Map.empty): Seq[FileSnapshot.DataFile] =
+    files.map(f => FileSnapshot.DataFile(dataDir.resolve(f),
+      StagedWrite.hivePartitions(f).map { case (c, v) => c -> v.orNull }.toMap,
+      stats.getOrElse(f, Seq.empty).map(s => s.colName -> (s.min, s.max)).toMap))
+
+  /** Scan `files` under `schema`: partition columns fill from the Hive
+    * directories and follow the data columns in directory order, the
+    * column order Hive partition discovery gives. */
+  private def scanFiles(schema: StructType, files: Seq[String],
+      provenance: Boolean = false): DataFrame = {
+    val dirs = files.headOption.toSeq.flatMap(StagedWrite.hivePartitions(_).map(_._1))
+    val parts = dirs.flatMap(p => schema.fieldNames.find(_.equalsIgnoreCase(p)).map(p -> _)).toMap
+    val fill = dirs.flatMap(parts.get)
+    val out = StructType(schema.fields.filterNot(f => fill.contains(f.name)) ++ fill.map(schema(_)))
+    FileSnapshot.scan(spark, dataFiles(files).map(d =>
+        d.copy(partition = d.partition.map { case (c, v) => parts.getOrElse(c, c) -> v })),
+      out, s"TxTable $root", fill = fill, provenance = provenance)
   }
 
-  /** input_file_name()-style URI -> the log's data-file name RELATIVE to
-    * data/ (partition subdirectories included). */
-  private def fileNameOf(uri: String): String =
-    dataDir.toAbsolutePath.normalize
-      .relativize(Paths.get(new java.net.URI(uri)).toAbsolutePath.normalize).toString
+  /** The fields of `schema` named in `cols`: a scan that needs only these
+    * fills no partition column it does not read. */
+  private def only(schema: StructType, cols: Seq[String]): StructType =
+    StructType(schema.filter(f => cols.exists(_.equalsIgnoreCase(f.name))))
+
+  /** Provenance basename -> the log's data-file name relative to data/. */
+  private def byBasename(files: Seq[String]): Map[String, String] =
+    files.map(f => dataDir.resolve(f).getFileName.toString -> f).toMap
+
+  /** The distinct files of `files` a provenance frame's rows came from. */
+  private def filesOf(prov: DataFrame, files: Seq[String]): Seq[String] = {
+    val rel = byBasename(files)
+    prov.select(col(FileSnapshot.FileCol)).distinct()
+      .collect().map(r => rel(r.getString(0))).toSeq
+  }
 
   /** Current snapshot (latest committed version at call time); resolves
     * via the newest log checkpoint + commit tail. */
@@ -573,7 +601,7 @@ class TxTable(val spark: SparkSession, val root: String) {
     val files = stageDataFiles(df, layout)
     commitLoop("append", files, Seq.empty, tsMillis, Some(commitDdl),
       schemaEveryCommit = evolved,
-      stats = computeStats(files, {
+      stats = computeStats(df.schema, files, {
         // inherit the table's active stats columns (same rule as blooms)
         // so appends omitting statsCol don't punch stats-less holes in an
         // established skipping index; guard on df.columns like blooms do
@@ -581,7 +609,7 @@ class TxTable(val spark: SparkSession, val root: String) {
         (statsCol.toSeq ++ statsCols ++ inherited).distinct.filter(hasColumn(df, _))
       }),
       partCols = layout,
-      blooms = computeBlooms(files, {
+      blooms = computeBlooms(df.schema, files, {
         // inherit the table's active bloom columns so later appends keep
         // the index dense without re-declaring it (same rule as layout)
         val inherited = snap0.map(activeBloomCols).getOrElse(Seq.empty)
@@ -628,15 +656,16 @@ class TxTable(val spark: SparkSession, val root: String) {
     cols
   }
 
-  private def computeStats(files: Seq[String], cols0: Seq[String]): Map[String, Seq[FileStats]] = {
+  private def computeStats(schema: StructType, files: Seq[String],
+      cols0: Seq[String]): Map[String, Seq[FileStats]] = {
     val cols = requireCleanCols(cols0)
     if (files.isEmpty || cols.isEmpty) Map.empty
     else {
       val aggs = cols.flatMap(c => Seq(
         min(col(c).cast("double")), max(col(c).cast("double"))))
-      spark.read.option("basePath", dataDir.toString)
-        .parquet(files.map(f => dataDir.resolve(f).toString): _*)
-        .groupBy(input_file_name().as("__f"))
+      val rel = byBasename(files)
+      scanFiles(only(schema, cols), files, provenance = true)
+        .groupBy(col(FileSnapshot.FileCol))
         .agg(aggs.head, aggs.tail: _*)
         .collect()
         .map { r =>
@@ -649,7 +678,7 @@ class TxTable(val spark: SparkSession, val root: String) {
             if (r.isNullAt(mnI) || r.getDouble(mnI).isNaN || r.getDouble(mxI).isNaN) None
             else Some(FileStats(c, r.getDouble(mnI), r.getDouble(mxI)))
           }
-          fileNameOf(r.getString(0)) -> sts
+          rel(r.getString(0)) -> sts
         }.filter(_._2.nonEmpty).toMap
     }
   }
@@ -679,16 +708,17 @@ class TxTable(val spark: SparkSession, val root: String) {
     * ALL bloom columns (a scan per column made the commit cost grow with
     * the index width; with the stats scan the write path is now exactly
     * two passes over fresh data regardless of how many columns index). */
-  private def computeBlooms(files: Seq[String], cols0: Seq[String]): Map[String, Seq[FileBloom]] = {
+  private def computeBlooms(schema: StructType, files: Seq[String],
+      cols0: Seq[String]): Map[String, Seq[FileBloom]] = {
     val cols = requireCleanCols(cols0)
     if (files.isEmpty || cols.isEmpty) Map.empty
     else {
       import spark.implicits._
       val (m, k) = (bloomBits, bloomHashes)
       val colsIdx = cols.toIndexedSeq
-      spark.read.option("basePath", dataDir.toString)
-        .parquet(files.map(f => dataDir.resolve(f).toString): _*)
-        .select(input_file_name().as("f"),
+      val rel = byBasename(files)
+      scanFiles(only(schema, cols), files, provenance = true)
+        .select(col(FileSnapshot.FileCol),
           array(colsIdx.map(c => xxhash64(col(c).cast("string"))): _*).as("hs"))
         .as[(String, Seq[Long])]
         .flatMap { case (f, hs) =>
@@ -700,10 +730,10 @@ class TxTable(val spark: SparkSession, val root: String) {
         .collect()
         .groupBy(t => (t._1, t._2))
         .toSeq // NOT a Map transform: one file carries one bloom PER column
-        .map { case ((furi, ci), arr) =>
+        .map { case ((name, ci), arr) =>
           val bits = new Array[Long](m >> 6)
           arr.foreach { case (_, _, p) => bits(p >> 6) |= 1L << (p & 63) }
-          fileNameOf(furi) -> FileBloom(colsIdx(ci), m, k, bits)
+          rel(name) -> FileBloom(colsIdx(ci), m, k, bits)
         }
         .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
     }
@@ -723,22 +753,23 @@ class TxTable(val spark: SparkSession, val root: String) {
     require(commitFiles().nonEmpty, s"no such TxTable: $root")
     val snap = stateForVersion(Long.MaxValue)
     val hashes = values.map(TxTable.queryHash)
-    val kept = snap.files.filter { f =>
-      val partOk = partValueOf(f, colName).forall(values.contains)
-      partOk && (snap.blooms.getOrElse(f, Seq.empty).find(_.colName == colName) match {
+    val kept = partitionsAdmit(snap.files, colName, values.toSet).filter { f =>
+      snap.blooms.getOrElse(f, Seq.empty).find(_.colName == colName) match {
         case Some(b) => hashes.exists(b.mightContain)
         case None => true
-      })
+      }
     }
     readState(snap.copy(files = kept))
   }
 
-  /** The `colName=` partition value of a relative file path, if the file
-    * sits under such a directory — unescaped to the logical value; the
-    * null-partition sentinel yields None (no pruning evidence, so the file
-    * is conservatively scanned). */
-  private def partValueOf(relFile: String, colName: String): Option[String] =
-    StagedWrite.hivePartitions(relFile).collectFirst { case (c, v) if c == colName => v }.flatten
+  /** The files of `files` whose `colName` partition value is in `values`;
+    * a file without one (not under a `colName=` directory, or in the null
+    * partition) is no pruning evidence and is kept. */
+  private def partitionsAdmit(files: Seq[String], colName: String,
+      values: Set[String]): Seq[String] =
+    files.zip(dataFiles(files)).collect {
+      case (f, d) if d.partition.get(colName).flatMap(Option(_)).forall(v => values(v.toString)) => f
+    }
 
   /** Data-skipping snapshot read: scan only live files whose recorded
     * [min, max] range for `colName` intersects [lo, hi]; files without
@@ -762,21 +793,8 @@ class TxTable(val spark: SparkSession, val root: String) {
   def readWhereAll(preds: Seq[(String, Double, Double)]): DataFrame = {
     require(commitFiles().nonEmpty, s"no such TxTable: $root")
     val snap = stateForVersion(Long.MaxValue)
-    val kept = snap.files.filter { f =>
-      preds.forall { case (colName, lo, hi) =>
-        // 1) partition-DIRECTORY pruning (coarsest, free — no stats needed):
-        //    numeric partition values outside [lo, hi] skip the whole file
-        val partOk = partValueOf(f, colName) match {
-          case Some(v) => v.toDoubleOption.forall(d => d >= lo && d <= hi)
-          case None => true
-        }
-        // 2) per-file min/max data skipping (finer), as before
-        partOk && (snap.stats.getOrElse(f, Seq.empty).find(_.colName == colName) match {
-          case Some(FileStats(_, mn, mx)) => mx >= lo && mn <= hi
-          case None => true
-        })
-      }
-    }
+    val kept = FileSnapshot.prune(dataFiles(snap.files, snap.stats), preds)
+      .map(d => dataDir.relativize(d.path).toString)
     readState(snap.copy(files = kept))
   }
 
@@ -787,9 +805,7 @@ class TxTable(val spark: SparkSession, val root: String) {
   def readWherePartition(colName: String, values: Seq[String]): DataFrame = {
     require(commitFiles().nonEmpty, s"no such TxTable: $root")
     val snap = stateForVersion(Long.MaxValue)
-    val want = values.toSet
-    val kept = snap.files.filter(f => partValueOf(f, colName).forall(want.contains))
-    readState(snap.copy(files = kept))
+    readState(snap.copy(files = partitionsAdmit(snap.files, colName, values.toSet)))
   }
 
   /** Atomic full replace: one commit removes every live file and adds the
@@ -814,7 +830,7 @@ class TxTable(val spark: SparkSession, val root: String) {
     val newFiles = stageDataFiles(df, layout)
     commitLoop("overwrite", newFiles, snap.files, tsMillis, Some(df.schema.toDDL),
       schemaEveryCommit = true, // overwrite may evolve the table schema
-      stats = computeStats(newFiles, {
+      stats = computeStats(df.schema, newFiles, {
         val chosen = (statsCol.toSeq ++ statsCols).distinct
         // inherited stats columns must survive the schema evolution (same
         // guard as partCols above) — an overwrite that drops an indexed
@@ -823,7 +839,7 @@ class TxTable(val spark: SparkSession, val root: String) {
         else activeStatsCols(snap).filter(hasColumn(df, _))
       }),
       partCols = layout,
-      blooms = computeBlooms(newFiles, {
+      blooms = computeBlooms(df.schema, newFiles, {
         val chosen = bloomCols.distinct
         if (chosen.nonEmpty) chosen
         else activeBloomCols(snap).filter(hasColumn(df, _))
@@ -857,23 +873,12 @@ class TxTable(val spark: SparkSession, val root: String) {
     val baseVersion = latestVersion() // read BEFORE the state: a commit in
     // between makes validate fail (spurious abort), never a silent anomaly
     val state = stateForVersion(Long.MaxValue)
-    val snapDf = readState(state) // one resolution: schema + scan share it
-    val snap = snapDf.withColumn("__file", input_file_name())
     val u = updates.cache()
 
     // file-granularity pruning: only files holding a matched key rewrite
-    val affected = snap
-      .join(broadcast(u.select(keys.map(col): _*).distinct()), keys, "left_semi")
-      .select(col("__file")).distinct()
-      .collect().map(r => fileNameOf(r.getString(0))).toSeq
-
-    val base = if (affected.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        snapDf.schema)
-    else
-      spark.read.schema(snapDf.schema)
-        .option("basePath", dataDir.toString) // partition dirs -> columns
-        .parquet(affected.map(f => dataDir.resolve(f).toString): _*)
+    val affected = filesOf(scanFiles(only(tableSchema(state), keys), state.files, provenance = true)
+      .join(broadcast(u.select(keys.map(col): _*).distinct()), keys, "left_semi"), state.files)
+    val base = scanFiles(tableSchema(state), affected)
 
     val payload = base.columns.filterNot(c => keys.contains(c) || c == tsCol).toSeq
     val merged = graft.operators.Latest.lwwUpsert(
@@ -886,9 +891,9 @@ class TxTable(val spark: SparkSession, val root: String) {
     commitLoop("merge", newFiles, affected, tsMillis,
       // rewritten files re-record stats on the table's active stats
       // columns, so a merge doesn't punch stats-less holes in the index
-      stats = computeStats(newFiles, activeStatsCols(state)),
+      stats = computeStats(merged.schema, newFiles, activeStatsCols(state)),
       partCols = layout,
-      blooms = computeBlooms(newFiles, activeBloomCols(state)),
+      blooms = computeBlooms(merged.schema, newFiles, activeBloomCols(state)),
       validate = () => latestVersion() == baseVersion,
       txn = txn)
   }
@@ -944,27 +949,19 @@ class TxTable(val spark: SparkSession, val root: String) {
     val touchKeys = broadcast(touchKeys0)
     def touchCond(left: DataFrame): org.apache.spark.sql.Column =
       keys.map(c => left(c) <=> touchKeys(s"__gtk_$c")).reduce(_ && _)
-    val snapDf = state.map(readState)
-    val affected: Seq[String] = snapDf match {
-      case None => Seq.empty
-      case Some(df) =>
-        val withFile = df.withColumn("__file", input_file_name())
-        withFile
-          .join(touchKeys, touchCond(withFile), "left_semi")
-          .select(col("__file")).distinct()
-          .collect().map(r => fileNameOf(r.getString(0))).toSeq
+    val affected: Seq[String] = state.fold(Seq.empty[String]) { st =>
+      val prov = scanFiles(only(tableSchema(st), keys), st.files, provenance = true)
+      filesOf(prov.join(touchKeys, touchCond(prov), "left_semi"), st.files)
     }
     // survivors = untouched rows of the affected files; every touched key
     // (deleted OR replaced) leaves, then the upserts land
-    val out = snapDf match {
-      case Some(df) if affected.nonEmpty =>
-        val base = spark.read.schema(df.schema)
-          .option("basePath", dataDir.toString)
-          .parquet(affected.map(f => dataDir.resolve(f).toString): _*)
-        base.join(touchKeys, touchCond(base), "left_anti")
-          .unionByName(up.select(df.columns.map(col).toIndexedSeq: _*))
-      case Some(df) => up.select(df.columns.map(col).toIndexedSeq: _*)
-      case None     => up
+    val out = state match {
+      case Some(st) =>
+        val base = scanFiles(tableSchema(st), affected)
+        val ups = up.select(base.columns.map(col).toIndexedSeq: _*)
+        if (affected.isEmpty) ups
+        else base.join(touchKeys, touchCond(base), "left_anti").unionByName(ups)
+      case None => up
     }
     val layout = state.map(_.partCols).getOrElse(Seq.empty)
     val newFiles = stageDataFiles(out, layout)
@@ -972,9 +969,9 @@ class TxTable(val spark: SparkSession, val root: String) {
     touchKeys0.unpersist()
     commitLoop("cdc", newFiles, affected, tsMillis,
       schemaDdl = Some(out.schema.toDDL),
-      stats = computeStats(newFiles, state.map(activeStatsCols).getOrElse(Seq.empty)),
+      stats = computeStats(out.schema, newFiles, state.map(activeStatsCols).getOrElse(Seq.empty)),
       partCols = layout,
-      blooms = computeBlooms(newFiles, state.map(activeBloomCols).getOrElse(Seq.empty)),
+      blooms = computeBlooms(out.schema, newFiles, state.map(activeBloomCols).getOrElse(Seq.empty)),
       validate = () => latestVersion() == baseVersion,
       txn = txn)
   }
@@ -1075,23 +1072,19 @@ class TxTable(val spark: SparkSession, val root: String) {
   def delete(predicate: Column, tsMillis: Long = System.currentTimeMillis()): Long = {
     val baseVersion = latestVersion()
     val state = stateForVersion(Long.MaxValue)
-    val snap = readState(state).withColumn("__file", input_file_name())
-    val affected = snap.where(predicate)
-      .select(col("__file")).distinct()
-      .collect().map(r => fileNameOf(r.getString(0))).toSeq
+    val affected = filesOf(scanFiles(tableSchema(state), state.files, provenance = true)
+      .where(predicate), state.files)
     if (affected.isEmpty) return version() // nothing matches: no-op, no commit
 
-    val survivors = spark.read.schema(readState(state).schema)
-      .option("basePath", dataDir.toString)
-      .parquet(affected.map(f => dataDir.resolve(f).toString): _*)
+    val survivors = scanFiles(tableSchema(state), affected)
       .where(!coalesce(predicate, lit(false)))
 
     val layout = state.partCols
     val newFiles = stageDataFiles(survivors, layout)
     commitLoop("delete", newFiles, affected, tsMillis,
-      stats = computeStats(newFiles, activeStatsCols(state)),
+      stats = computeStats(survivors.schema, newFiles, activeStatsCols(state)),
       partCols = layout,
-      blooms = computeBlooms(newFiles, activeBloomCols(state)),
+      blooms = computeBlooms(survivors.schema, newFiles, activeBloomCols(state)),
       validate = () => latestVersion() == baseVersion)
   }
 
@@ -1126,14 +1119,15 @@ class TxTable(val spark: SparkSession, val root: String) {
     // partitions across that many tasks — a flat coalesce would be
     // silently overridden by the partition-value clustering)
     val layout = state.partCols
+    val df = readState(state)
     val compacted =
-      if (layout.isEmpty) stageDataFiles(readState(state).coalesce(target))
-      else stageDataFiles(readState(state), layout, filesPerPartition = target)
+      if (layout.isEmpty) stageDataFiles(df.coalesce(target))
+      else stageDataFiles(df, layout, filesPerPartition = target)
     commitLoop("compact", compacted, files, tsMillis,
       // same stats preservation as merge: compaction must not erase skipping
-      stats = computeStats(compacted, activeStatsCols(state)),
+      stats = computeStats(df.schema, compacted, activeStatsCols(state)),
       partCols = layout,
-      blooms = computeBlooms(compacted, activeBloomCols(state)),
+      blooms = computeBlooms(df.schema, compacted, activeBloomCols(state)),
       // re-resolved per attempt: every read file must still be live
       validate = () => {
         val live = stateForVersion(Long.MaxValue).files.toSet
@@ -1207,8 +1201,8 @@ class TxTable(val spark: SparkSession, val root: String) {
       .drop("__zv")
     val staged = stageDataFiles(clustered)
     commitLoop("zorder", staged, files, tsMillis,
-      stats = computeStats(staged, cols),
-      blooms = computeBlooms(staged, activeBloomCols(state)),
+      stats = computeStats(df.schema, staged, cols),
+      blooms = computeBlooms(df.schema, staged, activeBloomCols(state)),
       validate = () => {
         val live = stateForVersion(Long.MaxValue).files.toSet
         files.forall(live.contains)
@@ -1263,8 +1257,8 @@ class TxTable(val spark: SparkSession, val root: String) {
       }
     }
     commitLoop("cluster", staged, files, tsMillis,
-      stats = computeStats(staged, activeStatsCols(state)),
-      blooms = computeBlooms(staged, activeBloomCols(state)),
+      stats = computeStats(df.schema, staged, activeStatsCols(state)),
+      blooms = computeBlooms(df.schema, staged, activeBloomCols(state)),
       validate = () => {
         val live = stateForVersion(Long.MaxValue).files.toSet
         files.forall(live.contains)

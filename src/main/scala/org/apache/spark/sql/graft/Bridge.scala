@@ -20,4 +20,9 @@ object Bridge {
 
   def analyzed(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
+
+  /** `s` with every field, element and value nullable, the schema a file
+    * source scans under (a file may lack a column). */
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
 }

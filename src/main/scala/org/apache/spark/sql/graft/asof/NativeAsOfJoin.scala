@@ -244,8 +244,10 @@ case class AsOfJoinExec(
        """.stripMargin
     }.mkString("\n")
 
+    // the loop stops through shouldStop() alone, as SortMergeJoinExec's
+    // does: Spark reserves limitNotReachedCond for leaf and blocking nodes
     s"""
-       |while ($limitNotReachedCond $leftInput.hasNext()) {
+       |while ($leftInput.hasNext()) {
        |  InternalRow $leftRow = (InternalRow) $leftInput.next();
        |  $numSpine.add(1);
        |  ${lKeys.map(_.code.toString).mkString("\n")}

@@ -135,6 +135,20 @@ class AsOfJoinSpec extends SparkSpec {
     finally spark.conf.set("spark.sql.codegen.wholeStage", prev)
   }
 
+  test("codegen'd as-of join runs under spark.testing, with and without a limit") {
+    // under spark.testing Spark raises an internal error when a node that
+    // is neither a leaf nor blocking calls limitNotReachedCond in its loop
+    val want = rows(AsOfJoin.thetaWindow(genSpine, genFacts, Seq("k"), "sts", "fts", Seq("v"), "tie"))
+    val prev = Option(System.getProperty("spark.testing"))
+    System.setProperty("spark.testing", "true")
+    try {
+      val joined = AsOfJoin.native(genSpine, genFacts, Seq("k"), "sts", "fts", Seq("v"), "tie")
+      assert(rows(joined) == want)
+      val limited = joined.limit(7).collect().map(_.toString).toSeq
+      assert(limited.size == 7 && limited.forall(want.contains), limited.mkString("\n"))
+    } finally prev.fold(System.clearProperty("spark.testing"))(System.setProperty("spark.testing", _))
+  }
+
   test("optimizer rule pushes spine-only filters below the native as-of node") {
     val out = AsOfJoin.native(spine, facts, Seq("k"), "sts", "fts", Seq("v"), "tie")
       .where(col("tag") === "s1")

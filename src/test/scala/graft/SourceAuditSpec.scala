@@ -36,6 +36,20 @@ class SourceAuditSpec extends AnyFunSuite {
     assert(mains == Seq("graft/Bench.scala", "graft/Profile.scala", "graft/Verify.scala"))
   }
 
+  test("only FileSnapshot turns a file list into a frame: fill, row positions, provenance, field ids, range pruning") {
+    val banned = Seq("_metadata.row_index", "input_file_name", "option(\"basePath\"",
+      "fieldId.read.enabled")
+    val tupleJoin = """broadcast\(\w*[Tt]uple""".r
+    // the range rule's overlap test (a bound's hi >= lo and lo <= hi)
+    val overlap = """>=\s*lo\b.*<=\s*hi\b""".r
+    val hits = codeLines.filter { case (f, l) =>
+      f.startsWith("graft/sources/") && f != "graft/sources/FileSnapshot.scala" &&
+        (banned.exists(l.contains) || tupleJoin.findFirstIn(l).nonEmpty ||
+          overlap.findFirstIn(l).nonEmpty)
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   test("SparkSession.builder() is called in exactly one place") {
     val calls = codeLines.filter { case (_, l) =>
       l.contains("SparkSession.builder") || l.startsWith(".builder()")
