@@ -470,15 +470,17 @@ object DeltaInterop {
   /** Stage `frame` inside the table (Hive-partitioned by `partitionBy`,
     * field ids stamped when `fieldIds`) and move its non-empty files to
     * the table-relative names `relOf(file, index)`; returns (rel path,
-    * size, the file's staged partition directories decoded). */
+    * size, the file's staged partition directories decoded) per file, and
+    * the files' rows, from the footers the empty-file filter read. */
   private def writeFiles(root: Path, frame: DataFrame, partitionBy: Seq[String],
       fieldIds: Boolean)(relOf: (StagedWrite.StagedFile, Int) => String)
-      : Seq[(String, Long, Map[String, Option[String]])] =
-    StagedWrite.write(root, frame, partitionBy, fieldIds = fieldIds) {
-      _.nonEmptyFiles.zipWithIndex.map { case (f, i) =>
+      : (Seq[(String, Long, Map[String, Option[String]])], Long) =
+    StagedWrite.write(root, frame, partitionBy, fieldIds = fieldIds) { st =>
+      val files = st.nonEmptyFiles
+      (files.zipWithIndex.map { case (f, i) =>
         val rel = relOf(f, i)
         (rel, f.moveTo(root.resolve(rel)), f.parts.toMap)
-      }
+      }, files.map(_.rows).sum)
     }
 
   /** One acceptance rule for the column-mapping mode (JSON commit and
@@ -1707,7 +1709,7 @@ object DeltaInterop {
           }
         writeFiles(root, changes, grpCol, meta.mapped || meta.idMapped) { (_, i) =>
           StagedWrite.seededName("_change_data/cdc", s"$path|cdc|$cur|$nonce|$i")
-        }.map { case (rel, size, pv) =>
+        }._1.map { case (rel, size, pv) =>
           (rel, size, pv.get("__gcdc_grp").fold(Map.empty[String, Option[String]])(
             g => groups(g.get.toInt)._1))
         }
@@ -1778,15 +1780,13 @@ object DeltaInterop {
     keyCols.foreach(c => require(schema.fieldNames.contains(c),
       s"mergeDelta: key column '$c' is not a table column"))
     val incoming = ordered.localCheckpoint()
-    require(!incoming.isEmpty, "mergeDelta: the incoming frame has no rows")
-    val dupKeys = incoming.groupBy(keyCols.map(col).toIndexedSeq: _*)
-      .count().where(col("count") > 1).count()
-    require(dupKeys == 0L,
-      s"mergeDelta: $dupKeys duplicate key(s) in the incoming frame — " +
-        "MERGE with duplicate source keys is ambiguous; dedupe first")
+    require(StagedWrite.batchHasRows(incoming, keyCols, n =>
+        s"mergeDelta: $n duplicate key(s) in the incoming frame — " +
+          "MERGE with duplicate source keys is ambiguous; dedupe first"),
+      "mergeDelta: the incoming frame has no rows")
+    // the batch check proved the keys distinct
     val keysDf = broadcast(
-      incoming.select(keyCols.map(c => col(c).as(s"__gmk_$c")).toIndexedSeq: _*)
-        .distinct())
+      incoming.select(keyCols.map(c => col(c).as(s"__gmk_$c")).toIndexedSeq: _*))
     def keyCond(left: DataFrame): org.apache.spark.sql.Column =
       keyCols.map(c => left(c) <=> keysDf(s"__gmk_$c")).reduce(_ && _)
 
@@ -1796,8 +1796,10 @@ object DeltaInterop {
     // (file, pos) provenance — these rows take the deletion vectors
     val liveDf = assembleRead(spark, root, schema, meta.partCols, live,
       meta.mappingMode, provenance = true)
-    val matched = liveDf.join(keysDf, keyCond(liveDf), "left_semi")
-      .localCheckpoint()
+    // the change data feed reads the matched rows twice more, so only
+    // then are they pinned; without it one job collects their positions
+    val matched0 = liveDf.join(keysDf, keyCond(liveDf), "left_semi")
+    val matched = if (cdfEnabled) matched0.localCheckpoint() else matched0
     val newBlobs: Seq[(String, Array[Byte], Long)] = matched
       .select(col(FileSnapshot.FileCol), col(FileSnapshot.PosCol))
       .as(Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
@@ -1819,14 +1821,14 @@ object DeltaInterop {
       else Some(DeletionVectors.writeDvFile(root, merged.map(_._2)))
 
     // the incoming rows land as fresh data files — per partition, their
-    // partitionValues derived from the staged Hive layout
-    val newFiles: Seq[(String, Long, Map[String, Option[String]])] =
+    // partitionValues derived from the staged Hive layout; the rows
+    // appended are the staged files' footer counts
+    val (newFiles, appended) =
       writeFiles(root, incoming.select(
           schema.fields.map(f => physWriteCol(f, meta, path)).toIndexedSeq: _*),
         physPartCols, anyMapped) { (f, i) =>
         f.under(StagedWrite.seededName("merge", s"$path|merge|$cur|$nonce|$i"))
       }
-    val appended = incoming.count()
 
     // CHANGE DATA FEED: the full MERGE classification, per partition
     val cdcEntries: Seq[(String, Long, Map[String, Option[String]])] =
@@ -1855,7 +1857,7 @@ object DeltaInterop {
             physWriteCol(f, meta, path)) :+ col("_change_type")).toIndexedSeq: _*),
           physPartCols, anyMapped) { (_, i) =>
           StagedWrite.seededName("_change_data/cdc", s"$path|mergecdc|$cur|$nonce|$i")
-        }
+        }._1
       }
 
     // ---- the commit: protocol (DV + cdf features), cdc actions, the
@@ -1932,7 +1934,7 @@ object DeltaInterop {
     val newFiles: Seq[(String, Long, Map[String, Option[String]])] =
       writeFiles(root, survivors, grpCol, fieldIds = false) { (_, i) =>
         StagedWrite.seededName("compacted/purge", s"$path|v$cur|$nonce|$i")
-      }.map { case (rel, size, pv) =>
+      }._1.map { case (rel, size, pv) =>
         (rel, size, pv.get("__gp_grp").fold(Map.empty[String, Option[String]])(
           g => groups(g.get.toInt)._1))
       }

@@ -1167,7 +1167,7 @@ object IcebergInterop {
       .getOrElse(throw new IllegalArgumentException(
         s"Iceberg table $path current snapshot $curId is missing from the log"))
     val staged = stageEqDelete(spark, root, path, meta, snapNode, schema,
-      keys, prevVersion, tsMillis, "deleteFromIcebergByKey")
+      keys.distinct(), prevVersion, tsMillis, "deleteFromIcebergByKey")
     if (staged.files.isEmpty) { staged.cleanup(); return 0L }
     val nKeys = staged.rows
 
@@ -1253,7 +1253,7 @@ object IcebergInterop {
     if (inPartition.isEmpty) return 0L
     val tupleRec = inPartition.head.partition
     val staged = stageEqDelete(spark, root, path, meta, snapNode, schema,
-      keys, prevVersion, tsMillis, "deleteFromIcebergByKeyScoped",
+      keys.distinct(), prevVersion, tsMillis, "deleteFromIcebergByKeyScoped",
       scoped = true)
     if (staged.files.isEmpty) { staged.cleanup(); return 0L }
     val nKeys = staged.rows
@@ -1374,15 +1374,17 @@ object IcebergInterop {
           (next, Some(next))
       }
 
-    // the spec-shaped equality-delete parquet: distinct keys, field-ids
-    // stamped so foreign readers resolve the columns by id
-    val stamped = keys.distinct().select(keyCols.zip(ids).map { case (c, id) =>
+    // the spec-shaped equality-delete parquet: the caller's distinct keys,
+    // field-ids stamped so foreign readers resolve the columns by id, each
+    // file sorted on its own (a global sort costs a sampling job and a
+    // shuffle)
+    val stamped = keys.select(keyCols.zip(ids).map { case (c, id) =>
       col(c).as(c, new org.apache.spark.sql.types.MetadataBuilder()
         .putLong("parquet.field.id", id.toLong).build())
     }.toIndexedSeq: _*)
     val delDir = root.resolve("data").resolve("deletes")
     val stage = StagedWrite.stage(root,
-      stamped.sort(keyCols.map(col).toIndexedSeq: _*), fieldIds = true)
+      stamped.sortWithinPartitions(keyCols.map(col).toIndexedSeq: _*), fieldIds = true)
     val nonce = java.util.UUID.randomUUID() // per-call names: racing writers never share one
     val planned = try stage.nonEmptyFiles.zipWithIndex.map { case (f, i) =>
         (f, delDir.resolve(StagedWrite.seededName("eqdelete",
@@ -1638,11 +1640,10 @@ object IcebergInterop {
     // same-sequence equality delete, silently breaking the
     // live = latest-per-key contract — refuse loudly before staging
     val incoming = ordered.localCheckpoint()
-    val dupKeys = incoming.groupBy(keyCols.map(col).toIndexedSeq: _*)
-      .count().where(col("count") > 1).count()
-    require(dupKeys == 0L,
-      s"upsertIceberg: $dupKeys duplicate key(s) in the incoming frame — " +
-        "MERGE with duplicate source keys is ambiguous; dedupe first")
+    require(StagedWrite.batchHasRows(incoming, keyCols, n =>
+        s"upsertIceberg: $n duplicate key(s) in the incoming frame — " +
+          "MERGE with duplicate source keys is ambiguous; dedupe first"),
+      "upsertIceberg: the incoming frame has no rows")
     val curId = Option(meta.get("current-snapshot-id")).map(_.asLong)
       .filter(_ != -1L).getOrElse(throw new IllegalArgumentException(
         s"Iceberg table $path has no current snapshot — export first, then merge"))
@@ -1654,7 +1655,7 @@ object IcebergInterop {
 
     val stagedDel = stageEqDelete(spark,
       root, path, meta, snapNode, schema,
-      incoming.select(keyCols.map(col).toIndexedSeq: _*).distinct(),
+      incoming.select(keyCols.map(col).toIndexedSeq: _*), // distinct: checked above
       prevVersion, tsMillis, "upsertIceberg")
     val nKeys = stagedDel.rows
 
@@ -1671,7 +1672,6 @@ object IcebergInterop {
     val dataDir = root.resolve("data")
     val (delWritten, dataWritten) = try {
       writeSpecStage(incoming, schema, specFields, root) { staged =>
-        require(staged.nonEmpty, "upsertIceberg: the incoming frame has no rows")
         val dw = stagedDel.promote()
         (dw, moveStagedInto(staged, dataDir, partFields,
           "upsert", s"$path|v$prevVersion|$tsMillis"))
@@ -3904,7 +3904,8 @@ object IcebergInterop {
 
   /** One equality-delete GROUP ready to apply: the table-schema column
     * names the deletes match on, and the distributed delete-row frame
-    * (renamed `__geq_<col>` columns plus each row's delete sequence). A
+    * (renamed `__geq_<col>` columns plus each row's delete sequence
+    * `__geq_seq`). A
     * data row dies when some delete row null-safe-equals it on every
     * column AND was committed STRICTLY AFTER the data file (the spec's
     * equality-delete rule — rows appended later with the same key
@@ -3969,17 +3970,28 @@ object IcebergInterop {
       .map { case ((ids, scoped), group) =>
         val cols = ids.map(id => idToName.getOrElse(id, throw new IllegalArgumentException(
           s"Iceberg table $path equality delete references unknown field-id $id")))
-        val seqDf = spark.createDataFrame(
-          group.map(e => (e.resolved.getFileName.toString, e.seq)))
-          .toDF("__geq_src", "__geq_seq")
-        val raw = spark.read.parquet(group.map(_.resolved.toString): _*)
-        cols.foreach(c => require(raw.columns.contains(c),
-          s"Iceberg table $path equality-delete file lacks its own column '$c'"))
-        val base = raw
-          .select((cols.map(c => col(c).as(s"__geq_$c")) :+
-            col("_metadata.file_name").as("__geq_src")).toIndexedSeq: _*)
-          .join(broadcast(seqDf), Seq("__geq_src"))
-        if (!scoped) EqDeleteSpec(cols, base.drop("__geq_src"))
+        // the key columns' types come from the delete files' own footers,
+        // read on the driver (no schema-inference job): every file must
+        // carry every key column, and the files must agree on its type
+        val footers = group.map(e => e.resolved -> footerSchema(spark, e.resolved))
+        val keyFields = cols.map { c =>
+          val types = footers.map { case (p, fs) => fs.find(_.name == c).map(_.dataType)
+            .getOrElse(throw new IllegalArgumentException(
+              s"Iceberg table $path equality-delete file ${p.getFileName} lacks its own column '$c'")) }
+          require(types.distinct.size == 1,
+            s"Iceberg table $path equality-delete files disagree on the type of '$c' " +
+              s"(${types.distinct.mkString(", ")}) — unreadable as one group")
+          StructField(c, types.head)
+        }
+        // each file's sequence (and, scoped, its name) is a scan constant
+        val consts = StructField("__geq_seq", LongType) +:
+          (if (scoped) Seq(StructField("__geq_src", StringType)) else Seq.empty)
+        val base = FileSnapshot.scan(spark,
+          group.map(e => FileSnapshot.DataFile(e.resolved,
+            Map("__geq_seq" -> e.seq, "__geq_src" -> e.resolved.getFileName.toString))),
+          StructType(keyFields ++ consts), s"Iceberg table $path", fill = consts.map(_.name),
+          project = f => col(f.name).as(s"__geq_${f.name}"))
+        if (!scoped) EqDeleteSpec(cols, base)
         else {
           val pairs = group.flatMap(scopePairs)
           val pairDf = spark.createDataFrame(pairs)
@@ -4000,16 +4012,18 @@ object IcebergInterop {
     * inapplicable, not errors — real readers ignore them the same way).
     *
     * Scale shape: delete ROWS stay distributed (read straight from the
-    * delete parquets — O(deleted rows) executor work, never collected);
-    * only the O(files) basename->sequence translation is driver metadata,
-    * broadcast into the join. Rows match on the referenced file's
+    * delete parquets under the spec's fixed `(file_path, pos)` schema —
+    * O(deleted rows) executor work, never collected); each delete file's
+    * sequence is a scan constant, and the O(files) data-file translation
+    * (URI basename -> scan basename and sequence) is a literal map in the
+    * plan, so neither side costs a job. Rows match on the referenced file's
     * BASENAME (manifest URI forms vary across writers — file:/ vs
     * file:/// — while basenames are unique per the same check the
     * identity fill already relies on). */
   private def positionDeleteFrame(spark: SparkSession, path: String,
       kept: Seq[DataEntry], dels: Seq[DeleteEntry]): Option[DataFrame] = {
     if (dels.isEmpty || kept.isEmpty) return None
-    import org.apache.spark.sql.functions.{broadcast, col, substring_index}
+    import org.apache.spark.sql.functions.{col, substring_index, try_element_at, typedLit}
     dels.foreach { d =>
       require(Files.isRegularFile(d.resolved),
         s"Iceberg table $path references a position-delete file that is " +
@@ -4031,26 +4045,26 @@ object IcebergInterop {
     val delNames = dels.map(_.resolved.getFileName.toString)
     require(delNames.distinct.size == delNames.size,
       s"Iceberg table $path has duplicate delete-file names — unsupported layout")
-    val raw = spark.read.parquet(dels.map(_.resolved.toString): _*)
-    require(raw.columns.contains("file_path") && raw.columns.contains("pos"),
-      s"Iceberg table $path holds a position-delete file without the spec's " +
-        s"(file_path, pos) columns (got ${raw.columns.mkString(",")}) — " +
-        "not a readable v2 position delete")
-    val delSeqDf = spark.createDataFrame(
-      dels.map(d => (d.resolved.getFileName.toString, d.seq)))
-      .toDF("__gdel_src", "__gdel_seq")
-    val dataSeqDf = spark.createDataFrame(
-      kept.map(e => (e.uri.split('/').last,
-        e.resolved.getFileName.toString, e.seq)))
-      .toDF("__gdel_uriname", FileSnapshot.FileCol, "__gdel_dseq")
+    dels.foreach { d =>
+      val cols = parquetTopLevelCols(spark, d.resolved)
+      require(cols.contains("file_path") && cols.contains("pos"),
+        s"Iceberg table $path holds a position-delete file without the spec's " +
+          s"(file_path, pos) columns (got ${cols.mkString(",")}) — " +
+          "not a readable v2 position delete")
+    }
+    val raw = FileSnapshot.scan(spark,
+      dels.map(d => FileSnapshot.DataFile(d.resolved, Map("__gdel_seq" -> d.seq))),
+      StructType(Seq(StructField("file_path", StringType), StructField("pos", LongType),
+        StructField("__gdel_seq", LongType))),
+      s"Iceberg table $path", fill = Seq("__gdel_seq"))
+    val dataByUriName = typedLit(kept.map(e =>
+      e.uri.split('/').last -> (e.resolved.getFileName.toString, e.seq)).toMap)
+    val data = col("__gdel_data")
     Some(raw
-      .select(substring_index(col("file_path"), "/", -1).as("__gdel_uriname"),
-        col("pos").cast("long").as(FileSnapshot.PosCol),
-        col("_metadata.file_name").as("__gdel_src"))
-      .join(broadcast(delSeqDf), Seq("__gdel_src"))
-      .join(broadcast(dataSeqDf), Seq("__gdel_uriname"))
-      .where(col("__gdel_seq") >= col("__gdel_dseq"))
-      .select(col(FileSnapshot.FileCol), col(FileSnapshot.PosCol)))
+      .select(try_element_at(dataByUriName, substring_index(col("file_path"), "/", -1))
+        .as("__gdel_data"), col("pos").as(FileSnapshot.PosCol), col("__gdel_seq"))
+      .where(data.isNotNull && col("__gdel_seq") >= data("_2"))
+      .select(data("_1").as(FileSnapshot.FileCol), col(FileSnapshot.PosCol)))
   }
 
   /** Avro partition value → the external value [[readIcebergPruned]]'s
@@ -4285,23 +4299,19 @@ object IcebergInterop {
   }
 
   /** Chain the equality-delete anti-joins onto a scan that carries the
-    * [[FileSnapshot.FileCol]] basename column: each group's condition is null-safe
-    * equality on every equality column AND a STRICTLY newer delete
-    * sequence than the row's data file (the spec's rule — re-ingested
-    * keys survive). The per-file sequence map is O(files) broadcast; the
-    * null-safe keys keep the anti-join a HASH join, never a nested loop. */
-  private def applyEqDeletes(spark: SparkSession, df0: DataFrame,
-      eqSpecs: Seq[EqDeleteSpec], dataSeqs: Seq[(String, Long)]): DataFrame = {
+    * [[FileSnapshot.FileCol]] basename column and each row's data-file
+    * sequence in [[DataSeqCol]] (a scan constant): each group's condition
+    * is null-safe equality on every equality column AND a STRICTLY newer
+    * delete sequence than the row's data file (the spec's rule —
+    * re-ingested keys survive). The null-safe keys keep the anti-join a
+    * HASH join, never a nested loop. */
+  private def applyEqDeletes(df0: DataFrame, eqSpecs: Seq[EqDeleteSpec]): DataFrame = {
     if (eqSpecs.isEmpty) return df0
-    import org.apache.spark.sql.functions.{broadcast, col}
-    // the (basename -> sequence) translation joins on the scan's
-    // provenance basename, whose uniqueness FileSnapshot.scan enforces
-    val seqDf = spark.createDataFrame(dataSeqs)
-      .toDF(FileSnapshot.FileCol, "__geq_dseq")
-    var df = df0.join(broadcast(seqDf), Seq(FileSnapshot.FileCol))
+    import org.apache.spark.sql.functions.col
+    var df = df0
     eqSpecs.foreach { spec =>
       val cond0 = spec.cols.map(c => col(c) <=> spec.frame(s"__geq_$c"))
-        .reduce(_ && _) && spec.frame("__geq_seq") > col("__geq_dseq")
+        .reduce(_ && _) && spec.frame("__geq_seq") > col(DataSeqCol)
       // a partition-scoped delete row reaches only the data files of its
       // partition (the pairs pre-joined into the frame)
       val cond = if (spec.scoped)
@@ -4309,7 +4319,20 @@ object IcebergInterop {
       else cond0
       df = df.join(spec.frame, cond, "left_anti")
     }
-    df.drop("__geq_dseq")
+    df.drop(DataSeqCol)
+  }
+
+  /** The data-file sequence column equality deletes compare against. */
+  private val DataSeqCol = "__geq_dseq"
+
+  /** Each data file's sequence number, by the file's basename in
+    * `dataSeqs`. A file without one raises: equality deletes could not
+    * tell whether they apply to its rows. */
+  private[sources] def dataSequence(path: String, dataSeqs: Seq[(String, Long)]): Path => Long = {
+    val byName = dataSeqs.toMap
+    p => byName.getOrElse(p.getFileName.toString, throw new IllegalArgumentException(
+      s"Iceberg table $path has no data sequence number for data file ${p.getFileName} — " +
+        "equality deletes cannot be applied to it"))
   }
 
   /** Scan the data files with `schema`, reconstructing identity-partitioned
@@ -4343,15 +4366,20 @@ object IcebergInterop {
     // per-file schema dispatch, preserving the single-scan plan.
     // Position deletes mask the raw scan by (file basename, row index),
     // the in-file position the spec's delete rows reference, and
-    // equality deletes chain after them on the same provenance column.
+    // equality deletes chain after them on the same provenance column,
+    // comparing each row's data-file sequence: a scan constant, like the
+    // identity fill.
+    val seqFill = if (eqSpecs.isEmpty) Seq.empty else Seq(StructField(DataSeqCol, LongType))
+    val seqOf = dataSequence(path, dataSeqs)
     def scan(fill: Seq[StructField], partition: ((Path, GenericRecord), StructField) => Any) = {
       val out = FileSnapshot.scan(spark,
-        dataFiles.map(d => FileSnapshot.DataFile(d._1, fill.map(f => f.name -> partition(d, f)).toMap)),
-        schema, s"Iceberg table $path", fill = fill.map(_.name),
+        dataFiles.map(d => FileSnapshot.DataFile(d._1, fill.map(f => f.name -> partition(d, f)).toMap ++
+          seqFill.map(_.name -> seqOf(d._1)))),
+        StructType(schema.fields ++ seqFill), s"Iceberg table $path", fill = (fill ++ seqFill).map(_.name),
         physical = f => aliasedScanSchema(StructType(Seq(f)), aliases).fields.toSeq,
         project = aliasCol(_, aliases), positions = deletes, keepPositions = keepMatching,
         provenance = provenance || eqSpecs.nonEmpty)
-      val masked = applyEqDeletes(spark, out, eqSpecs, dataSeqs)
+      val masked = applyEqDeletes(out, eqSpecs)
       if (provenance || eqSpecs.isEmpty) masked
       else masked.drop(FileSnapshot.FileCol, FileSnapshot.PosCol)
     }
@@ -4526,6 +4554,21 @@ object IcebergInterop {
       HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toUri), conf))
     try in.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet
     finally in.close()
+  }
+
+  /** One parquet file's schema as Spark's schema inference reads it from
+    * the footer (the Spark schema the writer recorded, else the parquet
+    * types converted), on the driver — no Spark job. */
+  private def footerSchema(spark: SparkSession, p: Path): StructType = {
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+      ParquetToSparkSchemaConverter}
+    val hp = new org.apache.hadoop.fs.Path(p.toUri)
+    val in = ParquetFileReader.open(HadoopInputFile.fromPath(hp, spark.sessionState.newHadoopConf()))
+    val footer = try in.getFooter finally in.close()
+    ParquetFileFormat.readSchemaFromFooter(new Footer(hp, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   /** (partition-field name, identity source-column name) pairs of the

@@ -9,7 +9,7 @@ import java.util.ConcurrentModificationException
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+import org.apache.spark.sql.functions.{col, count, lit, pmod, xxhash64}
 
 /** The file half of every commit, shared by [[TxTable]],
   * [[DeltaInterop]] and [[IcebergInterop]]: write a DataFrame as parquet
@@ -112,6 +112,23 @@ private[graft] object StagedWrite {
       filesPerValue: Int = 0, fieldIds: Boolean = false)(publish: Stage => A): A = {
     val s = stage(root, df, partitionBy, filesPerValue, fieldIds)
     try publish(s) finally s.close()
+  }
+
+  /** The one check of a keyed merge's incoming batch, run before anything
+    * is staged: refuses duplicate keys (nulls group together, as the
+    * null-safe key match does) and returns whether the batch has a row.
+    * Two Spark jobs, the group's shuffle and the top count; the exact
+    * number of duplicated keys, which `refusal` renders into the message,
+    * is counted only on the way to refusing. */
+  private[sources] def batchHasRows(batch: DataFrame, keys: Seq[String],
+      refusal: Long => String): Boolean = {
+    val perKey = batch.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__gbk_n"))
+    val top = perKey.select(col("__gbk_n")).orderBy(col("__gbk_n").desc).limit(1).collect()
+    if (top.exists(_.getLong(0) > 1L)) {
+      val dups = perKey.where(col("__gbk_n") > 1L).count()
+      require(dups == 0L, refusal(dups))
+    }
+    top.nonEmpty
   }
 
   /** `<prefix>-<uuid>.parquet`, the uuid derived from `seed` — callers

@@ -5,7 +5,7 @@ import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -378,11 +378,14 @@ class TxTable(val spark: SparkSession, val root: String) {
   private def byBasename(files: Seq[String]): Map[String, String] =
     files.map(f => dataDir.resolve(f).getFileName.toString -> f).toMap
 
-  /** The distinct files of `files` a provenance frame's rows came from. */
+  /** The distinct files of `files` a provenance frame's rows came from:
+    * each task keeps its own distinct names and the driver merges them,
+    * so the answer takes one job, not a shuffle and a second job. */
   private def filesOf(prov: DataFrame, files: Seq[String]): Seq[String] = {
     val rel = byBasename(files)
-    prov.select(col(FileSnapshot.FileCol)).distinct()
-      .collect().map(r => rel(r.getString(0))).toSeq
+    prov.select(col(FileSnapshot.FileCol)).as(Encoders.STRING)
+      .mapPartitions(_.toSet.iterator)(Encoders.STRING)
+      .collect().distinct.sorted.map(rel).toSeq
   }
 
   /** Current snapshot (latest committed version at call time); resolves
@@ -877,7 +880,7 @@ class TxTable(val spark: SparkSession, val root: String) {
 
     // file-granularity pruning: only files holding a matched key rewrite
     val affected = filesOf(scanFiles(only(tableSchema(state), keys), state.files, provenance = true)
-      .join(broadcast(u.select(keys.map(col): _*).distinct()), keys, "left_semi"), state.files)
+      .join(broadcast(u.select(keys.map(col): _*)), keys, "left_semi"), state.files)
     val base = scanFiles(tableSchema(state), affected)
 
     val payload = base.columns.filterNot(c => keys.contains(c) || c == tsCol).toSeq
@@ -930,11 +933,9 @@ class TxTable(val spark: SparkSession, val root: String) {
     // the first net batch is pure inserts and founds the table (version 0
     // records the upserts' schema, like append's fresh path)
     val state = baseVersion.map(_ => stateForVersion(Long.MaxValue))
-    val keyCols = keys.map(col)
     val up = upserts.cache()
-    val dupKeys = up.groupBy(keyCols: _*).count().where(col("count") > 1).count()
-    require(dupKeys == 0L,
-      s"applyCdc: the upsert batch carries $dupKeys duplicate key(s) — a " +
+    StagedWrite.batchHasRows(up, keys, n =>
+      s"applyCdc: the upsert batch carries $n duplicate key(s) — a " +
         "replacement applied twice writes two rows; net the feed first " +
         "(CdcFeed.net)")
     // the touched-key joins are NULL-SAFE (<=>): the upstream CDC
@@ -945,7 +946,7 @@ class TxTable(val spark: SparkSession, val root: String) {
       .select(keys.map(c => col(c).as(s"__gtk_$c")).toIndexedSeq: _*)
       .unionByName(deleteKeys
         .select(keys.map(c => col(c).as(s"__gtk_$c")).toIndexedSeq: _*))
-      .distinct().cache()
+      .cache() // semi- and anti-joins need no distinct build side
     val touchKeys = broadcast(touchKeys0)
     def touchCond(left: DataFrame): org.apache.spark.sql.Column =
       keys.map(c => left(c) <=> touchKeys(s"__gtk_$c")).reduce(_ && _)
