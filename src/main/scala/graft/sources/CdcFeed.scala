@@ -76,4 +76,24 @@ object CdcFeed {
       .select(keys.map(col): _*)
     NetBatch(upserts, deleteKeys, () => { last.unpersist(); () })
   }
+
+  /** The second half of a continuous CDC tail, shared by
+    * [[DeltaInterop.tailDeltaCdcInto]] and
+    * [[IcebergInterop.tailIcebergCdcInto]]: net `feed` — whose data
+    * columns are all but `_change_type`, its commit-ordering `verCol` and
+    * the format's other `changeCols` — and apply the batch to `sink` as
+    * ONE keyed delete-or-replace commit ([[TxTable.applyCdc]]) txn-marked
+    * `(appId, marker)`, freeing the netted blocks afterwards. */
+  private[sources] def applyTail(feed: DataFrame, sink: TxTable, keys: Seq[String], caller: String,
+      verCol: String, changeCols: Seq[String], appId: String, marker: Long,
+      tsMillis: Long): Unit = {
+    val meta = Set("_change_type", verCol) ++ changeCols
+    val dataCols = feed.columns.filterNot(meta).toSeq
+    keys.foreach(k => require(dataCols.contains(k),
+      s"$caller: key column '$k' is not a table column"))
+    val batch = net(feed, keys, dataCols, verCol = verCol, typeCol = "_change_type")
+    try sink.applyCdc(batch.upserts, batch.deleteKeys, keys,
+      tsMillis = tsMillis, txn = Some((appId, marker)))
+    finally batch.release()
+  }
 }

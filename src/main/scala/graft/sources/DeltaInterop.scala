@@ -205,9 +205,7 @@ object DeltaInterop {
 
     val snap = t.snapshotInfo()
     val schema = StructType.fromDDL(snap.schemaDdl)
-    val (lastV, live, metaOpt, _) = replayState(t.spark, finalDir, None)
-    val meta = metaOpt.getOrElse(throw new IllegalStateException(
-      s"Delta log at $target carries no metaData action"))
+    val DeltaState(lastV, live, meta, targetSchema, _) = replayState(t.spark, finalDir, None)
     // the mirror contract is FILE-SET equality with the source snapshot;
     // a target someone has deleteFromDelta'd carries deletion vectors the
     // file-path diff cannot see — mirroring over them would silently keep
@@ -223,12 +221,11 @@ object DeltaInterop {
     require(meta.mappingMode == "none",
       s"the Delta table at $target is column-mapped — the file-set mirror " +
         "cannot write its physical layout; re-export from scratch")
-    val (schemaJson, partCols) = (meta.schemaJson, meta.partCols)
-    require(partCols == snap.partCols,
-      s"partition layout changed (${partCols.mkString(",")} -> " +
+    require(meta.partCols == snap.partCols,
+      s"partition layout changed (${meta.partCols.mkString(",")} -> " +
         s"${snap.partCols.mkString(",")}) — a layout change cannot be mirrored " +
         "incrementally; re-export from scratch")
-    val schemaChanged = DataType.fromJson(schemaJson) != schema
+    val schemaChanged = targetSchema != schema
 
     val liveSet = live.map(_.path).toSet
     val snapSet = snap.files.toSet
@@ -295,10 +292,7 @@ object DeltaInterop {
     import org.apache.spark.sql.types._
     val root = Paths.get(target).toAbsolutePath
     val logDir = root.resolve(LogDirName)
-    val (atV, live, metaOpt, proto) = replayState(spark, root, Some(v))
-    val meta = metaOpt.getOrElse(throw new IllegalStateException(
-      s"Delta log at $target carries no metaData action"))
-    val (schemaJson, partCols) = (meta.schemaJson, meta.partCols)
+    val DeltaState(atV, live, meta, _, proto) = replayState(spark, root, Some(v))
     require(atV == v, s"cannot checkpoint version $v (log is at $atV)")
 
     val ckptSchema = StructType(Seq(
@@ -346,7 +340,7 @@ object DeltaInterop {
     // configuration would read its col-<uuid> physical columns as
     // all-null logical ones past log cleanup)
     val metaRow = Row(null, Row(meta.id.getOrElse(tableId(target)),
-      Row("parquet"), schemaJson, partCols, meta.config, tsMillis),
+      Row("parquet"), meta.schemaJson, meta.partCols, meta.config, tsMillis),
       null, null)
     val addRows = live.map { a =>
       val sz = scala.util.Try(Files.size(root.resolve(a.path))).getOrElse(0L)
@@ -542,10 +536,7 @@ object DeltaInterop {
     */
   def readDelta(spark: SparkSession, path: String,
       versionAsOf: Option[Long] = None): DataFrame = {
-    val (_, live, metaOpt, _) = replayState(spark, Paths.get(path), versionAsOf)
-    val meta = metaOpt.getOrElse(
-      throw new IllegalStateException(s"Delta log at $path carries no metaData action"))
-    val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
+    val DeltaState(_, live, meta, schema, _) = replayState(spark, Paths.get(path), versionAsOf)
     assembleRead(spark, Paths.get(path), schema, meta.partCols, live,
       meta.mappingMode)
   }
@@ -562,10 +553,7 @@ object DeltaInterop {
   def readDeltaPruned(spark: SparkSession, path: String,
       keep: Map[String, Option[String]] => Boolean,
       versionAsOf: Option[Long] = None): DataFrame = {
-    val (_, live, metaOpt, _) = replayState(spark, Paths.get(path), versionAsOf)
-    val meta = metaOpt.getOrElse(
-      throw new IllegalStateException(s"Delta log at $path carries no metaData action"))
-    val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
+    val DeltaState(_, live, meta, schema, _) = replayState(spark, Paths.get(path), versionAsOf)
     // the pruner sees LOGICAL partition-column keys even under column
     // mapping (partitionValues keys are physical on the wire — the caller
     // should never have to know a column's col-<uuid> alias)
@@ -593,10 +581,7 @@ object DeltaInterop {
     * exact row filter: this prunes I/O, not semantics. */
   def readDeltaRange(spark: SparkSession, path: String,
       preds: Seq[(String, Double, Double)]): DataFrame = {
-    val (_, live, metaOpt, _) = replayState(spark, Paths.get(path), None)
-    val meta = metaOpt.getOrElse(
-      throw new IllegalStateException(s"Delta log at $path carries no metaData action"))
-    val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
+    val DeltaState(_, live, meta, schema, _) = replayState(spark, Paths.get(path), None)
     val m = mapper
     def boundsOf(a: AddFile): Map[String, (Double, Double)] =
       a.stats.map { js =>
@@ -687,15 +672,9 @@ object DeltaInterop {
     val from = sink.txnVersion(appId).getOrElse(sinceVersion)
     val (head, feed) = readDeltaCdf(spark, path, from)
     if (head == from) return head
-    val dataCols = feed.columns.filterNot(c =>
-      c == "_change_type" || c == "_commit_version").toSeq
-    keys.foreach(k => require(dataCols.contains(k),
-      s"tailDeltaCdcInto($path): key column '$k' is not a table column"))
-    val batch = CdcFeed.net(feed, keys, dataCols,
-      verCol = "_commit_version", typeCol = "_change_type")
-    try sink.applyCdc(batch.upserts, batch.deleteKeys, keys,
-      tsMillis = tsMillis, txn = Some((appId, head)))
-    finally batch.release()
+    CdcFeed.applyTail(feed, sink, keys, s"tailDeltaCdcInto($path)",
+      verCol = "_commit_version", changeCols = Nil, appId = appId, marker = head,
+      tsMillis = tsMillis)
     head
   }
 
@@ -721,42 +700,18 @@ object DeltaInterop {
   def readDeltaChanges(spark: SparkSession, path: String,
       sinceVersion: Long): (Long, DataFrame) = {
     val root = Paths.get(path)
-    val logDir = root.resolve(LogDirName)
-    require(Files.isDirectory(logDir), s"no Delta table at $path (missing $LogDirName)")
     // current state: schema + partition columns + the head version (and
     // the full protocol/column-mapping checks ride along)
-    val (cur, _, metaOpt, _) = replayState(spark, root, None)
-    val meta = metaOpt.getOrElse(
-      throw new IllegalStateException(s"Delta log at $path carries no metaData action"))
+    val DeltaState(cur, _, meta, schema, _) = replayState(spark, root, None)
     require(sinceVersion <= cur,
       s"consumer watermark $sinceVersion is ahead of the Delta log at $path (head $cur)")
-    val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
     if (sinceVersion == cur)
       return (cur, assembleRead(spark, root, schema, meta.partCols, Seq.empty,
         meta.mappingMode))
 
-    val commits = listJsonCommits(logDir)
-      .filter(c => c._1 > sinceVersion && c._1 <= cur)
-    // Gapless AND reaching the head: the head version can come from a
-    // checkpoint, so contiguity alone would silently drop the newest
-    // versions if their JSON commit files were retention-cleaned
-    // (e.g. checkpoint at v10, JSONs 6-9 present, 10 absent).
-    require(commits.headOption.exists(_._1 == sinceVersion + 1) &&
-        commits.lastOption.exists(_._1 == cur) &&
-        commits.zip(commits.drop(1)).forall { case ((a, _), (b, _)) => b == a + 1 },
-      s"Delta log at $path has no gapless JSON commits in " +
-        s"${sinceVersion + 1}..$cur (cleaned by log retention?) — " +
-        "re-sync from the full snapshot")
-
-    val m = mapper
     val adds = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
-    commits.foreach { case (cv, p) =>
-      Files.readAllLines(p).asScala.filter(_.trim.nonEmpty).foreach { line =>
-        val node =
-          try m.readTree(line)
-          catch { case e: Exception => throw new IllegalStateException(
-            s"Delta log at $path: commit $cv holds a malformed action line " +
-              s"(${e.getMessage}); refusing to reconstruct a partial delta", e) }
+    rangeCommits(root, path, sinceVersion, cur).foreach { case (cv, p) =>
+      commitActions(p, cv, path).foreach { node =>
         require(!node.hasNonNull("remove"),
           s"Delta log at $path: commit $cv in the consumed range carries a " +
             "remove action (compaction/delete/overwrite) — an append-only " +
@@ -767,13 +722,8 @@ object DeltaInterop {
               "consumed range — APPEND-ONLY incremental consumption cannot " +
               "represent row-level deletes; re-sync from the full snapshot " +
               "(readDelta applies them)")
-          val pv = Option(add.get("partitionValues")).map { o =>
-            o.properties().asScala.map { e =>
-              e.getKey -> (if (e.getValue.isNull) None else Some(e.getValue.asText))
-            }.toMap
-          }.getOrElse(Map.empty[String, Option[String]])
           val decoded = decodePath(add.get("path").asText)
-          adds += decoded -> AddFile(decoded, pv)
+          adds += decoded -> AddFile(decoded, partitionValuesIn(add))
         }
       }
     }
@@ -812,40 +762,19 @@ object DeltaInterop {
       sinceVersion: Long): (Long, DataFrame) = {
     import org.apache.spark.sql.types.LongType
     val root = Paths.get(path).toAbsolutePath
-    val logDir = root.resolve(LogDirName)
-    require(Files.isDirectory(logDir), s"no Delta table at $path (missing $LogDirName)")
-    val (cur, _, metaOpt, _) = replayState(spark, root, None)
-    val meta = metaOpt.getOrElse(throw new IllegalStateException(
-      s"Delta log at $path carries no metaData action"))
+    val DeltaState(cur, _, meta, schema, _) = replayState(spark, root, None)
     require(sinceVersion <= cur,
       s"consumer watermark $sinceVersion is ahead of the Delta log at $path (head $cur)")
-    val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
     val outSchema = StructType(schema.fields :+
       StructField("_change_type", StringType, nullable = false) :+
       StructField("_commit_version", LongType, nullable = false))
     def empty = FileSnapshot.empty(spark, outSchema)
     if (sinceVersion == cur) return (cur, empty)
 
-    val commits = listJsonCommits(logDir)
-      .filter(c => c._1 > sinceVersion && c._1 <= cur)
-    require(commits.headOption.exists(_._1 == sinceVersion + 1) &&
-        commits.lastOption.exists(_._1 == cur) &&
-        commits.zip(commits.drop(1)).forall { case ((a, _), (b, _)) => b == a + 1 },
-      s"Delta log at $path has no gapless JSON commits in " +
-        s"${sinceVersion + 1}..$cur (cleaned by log retention?) — " +
-        "re-sync from the full snapshot")
-
-    val m = mapper
     // change and data files carry the physical layout of the table's
     // column mapping, like the table read; _change_type carries no id and
     // resolves by name, which is how the files physically store it
     val (physical, project) = mappedColumns(path, meta.mappingMode, Set("_change_type"))
-    def pvOf(n: JsonNode): Map[String, Option[String]] =
-      Option(n.get("partitionValues")).map { o =>
-        o.properties().asScala.map { e =>
-          e.getKey -> (if (e.getValue.isNull) None else Some(e.getValue.asText))
-        }.toMap
-      }.getOrElse(Map.empty[String, Option[String]])
     // partition columns live in the LOG's partitionValues (PHYSICAL keys
     // under column mapping), never in the files — the scan fills them
     // back exactly like the table read
@@ -868,29 +797,24 @@ object DeltaInterop {
         fill = meta.partCols, physical = physical, project = project,
         fieldIds = meta.idMapped)
     }
-    val frames: Seq[DataFrame] = commits.flatMap { case (cv, p) =>
+    val frames: Seq[DataFrame] = rangeCommits(root, path, sinceVersion, cur).flatMap { case (cv, p) =>
       val cdcFiles = Seq.newBuilder[(String, Map[String, Option[String]])]
       val addFiles = Seq.newBuilder[(String, Map[String, Option[String]])]
       val removeFiles = Seq.newBuilder[(String, Map[String, Option[String]])]
       var dvChange = false
-      Files.readAllLines(p).asScala.filter(_.trim.nonEmpty).foreach { line =>
-        val node =
-          try m.readTree(line)
-          catch { case e: Exception => throw new IllegalStateException(
-            s"Delta log at $path: commit $cv holds a malformed action line " +
-              s"(${e.getMessage}); refusing to reconstruct a partial feed", e) }
+      commitActions(p, cv, path).foreach { node =>
         Option(node.get("cdc")).foreach(c =>
-          cdcFiles += decodePath(c.get("path").asText) -> pvOf(c))
+          cdcFiles += decodePath(c.get("path").asText) -> partitionValuesIn(c))
         Option(node.get("add")).foreach { a =>
           if (Option(a.get("dataChange")).forall(_.asBoolean)) {
             if (a.hasNonNull("deletionVector")) dvChange = true
-            else addFiles += decodePath(a.get("path").asText) -> pvOf(a)
+            else addFiles += decodePath(a.get("path").asText) -> partitionValuesIn(a)
           }
         }
         Option(node.get("remove")).foreach { r =>
           if (Option(r.get("dataChange")).forall(_.asBoolean)) {
             if (r.hasNonNull("deletionVector")) dvChange = true
-            else removeFiles += decodePath(r.get("path").asText) -> pvOf(r)
+            else removeFiles += decodePath(r.get("path").asText) -> partitionValuesIn(r)
           }
         }
       }
@@ -953,14 +877,77 @@ object DeltaInterop {
   private case class ProtocolInfo(mrv: Int, mwv: Int,
       readerFeatures: Set[String], writerFeatures: Set[String])
 
-  /** Replay a Delta log to (version, live adds, metaData, protocol) — the
-    * shared core of [[readDelta]] and [[exportDeltaIncremental]]'s
-    * target-state read. */
+  /** The Delta table at `root` as one call opens it: the version
+    * replayed, the live adds, the metaData with its logical schema parsed,
+    * and the strongest protocol observed. */
+  private final case class DeltaState(version: Long, live: Seq[AddFile],
+      meta: TableMeta, schema: StructType, proto: ProtocolInfo)
+
+  /** [[replayLog]] with the metaData required — every entry point but
+    * [[vacuumDelta]] (which reads only the live file set) opens its table
+    * here, and a log that never declared a metaData action refuses before
+    * any byte is written. */
   private def replayState(spark: SparkSession, root: Path,
+      versionAsOf: Option[Long]): DeltaState = {
+    val (v, live, metaOpt, proto) = replayLog(spark, root, versionAsOf)
+    val meta = metaOpt.getOrElse(throw new IllegalStateException(
+      s"Delta log at $root carries no metaData action"))
+    DeltaState(v, live, meta, DataType.fromJson(meta.schemaJson).asInstanceOf[StructType], proto)
+  }
+
+  /** The `_delta_log/` directory of the Delta table at `path`; refuses a
+    * directory that holds no table. */
+  private def logDirOf(path: String): Path = {
+    val logDir = Paths.get(path).resolve(LogDirName)
+    require(Files.isDirectory(logDir), s"no Delta table at $path (missing $LogDirName)")
+    logDir
+  }
+
+  /** The action objects of JSON commit `cv` at `p`, one per non-blank
+    * line. A truncated or corrupt line names the commit it came from
+    * rather than surfacing as a bare Jackson parse error. */
+  private def commitActions(p: Path, cv: Long, path: String): Seq[JsonNode] = {
+    val m = mapper
+    Files.readAllLines(p).asScala.filter(_.trim.nonEmpty).map { line =>
+      try m.readTree(line)
+      catch { case e: Exception => throw new IllegalStateException(
+        s"Delta log at $path: commit $cv holds a malformed action line " +
+          s"(${e.getMessage}); refusing to read a partial log", e) }
+    }.toSeq
+  }
+
+  /** An action's `partitionValues` (a JSON null is the null partition);
+    * none for an action without them. */
+  private def partitionValuesIn(action: JsonNode): Map[String, Option[String]] =
+    Option(action.get("partitionValues")).map { o =>
+      o.properties().asScala.map { e =>
+        e.getKey -> (if (e.getValue.isNull) None else Some(e.getValue.asText))
+      }.toMap
+    }.getOrElse(Map.empty[String, Option[String]])
+
+  /** The JSON commits of `(since, head]` for the range readers, refused
+    * unless gapless AND reaching the head: the head version can come from
+    * a checkpoint, so contiguity alone would silently drop the newest
+    * versions if their JSON commit files were retention-cleaned (e.g.
+    * checkpoint at v10, JSONs 6-9 present, 10 absent). */
+  private def rangeCommits(root: Path, path: String, since: Long,
+      head: Long): Seq[(Long, Path)] = {
+    val commits = listJsonCommits(root.resolve(LogDirName))
+      .filter(c => c._1 > since && c._1 <= head)
+    require(commits.headOption.exists(_._1 == since + 1) &&
+        commits.lastOption.exists(_._1 == head) &&
+        commits.zip(commits.drop(1)).forall { case ((a, _), (b, _)) => b == a + 1 },
+      s"Delta log at $path has no gapless JSON commits in " +
+        s"${since + 1}..$head (cleaned by log retention?) — " +
+        "re-sync from the full snapshot")
+    commits
+  }
+
+  /** Replay a Delta log to (version, live adds, metaData, protocol). */
+  private def replayLog(spark: SparkSession, root: Path,
       versionAsOf: Option[Long]): (Long, Seq[AddFile], Option[TableMeta], ProtocolInfo) = {
     val path = root.toString
-    val logDir = root.resolve(LogDirName)
-    require(Files.isDirectory(logDir), s"no Delta table at $path (missing $LogDirName)")
+    val logDir = logDirOf(path)
 
     val bound = versionAsOf.getOrElse(Long.MaxValue)
     versionAsOf.foreach { v =>
@@ -1003,7 +990,6 @@ object DeltaInterop {
     var writerFeats = ckptState.map(_._4.writerFeatures).getOrElse(Set.empty[String])
     var configlessMeta = false
 
-    val m = mapper
     commits.foreach { case (cv, p) =>
       // removes apply BEFORE adds within one commit: a DV rewrite commits
       // `remove` of a file's previous entry alongside `add` of the same
@@ -1012,14 +998,7 @@ object DeltaInterop {
       // (a file silently vanishing is corruption, not compatibility)
       val commitAdds = Seq.newBuilder[AddFile]
       val commitRemoves = Seq.newBuilder[String]
-      Files.readAllLines(p).asScala.filter(_.trim.nonEmpty).foreach { line =>
-        // a truncated/corrupt line must name the commit it came from, not
-        // surface as a bare Jackson parse error with no table context
-        val node =
-          try m.readTree(line)
-          catch { case e: Exception => throw new IllegalStateException(
-            s"Delta log at $path: commit $cv holds a malformed action line " +
-              s"(${e.getMessage}); refusing to reconstruct a partial table", e) }
+      commitActions(p, cv, path).foreach { node =>
         Option(node.get("protocol")).foreach { pr =>
           checkProtocol(pr, path)
           maxMrv = math.max(maxMrv,
@@ -1043,13 +1022,8 @@ object DeltaInterop {
             Option(md.get("id")).map(_.asText), cfg))
         }
         Option(node.get("add")).foreach { add =>
-          val pv = Option(add.get("partitionValues")).map { o =>
-            o.properties().asScala.map { e =>
-              e.getKey -> (if (e.getValue.isNull) None else Some(e.getValue.asText))
-            }.toMap
-          }.getOrElse(Map.empty[String, Option[String]])
-          val decoded = decodePath(add.get("path").asText)
-          commitAdds += AddFile(decoded, pv, parseDv(add, path),
+          commitAdds += AddFile(decodePath(add.get("path").asText),
+            partitionValuesIn(add), parseDv(add, path),
             Option(add.get("stats")).filter(!_.isNull).map(_.asText))
         }
         Option(node.get("remove")).foreach { rm =>
@@ -1491,12 +1465,7 @@ object DeltaInterop {
       oldName: String, newName: String,
       tsMillis: Long = System.currentTimeMillis()): Unit = {
     val root = Paths.get(path).toAbsolutePath
-    val logDir = root.resolve(LogDirName)
-    require(Files.isDirectory(logDir), s"no Delta table at $path (missing $LogDirName)")
-    val (cur, _, metaOpt, proto) = replayState(spark, root, None)
-    val meta = metaOpt.getOrElse(throw new IllegalStateException(
-      s"Delta log at $path carries no metaData action"))
-    val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
+    val DeltaState(cur, _, meta, schema, proto) = replayState(spark, root, None)
     require(schema.fieldNames.contains(oldName),
       s"Delta table $path has no column '$oldName' " +
         s"(schema: ${schema.fieldNames.mkString(", ")})")
@@ -1513,7 +1482,7 @@ object DeltaInterop {
     val renamed = StructType(mappedSchema.fields.map(f =>
       if (f.name == oldName) f.copy(name = newName) else f))
     val newPartCols = meta.partCols.map(c => if (c == oldName) newName else c)
-    commitSchemaChange(logDir, cur, meta, proto, path, "RENAME COLUMN",
+    commitSchemaChange(root.resolve(LogDirName), cur, meta, proto, path, "RENAME COLUMN",
       renamed, newPartCols, config,
       if (upgraded) Some(ColumnMappingUpgrade) else None, tsMillis)
   }
@@ -1536,15 +1505,10 @@ object DeltaInterop {
       key: String, value: String,
       tsMillis: Long = System.currentTimeMillis()): Unit = {
     val root = Paths.get(path).toAbsolutePath
-    val logDir = root.resolve(LogDirName)
-    require(Files.isDirectory(logDir), s"no Delta table at $path (missing $LogDirName)")
     require(key.nonEmpty && !key.startsWith("delta.columnMapping."),
       s"'$key' is managed by renameDeltaColumn/dropDeltaColumn — setting " +
         "it by hand would declare a mapping the schema metadata does not back")
-    val (cur, _, metaOpt, proto) = replayState(spark, root, None)
-    val meta = metaOpt.getOrElse(throw new IllegalStateException(
-      s"Delta log at $path carries no metaData action"))
-    val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
+    val DeltaState(cur, _, meta, schema, proto) = replayState(spark, root, None)
     // already gated: listed explicitly on a table-features protocol, or
     // implied by a legacy writer version 4-6 (mwv >= 7 alone implies
     // nothing — features are explicit there)
@@ -1553,7 +1517,7 @@ object DeltaInterop {
       else proto.mwv >= 4
     val enablesCdf = key == "delta.enableChangeDataFeed" &&
       value.trim.equalsIgnoreCase("true") && !cdfGated
-    commitSchemaChange(logDir, cur, meta, proto, path, "SET TBLPROPERTIES",
+    commitSchemaChange(root.resolve(LogDirName), cur, meta, proto, path, "SET TBLPROPERTIES",
       schema, meta.partCols, meta.config + (key -> value),
       if (enablesCdf) Some(ChangeDataFeedUpgrade) else None, tsMillis)
   }
@@ -1571,12 +1535,7 @@ object DeltaInterop {
   def dropDeltaColumn(spark: SparkSession, path: String, name: String,
       tsMillis: Long = System.currentTimeMillis()): Unit = {
     val root = Paths.get(path).toAbsolutePath
-    val logDir = root.resolve(LogDirName)
-    require(Files.isDirectory(logDir), s"no Delta table at $path (missing $LogDirName)")
-    val (cur, _, metaOpt, proto) = replayState(spark, root, None)
-    val meta = metaOpt.getOrElse(throw new IllegalStateException(
-      s"Delta log at $path carries no metaData action"))
-    val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
+    val DeltaState(cur, _, meta, schema, proto) = replayState(spark, root, None)
     require(schema.fieldNames.contains(name),
       s"Delta table $path has no column '$name' " +
         s"(schema: ${schema.fieldNames.mkString(", ")})")
@@ -1587,7 +1546,7 @@ object DeltaInterop {
       s"refusing to drop the last column of $path")
     val (mappedSchema, config, upgraded) = upgradeToNameMode(schema, meta)
     val dropped = StructType(mappedSchema.fields.filterNot(_.name == name))
-    commitSchemaChange(logDir, cur, meta, proto, path, "DROP COLUMNS",
+    commitSchemaChange(root.resolve(LogDirName), cur, meta, proto, path, "DROP COLUMNS",
       dropped, meta.partCols, config,
       if (upgraded) Some(ColumnMappingUpgrade) else None, tsMillis)
   }
@@ -1622,21 +1581,17 @@ object DeltaInterop {
       tsMillis: Long = System.currentTimeMillis()): Long = {
     val root = Paths.get(path).toAbsolutePath
     val logDir = root.resolve(LogDirName)
-    require(Files.isDirectory(logDir), s"no Delta table at $path (missing $LogDirName)")
-    val (cur, live, metaOpt, proto) = replayState(spark, root, None)
+    val DeltaState(cur, live, meta, schema, proto) = replayState(spark, root, None)
     // names this call's new files: two writers racing from the same
     // version never share one, and a crashed writer's leftovers never
     // block the next writer at that version
     val nonce = java.util.UUID.randomUUID()
-    val meta = metaOpt.getOrElse(throw new IllegalStateException(
-      s"Delta log at $path carries no metaData action"))
     // round-13: CDF emission on a column-mapped table is supported —
     // the change files carry the physical layout (physWriteCol), exactly
     // like data files, so rename + CDC composes; id-mapped tables delete
     // too (the provenance scan resolves by parquet field id, and the DV
     // write path never renames anything)
     val cdfEnabled = cdfEnabledIn(meta.config)
-    val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
     if (live.isEmpty) return 0L
     val nameToAdd = namesOf(root, live)
     val liveDf = assembleRead(spark, root, schema, meta.partCols, live,
@@ -1753,30 +1708,18 @@ object DeltaInterop {
     import org.apache.spark.sql.Encoders
     val root = Paths.get(path).toAbsolutePath
     val logDir = root.resolve(LogDirName)
-    require(Files.isDirectory(logDir), s"no Delta table at $path (missing $LogDirName)")
-    val (cur, live, metaOpt, proto) = replayState(spark, root, None)
+    val DeltaState(cur, live, meta, schema, proto) = replayState(spark, root, None)
     val nonce = java.util.UUID.randomUUID() // per-call file names, as in deleteFromDelta
-    val meta = metaOpt.getOrElse(throw new IllegalStateException(
-      s"Delta log at $path carries no metaData action"))
     // round-13: column-mapped tables merge too — the incoming rows keep
     // LOGICAL names end to end; only the staged files (data and cdc)
     // render the PHYSICAL layout (physWriteCol: physical names + field
     // ids), and the commit's partitionValues carry physical keys
     val cdfEnabled = cdfEnabledIn(meta.config)
-    val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
     val anyMapped = meta.mapped || meta.idMapped
     val physPartCols = meta.partCols.map(c =>
       if (anyMapped) physicalNameOf(schema(c), path) else c)
     require(keyCols.nonEmpty, "mergeDelta: no key columns")
-    require(rows.columns.toSet == schema.fieldNames.toSet,
-      s"mergeDelta: the incoming rows must carry the table's exact " +
-        s"columns (${schema.fieldNames.mkString(",")}); got ${rows.columns.mkString(",")}")
-    val ordered = rows.select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    schema.fields.foreach { f =>
-      require(ordered.schema(f.name).dataType == f.dataType,
-        s"mergeDelta: column '${f.name}' is ${ordered.schema(f.name).dataType} " +
-          s"but the table column is ${f.dataType} — cast to the exact types first")
-    }
+    val ordered = StagedWrite.exactRows(rows, schema, "mergeDelta")
     keyCols.foreach(c => require(schema.fieldNames.contains(c),
       s"mergeDelta: key column '$c' is not a table column"))
     val incoming = ordered.localCheckpoint()
@@ -1893,15 +1836,11 @@ object DeltaInterop {
       tsMillis: Long = System.currentTimeMillis()): (Int, Long) = {
     val root = Paths.get(path).toAbsolutePath
     val logDir = root.resolve(LogDirName)
-    require(Files.isDirectory(logDir), s"no Delta table at $path (missing $LogDirName)")
-    val (cur, live, metaOpt, _) = replayState(spark, root, None)
+    val DeltaState(cur, live, meta, schema, _) = replayState(spark, root, None)
     val nonce = java.util.UUID.randomUUID() // per-call file names, as in deleteFromDelta
-    val meta = metaOpt.getOrElse(throw new IllegalStateException(
-      s"Delta log at $path carries no metaData action"))
     require(!meta.idMapped,
       s"purgeDeltaDvs on the id-mapped table at $path is unsupported " +
         "(survivor rewrites resolve physical names, not field ids)")
-    val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
     val withDv = live.filter(_.dv.isDefined)
     if (withDv.isEmpty) return (0, 0L)
     val deadRows = withDv.map(_.dv.get.cardinality).sum
@@ -1971,9 +1910,7 @@ object DeltaInterop {
     *   already minimal — vacuum is idempotent. */
   def vacuumDelta(spark: SparkSession, path: String): (Int, Long) = {
     val root = Paths.get(path).toAbsolutePath
-    val logDir = root.resolve(LogDirName)
-    require(Files.isDirectory(logDir), s"no Delta table at $path (missing $LogDirName)")
-    val (_, live, _, _) = replayState(spark, root, None)
+    val (_, live, _, _) = replayLog(spark, root, None)
     val referenced: Set[Path] = live.flatMap { a =>
       val data = root.resolve(a.path).normalize
       val dvs = a.dv.toSeq.filter(_.storageType != "i").map(d =>
@@ -2011,9 +1948,7 @@ object DeltaInterop {
     * any replayable version fail loudly rather than silently serving
     * some other version's view. */
   def deltaVersionAt(path: String, tsMillis: Long): Long = {
-    val root = Paths.get(path).toAbsolutePath
-    val logDir = root.resolve(LogDirName)
-    require(Files.isDirectory(logDir), s"no Delta table at $path (missing $LogDirName)")
+    val logDir = logDirOf(path)
     val m = mapper
     def commitTs(p: Path): Long = {
       val lines = Files.readAllLines(p).asScala
@@ -2058,9 +1993,7 @@ object DeltaInterop {
     *
     * @return JSON commits removed (0 = already clean; idempotent). */
   def cleanDeltaLog(path: String): Int = {
-    val root = Paths.get(path).toAbsolutePath
-    val logDir = root.resolve(LogDirName)
-    require(Files.isDirectory(logDir), s"no Delta table at $path (missing $LogDirName)")
+    val logDir = logDirOf(path)
     val ckpt = lastCheckpoint(logDir).getOrElse(throw new IllegalArgumentException(
       s"Delta log at $path advertises no checkpoint — write one first " +
         "(writeDeltaCheckpoint); cleaning JSON commits without a covering " +

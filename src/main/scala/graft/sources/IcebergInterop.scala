@@ -180,13 +180,8 @@ object IcebergInterop {
   def exportIcebergDayIdentity(t: TxTable, target: String, tsCol: String,
       idCol: String, tsMillis: Long = System.currentTimeMillis()): Unit = {
     import org.apache.spark.sql.functions.{col => c, date_add, floor, lit, unix_micros}
-    val snap = t.snapshotInfo()
-    require(snap.partCols.isEmpty,
-      s"exportIcebergDayIdentity expects a FLAT TxTable (the rewrite groups " +
-        s"rows itself); the table at ${snap.dataDir} is Hive-partitioned by " +
-        snap.partCols.mkString(","))
     require(tsCol != idCol, "the day and identity columns must differ")
-    val schema = StructType.fromDDL(snap.schemaDdl)
+    val schema = StructType.fromDDL(t.snapshotInfo().schemaDdl)
     val tsIdx = schema.fieldNames.indexOf(tsCol)
     require(tsIdx >= 0, s"day-partition column '$tsCol' is not in the table schema")
     require(schema.fields(tsIdx).dataType == TimestampType ||
@@ -200,14 +195,6 @@ object IcebergInterop {
       s"identity-partition column '$idCol' has type ${schema.fields(idIdx).dataType} — " +
         "this writer exports identity partitions over string/int/long/boolean/date only")
     val dayName = s"${tsCol}_day"
-    require(!schema.fieldNames.contains(dayName),
-      s"the table already has a column named '$dayName' — the derived day " +
-        "partition column would collide; rename one of them")
-    val partFields = Seq(
-      PartField(dayName, DateType, sourceId = tsIdx + 1, fieldId = 1000,
-        transform = "day"),
-      PartField(idCol, schema.fields(idIdx).dataType, sourceId = idIdx + 1,
-        fieldId = 1001))
     // the day as a DATE value (timezone-independent for timestamps), so
     // the staging directory names are ISO dates hivePartitionTuple
     // already decodes to the spec's epoch-day ordinals
@@ -216,21 +203,12 @@ object IcebergInterop {
         floor(unix_micros(c(tsCol)) / lit(86400000000L)).cast("int"))
       case _ => c(tsCol)
     }
-    // staged beside the target, where the assembly stages its own tree
-    StagedWrite.write(Paths.get(target).toAbsolutePath.getParent,
-        t.read().withColumn(dayName, dayValue), Seq(dayName, idCol),
-        filesPerValue = 1) { st =>
-      // UNIQUE basenames: one task writing several partition directories
-      // reuses its part-file name in each, and the reader's Column
-      // Projection fill joins on basenames — rename while still staged
-      val rels = st.files.map { f =>
-        val rel = f.under(s"${java.util.UUID.randomUUID()}.parquet")
-        f.moveTo(st.dir.resolve(rel))
-        rel
-      }
-      assembleIcebergV1(t.spark, st.dir, rels, target, tsMillis,
-        schema, partFields, rel => hivePartitionTuple(rel, partFields))
-    }
+    exportIcebergRewritten(t, target, "exportIcebergDayIdentity",
+      Seq(PartField(dayName, DateType, sourceId = tsIdx + 1, fieldId = 1000,
+          transform = "day"),
+        PartField(idCol, schema.fields(idIdx).dataType, sourceId = idIdx + 1,
+          fieldId = 1001)),
+      Seq(dayName -> dayValue), tsMillis)
   }
 
   /** Export a FLAT TxTable as an Iceberg v1 table partitioned by
@@ -263,8 +241,9 @@ object IcebergInterop {
     // standard; null → null partition (transforms map null to null per
     // spec), handled by the expression's null-intolerance
     val bucket = graft.functions.IcebergTransforms.bucket(nBuckets, c(col))
-    exportIcebergRewritten(t, target, col, s"${col}_bucket",
-      s"bucket[$nBuckets]", IntegerType, bucket, tsMillis)
+    exportIcebergRewritten(t, target, s"exportIceberg bucket[$nBuckets]",
+      Seq(PartField(s"${col}_bucket", IntegerType, sourceId = idx + 1, fieldId = 1000,
+        s"bucket[$nBuckets]")), Seq(s"${col}_bucket" -> bucket), tsMillis)
   }
 
   /** Export a FLAT TxTable as an Iceberg v1 table partitioned by
@@ -284,45 +263,45 @@ object IcebergInterop {
     require(idx >= 0, s"truncate source column '$col' is not in the table schema")
     val (partType, value) = truncateTypeAndExpr(col,
       schema.fields(idx).dataType, width, "exportIcebergTruncated")
-    exportIcebergRewritten(t, target, col, s"${col}_trunc",
-      s"truncate[$width]", partType, value, tsMillis)
+    exportIcebergRewritten(t, target, s"exportIceberg truncate[$width]",
+      Seq(PartField(s"${col}_trunc", partType, sourceId = idx + 1, fieldId = 1000,
+        s"truncate[$width]")), Seq(s"${col}_trunc" -> value), tsMillis)
   }
 
-  /** The shared rewrite core for transforms that cannot hard-link
-    * (bucket/truncate group rows by a DERIVED value): one shuffle write
-    * grouped by the transform value into a staging dir (the Hive layout
-    * drops the helper column; the source column stays physical), then the
-    * standard v1 assembly with per-file tuples decoded from the staging
-    * directory names. */
-  private def exportIcebergRewritten(t: TxTable, target: String,
-      sourceCol: String, fieldName: String, transform: String,
-      partType: DataType, partValue: org.apache.spark.sql.Column,
+  /** The shared rewrite core for layouts that cannot hard-link
+    * (bucket/truncate/day fields group rows by a DERIVED value): one
+    * shuffle write grouped by the partition fields into a staging dir
+    * (`derived` adds each helper column, which the Hive layout drops with
+    * any identity column; a transform's source column stays physical),
+    * then the standard v1 assembly with per-file tuples decoded from the
+    * staging directory names. */
+  private def exportIcebergRewritten(t: TxTable, target: String, what: String,
+      partFields: Seq[PartField], derived: Seq[(String, org.apache.spark.sql.Column)],
       tsMillis: Long): Unit = {
     val snap = t.snapshotInfo()
     require(snap.partCols.isEmpty,
-      s"exportIceberg $transform expects a FLAT TxTable (the rewrite groups " +
-        s"rows itself); the table at ${snap.dataDir} is Hive-partitioned by " +
-        snap.partCols.mkString(","))
-    require(!StructType.fromDDL(snap.schemaDdl).fieldNames.contains(fieldName),
-      s"the table already has a column named '$fieldName' — the rewrite's " +
-        "helper partition column would collide; rename one of them")
+      s"$what expects a FLAT TxTable (the rewrite groups rows itself); the " +
+        s"table at ${snap.dataDir} is Hive-partitioned by " + snap.partCols.mkString(","))
     val schema = StructType.fromDDL(snap.schemaDdl)
-    val idx = schema.fieldNames.indexOf(sourceCol)
-    val partFields = Seq(PartField(fieldName, partType,
-      sourceId = idx + 1, fieldId = 1000, transform))
-    // cluster rows by the transform value before the partitioned write:
+    derived.foreach { case (name, _) =>
+      require(!schema.fieldNames.contains(name),
+        s"the table already has a column named '$name' — the rewrite's " +
+          "helper partition column would collide; rename one of them")
+    }
+    // cluster rows by the partition values before the partitioned write:
     // without it every task writes a sliver into EVERY value directory
     // (tasks × values tiny files — the classic small-files trap, which
     // also multiplies the reader's O(files) footer probes); with it each
     // value lands in one task → one well-sized file per value. Staged
     // beside the target, where the assembly stages its own tree.
-    StagedWrite.write(Paths.get(target).toAbsolutePath.getParent,
-        t.read().withColumn(fieldName, partValue), Seq(fieldName),
-        filesPerValue = 1) { st =>
+    val rows = derived.foldLeft(t.read()) { case (df, (name, v)) => df.withColumn(name, v) }
+    StagedWrite.write(Paths.get(target).toAbsolutePath.getParent, rows,
+        partFields.map(_.name), filesPerValue = 1) { st =>
       // rename to globally-unique basenames: a Spark partitioned write
       // reuses one task's part number across every value directory it
       // writes, and the delete paths' (file basename -> metadata)
-      // translations require basename uniqueness table-wide
+      // translations and the reader's Column Projection fill require
+      // basename uniqueness table-wide
       val rels = st.files.zipWithIndex.map { case (f, i) =>
         val rel = f.under(StagedWrite.seededName("rw", s"$target|rewrite|$i"))
         f.moveTo(st.dir.resolve(rel))
@@ -407,10 +386,10 @@ object IcebergInterop {
       s"the $transform mirror expects a FLAT TxTable; the table at " +
         s"${snap.dataDir} is Hive-partitioned by ${snap.partCols.mkString(",")}")
     val schema = StructType.fromDDL(snap.schemaDdl)
-    val (prevVersion, meta) = currentMetadata(metaDir, target)
-    val fv = meta.get("format-version").asInt
-    require(fv == 1,
-      s"cannot incrementally export onto a format-version $fv Iceberg table " +
+    val ice = new IcebergTable(target)
+    val (prevVersion, meta) = (ice.version, ice.meta)
+    require(ice.formatVersion == 1,
+      s"cannot incrementally export onto a format-version ${ice.formatVersion} Iceberg table " +
         s"at $target — this writer produces v1; re-export from scratch")
     val idToName = schemaFieldIdToName(meta, target)
     val shape = defaultSpecFields(meta).map(f => (
@@ -421,7 +400,7 @@ object IcebergInterop {
       s"cannot incrementally export onto the Iceberg table at $target: its " +
         s"partition spec is [${shape.map(p => s"${p._1}(${p._2})").mkString(",")}] " +
         s"but this mirror writes [$transform($sourceCol)] — re-export from scratch")
-    val prevSchema = currentSparkSchema(meta, target)
+    val prevSchema = ice.schema
     require(prevSchema == schema,
       s"schema change at $target — the $transform mirror rewrites rows and " +
         "cannot restate already-rewritten files under an evolved schema; " +
@@ -445,13 +424,9 @@ object IcebergInterop {
       sourceId = idx + 1, fieldId = 1000, transform))
     val dataDir = finalDir.resolve("data")
     // carried target files: the prior snapshot's live entries by reference
-    val prevSnapId = Option(meta.get("current-snapshot-id")).map(_.asLong)
-      .filter(_ != -1L)
-    val carried: Seq[(String, Long, Long)] = prevSnapId.toSeq.flatMap { id =>
-      val sn = Option(meta.get("snapshots"))
-        .flatMap(_.elements().asScala.find(_.get("snapshot-id").asLong == id))
-        .getOrElse(throw new IllegalArgumentException(
-          s"Iceberg table $target current snapshot $id is missing from the log"))
+    val prevSnapId = ice.currentId
+    val carried: Seq[(String, Long, Long)] = prevSnapId.toSeq.flatMap { _ =>
+      val sn = ice.current("nothing to mirror onto")
       readAvro(resolveUri(finalDir, sn.get("manifest-list").asText)).flatMap { r =>
         readAvro(resolveUri(finalDir, r.get("manifest_path").toString)).flatMap { entry =>
           if (entry.get("status").asInstanceOf[Int] == 2) None
@@ -498,7 +473,7 @@ object IcebergInterop {
     val snapshotId = math.abs(java.util.UUID.nameUUIDFromBytes(
       (target + "|" + prevVersion + "|" + snap.files.mkString(","))
         .getBytes("UTF-8")).getMostSignificantBits)
-    val schemaId = Option(meta.get("current-schema-id")).map(_.asInt).getOrElse(0)
+    val schemaId = ice.schemaId
     val schemaJson = m.writeValueAsString(icebergSchema(m, schema, schemaId))
     val manifestName = f"graft-m0-$snapshotId%d.avro"
     writeManifest(metaDir.resolve(manifestName), snapshotId, schemaJson,
@@ -759,15 +734,15 @@ object IcebergInterop {
         transform = "day"))
       case None => identityPartFields(schema, snap.partCols)
     }
-    val (prevVersion, meta) = currentMetadata(metaDir, target)
+    val ice = new IcebergTable(target)
+    val (prevVersion, meta) = (ice.version, ice.meta)
     // the mirror only appends to a table THIS writer's format produced —
     // a foreign v2 table could carry delete files (whose manifests this
     // path would misread as data, silently resurrecting deleted rows) or
     // a partition spec the writer cannot express. Fail loudly, matching
     // readIceberg's stance.
-    val fv = meta.get("format-version").asInt
-    require(fv == 1,
-      s"cannot incrementally export onto a format-version $fv Iceberg table " +
+    require(ice.formatVersion == 1,
+      s"cannot incrementally export onto a format-version ${ice.formatVersion} Iceberg table " +
         s"at $target — this writer produces v1; re-export from scratch")
     // the EXISTING table's default spec must be exactly the identity spec
     // this snapshot would write — same columns, same order. The check reads
@@ -793,18 +768,15 @@ object IcebergInterop {
             s"partition spec is [${prevSpecCols.mkString(",")}] but the source " +
             s"layout is [${snap.partCols.mkString(",")}] — re-export from scratch")
     }
-    val prevSchema = currentSparkSchema(meta, target)
+    val prevSchema = ice.schema
     require(prevSchema.fields.map(f => (f.name, f.dataType)).toSeq ==
         schema.fields.take(prevSchema.fields.length).map(f => (f.name, f.dataType)).toSeq,
       s"schema change at $target is not append-only (prev " +
         s"${prevSchema.fieldNames.mkString(",")} vs ${schema.fieldNames.mkString(",")}) " +
         "— positional field-ids would renumber; re-export from scratch")
 
-    val prevSnapId = Option(meta.get("current-snapshot-id")).map(_.asLong).filter(_ != -1L)
-    val prevSnapNode = prevSnapId.flatMap { id =>
-      Option(meta.get("snapshots")).flatMap(
-        _.elements().asScala.find(_.get("snapshot-id").asLong == id))
-    }
+    val prevSnapId = ice.currentId
+    val prevSnapNode = prevSnapId.flatMap(ice.byId.get)
     val dataDir = finalDir.resolve("data")
     // current live set as (rel name under data/, size, rows, carried day
     // tuple) — sizes, record counts, AND day ordinals RIDE the prior
@@ -908,7 +880,7 @@ object IcebergInterop {
     // readable with the schema they were written under, and appended
     // columns are exported optional (old data files have no values for
     // them, so a `required` flag would be a lie a strict reader rejects).
-    val prevSchemaId = Option(meta.get("current-schema-id")).map(_.asInt).getOrElse(0)
+    val prevSchemaId = ice.schemaId
     val newSchemaId = if (schemaChanged) prevSchemaId + 1 else prevSchemaId
     val optionalFrom = if (schemaChanged) prevSchema.fields.length else Int.MaxValue
 
@@ -1004,23 +976,10 @@ object IcebergInterop {
       tsMillis: Long = System.currentTimeMillis(),
       keep: Option[Map[String, Any] => Boolean] = None): Long = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    val root = Paths.get(path).toAbsolutePath
-    val metaDir = root.resolve("metadata")
-    require(Files.isDirectory(metaDir), s"no Iceberg table at $path (missing metadata/)")
-    val (prevVersion, meta) = currentMetadata(metaDir, path)
-    val fv = meta.get("format-version").asInt
-    require(fv == 1 || fv == 2,
-      s"Iceberg table $path has format-version $fv — only v1/v2 are supported")
-    val partFieldNames = defaultSpecFields(meta).map(_.get("name").asText)
-    val schema = currentSparkSchema(meta, path)
-    val curId = Option(meta.get("current-snapshot-id")).map(_.asLong)
-      .filter(_ != -1L).getOrElse(throw new IllegalArgumentException(
-        s"Iceberg table $path has no current snapshot — nothing to delete from"))
-    val snapNode = Option(meta.get("snapshots"))
-      .flatMap(_.elements().asScala.find(_.get("snapshot-id").asLong == curId))
-      .getOrElse(throw new IllegalArgumentException(
-        s"Iceberg table $path current snapshot $curId is missing from the log"))
-    val (allDataFiles, deleteFiles, eqDeletes) = liveEntries(root, path, snapNode)
+    val t = new IcebergTable(path)
+    val partFieldNames = defaultSpecFields(t.meta).map(_.get("name").asText)
+    t.current("nothing to delete from")
+    val (allDataFiles, deleteFiles, eqDeletes) = t.live
     // manifest-tuple pruning BEFORE any footer or data byte is touched —
     // the same prune the reader runs
     val dataFiles = keep match {
@@ -1035,14 +994,12 @@ object IcebergInterop {
     // per-row (file, pos) provenance; the manifest-recorded file_path
     // string rides back in via the O(files) basename map so delete rows
     // reference files EXACTLY as the manifests do
-    val aliases = renameAliases(meta, path,
-      Option(meta.get("current-schema-id")).map(_.asInt))
-    val live = readWithIdentityFill(spark, path, meta, schema,
+    val live = readWithIdentityFill(spark, path, t.meta, t.schema,
       dataFiles.map(e => (e.resolved, e.partition)),
       positionDeleteFrame(spark, path, dataFiles, deleteFiles),
-      equalityDeleteSpecs(spark, path, meta, eqDeletes, Some(dataFiles)),
+      equalityDeleteSpecs(spark, path, t.meta, eqDeletes, Some(dataFiles)),
       dataFiles.map(e => (e.resolved.getFileName.toString, e.seq)),
-      aliases, provenance = true)
+      t.aliases, provenance = true)
     // each hit's partition GROUP rides along so the staged write splits
     // per partition — one sorted delete file per touched tuple
     val groups: Seq[(Option[GenericRecord], Seq[DataEntry])] =
@@ -1068,7 +1025,7 @@ object IcebergInterop {
     // file(s) — `__gdel_grp` leads the sort, so the partitioned writer's
     // required ordering is already satisfied and the (file_path, pos)
     // order survives into each written file
-    val delDir = root.resolve("data").resolve("deletes")
+    val delDir = t.root.resolve("data").resolve("deletes")
     val toWrite =
       if (partFieldNames.isEmpty) hits.drop("__gdel_grp").sort("file_path", "pos")
       else hits.repartition(col("__gdel_grp"))
@@ -1076,11 +1033,11 @@ object IcebergInterop {
     // (final path, rows, size, partition tuple)
     val nonce = java.util.UUID.randomUUID() // per-call names: racing deletes never share one
     val written: Seq[(Path, Long, Long, Option[GenericRecord])] = StagedWrite.write(
-        root, toWrite, if (partFieldNames.isEmpty) Nil else Seq("__gdel_grp"),
+        t.root, toWrite, if (partFieldNames.isEmpty) Nil else Seq("__gdel_grp"),
         fieldIds = true) {
       _.nonEmptyFiles.zipWithIndex.map { case (f, i) =>
         val dst = delDir.resolve(StagedWrite.seededName("delete",
-          s"$path|v$prevVersion|$tsMillis|$nonce|$i"))
+          s"$path|v${t.version}|$tsMillis|$nonce|$i"))
         val grp = f.parts.headOption.fold(0)(_._2.get.toInt)
         (dst, f.rows, f.moveTo(dst), groups(grp)._1)
       }
@@ -1088,30 +1045,14 @@ object IcebergInterop {
     if (written.isEmpty) return 0L
     val deleted = written.map(_._2).sum
 
-    // ---- the v2 commit: delete manifest + manifest list + metadata
-    val newSeq = Option(meta.get("last-sequence-number")).map(_.asLong)
-      .getOrElse(0L) + 1
-    val snapshotId = math.abs(java.util.UUID.nameUUIDFromBytes(
-      (path + "|delete|" + prevVersion + "|" +
-        written.map(_._1.getFileName).mkString(",")).getBytes("UTF-8"))
-      .getMostSignificantBits)
-    val m = mapper
-    val manifestName = f"graft-d0-$snapshotId%d.avro"
-    val partRecordJson = written.flatMap(_._4).headOption
-      .map(_.getSchema.toString).getOrElse(EmptyPartRecordJson)
-    writeDeleteManifest(metaDir.resolve(manifestName), snapshotId, newSeq,
-      m.writeValueAsString(icebergSchema(m, schema,
-        Option(meta.get("current-schema-id")).map(_.asInt).getOrElse(0))),
-      written.map { case (p, rows, size, part) =>
-        DeleteManifestFile(p.toUri.toString, rows, size, part) },
-      partRecordJson = partRecordJson,
-      specFieldsStr = m.writeValueAsString(specFieldsArray(m, meta)),
-      specId = Option(meta.get("default-spec-id")).map(_.asInt).getOrElse(0))
-    commitV2DeleteSnapshot(path, root, metaDir, meta, curId, snapNode,
-      prevVersion, snapshotId, newSeq, tsMillis, manifestName,
-      addedFiles = written.size, addedRows = deleted,
-      summaryKey = "deleted-position-deletes", summaryVal = deleted.toString,
-      manifestSpecId = Option(meta.get("default-spec-id")).map(_.asInt).getOrElse(0))
+    commitRows(t, "delete", "deleted-position-deletes" -> deleted.toString,
+      "delete", written.map(_._1.getFileName.toString),
+      Seq(DeleteManifest("graft-d0", 1, t.defaultSpecId,
+        written.map { case (p, rows, size, part) =>
+          DeleteManifestFile(p.toUri.toString, rows, size, part) },
+        partRecordJson = written.flatMap(_._4).headOption
+          .map(_.getSchema.toString).getOrElse(EmptyPartRecordJson),
+        specFieldsStr = specFieldsString(t.meta))), tsMillis)
     deleted
   }
 
@@ -1125,12 +1066,12 @@ object IcebergInterop {
         fn -> decodeTupleValue(rec.get(fn), f.schema()))
     }.toMap
 
-  /** The default spec's `fields` as a JSON array (deep-copied from the
-    * metadata) — the delete manifest's `partition-spec` header. */
-  private def specFieldsArray(m: ObjectMapper, meta: JsonNode): ArrayNode = {
-    val arr = m.createArrayNode()
+  /** The default spec's `fields` as a JSON array — the delete manifest's
+    * `partition-spec` header. */
+  private def specFieldsString(meta: JsonNode): String = {
+    val arr = mapper.createArrayNode()
     defaultSpecFields(meta).foreach(f => arr.add(f.deepCopy[JsonNode]()))
-    arr
+    mapper.writeValueAsString(arr)
   }
 
   /** Row-level DELETE BY KEY: commit a v2 EQUALITY-DELETE snapshot — the
@@ -1149,52 +1090,8 @@ object IcebergInterop {
     *   columns); duplicates collapse.
     * @return the number of distinct keys committed. */
   def deleteFromIcebergByKey(spark: SparkSession, path: String,
-      keys: DataFrame, tsMillis: Long = System.currentTimeMillis()): Long = {
-    import org.apache.spark.sql.functions.col
-    val root = Paths.get(path).toAbsolutePath
-    val metaDir = root.resolve("metadata")
-    require(Files.isDirectory(metaDir), s"no Iceberg table at $path (missing metadata/)")
-    val (prevVersion, meta) = currentMetadata(metaDir, path)
-    val fv = meta.get("format-version").asInt
-    require(fv == 1 || fv == 2,
-      s"Iceberg table $path has format-version $fv — only v1/v2 are supported")
-    val schema = currentSparkSchema(meta, path)
-    val curId = Option(meta.get("current-snapshot-id")).map(_.asLong)
-      .filter(_ != -1L).getOrElse(throw new IllegalArgumentException(
-        s"Iceberg table $path has no current snapshot — nothing to delete from"))
-    val snapNode = Option(meta.get("snapshots"))
-      .flatMap(_.elements().asScala.find(_.get("snapshot-id").asLong == curId))
-      .getOrElse(throw new IllegalArgumentException(
-        s"Iceberg table $path current snapshot $curId is missing from the log"))
-    val staged = stageEqDelete(spark, root, path, meta, snapNode, schema,
-      keys.distinct(), prevVersion, tsMillis, "deleteFromIcebergByKey")
-    if (staged.files.isEmpty) { staged.cleanup(); return 0L }
-    val nKeys = staged.rows
-
-    val newSeq = Option(meta.get("last-sequence-number")).map(_.asLong)
-      .getOrElse(0L) + 1
-    val snapshotId = math.abs(java.util.UUID.nameUUIDFromBytes(
-      (path + "|eqdelete|" + prevVersion + "|" +
-        staged.files.map(_._2.getFileName).mkString(",")).getBytes("UTF-8"))
-      .getMostSignificantBits)
-    val m = mapper
-    val manifestName = f"graft-e0-$snapshotId%d.avro"
-    // the staged parquets enter the table only now, immediately before
-    // the commit metadata — nothing orphans on an earlier failure
-    val written = staged.promote()
-    writeDeleteManifest(metaDir.resolve(manifestName), snapshotId, newSeq,
-      m.writeValueAsString(icebergSchema(m, schema,
-        Option(meta.get("current-schema-id")).map(_.asInt).getOrElse(0))),
-      written.map { case (p, rows, size) =>
-        DeleteManifestFile(p.toUri.toString, rows, size) },
-      content = 2, equalityIds = Some(staged.ids), specId = staged.eqSpecId)
-    commitV2DeleteSnapshot(path, root, metaDir, meta, curId, snapNode,
-      prevVersion, snapshotId, newSeq, tsMillis, manifestName,
-      addedFiles = written.size, addedRows = nKeys,
-      summaryKey = "deleted-equality-keys", summaryVal = nKeys.toString,
-      manifestSpecId = staged.eqSpecId, mintEmptySpec = staged.mintEmptySpec)
-    nKeys
-  }
+      keys: DataFrame, tsMillis: Long = System.currentTimeMillis()): Long =
+    deleteByKey(spark, path, keys, None, tsMillis)
 
   /** PARTITION-SCOPED equality delete — the foreign CDC writers' shape
     * (e.g. Flink), which [[readIceberg]] honors since round 12: the key
@@ -1212,75 +1109,62 @@ object IcebergInterop {
     *   reach; committing it anyway would be dead metadata). */
   def deleteFromIcebergByKeyScoped(spark: SparkSession, path: String,
       keys: DataFrame, partition: Map[String, Any],
-      tsMillis: Long = System.currentTimeMillis()): Long = {
-    val root = Paths.get(path).toAbsolutePath
-    val metaDir = root.resolve("metadata")
-    require(Files.isDirectory(metaDir), s"no Iceberg table at $path (missing metadata/)")
-    val (prevVersion, meta) = currentMetadata(metaDir, path)
-    val fv = meta.get("format-version").asInt
-    require(fv == 1 || fv == 2,
-      s"Iceberg table $path has format-version $fv — only v1/v2 are supported")
-    val schema = currentSparkSchema(meta, path)
-    val curId = Option(meta.get("current-snapshot-id")).map(_.asLong)
-      .filter(_ != -1L).getOrElse(throw new IllegalArgumentException(
-        s"Iceberg table $path has no current snapshot — nothing to delete from"))
-    val snapNode = Option(meta.get("snapshots"))
-      .flatMap(_.elements().asScala.find(_.get("snapshot-id").asLong == curId))
-      .getOrElse(throw new IllegalArgumentException(
-        s"Iceberg table $path current snapshot $curId is missing from the log"))
-    val specFields = defaultSpecFields(meta)
-    require(specFields.nonEmpty,
-      s"deleteFromIcebergByKeyScoped: the table at $path is UNPARTITIONED — " +
-        "use deleteFromIcebergByKey (a global delete)")
-    val fieldNames = specFields.map(_.get("name").asText)
-    require(partition.keySet == fieldNames.toSet,
-      s"deleteFromIcebergByKeyScoped: partition must name exactly the spec " +
-        s"fields [${fieldNames.mkString(",")}]; got " +
-        s"[${partition.keySet.mkString(",")}]")
+      tsMillis: Long = System.currentTimeMillis()): Long =
+    deleteByKey(spark, path, keys, Some(partition), tsMillis)
+
+  /** The body of both key deletes: a `scope` names the partition whose
+    * tuple the delete rides under the table's own spec, else the delete is
+    * global (a partitioned table's under an unpartitioned spec). */
+  private def deleteByKey(spark: SparkSession, path: String, keys: DataFrame,
+      scope: Option[Map[String, Any]], tsMillis: Long): Long = {
+    val caller = if (scope.isEmpty) "deleteFromIcebergByKey" else "deleteFromIcebergByKeyScoped"
+    val t = new IcebergTable(path)
+    t.current("nothing to delete from")
     // resolve the target tuple from a LIVE data entry of that partition —
     // reusing its manifest GenericRecord keeps the Avro tuple schema
     // byte-identical to the data manifests'
-    val defaultSpecId = Option(meta.get("default-spec-id")).map(_.asInt).getOrElse(0)
-    val (liveData, _, _) = liveEntries(root, path, snapNode)
-    liveData.find(_.specId != defaultSpecId).foreach { d =>
-      throw new IllegalArgumentException(
-        s"deleteFromIcebergByKeyScoped: data file ${d.resolved.getFileName} " +
-          s"of $path rides spec ${d.specId} (default $defaultSpecId) — a " +
-          "scoped delete across a spec evolution is undecidable; compact first")
+    val tuple: Option[GenericRecord] = scope match {
+      case None => None
+      case Some(partition) =>
+        val specFields = defaultSpecFields(t.meta)
+        require(specFields.nonEmpty,
+          s"$caller: the table at $path is UNPARTITIONED — " +
+            "use deleteFromIcebergByKey (a global delete)")
+        val fieldNames = specFields.map(_.get("name").asText)
+        require(partition.keySet == fieldNames.toSet,
+          s"$caller: partition must name exactly the spec " +
+            s"fields [${fieldNames.mkString(",")}]; got " +
+            s"[${partition.keySet.mkString(",")}]")
+        val (liveData, _, _) = t.live
+        liveData.find(_.specId != t.defaultSpecId).foreach { d =>
+          throw new IllegalArgumentException(
+            s"$caller: data file ${d.resolved.getFileName} " +
+              s"of $path rides spec ${d.specId} (default ${t.defaultSpecId}) — a " +
+              "scoped delete across a spec evolution is undecidable; compact first")
+        }
+        // no live data file in the partition: nothing the delete could
+        // reach, and committing it anyway would be dead metadata
+        liveData.find(d => decodePartitionTuple(d.partition, fieldNames) == partition)
+          .map(_.partition)
     }
-    val inPartition = liveData.filter(d =>
-      decodePartitionTuple(d.partition, fieldNames) == partition)
-    if (inPartition.isEmpty) return 0L
-    val tupleRec = inPartition.head.partition
-    val staged = stageEqDelete(spark, root, path, meta, snapNode, schema,
-      keys.distinct(), prevVersion, tsMillis, "deleteFromIcebergByKeyScoped",
-      scoped = true)
+    if (scope.nonEmpty && tuple.isEmpty) return 0L
+    val staged = stageEqDelete(spark, t, keys.distinct(), tsMillis, caller,
+      scoped = scope.nonEmpty)
     if (staged.files.isEmpty) { staged.cleanup(); return 0L }
-    val nKeys = staged.rows
-    val newSeq = Option(meta.get("last-sequence-number")).map(_.asLong)
-      .getOrElse(0L) + 1
-    val snapshotId = math.abs(java.util.UUID.nameUUIDFromBytes(
-      (path + "|eqdelete-scoped|" + prevVersion + "|" +
-        staged.files.map(_._2.getFileName).mkString(",")).getBytes("UTF-8"))
-      .getMostSignificantBits)
-    val m = mapper
-    val manifestName = f"graft-e0-$snapshotId%d.avro"
+    val names = staged.files.map(_._2.getFileName.toString)
+    // the staged parquets enter the table only now, immediately before
+    // the commit metadata — nothing orphans on an earlier failure
     val written = staged.promote()
-    writeDeleteManifest(metaDir.resolve(manifestName), snapshotId, newSeq,
-      m.writeValueAsString(icebergSchema(m, schema,
-        Option(meta.get("current-schema-id")).map(_.asInt).getOrElse(0))),
-      written.map { case (p, rows, size) =>
-        DeleteManifestFile(p.toUri.toString, rows, size, Some(tupleRec)) },
-      content = 2, equalityIds = Some(staged.ids),
-      partRecordJson = tupleRec.getSchema.toString,
-      specFieldsStr = m.writeValueAsString(specFieldsArray(m, meta)),
-      specId = staged.eqSpecId)
-    commitV2DeleteSnapshot(path, root, metaDir, meta, curId, snapNode,
-      prevVersion, snapshotId, newSeq, tsMillis, manifestName,
-      addedFiles = written.size, addedRows = nKeys,
-      summaryKey = "deleted-equality-keys", summaryVal = nKeys.toString,
-      manifestSpecId = staged.eqSpecId)
-    nKeys
+    commitRows(t, "delete", "deleted-equality-keys" -> staged.rows.toString,
+      if (scope.isEmpty) "eqdelete" else "eqdelete-scoped", names,
+      Seq(DeleteManifest("graft-e0", 2, staged.eqSpecId,
+        written.map { case (p, rows, size) =>
+          DeleteManifestFile(p.toUri.toString, rows, size, tuple) },
+        Some(staged.ids),
+        tuple.fold(EmptyPartRecordJson)(_.getSchema.toString),
+        if (tuple.isEmpty) "[ ]" else specFieldsString(t.meta))),
+      tsMillis, staged.mintEmptySpec)
+    staged.rows
   }
 
   /** Shared equality-delete preparation of [[deleteFromIcebergByKey]] and
@@ -1293,11 +1177,11 @@ object IcebergInterop {
     * planned — moved into the layout only by [[StagedEqDelete.promote]],
     * which the caller invokes immediately before writing the commit
     * metadata. */
-  private def stageEqDelete(spark: SparkSession, root: Path, path: String,
-      meta: JsonNode, snapNode: JsonNode, schema: StructType,
-      keys: DataFrame, prevVersion: Long, tsMillis: Long, caller: String,
+  private def stageEqDelete(spark: SparkSession, t: IcebergTable,
+      keys: DataFrame, tsMillis: Long, caller: String,
       scoped: Boolean = false): StagedEqDelete = {
     import org.apache.spark.sql.functions.col
+    val (path, meta, schema) = (t.path, t.meta, t.schema)
     val keyCols = keys.columns.toSeq
     require(keyCols.nonEmpty, s"$caller: the key frame has no columns")
     // the reader anchors equality deletes at the SCAN under current
@@ -1305,11 +1189,9 @@ object IcebergInterop {
     // still carrying the OLD physical name. The write-side refusal is
     // precise (the same rule the reader enforces): only files that lack
     // the current name block the delete, so a compacted table passes.
-    val renamed = renameAliases(meta, path,
-      Option(meta.get("current-schema-id")).map(_.asInt))
-    val renamedKeys = keyCols.filter(renamed.contains)
+    val renamedKeys = keyCols.filter(t.aliases.contains)
     if (renamedKeys.nonEmpty) {
-      val (liveData, _, _) = liveEntries(root, path, snapNode)
+      val (liveData, _, _) = t.live
       val bulk = parquetTopLevelColsBulk(spark, liveData.map(_.resolved))
       renamedKeys.foreach(c => bulk.find(!_._2.contains(c)).foreach { case (u, _) =>
         throw new IllegalArgumentException(
@@ -1344,10 +1226,9 @@ object IcebergInterop {
     // identity-projected partition source refuses at write time with the
     // reader's rule.
     val specsById = partitionSpecsById(meta)
-    val defaultSpecId = Option(meta.get("default-spec-id")).map(_.asInt).getOrElse(0)
     val partitioned = defaultSpecFields(meta).nonEmpty
     if (partitioned) {
-      val (liveData, _, _) = liveEntries(root, path, snapNode)
+      val (liveData, _, _) = t.live
       if (liveData.nonEmpty) {
         val probe = parquetTopLevelCols(spark, liveData.head.resolved)
         keyCols.foreach(c => require(probe.contains(c),
@@ -1364,9 +1245,9 @@ object IcebergInterop {
         require(partitioned,
           s"$caller: the table at $path is unpartitioned — a " +
             "partition-scoped delete has no partition to scope to")
-        (defaultSpecId, None)
+        (t.defaultSpecId, None)
       }
-      else if (!partitioned) (defaultSpecId, None)
+      else if (!partitioned) (t.defaultSpecId, None)
       else specsById.collectFirst { case (id, fs) if fs.isEmpty => id } match {
         case Some(id) => (id, None)
         case None =>
@@ -1382,13 +1263,13 @@ object IcebergInterop {
       col(c).as(c, new org.apache.spark.sql.types.MetadataBuilder()
         .putLong("parquet.field.id", id.toLong).build())
     }.toIndexedSeq: _*)
-    val delDir = root.resolve("data").resolve("deletes")
-    val stage = StagedWrite.stage(root,
+    val delDir = t.root.resolve("data").resolve("deletes")
+    val stage = StagedWrite.stage(t.root,
       stamped.sortWithinPartitions(keyCols.map(col).toIndexedSeq: _*), fieldIds = true)
     val nonce = java.util.UUID.randomUUID() // per-call names: racing writers never share one
     val planned = try stage.nonEmptyFiles.zipWithIndex.map { case (f, i) =>
         (f, delDir.resolve(StagedWrite.seededName("eqdelete",
-          s"$path|v$prevVersion|$tsMillis|$nonce|$i")))
+          s"$path|v${t.version}|$tsMillis|$nonce|$i")))
       } catch { case e: Throwable => stage.close(); throw e }
     StagedEqDelete(stage, planned, ids, eqSpecId, mintEmptySpec)
   }
@@ -1613,26 +1494,11 @@ object IcebergInterop {
       keyCols: Seq[String],
       tsMillis: Long = System.currentTimeMillis()): (Long, Long) = {
     import org.apache.spark.sql.functions.col
-    val root = Paths.get(path).toAbsolutePath
-    val metaDir = root.resolve("metadata")
-    require(Files.isDirectory(metaDir), s"no Iceberg table at $path (missing metadata/)")
-    val (prevVersion, meta) = currentMetadata(metaDir, path)
-    val fv = meta.get("format-version").asInt
-    require(fv == 1 || fv == 2,
-      s"Iceberg table $path has format-version $fv — only v1/v2 are supported")
-    val schema = currentSparkSchema(meta, path)
+    val t = new IcebergTable(path)
+    t.current("export first, then merge")
+    val schema = t.schema
     require(keyCols.nonEmpty, "upsertIceberg: no key columns")
-    require(rows.columns.toSet == schema.fieldNames.toSet,
-      s"upsertIceberg: the incoming rows must carry the table's exact " +
-        s"columns (${schema.fieldNames.mkString(",")}); got " +
-        s"${rows.columns.mkString(",")}")
-    val ordered = rows.select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    schema.fields.foreach { f =>
-      require(ordered.schema(f.name).dataType == f.dataType,
-        s"upsertIceberg: column '${f.name}' is " +
-          s"${ordered.schema(f.name).dataType} but the table column is " +
-          s"${f.dataType} — cast to the exact table types first")
-    }
+    val ordered = StagedWrite.exactRows(rows, schema, "upsertIceberg")
     keyCols.foreach(c => require(schema.fieldNames.contains(c),
       s"upsertIceberg: key column '$c' is not a table column"))
     // the standard MERGE precondition (the mergeDelta guard): duplicate
@@ -1644,20 +1510,11 @@ object IcebergInterop {
         s"upsertIceberg: $n duplicate key(s) in the incoming frame — " +
           "MERGE with duplicate source keys is ambiguous; dedupe first"),
       "upsertIceberg: the incoming frame has no rows")
-    val curId = Option(meta.get("current-snapshot-id")).map(_.asLong)
-      .filter(_ != -1L).getOrElse(throw new IllegalArgumentException(
-        s"Iceberg table $path has no current snapshot — export first, then merge"))
-    val snapNode = Option(meta.get("snapshots"))
-      .flatMap(_.elements().asScala.find(_.get("snapshot-id").asLong == curId))
-      .getOrElse(throw new IllegalArgumentException(
-        s"Iceberg table $path current snapshot $curId is missing from the log"))
-    val specFields = stageableSpecFields(meta, schema, path, "upsertIceberg")
+    val specFields = stageableSpecFields(t.meta, schema, path, "upsertIceberg")
 
-    val stagedDel = stageEqDelete(spark,
-      root, path, meta, snapNode, schema,
+    val stagedDel = stageEqDelete(spark, t,
       incoming.select(keyCols.map(col).toIndexedSeq: _*), // distinct: checked above
-      prevVersion, tsMillis, "upsertIceberg")
-    val nKeys = stagedDel.rows
+      tsMillis, "upsertIceberg")
 
     // stage the incoming rows as data files — per partition for
     // partitioned specs: identity columns leave the bytes (the table's
@@ -1669,50 +1526,27 @@ object IcebergInterop {
     // — a failure anywhere in the staging aborts with no bytes left
     // behind inside the table.
     val partFields = specFields.map(_.pf)
-    val dataDir = root.resolve("data")
+    val dataDir = t.root.resolve("data")
     val (delWritten, dataWritten) = try {
-      writeSpecStage(incoming, schema, specFields, root) { staged =>
+      writeSpecStage(incoming, schema, specFields, t.root) { staged =>
         val dw = stagedDel.promote()
         (dw, moveStagedInto(staged, dataDir, partFields,
-          "upsert", s"$path|v$prevVersion|$tsMillis"))
+          "upsert", s"$path|v${t.version}|$tsMillis"))
       }
     } catch {
       case e: Throwable => stagedDel.cleanup(); throw e
     }
     val appended = dataWritten.map(_._2).sum
-
-    val newSeq = Option(meta.get("last-sequence-number")).map(_.asLong)
-      .getOrElse(0L) + 1
-    val snapshotId = math.abs(java.util.UUID.nameUUIDFromBytes(
-      (path + "|upsert|" + prevVersion + "|" +
-        dataWritten.map(_._1).mkString(",")).getBytes("UTF-8"))
-      .getMostSignificantBits)
-    val m = mapper
-    val schemaJson = m.writeValueAsString(icebergSchema(m, schema,
-      Option(meta.get("current-schema-id")).map(_.asInt).getOrElse(0)))
-    val delManifest = f"graft-e0-$snapshotId%d.avro"
-    writeDeleteManifest(metaDir.resolve(delManifest), snapshotId, newSeq,
-      schemaJson,
-      delWritten.map { case (pp, rc, size) =>
-        DeleteManifestFile(pp.toUri.toString, rc, size) },
-      content = 2, equalityIds = Some(stagedDel.ids),
-      specId = stagedDel.eqSpecId)
-    val dataManifest = f"graft-u0-$snapshotId%d.avro"
-    writeManifest(metaDir.resolve(dataManifest), snapshotId, schemaJson,
-      partFields,
-      dataWritten.map { case (rel, rc, size, tuple) =>
-        ManifestFile(dataDir.resolve(rel).toUri.toString, size, rc, tuple) })
-    commitV2DeleteSnapshot(path, root, metaDir, meta, curId, snapNode,
-      prevVersion, snapshotId, newSeq, tsMillis, delManifest,
-      addedFiles = delWritten.size, addedRows = nKeys,
-      summaryKey = "upserted-rows", summaryVal = appended.toString,
-      manifestSpecId = stagedDel.eqSpecId,
-      mintEmptySpec = stagedDel.mintEmptySpec,
-      extraManifests = Seq(NewManifest(dataManifest, 0,
-        Option(meta.get("default-spec-id")).map(_.asInt).getOrElse(0),
-        dataWritten.size, appended)),
-      operation = "overwrite")
-    (nKeys, appended)
+    commitRows(t, "overwrite", "upserted-rows" -> appended.toString,
+      "upsert", dataWritten.map(_._1),
+      Seq(DeleteManifest("graft-e0", 2, stagedDel.eqSpecId,
+          delWritten.map { case (pp, rc, size) => DeleteManifestFile(pp.toUri.toString, rc, size) },
+          Some(stagedDel.ids)),
+        DataManifest("graft-u0", t.defaultSpecId, partFields,
+          dataWritten.map { case (rel, rc, size, tuple) =>
+            ManifestFile(dataDir.resolve(rel).toUri.toString, size, rc, tuple) })),
+      tsMillis, stagedDel.mintEmptySpec)
+    (stagedDel.rows, appended)
   }
 
   /** Plain INSERT INTO: commit `rows` as ONE `append` snapshot under the
@@ -1736,65 +1570,24 @@ object IcebergInterop {
     * `rows` must carry the table's exact schema. Returns rows appended. */
   def appendIceberg(spark: SparkSession, path: String, rows: DataFrame,
       tsMillis: Long = System.currentTimeMillis()): Long = {
-    import org.apache.spark.sql.functions.col
-    val root = Paths.get(path).toAbsolutePath
-    val metaDir = root.resolve("metadata")
-    require(Files.isDirectory(metaDir), s"no Iceberg table at $path (missing metadata/)")
-    val (prevVersion, meta) = currentMetadata(metaDir, path)
-    val fv = meta.get("format-version").asInt
-    require(fv == 1 || fv == 2,
-      s"Iceberg table $path has format-version $fv — only v1/v2 are supported")
-    val schema = currentSparkSchema(meta, path)
-    require(rows.columns.toSet == schema.fieldNames.toSet,
-      s"appendIceberg: the incoming rows must carry the table's exact " +
-        s"columns (${schema.fieldNames.mkString(",")}); got " +
-        s"${rows.columns.mkString(",")}")
-    val ordered = rows.select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    schema.fields.foreach { f =>
-      require(ordered.schema(f.name).dataType == f.dataType,
-        s"appendIceberg: column '${f.name}' is " +
-          s"${ordered.schema(f.name).dataType} but the table column is " +
-          s"${f.dataType} — cast to the exact table types first")
-    }
-    val curId = Option(meta.get("current-snapshot-id")).map(_.asLong)
-      .filter(_ != -1L).getOrElse(throw new IllegalArgumentException(
-        s"Iceberg table $path has no current snapshot — export first, then append"))
-    val snapNode = Option(meta.get("snapshots"))
-      .flatMap(_.elements().asScala.find(_.get("snapshot-id").asLong == curId))
-      .getOrElse(throw new IllegalArgumentException(
-        s"Iceberg table $path current snapshot $curId is missing from the log"))
-    val specFields = stageableSpecFields(meta, schema, path, "appendIceberg")
-
+    val t = new IcebergTable(path)
+    t.current("export first, then append")
+    val ordered = StagedWrite.exactRows(rows, t.schema, "appendIceberg")
+    val specFields = stageableSpecFields(t.meta, t.schema, path, "appendIceberg")
     val partFields = specFields.map(_.pf)
-    val dataDir = root.resolve("data")
+    val dataDir = t.root.resolve("data")
     val dataWritten: Seq[(String, Long, Long, Seq[Any])] =
-      writeSpecStage(ordered, schema, specFields, root) { staged =>
+      writeSpecStage(ordered, t.schema, specFields, t.root) { staged =>
         require(staged.nonEmpty, "appendIceberg: the incoming frame has no rows")
         moveStagedInto(staged, dataDir, partFields,
-          "append", s"$path|append|v$prevVersion|$tsMillis")
+          "append", s"$path|append|v${t.version}|$tsMillis")
       }
     val appended = dataWritten.map(_._2).sum
-
-    val newSeq = Option(meta.get("last-sequence-number")).map(_.asLong)
-      .getOrElse(0L) + 1
-    val snapshotId = math.abs(java.util.UUID.nameUUIDFromBytes(
-      (path + "|append|" + prevVersion + "|" +
-        dataWritten.map(_._1).mkString(",")).getBytes("UTF-8"))
-      .getMostSignificantBits)
-    val m = mapper
-    val schemaJson = m.writeValueAsString(icebergSchema(m, schema,
-      Option(meta.get("current-schema-id")).map(_.asInt).getOrElse(0)))
-    val dataManifest = f"graft-a0-$snapshotId%d.avro"
-    writeManifest(metaDir.resolve(dataManifest), snapshotId, schemaJson,
-      partFields,
-      dataWritten.map { case (rel, rc, size, tuple) =>
-        ManifestFile(dataDir.resolve(rel).toUri.toString, size, rc, tuple) })
-    commitV2DeleteSnapshot(path, root, metaDir, meta, curId, snapNode,
-      prevVersion, snapshotId, newSeq, tsMillis, dataManifest,
-      addedFiles = dataWritten.size, addedRows = appended,
-      summaryKey = "added-records", summaryVal = appended.toString,
-      manifestSpecId = Option(meta.get("default-spec-id")).map(_.asInt).getOrElse(0),
-      operation = "append", primaryContent = 0)
+    commitRows(t, "append", "added-records" -> appended.toString,
+      "append", dataWritten.map(_._1),
+      Seq(DataManifest("graft-a0", t.defaultSpecId, partFields,
+        dataWritten.map { case (rel, rc, size, tuple) =>
+          ManifestFile(dataDir.resolve(rel).toUri.toString, size, rc, tuple) })), tsMillis)
     appended
   }
 
@@ -1815,14 +1608,8 @@ object IcebergInterop {
     * @return the new spec id (also now the default-spec-id). */
   def evolveIcebergSpecDay(spark: SparkSession, path: String, tsCol: String,
       tsMillis: Long = System.currentTimeMillis()): Int = {
-    val root = Paths.get(path).toAbsolutePath
-    val metaDir = root.resolve("metadata")
-    require(Files.isDirectory(metaDir), s"no Iceberg table at $path (missing metadata/)")
-    val (prevVersion, meta) = currentMetadata(metaDir, path)
-    val fv = meta.get("format-version").asInt
-    require(fv == 1 || fv == 2,
-      s"Iceberg table $path has format-version $fv — only v1/v2 are supported")
-    val schema = currentSparkSchema(meta, path)
+    val t = new IcebergTable(path)
+    val (meta, schema) = (t.meta, t.schema)
     require(schema.fieldNames.contains(tsCol),
       s"evolveIcebergSpecDay: '$tsCol' is not a column of the table at $path")
     require(schema(tsCol).dataType == TimestampType ||
@@ -1888,7 +1675,7 @@ object IcebergInterop {
       legacy.add(newField.deepCopy[JsonNode]())
     }
     rootNode.put("last-updated-ms", tsMillis)
-    commitMetadata(metaDir, path, prevVersion, rootNode)
+    commitMetadata(t.metaDir, path, t.version, rootNode)
     newSpecId
   }
 
@@ -1908,32 +1695,84 @@ object IcebergInterop {
         .map(_.elements().asScala.toSeq).getOrElse(Seq.empty)))
   }
 
-  /** The shared v2 DELETE-snapshot commit: carry every existing manifest
-    * forward VERBATIM into a new manifest list (paths, specs, sequence
-    * numbers — defaulting v1-era ones to sequence 0 per the upgrade
-    * rule), append the freshly written delete manifest at
-    * `metaDir/manifestName`, and publish v(N+1).metadata.json upgraded to
-    * format-version 2 (plural schema/spec forms, sort-orders seeded). */
-  /** One freshly-written manifest a v2 commit appends: name under
-    * metadata/, manifest-list content code (0 data, 1 deletes), its spec
-    * id, and its added file/row counts. */
-  private case class NewManifest(name: String, content: Int, specId: Int,
-      addedFiles: Int, addedRows: Long)
+  /** One manifest a row-level commit adds, named
+    * `<prefix>-<snapshot id>.avro` under metadata/: its manifest-list
+    * content (0 data, 1 deletes), spec id, added file and row counts, and
+    * how its entries are written. */
+  private sealed trait NewManifest {
+    def prefix: String
+    def listContent: Int
+    def specId: Int
+    def files: Int
+    def rows: Long
+    def write(p: Path, snapshotId: Long, seq: Long, schemaJson: String): Unit
+  }
 
-  private def commitV2DeleteSnapshot(path: String, root: Path, metaDir: Path,
-      meta: JsonNode, curId: Long, snapNode: JsonNode, prevVersion: Long,
-      snapshotId: Long, newSeq: Long, tsMillis: Long, manifestName: String,
-      addedFiles: Int, addedRows: Long,
-      summaryKey: String, summaryVal: String,
-      manifestSpecId: Int = 0, mintEmptySpec: Option[Int] = None,
-      extraManifests: Seq[NewManifest] = Seq.empty,
-      operation: String = "delete", primaryContent: Int = 1): Unit = {
+  /** A delete manifest: `content` 1 (position) or 2 (equality, with its
+    * `equalityIds`); a partition-scoped one carries its tuple's record
+    * schema and the spec's fields. */
+  private final case class DeleteManifest(prefix: String, content: Int, specId: Int,
+      entries: Seq[DeleteManifestFile], equalityIds: Option[Seq[Int]] = None,
+      partRecordJson: String = EmptyPartRecordJson, specFieldsStr: String = "[ ]")
+      extends NewManifest {
+    def listContent: Int = 1
+    def files: Int = entries.size
+    def rows: Long = entries.map(_.rows).sum
+    def write(p: Path, snapshotId: Long, seq: Long, schemaJson: String): Unit =
+      writeDeleteManifest(p, snapshotId, seq, schemaJson, entries, content, equalityIds,
+        partRecordJson, specFieldsStr, specId)
+  }
+
+  /** A data manifest: `entries` under the spec's `partFields`. */
+  private final case class DataManifest(prefix: String, specId: Int,
+      partFields: Seq[PartField], entries: Seq[ManifestFile]) extends NewManifest {
+    def listContent: Int = 0
+    def files: Int = entries.size
+    def rows: Long = entries.map(_.rows).sum
+    def write(p: Path, snapshotId: Long, seq: Long, schemaJson: String): Unit =
+      writeManifest(p, snapshotId, schemaJson, partFields, entries)
+  }
+
+  /** A commit's snapshot id, derived from the table path, the commit kind,
+    * the metadata version it read and the names of the files it adds, so
+    * the same commit always gets the same id. */
+  private def seededSnapshotId(t: IcebergTable, kind: String, names: Seq[String]): Long =
+    math.abs(java.util.UUID.nameUUIDFromBytes(
+      (t.path + "|" + kind + "|" + t.version + "|" + names.mkString(",")).getBytes("UTF-8"))
+      .getMostSignificantBits)
+
+  /** The one row-level commit ([[deleteFromIceberg]], the key deletes,
+    * [[upsertIceberg]], [[appendIceberg]]) onto the current snapshot of
+    * `t`: the next sequence number, the snapshot id seeded by `kind` and
+    * the new files' `names`, `manifests` written and listed after every
+    * manifest of the current snapshot — carried VERBATIM (paths, specs,
+    * sequence numbers, v1-era ones defaulting to sequence 0 per the
+    * upgrade rule) — and v(N+1).metadata.json published upgraded to
+    * format-version 2 (plural schema/spec forms, sort orders seeded), its
+    * new snapshot carrying `operation` and the `summary` pair.
+    * `mintEmptySpec` adds an unpartitioned spec under that id. */
+  private def commitRows(t: IcebergTable, operation: String, summary: (String, String),
+      kind: String, names: Seq[String], manifests: Seq[NewManifest], tsMillis: Long,
+      mintEmptySpec: Option[Int] = None): Unit = {
     val m = mapper
-    val prevList = resolveUri(root, snapNode.get("manifest-list").asText)
-    val carried = readAvro(prevList).map { r =>
+    val snapNode = t.current("nothing to commit onto")
+    val curId = snapNode.get("snapshot-id").asLong
+    val newSeq = t.lastSequence + 1
+    val snapshotId = seededSnapshotId(t, kind, names)
+    val schemaJson = m.writeValueAsString(icebergSchema(m, t.schema, t.schemaId))
+    val added = manifests.map { nm =>
+      val p = t.metaDir.resolve(f"${nm.prefix}-$snapshotId%d.avro")
+      nm.write(p, snapshotId, newSeq, schemaJson)
+      ManifestListEntry(p.toUri.toString, Files.size(p), specId = nm.specId,
+        content = nm.listContent, seq = newSeq, minSeq = newSeq,
+        addedSnapshotId = snapshotId,
+        addedFiles = nm.files, existingFiles = 0, deletedFiles = 0,
+        addedRows = nm.rows, existingRows = 0L, deletedRows = 0L)
+    }
+    val carried = readAvro(resolveUri(t.root, snapNode.get("manifest-list").asText)).map { r =>
       def opt(name: String): Option[AnyRef] =
         Option(r.getSchema.getField(name)).flatMap(_ => Option(r.get(name)))
-      val mp = resolveUri(root, r.get("manifest_path").toString)
+      val mp = resolveUri(t.root, r.get("manifest_path").toString)
       val counts = opt("added_files_count").map { _ =>
         (r.get("added_files_count").asInstanceOf[Int],
           r.get("existing_files_count").asInstanceOf[Int],
@@ -1967,28 +1806,14 @@ object IcebergInterop {
         opt("added_snapshot_id").map(_.asInstanceOf[Long]).getOrElse(curId),
         counts._1, counts._2, counts._3, counts._4, counts._5, counts._6)
     }
-    val listName = f"snap-$snapshotId%d.avro"
-    val manifestLen = Files.size(metaDir.resolve(manifestName))
-    writeManifestListV2(metaDir.resolve(listName),
-      carried ++ (NewManifest(manifestName, primaryContent, manifestSpecId,
-        addedFiles, addedRows) +: extraManifests).map { nm =>
-        ManifestListEntry(
-          metaDir.resolve(nm.name).toUri.toString,
-          if (nm.name == manifestName) manifestLen
-          else Files.size(metaDir.resolve(nm.name)),
-          specId = nm.specId, content = nm.content,
-          seq = newSeq, minSeq = newSeq,
-          addedSnapshotId = snapshotId,
-          addedFiles = nm.addedFiles, existingFiles = 0, deletedFiles = 0,
-          addedRows = nm.addedRows, existingRows = 0L, deletedRows = 0L)
-      })
+    val listPath = t.metaDir.resolve(f"snap-$snapshotId%d.avro")
+    writeManifestListV2(listPath, carried ++ added)
 
     // ---- v(N+1).metadata.json: format-version 2 with the new snapshot
-    val rootNode = meta.deepCopy[ObjectNode]()
+    val rootNode = t.meta.deepCopy[ObjectNode]()
     rootNode.put("format-version", 2)
     rootNode.put("last-sequence-number", newSeq)
     rootNode.put("last-updated-ms", tsMillis)
-    val curSchemaId = Option(meta.get("current-schema-id")).map(_.asInt).getOrElse(0)
     // v2 metadata must carry the plural forms; seed them from the v1
     // singular fields when a legacy writer left only those, then drop the
     // singulars (v2 writers must not emit them)
@@ -1996,8 +1821,8 @@ object IcebergInterop {
       val arr = rootNode.putArray("schemas")
       arr.add(Option(rootNode.get("schema")).getOrElse(
         throw new IllegalArgumentException(
-          s"Iceberg table $path carries no schema")).deepCopy[JsonNode]())
-      rootNode.put("current-schema-id", curSchemaId)
+          s"Iceberg table ${t.path} carries no schema")).deepCopy[JsonNode]())
+      rootNode.put("current-schema-id", t.schemaId)
     }
     if (!rootNode.hasNonNull("partition-specs")) {
       val specs = rootNode.putArray("partition-specs")
@@ -2032,9 +1857,9 @@ object IcebergInterop {
       so.add(o0)
       rootNode.put("default-sort-order-id", 0)
     }
-    addSnapshot(rootNode, snapshotId, Some(curId), Some(newSeq), curSchemaId,
-      metaDir.resolve(listName), tsMillis, "operation" -> operation, summaryKey -> summaryVal)
-    commitMetadata(metaDir, path, prevVersion, rootNode)
+    addSnapshot(rootNode, snapshotId, Some(curId), Some(newSeq), t.schemaId,
+      listPath, tsMillis, "operation" -> operation, summary)
+    commitMetadata(t.metaDir, t.path, t.version, rootNode)
   }
 
   /** Physically reclaim deleted rows (the delete lifecycle's compaction
@@ -2092,31 +1917,20 @@ object IcebergInterop {
       tsMillis: Long, rewriteAll: Boolean): (Int, Long) = {
     import org.apache.spark.sql.functions.col
     val what = if (rewriteAll) "rewriteIcebergData" else "compactIcebergDeletes"
-    val root = Paths.get(path).toAbsolutePath
-    val metaDir = root.resolve("metadata")
-    require(Files.isDirectory(metaDir), s"no Iceberg table at $path (missing metadata/)")
-    val (prevVersion, meta) = currentMetadata(metaDir, path)
-    val fv = meta.get("format-version").asInt
-    require(fv == 1 || fv == 2,
-      s"Iceberg table $path has format-version $fv — only v1/v2 are supported")
+    val t = new IcebergTable(path)
+    val (root, meta, schema) = (t.root, t.meta, t.schema)
     // the default spec's stageable shape: identity fields rewrite per
     // partition (survivors keep the Column-Projected layout and their
     // manifest tuples); day/bucket/truncate fields re-derive their staged
     // tuples with the same transform expressions the exports use; other
     // transforms refuse inside stageableSpecFields
-    val schema = currentSparkSchema(meta, path)
     val specFields = stageableSpecFields(meta, schema, path, what)
     val partFields = specFields.map(_.pf)
-    val curId = Option(meta.get("current-snapshot-id")).map(_.asLong)
-      .filter(_ != -1L).getOrElse(return (0, 0L))
-    val snapNode = Option(meta.get("snapshots"))
-      .flatMap(_.elements().asScala.find(_.get("snapshot-id").asLong == curId))
-      .getOrElse(throw new IllegalArgumentException(
-        s"Iceberg table $path current snapshot $curId is missing from the log"))
-    val (dataFiles, deleteFiles, eqDeletes) = liveEntries(root, path, snapNode)
+    if (t.currentId.isEmpty) return (0, 0L)
+    val (dataFiles, deleteFiles, eqDeletes) = t.live
     if (dataFiles.isEmpty) return (0, 0L)
     if (!rewriteAll && deleteFiles.isEmpty && eqDeletes.isEmpty) return (0, 0L)
-    val rwDefaultSpec = Option(meta.get("default-spec-id")).map(_.asInt).getOrElse(0)
+    val rwDefaultSpec = t.defaultSpecId
     // after a spec evolution live files ride SEVERAL spec-ids. A FULL
     // rewrite re-derives every tuple under the current default spec —
     // the migration that converts a mixed-spec table to single-spec —
@@ -2138,14 +1952,12 @@ object IcebergInterop {
         s"$what: the table at $path mixes partition specs and its current " +
           "spec has IDENTITY fields — old-era entries carry no tuple to " +
           "reconstruct them from; unsupported")
-      val aliasesPre = renameAliases(meta, path,
-        Option(meta.get("current-schema-id")).map(_.asInt))
       val oldEra = dataFiles.filter(_.specId != rwDefaultSpec)
       val bulk = parquetTopLevelColsBulk(spark, oldEra.map(_.resolved))
       oldEra.foreach { d =>
         val cols = bulk(d.resolved.toString)
         schema.fieldNames.foreach(c => require(cols.contains(c) ||
-            aliasesPre.getOrElse(c, Seq.empty).exists(cols.contains),
+            t.aliases.getOrElse(c, Seq.empty).exists(cols.contains),
           s"$what: data file ${d.resolved.getFileName} rides spec " +
             s"${d.specId} and does not physically carry column '$c' — " +
             "its rows cannot be reconstructed under the current spec; " +
@@ -2207,15 +2019,13 @@ object IcebergInterop {
     // projected columns leave the bytes again). Equality deletes fold
     // in via the read path's own strictly-newer-sequence anti-join —
     // the new snapshot carries NO delete files of either kind.
-    val aliases = renameAliases(meta, path,
-      Option(meta.get("current-schema-id")).map(_.asInt))
     val eqSpecs = equalityDeleteSpecs(spark, path, meta, eqDeletes,
       scopeData = if (eqDeletes.isEmpty) None else Some(dataFiles))
     val survivors = readWithIdentityFill(spark, path, meta, schema,
       rewrite.map(e => (e.resolved, e.partition)),
       deletes = delFrame, eqSpecs = eqSpecs,
       dataSeqs = rewrite.map(e => (e.resolved.getFileName.toString, e.seq)),
-      aliases = aliases)
+      aliases = t.aliases)
     // a full rewrite may regroup rows across partition values (a flat
     // old era landing under a day spec) — cluster first; compaction
     // inputs are already partition-pure, no shuffle needed
@@ -2233,13 +2043,11 @@ object IcebergInterop {
 
     // ---- the commit: ONE fresh data manifest (carried + rewritten), no
     // delete manifests, published as a new v2 metadata version
-    val newSeq = Option(meta.get("last-sequence-number")).map(_.asLong)
-      .getOrElse(0L) + 1
-    val snapshotId = math.abs(java.util.UUID.nameUUIDFromBytes(
-      (path + "|compact|" + prevVersion + "|" + newFiles.map(_.path).mkString(","))
-        .getBytes("UTF-8")).getMostSignificantBits)
+    val newSeq = t.lastSequence + 1
+    val snapshotId = seededSnapshotId(t, "compact", newFiles.map(_.path))
     val m = mapper
-    val curSchemaId = Option(meta.get("current-schema-id")).map(_.asInt).getOrElse(0)
+    val curSchemaId = t.schemaId
+    val metaDir = t.metaDir
     val manifestName = f"graft-c0-$snapshotId%d.avro"
     // carried entries reuse the prior manifest's sizes/counts/tuples —
     // and their per-column BOUNDS — no footer re-reads for untouched
@@ -2263,7 +2071,7 @@ object IcebergInterop {
     writeManifestListV2(metaDir.resolve(listName), Seq(ManifestListEntry(
       metaDir.resolve(manifestName).toUri.toString,
       Files.size(metaDir.resolve(manifestName)),
-      specId = Option(meta.get("default-spec-id")).map(_.asInt).getOrElse(0),
+      specId = t.defaultSpecId,
       content = 0, seq = newSeq, minSeq = newSeq,
       addedSnapshotId = snapshotId,
       addedFiles = entries.size, existingFiles = 0, deletedFiles = 0,
@@ -2273,9 +2081,9 @@ object IcebergInterop {
     rootNode.put("format-version", 2)
     rootNode.put("last-sequence-number", newSeq)
     rootNode.put("last-updated-ms", tsMillis)
-    addSnapshot(rootNode, snapshotId, Some(curId), Some(newSeq), curSchemaId,
+    addSnapshot(rootNode, snapshotId, t.currentId, Some(newSeq), curSchemaId,
       metaDir.resolve(listName), tsMillis, "operation" -> "replace")
-    commitMetadata(metaDir, path, prevVersion, rootNode)
+    commitMetadata(metaDir, path, t.version, rootNode)
     (rewrite.size, deadRows)
   }
 
@@ -2406,12 +2214,8 @@ object IcebergInterop {
     * engine's own commits PRESERVE foreign refs (every metadata rewrite
     * deep-copies the tree), and [[expireIcebergSnapshots]] treats each
     * ref head as a retention root. */
-  def icebergRefs(path: String): Map[String, (Long, String)] = {
-    val root = Paths.get(path).toAbsolutePath
-    val metaDir = root.resolve("metadata")
-    require(Files.isDirectory(metaDir), s"no Iceberg table at $path (missing metadata/)")
-    refsOf(currentMetadata(metaDir, path)._2, path)
-  }
+  def icebergRefs(path: String): Map[String, (Long, String)] =
+    refsOf(new IcebergTable(path).meta, path)
 
   /** Resolve a ref NAME to its snapshot id — pass the result to
     * [[readIceberg]]'s `snapshotAsOf` (branch/tag time travel). `main`
@@ -2420,23 +2224,16 @@ object IcebergInterop {
     * unknown names (listing what exists) and on a ref whose snapshot
     * has been expired out from under it by a foreign writer. */
   def icebergRef(path: String, name: String): Long = {
-    val root = Paths.get(path).toAbsolutePath
-    val metaDir = root.resolve("metadata")
-    require(Files.isDirectory(metaDir), s"no Iceberg table at $path (missing metadata/)")
-    val (_, meta) = currentMetadata(metaDir, path)
-    val refs = refsOf(meta, path)
-    val snapIds = Option(meta.get("snapshots"))
-      .map(_.elements().asScala.map(_.get("snapshot-id").asLong).toSet)
-      .getOrElse(Set.empty[Long])
+    val t = new IcebergTable(path)
+    val refs = refsOf(t.meta, path)
     refs.get(name) match {
       case Some((id, _)) =>
-        require(snapIds.contains(id),
+        require(t.byId.contains(id),
           s"Iceberg table $path: ref '$name' points at snapshot $id which " +
             "is not in the snapshot list (expired by a foreign writer?)")
         id
       case None if name == "main" =>
-        Option(meta.get("current-snapshot-id")).map(_.asLong).filter(_ != -1L)
-          .getOrElse(throw new IllegalArgumentException(
+        t.currentId.getOrElse(throw new IllegalArgumentException(
             s"Iceberg table $path has no current snapshot — 'main' is empty"))
       case None => throw new IllegalArgumentException(
         s"Iceberg table $path has no ref '$name' — refs: " +
@@ -2457,16 +2254,10 @@ object IcebergInterop {
     require(name != "main" || refType == "branch",
       "setIcebergRef: 'main' is the spec's default BRANCH — a tag named " +
         "main would break every writer that advances it")
-    val root = Paths.get(path).toAbsolutePath
-    val metaDir = root.resolve("metadata")
-    require(Files.isDirectory(metaDir), s"no Iceberg table at $path (missing metadata/)")
-    val (prevVersion, meta) = currentMetadata(metaDir, path)
-    val snapIds = Option(meta.get("snapshots"))
-      .map(_.elements().asScala.map(_.get("snapshot-id").asLong).toSet)
-      .getOrElse(Set.empty[Long])
-    require(snapIds.contains(snapshotId),
+    val t = new IcebergTable(path)
+    require(t.byId.contains(snapshotId),
       s"setIcebergRef: snapshot $snapshotId does not exist in $path")
-    val rootNode = meta.deepCopy[ObjectNode]()
+    val rootNode = t.meta.deepCopy[ObjectNode]()
     val refsNode = Option(rootNode.get("refs")) match {
       case Some(o: ObjectNode) => o
       case _                   => rootNode.putObject("refs")
@@ -2475,23 +2266,20 @@ object IcebergInterop {
     entry.put("snapshot-id", snapshotId)
     entry.put("type", refType)
     rootNode.put("last-updated-ms", tsMillis)
-    commitMetadata(metaDir, path, prevVersion, rootNode)
+    commitMetadata(t.metaDir, path, t.version, rootNode)
   }
 
   /** Drop a named ref (metadata-only). Loud when absent — silently
     * "dropping" a typo'd name would leave the real ref retained. */
   def dropIcebergRef(path: String, name: String,
       tsMillis: Long = System.currentTimeMillis()): Unit = {
-    val root = Paths.get(path).toAbsolutePath
-    val metaDir = root.resolve("metadata")
-    require(Files.isDirectory(metaDir), s"no Iceberg table at $path (missing metadata/)")
-    val (prevVersion, meta) = currentMetadata(metaDir, path)
-    require(refsOf(meta, path).contains(name),
+    val t = new IcebergTable(path)
+    require(refsOf(t.meta, path).contains(name),
       s"dropIcebergRef: Iceberg table $path has no ref '$name'")
-    val rootNode = meta.deepCopy[ObjectNode]()
+    val rootNode = t.meta.deepCopy[ObjectNode]()
     rootNode.get("refs").asInstanceOf[ObjectNode].remove(name)
     rootNode.put("last-updated-ms", tsMillis)
-    commitMetadata(metaDir, path, prevVersion, rootNode)
+    commitMetadata(t.metaDir, path, t.version, rootNode)
   }
 
   def expireIcebergSnapshots(spark: SparkSession, path: String,
@@ -2501,19 +2289,12 @@ object IcebergInterop {
     require(keepLast >= 1, s"keepLast must be >= 1 (got $keepLast)")
     require(keepMetadataVersions >= 1,
       s"keepMetadataVersions must be >= 1 (got $keepMetadataVersions)")
-    val root = Paths.get(path).toAbsolutePath
-    val metaDir = root.resolve("metadata")
-    require(Files.isDirectory(metaDir), s"no Iceberg table at $path (missing metadata/)")
-    val (prevVersion, meta) = currentMetadata(metaDir, path)
-    val fv = meta.get("format-version").asInt
-    require(fv == 1 || fv == 2,
-      s"Iceberg table $path has format-version $fv — only v1/v2 are supported")
-    val snaps = Option(meta.get("snapshots"))
-      .map(_.elements().asScala.toSeq).getOrElse(Seq.empty)
+    val t = new IcebergTable(path)
+    val (root, metaDir, prevVersion, meta) = (t.root, t.metaDir, t.version, t.meta)
+    val snaps = t.snapshots
     if (snaps.size <= keepLast) return (0, 0, 0L)
-    val curId = Option(meta.get("current-snapshot-id")).map(_.asLong)
-      .filter(_ != -1L).getOrElse(throw new IllegalArgumentException(
-        s"Iceberg table $path has no current snapshot — nothing to expire against"))
+    val curId = t.currentId.getOrElse(throw new IllegalArgumentException(
+      s"Iceberg table $path has no current snapshot — nothing to expire against"))
     // age order: sequence number when present (v2), timestamp as the tie
     def seqOf(n: JsonNode) =
       Option(n.get("sequence-number")).map(_.asLong).getOrElse(0L)
@@ -2525,7 +2306,7 @@ object IcebergInterop {
     // readers (round-13; dangling refs refuse rather than mis-retain)
     val refs = refsOf(meta, path)
     refs.foreach { case (n, (id, _)) =>
-      require(snaps.exists(_.get("snapshot-id").asLong == id),
+      require(t.byId.contains(id),
         s"Iceberg table $path: ref '$n' points at snapshot $id which is " +
           "not in the snapshot list — refusing to expire against a " +
           "dangling ref")
@@ -2536,7 +2317,8 @@ object IcebergInterop {
     val kept = ordered.filter(n => keptIdSet.contains(n.get("snapshot-id").asLong))
     val expired = ordered.filterNot(n => keptIdSet.contains(n.get("snapshot-id").asLong))
     if (expired.isEmpty) return (0, 0, 0L)
-    require(kept.exists(_.get("snapshot-id").asLong == curId),
+    val keptIds = kept.map(_.get("snapshot-id").asLong).toSet
+    require(keptIds.contains(curId),
       s"keepLast=$keepLast would expire the CURRENT snapshot of $path — " +
         "retention keeps the head by definition")
 
@@ -2549,7 +2331,6 @@ object IcebergInterop {
 
     // commit the pruned metadata FIRST: a reader racing the deletion must
     // never resolve a current metadata that still lists doomed snapshots
-    val keptIds = kept.map(_.get("snapshot-id").asLong).toSet
     val rootNode = meta.deepCopy[ObjectNode]()
     val snapsArr = rootNode.putArray("snapshots")
     ordered.filter(n => keptIds.contains(n.get("snapshot-id").asLong))
@@ -2622,16 +2403,11 @@ object IcebergInterop {
   def renameIcebergColumn(spark: SparkSession, path: String,
       oldName: String, newName: String,
       tsMillis: Long = System.currentTimeMillis()): Unit = {
-    val root = Paths.get(path).toAbsolutePath
-    val metaDir = root.resolve("metadata")
-    require(Files.isDirectory(metaDir), s"no Iceberg table at $path (missing metadata/)")
-    val (prevVersion, meta) = currentMetadata(metaDir, path)
-    val fv = meta.get("format-version").asInt
-    require(fv == 1 || fv == 2,
-      s"Iceberg table $path has format-version $fv — only v1/v2 are supported")
+    val t = new IcebergTable(path)
+    val meta = t.meta
     val nodes = allSchemaNodes(meta)
     require(nodes.nonEmpty, s"Iceberg table $path carries no schema")
-    val curId = Option(meta.get("current-schema-id")).map(_.asInt).getOrElse(0)
+    val curId = t.schemaId
     val cur = nodes.find(n => Option(n.get("schema-id")).exists(_.asInt == curId))
       .getOrElse(nodes.last)
     val curPairs = schemaIdNames(cur)
@@ -2664,7 +2440,7 @@ object IcebergInterop {
       case f: ObjectNode if f.get("name").asText == oldName => f.put("name", newName)
       case _ => ()
     }
-    commitIcebergSchema(metaDir, path, prevVersion, meta, nodes, curId, newSchema, tsMillis)
+    commitIcebergSchema(t, nodes, newSchema, tsMillis)
   }
 
   /** Publish a new CURRENT schema version as a metadata-only commit (no
@@ -2674,11 +2450,10 @@ object IcebergInterop {
     * spec's `schema.name-mapping.default` property is rebuilt over every
     * version so foreign readers resolve files WITHOUT parquet field ids
     * (ours are hard-linked from the source) by name → field-id. */
-  private def commitIcebergSchema(metaDir: Path, path: String,
-      readVersion: Long, meta: JsonNode, nodes: Seq[JsonNode], curId: Int,
+  private def commitIcebergSchema(t: IcebergTable, nodes: Seq[JsonNode],
       newSchema: ObjectNode, tsMillis: Long): Unit = {
     val m = mapper
-    val rootNode = meta.deepCopy[ObjectNode]()
+    val rootNode = t.meta.deepCopy[ObjectNode]()
     val schemasArr = Option(rootNode.get("schemas")) match {
       case Some(a: ArrayNode) if a.size() > 0 => a
       case _ =>
@@ -2686,7 +2461,7 @@ object IcebergInterop {
         val a = rootNode.putArray("schemas")
         nodes.foreach { n =>
           val c = n.deepCopy[ObjectNode]()
-          if (!c.has("schema-id")) c.put("schema-id", curId)
+          if (!c.has("schema-id")) c.put("schema-id", t.schemaId)
           a.add(c)
         }
         a
@@ -2709,7 +2484,7 @@ object IcebergInterop {
       case _                   => rootNode.putObject("properties")
     }
     props.put("schema.name-mapping.default", m.writeValueAsString(mappingArr))
-    commitMetadata(metaDir, path, readVersion, rootNode)
+    commitMetadata(t.metaDir, t.path, t.version, rootNode)
   }
 
   /** Drop a top-level column of an Iceberg table as a METADATA-ONLY
@@ -2721,16 +2496,11 @@ object IcebergInterop {
     * partition-spec source columns, and dropping the last column. */
   def dropIcebergColumn(spark: SparkSession, path: String, name: String,
       tsMillis: Long = System.currentTimeMillis()): Unit = {
-    val root = Paths.get(path).toAbsolutePath
-    val metaDir = root.resolve("metadata")
-    require(Files.isDirectory(metaDir), s"no Iceberg table at $path (missing metadata/)")
-    val (prevVersion, meta) = currentMetadata(metaDir, path)
-    val fv = meta.get("format-version").asInt
-    require(fv == 1 || fv == 2,
-      s"Iceberg table $path has format-version $fv — only v1/v2 are supported")
+    val t = new IcebergTable(path)
+    val meta = t.meta
     val nodes = allSchemaNodes(meta)
     require(nodes.nonEmpty, s"Iceberg table $path carries no schema")
-    val curId = Option(meta.get("current-schema-id")).map(_.asInt).getOrElse(0)
+    val curId = t.schemaId
     val cur = nodes.find(n => Option(n.get("schema-id")).exists(_.asInt == curId))
       .getOrElse(nodes.last)
     val curPairs = schemaIdNames(cur)
@@ -2752,7 +2522,7 @@ object IcebergInterop {
       .filterNot(f => f.get("name").asText == name)
     val fieldsArr = newSchema.putArray("fields")
     keptFields.foreach(fieldsArr.add)
-    commitIcebergSchema(metaDir, path, prevVersion, meta, nodes, curId, newSchema, tsMillis)
+    commitIcebergSchema(t, nodes, newSchema, tsMillis)
   }
 
   /** One v2 manifest-list row (the full required field set — foreign v2
@@ -2881,6 +2651,55 @@ object IcebergInterop {
       entry.put("data_file", df)
       w.append(entry)
     } finally w.close()
+  }
+
+  /** The `metadata/` directory of the Iceberg table at `path`; refuses a
+    * directory that holds no table. */
+  private def icebergMetaDir(path: String): Path = {
+    val metaDir = Paths.get(path).toAbsolutePath.resolve("metadata")
+    require(Files.isDirectory(metaDir), s"no Iceberg table at $path (missing metadata/)")
+    metaDir
+  }
+
+  /** The Iceberg table at `path`, opened once per call: the metadata
+    * version read and its parsed metadata (format-version 1 or 2, anything
+    * else refused before a byte is read or written), the current schema
+    * with its id and rename aliases, the default spec id, the snapshots by
+    * id, and the current snapshot's live manifest entries — walked lazily,
+    * at most once. Every entry point on an existing table opens it here. */
+  private final class IcebergTable(val path: String) {
+    val root: Path = Paths.get(path).toAbsolutePath
+    val metaDir: Path = icebergMetaDir(path)
+    val (version: Long, meta: JsonNode) = currentMetadata(metaDir, path)
+    val formatVersion: Int = meta.get("format-version").asInt
+    require(formatVersion == 1 || formatVersion == 2,
+      s"Iceberg table $path has format-version $formatVersion — only v1/v2 are supported")
+    val currentSchemaId: Option[Int] = Option(meta.get("current-schema-id")).map(_.asInt)
+    val schemaId: Int = currentSchemaId.getOrElse(0)
+    val defaultSpecId: Int = Option(meta.get("default-spec-id")).map(_.asInt).getOrElse(0)
+    val lastSequence: Long =
+      Option(meta.get("last-sequence-number")).map(_.asLong).getOrElse(0L)
+    lazy val schema: StructType = structOf(currentSchemaNode(meta, path), path)
+    /** Renamed columns' historic physical names under the current schema. */
+    lazy val aliases: Map[String, Seq[String]] = renameAliases(meta, path, currentSchemaId)
+    lazy val snapshots: Seq[JsonNode] =
+      Option(meta.get("snapshots")).map(_.elements().asScala.toSeq).getOrElse(Seq.empty)
+    lazy val byId: Map[Long, JsonNode] = snapshots.map(s => s.get("snapshot-id").asLong -> s).toMap
+    val currentId: Option[Long] =
+      Option(meta.get("current-snapshot-id")).map(_.asLong).filter(_ != -1L)
+
+    /** The current snapshot; a table without one is refused with `what`. */
+    def current(what: String): JsonNode = {
+      val id = currentId.getOrElse(throw new IllegalArgumentException(
+        s"Iceberg table $path has no current snapshot — $what"))
+      byId.getOrElse(id, throw new IllegalArgumentException(
+        s"Iceberg table $path current snapshot $id is missing from the log"))
+    }
+
+    /** The current snapshot's live data, position-delete and
+      * equality-delete entries. */
+    lazy val live: (Seq[DataEntry], Seq[DeleteEntry], Seq[EqDeleteEntry]) =
+      liveEntries(root, path, current("it has no live files"))
   }
 
   /** The current metadata version and its parsed `vN.metadata.json` —
@@ -3073,17 +2892,20 @@ object IcebergInterop {
     }
   }
 
-  /** field-id -> column name for the CURRENT schema in `meta`. */
-  private def schemaFieldIdToName(meta: JsonNode, path: String): Map[Int, String] = {
-    val schemaNode = Option(meta.get("schemas")).flatMap { arr =>
+  /** The CURRENT schema node of `meta`: the `schemas` entry under
+    * `current-schema-id`, else the legacy single `schema` field. */
+  private def currentSchemaNode(meta: JsonNode, path: String): JsonNode =
+    Option(meta.get("schemas")).flatMap { arr =>
       val want = Option(meta.get("current-schema-id")).map(_.asInt).getOrElse(0)
       arr.elements().asScala.find(s =>
         Option(s.get("schema-id")).forall(_.asInt == want))
     }.orElse(Option(meta.get("schema"))).getOrElse(
       throw new IllegalArgumentException(s"Iceberg table $path carries no schema"))
-    schemaNode.get("fields").elements().asScala
+
+  /** field-id -> column name for the CURRENT schema in `meta`. */
+  private def schemaFieldIdToName(meta: JsonNode, path: String): Map[Int, String] =
+    currentSchemaNode(meta, path).get("fields").elements().asScala
       .map(f => f.get("id").asInt -> f.get("name").asText).toMap
-  }
 
   private def icebergType(t: DataType, where: String): String = t match {
     case BooleanType      => "boolean"
@@ -3299,11 +3121,7 @@ object IcebergInterop {
     * resolving an expired instant to some OTHER snapshot would silently
     * serve the wrong view). */
   def icebergSnapshotAt(path: String, tsMillis: Long): Long = {
-    val root = Paths.get(path).toAbsolutePath
-    val metaDir = root.resolve("metadata")
-    require(Files.isDirectory(metaDir), s"no Iceberg table at $path (missing metadata/)")
-    val (_, meta) = currentMetadata(metaDir, path)
-    val log = Option(meta.get("snapshot-log"))
+    val log = Option(new IcebergTable(path).meta.get("snapshot-log"))
       .map(_.elements().asScala.toSeq).getOrElse(Seq.empty)
     require(log.nonEmpty,
       s"Iceberg table $path has no snapshot-log — cannot resolve a timestamp")
@@ -3424,29 +3242,13 @@ object IcebergInterop {
       snapshotAsOf: Option[Long],
       pruner: Option[Map[String, Any] => Boolean],
       rangePreds: Seq[(String, Double, Double)] = Seq.empty): DataFrame = {
-    val root = Paths.get(path).toAbsolutePath
-    val metaDir = root.resolve("metadata")
-    require(Files.isDirectory(metaDir), s"no Iceberg table at $path (missing metadata/)")
-
-    val (_, meta) = currentMetadata(metaDir, path)
-    val fv = meta.get("format-version").asInt
-    require(fv == 1 || fv == 2,
-      s"Iceberg table $path has format-version $fv — only v1/v2 are supported")
-
-    val snapNode = {
-      val snaps = Option(meta.get("snapshots"))
-        .map(_.elements().asScala.toSeq).getOrElse(Seq.empty)
-      snapshotAsOf match {
-        case Some(id) =>
-          snaps.find(_.get("snapshot-id").asLong == id).getOrElse(
-            throw new IllegalArgumentException(
-              s"snapshot $id does not exist in the Iceberg table at $path"))
-        case None =>
-          val cur = Option(meta.get("current-snapshot-id")).map(_.asLong)
-            .filter(_ != -1L)
-          cur.flatMap(c => snaps.find(_.get("snapshot-id").asLong == c))
-            .getOrElse(return FileSnapshot.empty(spark, currentSparkSchema(meta, path)))
-      }
+    val t = new IcebergTable(path)
+    val meta = t.meta
+    val snapNode = snapshotAsOf match {
+      case Some(id) => t.byId.getOrElse(id, throw new IllegalArgumentException(
+        s"snapshot $id does not exist in the Iceberg table at $path"))
+      case None => t.currentId.flatMap(t.byId.get)
+        .getOrElse(return FileSnapshot.empty(spark, t.schema))
     }
 
     // time travel reads the snapshot with the schema it was WRITTEN under
@@ -3458,25 +3260,22 @@ object IcebergInterop {
     // table under the current schema.
     val readSchemaId = snapshotAsOf match {
       case Some(_) => Option(snapNode.get("schema-id")).map(_.asInt)
-        .orElse(Option(meta.get("current-schema-id")).map(_.asInt))
-      case None => Option(meta.get("current-schema-id")).map(_.asInt)
+        .orElse(t.currentSchemaId)
+      case None => t.currentSchemaId
         .orElse(Option(snapNode.get("schema-id")).map(_.asInt))
     }
-    val schema = readSchemaId match {
-      case Some(id) => sparkSchemaById(meta, id, path)
-      case None     => currentSparkSchema(meta, path)
-    }
+    val schema = readSchemaId.fold(t.schema)(sparkSchemaById(meta, _, path))
     // renamed columns: the physical names old files still carry
     val aliases = renameAliases(meta, path, readSchemaId)
 
-    val (dataFiles, deleteFiles, eqDeletes) = liveEntries(root, path, snapNode)
+    val (dataFiles, deleteFiles, eqDeletes) = liveEntries(t.root, path, snapNode)
 
     // manifest-tuple pruning happens HERE, before any data file is touched
     // (the footer probes and the scan below see only the kept subset);
     // position deletes for pruned-out files drop out naturally in the
     // delete-frame join below — prune-to-superset stays correct
     val fieldNames = defaultSpecFields(meta).map(_.get("name").asText)
-    val defaultSpecId = Option(meta.get("default-spec-id")).map(_.asInt).getOrElse(0)
+    val defaultSpecId = t.defaultSpecId
     val keptByTuple = pruner match {
       case None => dataFiles
       case Some(keep) =>
@@ -3592,31 +3391,17 @@ object IcebergInterop {
       sinceSnapshotId: Long): (Long, DataFrame) = {
     import org.apache.spark.sql.functions.{col, lit}
     import org.apache.spark.sql.types.LongType
-    val root = Paths.get(path).toAbsolutePath
-    val metaDir = root.resolve("metadata")
-    require(Files.isDirectory(metaDir), s"no Iceberg table at $path (missing metadata/)")
-    val (_, meta) = currentMetadata(metaDir, path)
-    val fv = meta.get("format-version").asInt
-    require(fv == 1 || fv == 2,
-      s"Iceberg table $path has format-version $fv — only v1/v2 are supported")
-    val schema = currentSparkSchema(meta, path)
+    val t = new IcebergTable(path)
+    val (meta, schema, byId, aliases) = (t.meta, t.schema, t.byId, t.aliases)
     val outSchema = StructType(schema.fields :+
       StructField("_change_type", StringType, nullable = false) :+
       StructField("_change_ordinal", LongType, nullable = false) :+
       StructField("_commit_snapshot_id", LongType, nullable = false))
     def empty = FileSnapshot.empty(spark, outSchema)
-    val snaps = Option(meta.get("snapshots"))
-      .map(_.elements().asScala.toSeq).getOrElse(Seq.empty)
-    val byId = snaps.map(s => s.get("snapshot-id").asLong -> s).toMap
-    val cur = Option(meta.get("current-snapshot-id")).map(_.asLong).filter(_ != -1L)
-      .getOrElse(throw new IllegalArgumentException(
-        s"Iceberg table $path has no current snapshot — nothing to consume"))
+    val cur = t.current("nothing to consume").get("snapshot-id").asLong
     if (sinceSnapshotId == cur) return (cur, empty)
     val chain = snapshotLineage(path, byId, cur, sinceSnapshotId)
-
-    val aliases = renameAliases(meta, path,
-      Option(meta.get("current-schema-id")).map(_.asInt))
-    def state(snapId: Long) = liveEntries(root, path, byId(snapId))
+    def state(snapId: Long) = liveEntries(t.root, path, byId(snapId))
     var parent = state(sinceSnapshotId)
     val frames = Seq.newBuilder[DataFrame]
     chain.zipWithIndex.foreach { case (snapId, i) =>
@@ -4122,8 +3907,7 @@ object IcebergInterop {
     * are the format's monotonic clock, so the sink's txn marker is a
     * version. */
   private final class TailVersions(path: String, caller: String) {
-    private val metaDir = Paths.get(path).toAbsolutePath.resolve("metadata")
-    require(Files.isDirectory(metaDir), s"no Iceberg table at $path (missing metadata/)")
+    private val metaDir = icebergMetaDir(path)
 
     private def snapOf(ver: Long): Option[Long] = {
       val f = metaDir.resolve(s"v$ver.metadata.json")
@@ -4187,16 +3971,9 @@ object IcebergInterop {
     val from = tail.from(sink, appId, sinceSnapshotId)
     val (head, feed) = readIcebergChangelog(spark, path, from)
     if (head == from) return head
-    val dataCols = feed.columns.filterNot(c =>
-      c == "_change_type" || c == "_change_ordinal" ||
-        c == "_commit_snapshot_id").toSeq
-    keys.foreach(k => require(dataCols.contains(k),
-      s"tailIcebergCdcInto($path): key column '$k' is not a table column"))
-    val batch = CdcFeed.net(feed, keys, dataCols,
-      verCol = "_change_ordinal", typeCol = "_change_type")
-    try sink.applyCdc(batch.upserts, batch.deleteKeys, keys,
-      tsMillis = tsMillis, txn = Some((appId, tail.marker(head))))
-    finally batch.release()
+    CdcFeed.applyTail(feed, sink, keys, s"tailIcebergCdcInto($path)",
+      verCol = "_change_ordinal", changeCols = Seq("_commit_snapshot_id"), appId = appId,
+      marker = tail.marker(head), tsMillis = tsMillis)
     head
   }
 
@@ -4219,20 +3996,9 @@ object IcebergInterop {
     *   consumer is already at the head. */
   def readIcebergChanges(spark: SparkSession, path: String,
       sinceSnapshotId: Long): (Long, DataFrame) = {
-    val root = Paths.get(path).toAbsolutePath
-    val metaDir = root.resolve("metadata")
-    require(Files.isDirectory(metaDir), s"no Iceberg table at $path (missing metadata/)")
-    val (_, meta) = currentMetadata(metaDir, path)
-    val fv = meta.get("format-version").asInt
-    require(fv == 1 || fv == 2,
-      s"Iceberg table $path has format-version $fv — only v1/v2 are supported")
-    val schema = currentSparkSchema(meta, path)
-    val snaps = Option(meta.get("snapshots"))
-      .map(_.elements().asScala.toSeq).getOrElse(Seq.empty)
-    val byId = snaps.map(s => s.get("snapshot-id").asLong -> s).toMap
-    val cur = Option(meta.get("current-snapshot-id")).map(_.asLong).filter(_ != -1L)
-      .getOrElse(throw new IllegalArgumentException(
-        s"Iceberg table $path has no current snapshot — nothing to consume"))
+    val t = new IcebergTable(path)
+    val (schema, byId) = (t.schema, t.byId)
+    val cur = t.current("nothing to consume").get("snapshot-id").asLong
     if (sinceSnapshotId == cur)
       return (cur, FileSnapshot.empty(spark, schema))
 
@@ -4255,7 +4021,7 @@ object IcebergInterop {
       stateCache.getOrElseUpdate(snapId, {
         val sn = byId.getOrElse(snapId, throw new IllegalArgumentException(
           s"snapshot $snapId does not exist in the Iceberg table at $path"))
-        val (data, posDels, eqDels) = liveEntries(root, path, sn)
+        val (data, posDels, eqDels) = liveEntries(t.root, path, sn)
         val delSet = (posDels.map(d => (d.resolved.toString, d.seq)) ++
           eqDels.map(d => (d.resolved.toString, d.seq))).toSet
         (data.map(e => e.resolved.toString -> e.partition).toMap, delSet)
@@ -4292,10 +4058,9 @@ object IcebergInterop {
     // keys are resolved filesystem paths (resolveUri output), not URIs;
     // a consumed range can span a RENAME (files appended before it carry
     // the old physical name), so the alias resolution rides along
-    (cur, readWithIdentityFill(spark, path, meta, schema,
+    (cur, readWithIdentityFill(spark, path, t.meta, schema,
       newFiles.toSeq.map { case (u, rec) => (Paths.get(u), rec) },
-      aliases = renameAliases(meta, path,
-        Option(meta.get("current-schema-id")).map(_.asInt))))
+      aliases = t.aliases))
   }
 
   /** Chain the equality-delete anti-joins onto a scan that carries the
@@ -4605,16 +4370,6 @@ object IcebergInterop {
             s"$sid — cannot verify the source column is present; unreadable")))
       }
     }
-  }
-
-  private def currentSparkSchema(meta: JsonNode, path: String): StructType = {
-    val schemaNode = Option(meta.get("schemas")).flatMap { arr =>
-      val want = Option(meta.get("current-schema-id")).map(_.asInt).getOrElse(0)
-      arr.elements().asScala.find(s =>
-        Option(s.get("schema-id")).forall(_.asInt == want))
-    }.orElse(Option(meta.get("schema"))).getOrElse(
-      throw new IllegalArgumentException(s"Iceberg table $path carries no schema"))
-    structOf(schemaNode, path)
   }
 
   /** The schema with an exact `schema-id` — for reading a snapshot under

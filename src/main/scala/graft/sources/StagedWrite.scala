@@ -10,6 +10,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, pmod, xxhash64}
+import org.apache.spark.sql.types.StructType
 
 /** The file half of every commit, shared by [[TxTable]],
   * [[DeltaInterop]] and [[IcebergInterop]]: write a DataFrame as parquet
@@ -129,6 +130,24 @@ private[graft] object StagedWrite {
       require(dups == 0L, refusal(dups))
     }
     top.nonEmpty
+  }
+
+  /** A write's incoming `rows` in the table's column order, refused
+    * unless they carry exactly the table's columns at exactly its types. */
+  private[sources] def exactRows(rows: DataFrame, schema: StructType,
+      caller: String): DataFrame = {
+    require(rows.columns.toSet == schema.fieldNames.toSet,
+      s"$caller: the incoming rows must carry the table's exact " +
+        s"columns (${schema.fieldNames.mkString(",")}); got " +
+        s"${rows.columns.mkString(",")}")
+    val ordered = rows.select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    schema.fields.foreach { f =>
+      require(ordered.schema(f.name).dataType == f.dataType,
+        s"$caller: column '${f.name}' is " +
+          s"${ordered.schema(f.name).dataType} but the table column is " +
+          s"${f.dataType} — cast to the exact table types first")
+    }
+    ordered
   }
 
   /** `<prefix>-<uuid>.parquet`, the uuid derived from `seed` — callers

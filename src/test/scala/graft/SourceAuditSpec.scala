@@ -50,6 +50,22 @@ class SourceAuditSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
+  test("each lakehouse format opens a table in one place, and Iceberg row-level writers share one commit") {
+    def lines(file: String, needle: String): Seq[String] = codeLines.collect {
+      case (f, l) if f == s"graft/sources/$file" && l.contains(needle) => l
+    }
+    // Iceberg: one format-version read and refusal, one metadata/ check
+    assert(lines("IcebergInterop.scala", "get(\"format-version\")").size == 1)
+    assert(lines("IcebergInterop.scala", "only v1/v2 are supported").size == 1)
+    assert(lines("IcebergInterop.scala", "missing metadata/").size == 1)
+    // Delta: one metaData-presence check, one schema parse, one _delta_log/ check
+    assert(lines("DeltaInterop.scala", "carries no metaData action").size == 1)
+    assert(lines("DeltaInterop.scala", "DataType.fromJson(meta.schemaJson)").size == 1)
+    assert(lines("DeltaInterop.scala", "missing $LogDirName").size == 1)
+    val hand = codeLines.filter(_._2.contains("commitV2DeleteSnapshot"))
+    assert(hand.isEmpty, hand.mkString("\n"))
+  }
+
   test("SparkSession.builder() is called in exactly one place") {
     val calls = codeLines.filter { case (_, l) =>
       l.contains("SparkSession.builder") || l.startsWith(".builder()")
