@@ -241,7 +241,10 @@ object AnnIndex {
             "a repeated delete is an idempotence bug worth surfacing")
         tomb.count()
       }
-    val missing = broadcast(del).join(raw, Seq(idCol), "left_anti").count()
+    // the small id set is the broadcast (right) side: Spark cannot build
+    // the left side of a left anti join and would shuffle the whole index
+    val missing = nDel -
+      raw.join(broadcast(del), Seq(idCol), "left_semi").select(idCol).distinct().count()
     require(missing == 0L,
       s"removeFromIndex($path): $missing id(s) are not in the index — " +
         "deleting a vector that was never indexed is an id-mapping bug")
@@ -253,6 +256,7 @@ object AnnIndex {
       val base = new org.apache.hadoop.fs.Path(path, "encoded")
       val baseUri = base.toUri.getPath
       val it = fs.listFiles(base, true)
+      val conf = spark.sessionState.newHadoopConf()
       var sum = 0L
       while (it.hasNext) {
         val f = it.next()
@@ -269,7 +273,7 @@ object AnnIndex {
           s.startsWith(".") || (s.startsWith("_") && !s.contains("=")))
         if (!hidden && f.getPath.getName.endsWith(".parquet"))
           sum += graft.sources.StagedWrite.parquetRowCount(
-            spark, java.nio.file.Paths.get(f.getPath.toUri))
+            conf, java.nio.file.Paths.get(f.getPath.toUri))
       }
       sum
     }

@@ -275,8 +275,9 @@ object DeltaInterop {
     * at version `v` (protocol + metaData + one add per live file — nullable
     * struct columns, PROTOCOL.md's classic checkpoint shape) and advertise
     * it in `_last_checkpoint`, so log replay restarts there instead of at
-    * version 0. The checkpoint parquet is written via Spark and renamed
-    * into its final name; `_last_checkpoint` is updated last (readers that
+    * version 0. The checkpoint parquet is staged by [[StagedWrite]] and
+    * published under its final name (a checkpoint already there for `v`
+    * is kept); `_last_checkpoint` is replaced whole, last (readers that
     * see the old pointer simply replay more JSON commits).
     *
     * Scale bound, stated honestly: the add rows materialize ON THE DRIVER
@@ -356,22 +357,17 @@ object DeltaInterop {
     val rows = (protoRow +: metaRow +: addRows).asJava
     val df = spark.createDataFrame(rows, ckptSchema)
 
-    val tmp = Files.createTempDirectory(logDir, s".ckpt-$v-")
-    try {
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = {
-        val s = Files.list(tmp)
-        try s.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet"))
-          .getOrElse(throw new IllegalStateException(s"no parquet part in $tmp"))
-        finally s.close()
-      }
-      Files.move(part, logDir.resolve(f"$v%020d.checkpoint.parquet"),
-        StandardCopyOption.REPLACE_EXISTING)
-    } finally deleteRecursively(tmp)
+    // a checkpoint already written for v is kept: it restates the same
+    // version, and a reader may be reading it
+    StagedWrite.write(logDir, df.coalesce(1)) { st =>
+      val part = st.files.headOption
+        .getOrElse(throw new IllegalStateException(s"no parquet part in ${st.dir}"))
+      StagedWrite.publish(logDir.resolve(f"$v%020d.checkpoint.parquet"))(Files.copy(part.path, _))
+    }
     val pointer = mapper.createObjectNode()
       .put("version", v).put("size", rows.size().toLong)
-    Files.write(logDir.resolve("_last_checkpoint"),
-      Seq(mapper.writeValueAsString(pointer)).asJava)
+    StagedWrite.replaceLines(logDir.resolve("_last_checkpoint"),
+      Seq(mapper.writeValueAsString(pointer)))
   }
 
   // --------------------------------------------------------------- READ

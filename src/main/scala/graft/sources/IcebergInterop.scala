@@ -13,7 +13,8 @@ import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWri
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
-import graft.sources.StagedWrite.{deleteRecursively, parquetRowCount, parquetRowCountBulk}
+import graft.sources.StagedWrite.{deleteRecursively, footerSchema, parquetRowCount,
+  parquetRowCountBulk, parquetTopLevelCols, parquetTopLevelColsBulk}
 
 /** Open-format interop #2: Apache Iceberg (the other half of the
   * "Delta/Iceberg" north star; [[DeltaInterop]] is the first). Export a
@@ -850,6 +851,7 @@ object IcebergInterop {
         newFiles.map(rel => srcData.resolve(rel).toString))
       case None => Map.empty
     }
+    lazy val conf = t.spark.sessionState.newHadoopConf()
     val files = snap.files.map { rel =>
       val dst = dataDir.resolve(rel)
       if (!Files.exists(dst)) {
@@ -858,7 +860,7 @@ object IcebergInterop {
         catch { case _: Exception => Files.copy(srcData.resolve(rel), dst) }
       }
       val (sz, rc, carriedDay) = liveStats.getOrElse(rel,
-        (Files.size(dst), parquetRowCount(t.spark, dst), None))
+        (Files.size(dst), parquetRowCount(conf, dst), None))
       val tuple = dayPartitionOf match {
         case Some(_) => Seq(java.lang.Integer.valueOf(
           carriedDay.orElse(newDayOf.get(Paths.get(rel).getFileName.toString))
@@ -1230,7 +1232,7 @@ object IcebergInterop {
     if (partitioned) {
       val (liveData, _, _) = t.live
       if (liveData.nonEmpty) {
-        val probe = parquetTopLevelCols(spark, liveData.head.resolved)
+        val probe = parquetTopLevelCols(spark.sessionState.newHadoopConf(), liveData.head.resolved)
         keyCols.foreach(c => require(probe.contains(c),
           s"$caller: key column '$c' is not physically " +
             s"present in the data files of $path (an identity-projected " +
@@ -3544,8 +3546,8 @@ object IcebergInterop {
             s"Iceberg table $path snapshot $snapId declares 'replace' but " +
               "adds delete files or retires equality deletes — row " +
               "changes are not derivable; re-sync from the full snapshot")
-          val reclaimed = removedPos
-            .map(d => parquetRowCount(spark, d.resolved)).sum
+          val conf = spark.sessionState.newHadoopConf()
+          val reclaimed = removedPos.map(d => parquetRowCount(conf, d.resolved)).sum
           require(cData.map(_.rows).sum == pData.map(_.rows).sum - reclaimed,
             s"Iceberg table $path snapshot $snapId declares 'replace' but " +
               "its manifest row counts do not conserve — a mislabeled " +
@@ -3750,6 +3752,7 @@ object IcebergInterop {
         .map(d => (e.resolved.getFileName.toString,
           d.resolved.getFileName.toString))
     }
+    lazy val conf = spark.sessionState.newHadoopConf() // one for every group's footers
     eqs.groupBy(e => (e.ids, isScoped(e))).toSeq
       .sortBy { case ((ids, sc), _) => (ids.mkString(","), sc) }
       .map { case ((ids, scoped), group) =>
@@ -3758,7 +3761,7 @@ object IcebergInterop {
         // the key columns' types come from the delete files' own footers,
         // read on the driver (no schema-inference job): every file must
         // carry every key column, and the files must agree on its type
-        val footers = group.map(e => e.resolved -> footerSchema(spark, e.resolved))
+        val footers = group.map(e => e.resolved -> footerSchema(spark, conf, e.resolved))
         val keyFields = cols.map { c =>
           val types = footers.map { case (p, fs) => fs.find(_.name == c).map(_.dataType)
             .getOrElse(throw new IllegalArgumentException(
@@ -3830,8 +3833,9 @@ object IcebergInterop {
     val delNames = dels.map(_.resolved.getFileName.toString)
     require(delNames.distinct.size == delNames.size,
       s"Iceberg table $path has duplicate delete-file names — unsupported layout")
+    val conf = spark.sessionState.newHadoopConf()
     dels.foreach { d =>
-      val cols = parquetTopLevelCols(spark, d.resolved)
+      val cols = parquetTopLevelCols(conf, d.resolved)
       require(cols.contains("file_path") && cols.contains("pos"),
         s"Iceberg table $path holds a position-delete file without the spec's " +
           s"(file_path, pos) columns (got ${cols.mkString(",")}) — " +
@@ -4148,10 +4152,18 @@ object IcebergInterop {
       if (provenance || eqSpecs.isEmpty) masked
       else masked.drop(FileSnapshot.FileCol, FileSnapshot.PosCol)
     }
+    // presence is probed on EVERY footer, read once here (O(files) — the
+    // same scale class as the manifests already read): the equality-delete
+    // and the layout checks below all ask these column sets
+    val footerColSets: Seq[(Path, Set[String])] = {
+      val bulk = parquetTopLevelColsBulk(spark, dataFiles.map(_._1))
+      dataFiles.map(f => f._1 -> bulk(f._1.toString))
+    }
+    val footerCols = footerColSets.head._2
     // equality columns must be PHYSICALLY in the data files, the rule
     // the key-delete writer enforces too: refuse a foreign table that
-    // keys on an identity-filled column (one footer probe; mixed layouts
-    // are refused further down regardless)
+    // keys on an identity-filled column (probed on the first footer;
+    // mixed layouts are refused further down regardless)
     if (eqSpecs.nonEmpty) {
       // an equality-delete column that was RENAMED anchors its anti-join
       // at the scan under the READ name, which is null for any file still
@@ -4161,37 +4173,20 @@ object IcebergInterop {
       // (compactIcebergDeletes, the migration path) genuinely clears it.
       val eqCols = eqSpecs.flatMap(_.cols).distinct
       val aliased = eqCols.filter(aliases.contains)
-      if (aliased.nonEmpty) {
-        val bulk = parquetTopLevelColsBulk(spark, dataFiles.map(_._1))
-        aliased.foreach(c => bulk.find(!_._2.contains(c)).foreach { case (u, _) =>
-          throw new IllegalArgumentException(
-            s"Iceberg table $path equality-deletes on renamed column '$c' " +
-              s"but data file $u still carries its old physical name — " +
-              "compact the table to the current names first " +
-              "(compactIcebergDeletes), or rewrite the deletes")
-        })
-      }
-      val probe = parquetTopLevelCols(spark, dataFiles.head._1)
-      eqCols.foreach(c => require(probe.contains(c),
+      aliased.foreach(c => footerColSets.find(!_._2.contains(c)).foreach { case (u, _) =>
+        throw new IllegalArgumentException(
+          s"Iceberg table $path equality-deletes on renamed column '$c' " +
+            s"but data file $u still carries its old physical name — " +
+            "compact the table to the current names first " +
+            "(compactIcebergDeletes), or rewrite the deletes")
+      })
+      eqCols.foreach(c => require(footerCols.contains(c),
         s"Iceberg table $path equality-deletes on column '$c', which is not " +
           "physically present in the data files — this reader keys " +
           "equality deletes on physical columns only; unreadable"))
     }
     val specIdentity = targetSpecIdentityFields(meta, path) // (specField, sourceCol)
     val srcToSpec = specIdentity.map { case (fn, src) => src -> fn }.toMap
-    // presence is probed on EVERY footer (O(files) — the same scale class as
-    // the manifests already read): a table mixing layouts (some files
-    // physically carrying an identity-partition column, some not — e.g.
-    // native Iceberg writes appended after a Hive migration) cannot be read
-    // with one uniform fill decision, so disagreement on the IDENTITY-SPEC
-    // source columns fails loudly instead of silently overwriting carried
-    // columns or nulling absent ones. (Other columns may legitimately vary
-    // across footers — ordinary schema evolution, Spark fills null per file.)
-    val footerColSets: Seq[(Path, Set[String])] = {
-      val bulk = parquetTopLevelColsBulk(spark, dataFiles.map(_._1))
-      dataFiles.map(f => f._1 -> bulk(f._1.toString))
-    }
-    val footerCols = footerColSets.head._2
     // a NON-identity transform (day/bucket/truncate/...) is pruning
     // metadata only — its source column cannot be reconstructed from the
     // partition tuple, so it must be PHYSICALLY present in the data files;
@@ -4214,6 +4209,13 @@ object IcebergInterop {
           "partition reconstruction across physical names is unsupported"))
     val identityCols = schema.fields.filter(f =>
       srcToSpec.contains(f.name) || transformSrcs.exists(_._2 == f.name))
+    // a table mixing layouts (some files physically carrying an
+    // identity-partition column, some not — e.g. native Iceberg writes
+    // appended after a Hive migration) cannot be read with one uniform fill
+    // decision, so disagreement on the IDENTITY-SPEC source columns fails
+    // loudly instead of silently overwriting carried columns or nulling
+    // absent ones. (Other columns may legitimately vary across footers —
+    // ordinary schema evolution, Spark fills null per file.)
     footerColSets.tail.foreach { case (p, cols) =>
       val disagree = identityCols.filter(f =>
         cols.contains(f.name) != footerCols.contains(f.name))
@@ -4277,64 +4279,6 @@ object IcebergInterop {
         s"Iceberg table $path identity-partitions a $other column — " +
           "unsupported by this reader's partition fill")
     }
-
-  /** Top-level footer columns for MANY files: distributed above a small
-    * threshold — sequential driver-side footer I/O is the hidden O(files)
-    * cost of the layout check at scale (100k files = 100k blocking opens
-    * on the driver; one 32-way metadata job reads them in parallel, the
-    * same planning shape Iceberg's own distributed scans use). Local-only
-    * `new Configuration()` on executors is sound because [[resolveUri]]
-    * already refuses remote storage for this reader. */
-  private def parquetTopLevelColsBulk(spark: SparkSession,
-      paths: Seq[Path]): Map[String, Set[String]] =
-    if (paths.size <= 16)
-      paths.map(p => p.toString -> parquetTopLevelCols(spark, p)).toMap
-    else {
-      val sp = spark
-      import sp.implicits._
-      spark.createDataset(paths.map(_.toString))
-        .repartition(math.min(paths.size, 64))
-        .mapPartitions { it =>
-          val conf = new org.apache.hadoop.conf.Configuration()
-          it.map { u =>
-            val in = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                new org.apache.hadoop.fs.Path(
-                  java.nio.file.Paths.get(u).toUri), conf))
-            try (u, in.getFooter.getFileMetaData.getSchema.getFields
-              .asScala.map(_.getName).toSeq)
-            finally in.close()
-          }
-        }
-        .collect().map { case (u, cols) => u -> cols.toSet }.toMap
-    }
-
-
-  /** Top-level column names of one parquet file's footer schema. */
-  private def parquetTopLevelCols(spark: SparkSession, p: Path): Set[String] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = spark.sessionState.newHadoopConf()
-    val in = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toUri), conf))
-    try in.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet
-    finally in.close()
-  }
-
-  /** One parquet file's schema as Spark's schema inference reads it from
-    * the footer (the Spark schema the writer recorded, else the parquet
-    * types converted), on the driver — no Spark job. */
-  private def footerSchema(spark: SparkSession, p: Path): StructType = {
-    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
-      ParquetToSparkSchemaConverter}
-    val hp = new org.apache.hadoop.fs.Path(p.toUri)
-    val in = ParquetFileReader.open(HadoopInputFile.fromPath(hp, spark.sessionState.newHadoopConf()))
-    val footer = try in.getFooter finally in.close()
-    ParquetFileFormat.readSchemaFromFooter(new Footer(hp, footer),
-      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-  }
 
   /** (partition-field name, identity source-column name) pairs of the
     * table's default spec — see [[targetSpecIdentityCols]]. */

@@ -504,6 +504,25 @@ class DeltaInteropSpec extends SparkSpec {
       "replay from the checkpoint alone must see the full live set")
   }
 
+  test("a checkpoint leaves no staging or temp file in the log and keeps one already written") {
+    val out = tmp("delta_ckpt_clean")
+    DeltaInterop.exportDelta(sampleTable(), out, tsMillis = 5000L)
+    val logDir = Paths.get(out, "_delta_log")
+    val ckpt = logDir.resolve("0" * 20 + ".checkpoint.parquet")
+    DeltaInterop.writeDeltaCheckpoint(spark, out, 0L, tsMillis = 6000L)
+    val (inode, bytes) = (Files.getAttribute(ckpt, "unix:ino"), Files.readAllBytes(ckpt).toSeq)
+    // a second checkpoint of version 0 (its rows carry another timestamp)
+    DeltaInterop.writeDeltaCheckpoint(spark, out, 0L, tsMillis = 7000L)
+    assert(Files.getAttribute(ckpt, "unix:ino") == inode && Files.readAllBytes(ckpt).toSeq == bytes,
+      "an existing checkpoint of the same version must be kept")
+    val left = Files.list(logDir).iterator().asScala.map(_.getFileName.toString)
+      .filter(n => n.startsWith(".ckpt-") || n.startsWith(".tmp") || n.startsWith(".staging")).toSeq
+    assert(left.isEmpty, left)
+    assert(Files.readAllLines(logDir.resolve("_last_checkpoint")).asScala.mkString.contains("\"version\":0"))
+    Files.delete(logDir.resolve("0" * 20 + ".json"))
+    assert(DeltaInterop.readDelta(spark, out).count() == 4L, "the checkpoint alone reads the table")
+  }
+
   test("adversarial logs fail loudly: truncated JSON, scheme URIs, protocol-less checkpoint") {
     // truncated commit line (half-written by a crashed writer)
     val root = Paths.get(tmp("delta_trunc"))

@@ -66,6 +66,21 @@ class SourceAuditSpec extends AnyFunSuite {
     assert(hand.isEmpty, hand.mkString("\n"))
   }
 
+  test("one parquet footer reader, and the table formats write parquet only through StagedWrite") {
+    val opens = codeLines.filter(_._2.contains("ParquetFileReader.open"))
+    assert(opens.map(_._1) == Seq("graft/sources/StagedWrite.scala"), opens.mkString("\n"))
+    // a DataFrameWriter (`.write` chained or ending the line — never an
+    // OutputStream's `write(`) or a parquet-hadoop writer. Lakehouse's
+    // plain-parquet layout helpers write where their caller asks: no table
+    // commit goes through them.
+    val writer = """\.write(\.|$)|saveAsTable|ParquetWriter""".r
+    val hits = codeLines.filter { case (f, l) =>
+      f.startsWith("graft/sources/") && f != "graft/sources/StagedWrite.scala" &&
+        f != "graft/sources/Lakehouse.scala" && writer.findFirstIn(l).nonEmpty
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   test("SparkSession.builder() is called in exactly one place") {
     val calls = codeLines.filter { case (_, l) =>
       l.contains("SparkSession.builder") || l.startsWith(".builder()")

@@ -131,6 +131,19 @@ class AnnIndexSpec extends graft.SparkSpec {
       .getMessage.contains("compactIndex"))
   }
 
+  test("removeFromIndex's membership guard broadcasts the id set, and still refuses an unknown id") {
+    val (dir, corpus) = freshIndex()
+    val (_, plans) = org.apache.spark.graft.PlanCapture.plansDuring(spark)(
+      AnnIndex.removeFromIndex(corpus.where(col("vec_id") < 4).select("vec_id"), "vec_id", dir))
+    assert(plans.exists(p => p.contains("BroadcastHashJoin") && p.contains("LeftSemi")),
+      plans.mkString("\n\n"))
+    assert(!plans.exists(_.contains("LeftAnti")), plans.mkString("\n\n"))
+    assert(intercept[IllegalArgumentException](
+      AnnIndex.removeFromIndex(Seq(999L, 5L).toDF("vec_id"), "vec_id", dir)).getMessage ==
+      s"requirement failed: removeFromIndex($dir): 1 id(s) are not in the index — " +
+        "deleting a vector that was never indexed is an id-mapping bug")
+  }
+
   test("a delete pushing tombstones past the bound refuses with a compact-first instruction") {
     val (dir, corpus) = freshIndex()
     // the bound turns the documented broadcast contract into a CHECK
